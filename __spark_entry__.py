@@ -5582,12 +5582,12 @@ ROWS_ONLY_RATIONALE = {
     ),
     "multimodal_features": (
         "The feature extractor is a stand-in for a real image/audio "
-        "decode (the container has no codec libraries): a deterministic "
-        "byte-fold over the binary column. Deliberately non-SQL — an "
-        "oracle would re-implement the same fake in another engine and "
-        "verify nothing about the real path. The REAL codec kernels "
-        "behind it (JPEG/PNG/GIF/TIFF/WAV/FLAC/MP4…) are pinned by "
-        "round-trip and bit-for-bit differential pytests."
+        "decode: a deterministic byte-fold over the binary column. "
+        "Deliberately non-SQL — an oracle would re-implement the same "
+        "fake in another engine and verify nothing about the real path. "
+        "The real decode path behind it (PPM/BMP/baseline JPEG images, "
+        "PCM/mu-law WAV audio) is pinned by round-trip pytests; every "
+        "other format raises NotImplementedError and is quarantined."
     ),
     "text_compression_ratio": (
         "DEFLATE compressibility quality signal; DuckDB has no zlib "

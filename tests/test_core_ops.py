@@ -170,6 +170,42 @@ def test_store_discards_shifted_plan(tmp_path):
     assert len(store2.pending("t")) == 2
 
 
+def test_store_flush_survives_crash_mid_write(tmp_path, monkeypatch):
+    """A crash while a mark rewrites the plan file must leave the
+    previous plan loadable: the next StateStore resumes with the same
+    pending chunks instead of failing on a truncated JSON file."""
+    import json
+
+    import pytest
+
+    from transferdb_spark.plans.chunker import Chunk
+    from transferdb_spark.state import store as store_mod
+    from transferdb_spark.state.store import SUCCESS, StateStore
+
+    wd = str(tmp_path / "st")
+    plan = [Chunk(i, i * 10, i * 10 + 9, f"k >= {i * 10}") for i in range(3)]
+    store = StateStore(wd, "full")
+    store.init_table("t", plan)
+    store.mark("t", 0, SUCCESS)
+    before = [c.chunk_id for c in StateStore(wd, "full").pending("t")]
+    assert before == [1, 2]
+
+    real_dump = json.dump
+
+    def torn_dump(obj, fh, **kw):
+        fh.write(json.dumps(obj, **kw)[:20])  # part of the file, then die
+        raise OSError("simulated crash mid-write")
+
+    monkeypatch.setattr(store_mod.json, "dump", torn_dump)
+    with pytest.raises(OSError):
+        store.mark("t", 1, SUCCESS)
+    monkeypatch.setattr(store_mod.json, "dump", real_dump)
+
+    resumed = StateStore(wd, "full")
+    assert [c.chunk_id for c in resumed.pending("t")] == before
+    assert [c.chunk_id for c in resumed.init_table("t", plan) if c.status != SUCCESS] == before
+
+
 def test_diff_roundtrip_repair(lineitem):
     """full→compare invariant: applying the diff makes the sets equal."""
     from transferdb_spark.operators.compare_fixture import mutated_target

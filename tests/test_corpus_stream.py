@@ -128,13 +128,13 @@ def test_compact_corpus_preserves_state_and_prunes_history(spark, tmp_path, docs
 
 
 def test_media_feature_stream_extracts_real_features(spark, tmp_path):
-    """binaryFile stream -> real-decode feature kernel: drop PNG and
+    """binaryFile stream -> real-decode feature kernel: drop PPM and
     JPEG blobs as files, run one availableNow pass, and get one
     feature row per file with contentful values."""
     import numpy as np
 
-    from transferdb_spark.ext.jpeg import encode_jpeg
-    from transferdb_spark.ext.multimodal import encode_png
+    from jpeg_encoder import encode_jpeg
+    from transferdb_spark.ext.multimodal import encode_ppm
     from transferdb_spark.streaming.corpus import (
         media_feature_stream,
         stream_media_files,
@@ -144,7 +144,7 @@ def test_media_feature_stream_extracts_real_features(spark, tmp_path):
     src.mkdir()
     xx, yy = np.meshgrid(np.linspace(0, 255, 24), np.linspace(0, 255, 16))
     img = np.stack([xx, yy, xx], axis=2).astype(np.uint8)
-    (src / "a.bin").write_bytes(encode_png(img))
+    (src / "a.bin").write_bytes(encode_ppm(img))
     (src / "b.bin").write_bytes(encode_jpeg(img))
 
     out = media_feature_stream(stream_media_files(spark, str(src)))

@@ -240,46 +240,6 @@ def test_dup_span_stats_matches_python_reference(spark):
     assert got == expect
 
 
-def test_mp4_mux_demux_fuzz():
-    """Property sweep over the MJPEG muxer/demuxer: every combination
-    of frame count, chunk pattern, offset width, and payload-size
-    profile round-trips byte-exact; every truncation of every fixture
-    raises ValueError (never a raw struct/index error)."""
-    import pytest
-
-    from transferdb_spark.ext.mp4 import demux_samples, mux_mjpeg, sample_table
-
-    def payloads(n, profile):
-        if profile == "fixed":
-            return [b"\xff\xd8" + b"x" * 40 + b"\xff\xd9"] * n
-        if profile == "growing":
-            return [b"\xff\xd8" + bytes([i]) * (8 + 13 * i) + b"\xff\xd9" for i in range(n)]
-        return [b"\xff\xd8" + bytes(range(max(i * 7 % 90, 1))) + b"\xff\xd9" for i in range(n)]
-
-    cases = 0
-    for n in (1, 2, 5, 9):
-        for pattern in ((1,), (2,), (3, 1), (2, 5, 1)):
-            for co64 in (False, True):
-                for profile in ("fixed", "growing", "mixed"):
-                    frames = payloads(n, profile)
-                    buf = mux_mjpeg(frames, fps=7, width=4, height=4,
-                                    chunk_pattern=pattern, co64=co64)
-                    assert demux_samples(buf) == frames, (n, pattern, co64, profile)
-                    st = sample_table(buf)
-                    assert len(st["times_ms"]) == n and st["codec"] == "jpeg"
-                    cases += 1
-    assert cases == 96
-
-    buf = mux_mjpeg(payloads(5, "growing"), chunk_pattern=(2,), co64=True)
-    for cut in range(8, len(buf), max(len(buf) // 23, 1)):
-        try:
-            demux_samples(buf[:cut])
-        except (ValueError, NotImplementedError):
-            pass  # the ingestion contract: typed errors only
-    with pytest.raises(ValueError):
-        sample_table(mux_mjpeg(payloads(2, "fixed"))[:40], "audio")
-
-
 def test_ngram_repetition_and_pmi_tie_fuzz(spark):
     """Randomized cross-engine fuzz for the round-7 text operators on
     TIE-HEAVY corpora: a 4-word vocabulary forces many equal-count

@@ -101,11 +101,36 @@ def test_multimodal_feature_extraction(spark):
     assert [r["features"] for r in feats] == [r["features"] for r in again]
 
 
-def test_multimodal_decode_stub_raises():
-    from transferdb_spark.ext.multimodal import decode_image
+_UNSUPPORTED_MEDIA = {
+    "png": b"\x89PNG\r\n\x1a\n" + bytes(24),
+    "gif": b"GIF89a" + bytes(24),
+    "tiff": b"II*\x00" + bytes(24),
+    # progressive (SOF2) frame header: 8-bit, 8x8, one component
+    "jpeg_sof2": b"\xff\xd8\xff\xc2\x00\x0b\x08\x00\x08\x00\x08\x01\x01\x11\x00\xff\xd9",
+    "mp4": b"\x00\x00\x00\x18ftypisom\x00\x00\x02\x00isommp41",
+}
 
+
+@pytest.mark.parametrize("fmt", sorted(_UNSUPPORTED_MEDIA))
+def test_multimodal_decode_stub_raises(spark, fmt):
+    """Formats without an in-repo codec raise NotImplementedError at
+    the decode dispatch, and both media operators quarantine them:
+    image_phashes gives NULL, resize_images passes the bytes through."""
+    from transferdb_spark.ext.multimodal import (
+        MEDIA_SCHEMA,
+        decode_image,
+        image_phashes,
+        resize_images,
+    )
+
+    buf = _UNSUPPORTED_MEDIA[fmt]
     with pytest.raises(NotImplementedError):
-        decode_image(b"\x89PNG")
+        decode_image(buf)
+    media = spark.createDataFrame(
+        [(1, "image", buf, ("application/octet-stream", 8, 8, None))], MEDIA_SCHEMA
+    )
+    assert image_phashes(media).first()["phash"] is None
+    assert bytes(resize_images(media, width=4, height=4).first()["content"]) == buf
 
 
 def test_multimodal_frame_sampling(spark):
@@ -426,66 +451,6 @@ def test_recommended_cells_bounds_candidate_work():
     assert recommended_cells(10**10) == 65536  # clamp
 
 
-def test_ann_index_autotune_spec():
-    """Index builders size themselves from the corpus: planes/cells
-    grow with n, probe count buys recall back when buckets shrink."""
-    from transferdb_spark.ext.ann_index import recommended_probes
-    from transferdb_spark.ext.similarity import recommended_planes
-
-    # 10^10 vectors: planes land in the documented 21-24 band, and the
-    # probe count stays within the Hamming-1 neighbourhood
-    p = recommended_planes(10**10)
-    assert 21 <= p <= 24
-    assert 1 <= recommended_probes(10**10, p) <= 1 + p
-    # roomy buckets: one probe already oversamples the pool
-    assert recommended_probes(10_000, 4, k=10, oversample=1) == 1
-    # shrinking buckets (more planes at same n) needs more probes
-    assert recommended_probes(10_000, 10, k=10) >= recommended_probes(10_000, 4, k=10)
-
-
-def test_ann_index_lsh_single_probe_matches_plain_bucket(spark, emb):
-    """n_probe=1 over a built index is exactly the pinned-bucket ANN."""
-    from transferdb_spark.ext.ann_index import AnnIndexSpec, ann_topk_indexed
-    from transferdb_spark.ext.similarity import N_PLANES, ann_topk_lsh, make_bucket_udf
-    from pyspark.sql import functions as F
-
-    indexed = emb.select(
-        "vec_id", "embedding", make_bucket_udf(N_PLANES)(F.col("embedding")).alias("bucket")
-    )
-    spec = AnnIndexSpec("lsh", n_rows=0, n_planes=N_PLANES, n_probe=1)
-    got = [(r["vec_id"], r["cosine"]) for r in ann_topk_indexed(indexed, spec, 0, 5).collect()]
-    want = [(r["vec_id"], r["cosine"]) for r in ann_topk_lsh(emb, 0, 5).collect()]
-    assert got == want
-
-
-def test_lsh_probe_sweep_recall_monotone(spark, emb):
-    """More probes never shrink the candidate pool, and full multi-probe
-    recall is at least the single-bucket recall."""
-    from transferdb_spark.ext.ann_index import lsh_probe_sweep
-
-    rows = lsh_probe_sweep(emb, query_vec_id=0, k=5).orderBy("n_probe").collect()
-    cands = [r["candidates"] for r in rows]
-    assert cands == sorted(cands)
-    assert rows[-1]["recall"] >= rows[0]["recall"]
-    assert all(0.0 <= r["recall"] <= 1.0 for r in rows)
-
-
-def test_ann_index_ivf_build_and_query(spark, emb):
-    """The IVF build+query path agrees with the raw ann_topk_ivf at the
-    same pinned scale."""
-    from transferdb_spark.ext.ann_index import build_ivf_index, ann_topk_indexed
-    from transferdb_spark.ext.similarity import N_CELLS, N_PROBE, ann_topk_ivf
-
-    indexed, spec = build_ivf_index(emb)
-    assert spec.kind == "ivf" and spec.n_cells == N_CELLS and spec.n_rows > 0
-    got = [(r["vec_id"], r["cosine"]) for r in ann_topk_indexed(indexed, spec, 0, 5).collect()]
-    want = [
-        (r["vec_id"], r["cosine"])
-        for r in ann_topk_ivf(emb, 0, 5, n_probe=N_PROBE, n_cells=N_CELLS).collect()
-    ]
-    assert got == want
-
-
 def test_pii_scrub_kernel(spark):
     """Counts and redaction on real PII shapes; untouched text passes
     through byte-identical."""
@@ -619,59 +584,6 @@ def test_bpe_merges_frame_shape(spark, docs):
     assert all(r["freq"] >= 2 for r in rows)
 
 
-def test_png_roundtrip_all_filter_types(spark):
-    """Real PNG decode (stdlib zlib + un-filtering): encode with every
-    scanline filter type (None/Sub/Up/Average/Paeth cycling by row)
-    and recover the exact pixels."""
-    import numpy as np
-    from transferdb_spark.ext.multimodal import decode_image, encode_png
-
-    rng = np.random.default_rng(7)
-    px = rng.integers(0, 256, size=(23, 17, 3), dtype=np.uint8)
-    for filters in ([0], [1], [2], [3], [4], [0, 1, 2, 3, 4]):
-        buf = encode_png(px, filters=filters)
-        assert buf[:8] == b"\x89PNG\r\n\x1a\n"
-        out = decode_image(buf)
-        assert out.shape == (23, 17, 3)
-        assert (out == px).all(), f"filters={filters}"
-
-
-def test_png_unsupported_variants_raise(spark):
-    import struct as _s
-
-    import pytest as _pt
-
-    from transferdb_spark.ext.multimodal import decode_image
-
-    sig = b"\x89PNG\r\n\x1a\n"
-    ihdr = _s.pack(">IIBBBBB", 4, 4, 8, 3, 0, 0, 0)  # palette
-    chunk = _s.pack(">I", len(ihdr)) + b"IHDR" + ihdr + b"\0\0\0\0"
-    with _pt.raises(NotImplementedError):
-        decode_image(sig + chunk)
-
-
-def test_png_flows_through_spark_resize(spark):
-    """PNG media rides the same mapInPandas resize path as PPM/BMP."""
-    import numpy as np
-    from transferdb_spark.ext.multimodal import (
-        MEDIA_SCHEMA,
-        decode_image,
-        encode_png,
-        resize_images,
-    )
-
-    rng = np.random.default_rng(11)
-    px = rng.integers(0, 256, size=(12, 16, 3), dtype=np.uint8)
-    buf = encode_png(px, filters=[0, 4])
-    media = spark.createDataFrame(
-        [(9, "image", buf, ("image/png", 16, 12, None))], MEDIA_SCHEMA
-    )
-    out = resize_images(media, width=8, height=6).first()
-    rpx = decode_image(bytes(out["content"]))
-    assert rpx.shape == (6, 8, 3)
-    assert np.array_equal(rpx[0, 0], px[0, 0])
-
-
 def test_mulaw_wav_decode(spark):
     """G.711 mu-law WAV: compress a sine, wrap in RIFF fmt-tag-7,
     decode, and recover the waveform within mu-law quantization error."""
@@ -698,42 +610,30 @@ def test_mulaw_wav_decode(spark):
     assert float(np.corrcoef(out, wave)[0, 1]) > 0.999
 
 
-def test_gif_lzw_roundtrip(spark):
-    """Hand-rolled GIF LZW: compressing encoder -> decoder recovers
-    exact pixels across palette sizes, incl. a 256-color image large
-    enough to force code-width growth (the classic encoder/decoder
-    off-by-one)."""
+def test_array_except_keeps_first_argument_order(spark):
+    """Tripwire for dedup._reassemble_minus: array_except(sequence(1, n),
+    cov) must return the surviving positions in ascending order. Spark
+    does not document that array_except keeps its first argument's
+    order; the span-dedup reassembly relies on it instead of sorting."""
     import numpy as np
-    from transferdb_spark.ext.multimodal import decode_image, encode_gif
 
-    rng = np.random.default_rng(5)
-    cases = [
-        np.repeat(np.repeat(rng.integers(0, 4, (9, 7, 3), dtype=np.uint8) * 80, 3, 0), 2, 1),
-        rng.integers(0, 6, size=(33, 29, 3), dtype=np.uint8) * 40,
-        rng.integers(0, 256, size=(64, 60, 1), dtype=np.uint8).repeat(3, axis=2),
-    ]
-    for px in cases:
-        out = decode_image(encode_gif(px))
-        assert out.shape == px.shape
-        assert (out == px).all()
-
-
-def test_gif_decodes_real_world_files(spark):
-    """Spec fidelity check against GIFs we didn't encode ourselves."""
-    import os
-
-    import pytest as _pt
-
-    from transferdb_spark.ext.multimodal import decode_image
-
-    icons = "/mnt/sandboxing/model_tools_env/v1/python/install/lib/python3.11/idlelib/Icons"
-    if not os.path.isdir(icons):
-        _pt.skip("no sample GIFs on this machine")
-    px = decode_image(open(f"{icons}/idle_32.gif", "rb").read())
-    assert px.shape == (32, 32, 3)
-    # openfolder.gif is INTERLACED — decodes via the 4-pass scatter
-    px2 = decode_image(open(f"{icons}/openfolder.gif", "rb").read())
-    assert px2.ndim == 3 and px2.shape[2] == 3 and px2.shape[0] >= 8
+    rng = np.random.default_rng(11)
+    n = 5000
+    removed = {
+        doc: sorted(int(p) for p in rng.choice(n, size, replace=False) + 1)
+        for doc, size in enumerate((1, 37, 900, 2500, 4999))
+    }
+    covered = spark.createDataFrame(
+        [(d, p) for d, ps in removed.items() for p in ps], "doc_id int, pos int"
+    ).repartition(7)
+    cov = covered.groupBy("doc_id").agg(F.collect_set("pos").alias("cov"))
+    kept = cov.select(
+        "doc_id", F.array_except(F.sequence(F.lit(1), F.lit(n)), "cov").alias("kp")
+    ).collect()
+    assert len(kept) == len(removed)
+    for r in kept:
+        want = sorted(set(range(1, n + 1)) - set(removed[r["doc_id"]]))
+        assert list(r["kp"]) == want, r["doc_id"]
 
 
 def test_line_dedup_first_wins_and_reassembly(spark):
@@ -783,7 +683,8 @@ def test_jpeg_roundtrip_psnr(spark):
     recovers smooth content above 35 dB PSNR; the decoder also handles
     images whose dimensions are not multiples of 8."""
     import numpy as np
-    from transferdb_spark.ext.jpeg import decode_jpeg, encode_jpeg
+    from jpeg_encoder import encode_jpeg
+    from transferdb_spark.ext.jpeg import decode_jpeg
 
     xx, yy = np.meshgrid(np.linspace(0, 255, 45), np.linspace(0, 255, 37))
     img = np.stack([xx, yy, (xx + yy) / 2], axis=2).astype(np.uint8)
@@ -800,7 +701,8 @@ def test_jpeg_truncated_stream_never_indexerrors(spark):
     reader — corpus ingestion meets torn files constantly."""
     import numpy as np
     import pytest
-    from transferdb_spark.ext.jpeg import decode_jpeg, encode_jpeg
+    from jpeg_encoder import encode_jpeg
+    from transferdb_spark.ext.jpeg import decode_jpeg
 
     xx, yy = np.meshgrid(np.linspace(0, 255, 45), np.linspace(0, 255, 37))
     img = np.stack([xx, yy, (xx + yy) / 2], axis=2).astype(np.uint8)
@@ -813,355 +715,6 @@ def test_jpeg_truncated_stream_never_indexerrors(spark):
             pass  # explicit decode error OK
         except IndexError:
             pytest.fail(f"IndexError escaped decode_jpeg at cut={cut}")
-
-
-def test_jpeg_progressive_matches_baseline_bit_for_bit(spark):
-    """Differential: the 14-scan progressive stream (SOF2, spectral
-    selection + successive approximation, EOB runs) decodes to EXACTLY
-    the pixels of the baseline stream of the same image — both encoders
-    share one quantizer, so progressive coding must be a lossless
-    reordering of the same coefficients. Noise forces dense AC bands
-    (ZRL, EOB-run, and correction-bit paths all exercised); 45x37 also
-    exercises non-multiple-of-8 padding."""
-    import numpy as np
-    from transferdb_spark.ext.jpeg import (
-        decode_jpeg,
-        encode_jpeg,
-        encode_jpeg_progressive,
-    )
-
-    rng = np.random.default_rng(7)
-    xx, yy = np.meshgrid(np.linspace(0, 255, 45), np.linspace(0, 255, 37))
-    smooth = np.stack([xx, yy, (xx + yy) / 2], axis=2)
-    noisy = np.clip(smooth + rng.normal(0, 40, smooth.shape), 0, 255).astype(np.uint8)
-    for img in (smooth.astype(np.uint8), noisy):
-        base = decode_jpeg(encode_jpeg(img))
-        prog_buf = encode_jpeg_progressive(img)
-        # really progressive: SOF2 marker present, many scans
-        assert b"\xff\xc2" in prog_buf and prog_buf.count(b"\xff\xda") == 14
-        prog = decode_jpeg(prog_buf)
-        assert prog.shape == base.shape
-        assert np.array_equal(prog, base)
-
-
-def test_jpeg_progressive_truncation_never_indexerrors(spark):
-    """Torn progressive streams (cut inside headers, mid-scan, and at
-    scan boundaries) surface as decode errors or partial images, never
-    raw IndexError/KeyError — same ingestion contract as baseline."""
-    import numpy as np
-    import pytest
-    from transferdb_spark.ext.jpeg import decode_jpeg, encode_jpeg_progressive
-
-    rng = np.random.default_rng(11)
-    img = rng.integers(0, 256, (24, 21, 3), dtype=np.uint8)
-    buf = encode_jpeg_progressive(img)
-    cuts = [3, 20, len(buf) - 3, len(buf) - 10] + [
-        int(len(buf) * f) for f in (0.1, 0.25, 0.5, 0.75, 0.9)
-    ]
-    for cut in cuts:
-        try:
-            out = decode_jpeg(buf[:cut])
-            assert out.dtype == np.uint8 and out.ndim == 3  # partial decode OK
-        except (ValueError, NotImplementedError):
-            pass  # explicit decode error OK
-        except (IndexError, KeyError):
-            pytest.fail(f"Index/KeyError escaped decode_jpeg at cut={cut}")
-
-
-def test_jpeg_12bit_roundtrip_and_precision_gain():
-    """12-bit extended sequential (SOF1, 16-bit DQT): the native decode
-    recovers smooth content above 44 dB PSNR in the 0..4095 scale AND
-    beats the 8-bit twin's relative fidelity on the same image — the 4
-    extra sample bits must actually survive the codec, not just parse."""
-    import numpy as np
-    from transferdb_spark.ext.jpeg import (
-        decode_jpeg,
-        decode_jpeg_native,
-        encode_jpeg,
-        encode_jpeg_12bit,
-    )
-
-    xx, yy = np.meshgrid(np.linspace(0, 4095, 45), np.linspace(0, 4095, 37))
-    img12 = np.stack([xx, yy, (xx + yy) / 2], axis=2).astype(np.uint16)
-    buf = encode_jpeg_12bit(img12)
-    assert b"\xff\xc1" in buf  # SOF1 extended sequential
-    # Pq=1 16-bit DQT: segment length 131, table spec byte 0x10|tid
-    assert b"\xff\xdb\x00\x83\x10" in buf
-
-    out16 = decode_jpeg_native(buf)
-    assert out16.dtype == np.uint16 and out16.shape == img12.shape
-    err = out16.astype(float) - img12.astype(float)
-    psnr12 = 10 * np.log10(4095**2 / max((err**2).mean(), 1e-9))
-    assert psnr12 > 44.0, psnr12
-
-    img8 = (img12 >> 4).astype(np.uint8)
-    err8 = decode_jpeg(encode_jpeg(img8)).astype(float) - img8.astype(float)
-    psnr8 = 10 * np.log10(255**2 / max((err8**2).mean(), 1e-9))
-    assert psnr12 > psnr8 + 3.0, (psnr12, psnr8)
-
-    # the uint8 corpus contract folds 0..4095 down with rounding
-    out8 = decode_jpeg(buf)
-    assert out8.dtype == np.uint8
-    fold = out16.astype(float) * 255.0 / 4095.0
-    assert np.abs(out8.astype(float) - fold).max() < 1.0
-
-
-def test_jpeg_12bit_contracts_and_torn_streams():
-    """Encoder input validation (range/shape), the SOF0-claims-12-bit
-    conformance error, and the ingestion contract on torn/corrupt
-    12-bit streams (no raw IndexError/KeyError escapes)."""
-    import numpy as np
-    import pytest
-    from transferdb_spark.ext.jpeg import (
-        decode_jpeg,
-        decode_jpeg_native,
-        encode_jpeg_12bit,
-    )
-
-    flat = np.full((16, 16, 3), 1234, dtype=np.uint16)
-    rt = decode_jpeg_native(encode_jpeg_12bit(flat))
-    assert np.abs(rt.astype(int) - 1234).max() <= 2  # DC-only blocks
-
-    with pytest.raises(ValueError):
-        encode_jpeg_12bit(np.full((8, 8, 3), 4096, dtype=np.uint16))
-    with pytest.raises(ValueError):
-        encode_jpeg_12bit(np.zeros((8, 8), dtype=np.uint16))
-
-    rng = np.random.default_rng(5)
-    xx, yy = np.meshgrid(np.linspace(0, 4095, 45), np.linspace(0, 4095, 37))
-    smooth = np.stack([xx, yy, (xx + yy) / 2], axis=2)
-    noisy = np.clip(smooth + rng.normal(0, 600, smooth.shape), 0, 4095)
-    buf = encode_jpeg_12bit(noisy.astype(np.uint16))
-
-    # a baseline SOF0 frame claiming 12-bit samples is non-conformant
-    bad = buf.replace(b"\xff\xc1", b"\xff\xc0", 1)
-    with pytest.raises(ValueError):
-        decode_jpeg(bad)
-
-    cuts = [3, 20, len(buf) - 3] + [int(len(buf) * f) for f in (0.25, 0.5, 0.9)]
-    for cut in cuts:
-        try:
-            out = decode_jpeg(buf[:cut])
-            assert out.dtype == np.uint8 and out.ndim == 3
-        except (ValueError, NotImplementedError):
-            pass
-        except (IndexError, KeyError):
-            pytest.fail(f"Index/KeyError escaped decode_jpeg at cut={cut}")
-    for i in range(40):
-        b = bytearray(buf)
-        for _ in range(int(rng.integers(1, 6))):
-            b[int(rng.integers(2, len(b)))] = int(rng.integers(0, 256))
-        try:
-            decode_jpeg(bytes(b))
-        except (ValueError, NotImplementedError):
-            pass
-        except (IndexError, KeyError):
-            pytest.fail(f"Index/KeyError escaped decode_jpeg on fuzz #{i}")
-
-
-def test_jpeg_arithmetic_matches_huffman_bit_for_bit():
-    """Differential: the arithmetic-coded stream (SOF9, T.81 Annex D
-    QM-coder + Annex F conditioning) decodes to EXACTLY the pixels of
-    the Huffman stream of the same image — both encoders share one
-    quantizer, so the entropy layers must be lossless re-codings of
-    identical coefficients. Smooth and noisy content exercise the
-    EOB/zero-run/magnitude trees and the adaptive state machine along
-    different paths; 8-bit and 12-bit both pinned."""
-    import numpy as np
-    from transferdb_spark.ext.jpeg import (
-        decode_jpeg,
-        decode_jpeg_native,
-        encode_jpeg,
-        encode_jpeg_12bit,
-    )
-    from transferdb_spark.ext.jpeg_arith import encode_jpeg_arith
-
-    rng = np.random.default_rng(7)
-    xx, yy = np.meshgrid(np.linspace(0, 255, 45), np.linspace(0, 255, 37))
-    smooth = np.stack([xx, yy, (xx + yy) / 2], axis=2)
-    noisy = np.clip(smooth + rng.normal(0, 40, smooth.shape), 0, 255)
-    for img in (smooth.astype(np.uint8), noisy.astype(np.uint8)):
-        abuf = encode_jpeg_arith(img)
-        assert b"\xff\xc9" in abuf and b"\xff\xcc" in abuf  # SOF9 + DAC
-        assert np.array_equal(decode_jpeg(abuf), decode_jpeg(encode_jpeg(img)))
-
-    xx12, yy12 = np.meshgrid(np.linspace(0, 4095, 45), np.linspace(0, 4095, 37))
-    img12 = np.stack([xx12, yy12, (xx12 + yy12) / 2], axis=2).astype(np.uint16)
-    assert np.array_equal(
-        decode_jpeg_native(encode_jpeg_arith(img12, prec=12)),
-        decode_jpeg_native(encode_jpeg_12bit(img12)),
-    )
-
-
-def test_jpeg_arithmetic_progressive_matches_baseline_bit_for_bit():
-    """SOF10 (arithmetic progressive, T.81 Annex G.2) closes the last
-    in-reach JPEG dispatch gap: the 14-scan arithmetic-progressive
-    stream must decode to EXACTLY the baseline and Huffman-progressive
-    pixels (one shared quantizer, three entropy re-codings of the same
-    coefficients). Smooth/noisy/flat content drives the DC refinement
-    fixed bin, the per-band EOB decisions, the newly-significant vs
-    correction-bit branches, and the magnitude trees; 12-bit pinned;
-    torn streams keep the error contract."""
-    import numpy as np
-    import pytest
-
-    from transferdb_spark.ext.jpeg import (
-        decode_jpeg,
-        decode_jpeg_native,
-        encode_jpeg,
-        encode_jpeg_12bit,
-        encode_jpeg_progressive,
-    )
-    from transferdb_spark.ext.jpeg_arith import encode_jpeg_arith_progressive
-
-    rng = np.random.default_rng(11)
-    xx, yy = np.meshgrid(np.linspace(0, 255, 45), np.linspace(0, 255, 37))
-    smooth = np.stack([xx, yy, (xx + yy) / 2], axis=2)
-    noisy = np.clip(smooth + rng.normal(0, 40, smooth.shape), 0, 255)
-    flat = np.full((24, 16, 3), 128)
-    for img in (smooth.astype(np.uint8), noisy.astype(np.uint8),
-                flat.astype(np.uint8)):
-        abuf = encode_jpeg_arith_progressive(img)
-        assert b"\xff\xca" in abuf and b"\xff\xcc" in abuf  # SOF10 + DAC
-        base = decode_jpeg(encode_jpeg(img))
-        assert np.array_equal(decode_jpeg(abuf), base)
-        assert np.array_equal(decode_jpeg(encode_jpeg_progressive(img)), base)
-
-    # odd sizes fuzz the partial-MCU edges through every scan kind
-    for h, w in ((8, 8), (9, 17), (31, 15)):
-        img = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-        assert np.array_equal(
-            decode_jpeg(encode_jpeg_arith_progressive(img)),
-            decode_jpeg(encode_jpeg(img)),
-        )
-
-    xx12, yy12 = np.meshgrid(np.linspace(0, 4095, 45), np.linspace(0, 4095, 37))
-    img12 = np.stack([xx12, yy12, (xx12 + yy12) / 2], axis=2).astype(np.uint16)
-    assert np.array_equal(
-        decode_jpeg_native(encode_jpeg_arith_progressive(img12, prec=12)),
-        decode_jpeg_native(encode_jpeg_12bit(img12)),
-    )
-
-    buf = encode_jpeg_arith_progressive(noisy.astype(np.uint8))
-    for cut in (3, 30, len(buf) // 3, len(buf) - 4):
-        try:
-            out = decode_jpeg(buf[:cut])
-            assert out.ndim == 3
-        except (ValueError, NotImplementedError):
-            pass
-        except (IndexError, KeyError):
-            pytest.fail(f"Index/KeyError escaped decode_jpeg at cut={cut}")
-
-
-def test_jpeg_lossless_sof3_exact_roundtrips():
-    """SOF3 lossless (T.81 Annex H): encode→decode reproduces the
-    input EXACTLY — all 7 predictors, 8- and 16-bit precision, the
-    point transform, and the category-16 (diff = 32768) escape that
-    only modulo-2^16 prediction arithmetic can produce. Torn streams
-    keep the error contract."""
-    import numpy as np
-    import pytest
-
-    from transferdb_spark.ext.jpeg import (
-        decode_jpeg,
-        decode_jpeg_native,
-        encode_jpeg_lossless,
-    )
-
-    rng = np.random.default_rng(3)
-    img = rng.integers(0, 256, (23, 31), dtype=np.uint8)
-    for pred in range(1, 8):
-        out = decode_jpeg(encode_jpeg_lossless(img, predictor=pred))
-        assert np.array_equal(out[:, :, 0], img), pred
-        assert np.array_equal(out[:, :, 1], img)  # gray replicates
-
-    img16 = rng.integers(0, 65536, (19, 24), dtype=np.uint16)
-    out16 = decode_jpeg_native(encode_jpeg_lossless(img16))
-    assert np.array_equal(out16[:, :, 0], img16)
-
-    # category-16 escape: first sample 0 predicts 2^15 -> diff -32768
-    # ≡ +32768 (mod 2^16); alternating extremes keep hitting it
-    ext = np.array([[0, 32768, 0, 32768], [65535, 0, 32767, 1]], dtype=np.uint16)
-    oute = decode_jpeg_native(encode_jpeg_lossless(ext))
-    assert np.array_equal(oute[:, :, 0], ext)
-
-    # point transform drops Pt low bits, recovered as << Pt
-    imgp = rng.integers(0, 256, (12, 12), dtype=np.uint8)
-    outp = decode_jpeg(encode_jpeg_lossless(imgp, predictor=4, pt=2))
-    assert np.array_equal(outp[:, :, 0], (imgp >> 2) << 2)
-
-    buf = encode_jpeg_lossless(img, predictor=7)
-    for cut in (4, 40, len(buf) // 2, len(buf) - 3):
-        try:
-            r = decode_jpeg(buf[:cut])
-            assert r.ndim == 3
-        except (ValueError, NotImplementedError):
-            pass
-        except (IndexError, KeyError):
-            pytest.fail(f"Index/KeyError escaped decode_jpeg at cut={cut}")
-
-
-def test_jpeg_arithmetic_qm_coder_random_roundtrips():
-    """The QM-coder state machine round-trips arbitrary biased binary
-    decision streams over shared adaptive contexts — this exercises
-    MPS/LPS conditional-exchange and renormalization paths that JPEG's
-    own statistical models hit only sparsely."""
-    import numpy as np
-    from transferdb_spark.ext.jpeg_arith import _ArithDecoder, _ArithEncoder
-
-    rng = np.random.default_rng(42)
-    for _ in range(25):
-        n_ctx = int(rng.integers(1, 8))
-        n = int(rng.integers(1, 1500))
-        p = rng.uniform(0.01, 0.99)
-        syms = (rng.random(n) < p).astype(int).tolist()
-        ctxs = rng.integers(0, n_ctx, n).tolist()
-        enc = _ArithEncoder()
-        st = bytearray(n_ctx)
-        for s, c in zip(syms, ctxs):
-            enc.encode(st, c, s)
-        dec = _ArithDecoder(enc.finish(), 0)
-        st = bytearray(n_ctx)
-        assert [dec.decode(st, c) for c in ctxs] == syms
-
-
-def test_jpeg_arithmetic_torn_streams_contract():
-    """Torn/corrupt arithmetic streams surface as decode errors or
-    bounded partial images, never raw IndexError/KeyError — the same
-    ingestion contract as the Huffman paths (the decoder treats
-    running off the end as a marker and feeds 1-bits)."""
-    import numpy as np
-    import pytest
-    from transferdb_spark.ext.jpeg import decode_jpeg
-    from transferdb_spark.ext.jpeg_arith import encode_jpeg_arith
-
-    rng = np.random.default_rng(9)
-    xx, yy = np.meshgrid(np.linspace(0, 255, 45), np.linspace(0, 255, 37))
-    img = np.clip(
-        np.stack([xx, yy, (xx + yy) / 2], axis=2) + rng.normal(0, 40, (37, 45, 3)),
-        0,
-        255,
-    ).astype(np.uint8)
-    buf = encode_jpeg_arith(img)
-    cuts = [3, 20, len(buf) // 4, len(buf) // 2, len(buf) - 3]
-    for cut in cuts:
-        try:
-            out = decode_jpeg(buf[:cut])
-            assert out.dtype == np.uint8 and out.ndim == 3
-        except (ValueError, NotImplementedError):
-            pass
-        except (IndexError, KeyError):
-            pytest.fail(f"Index/KeyError escaped decode_jpeg at cut={cut}")
-    for i in range(40):
-        b = bytearray(buf)
-        for _ in range(int(rng.integers(1, 6))):
-            b[int(rng.integers(2, len(b)))] = int(rng.integers(0, 256))
-        try:
-            decode_jpeg(bytes(b))
-        except (ValueError, NotImplementedError):
-            pass
-        except (IndexError, KeyError):
-            pytest.fail(f"Index/KeyError escaped decode_jpeg on fuzz #{i}")
 
 
 def test_jpeg_decodes_real_world_files(spark):
@@ -1198,19 +751,19 @@ def test_jpeg_flows_through_spark_feature_path(spark):
     REAL decode (fake=False) — the full Arrow batch -> decode ->
     feature kernel pipeline."""
     import numpy as np
+    from jpeg_encoder import encode_jpeg
     from transferdb_spark.ext.multimodal import (
         MEDIA_SCHEMA,
+        encode_ppm,
         extract_features,
-        encode_png,
     )
-    from transferdb_spark.ext.jpeg import encode_jpeg
 
     xx, yy = np.meshgrid(np.linspace(0, 255, 32), np.linspace(0, 255, 24))
     img = np.stack([xx, yy, yy], axis=2).astype(np.uint8)
     media = spark.createDataFrame(
         [
             (1, "image", encode_jpeg(img), ("image/jpeg", 32, 24, None)),
-            (2, "image", encode_png(img), ("image/png", 32, 24, None)),
+            (2, "image", encode_ppm(img), ("image/x-portable-pixmap", 32, 24, None)),
         ],
         MEDIA_SCHEMA,
     )
@@ -1307,127 +860,6 @@ def test_byte_bpe_encode_matches_sequential_replay(spark, docs):
         assert got["n_tokens"] == len(syms), r["doc_id"]
         assert got["n_bytes"] == len(r["text"].encode("utf-8"))
         assert got["n_tokens"] <= got["n_bytes"]
-
-
-def test_png_palette_and_grayscale_roundtrip():
-    """Palette PNGs (all four legal bit depths, big-endian packing +
-    PLTE lookup) and 8-bit grayscale decode exactly; the filter
-    left-offset is 1 byte for indexed rows."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    from transferdb_spark.ext.multimodal import (
-        _png_chunk,
-        _PNG_SIG,
-        decode_image,
-        encode_png_indexed,
-    )
-
-    rng = np.random.RandomState(7)
-    for depth in (1, 2, 4, 8):
-        n_colors = 2 ** min(depth, 4)
-        palette = rng.randint(0, 256, (n_colors, 3), dtype=np.uint8)
-        # odd width exercises the partial-byte tail of packed rows
-        idx = rng.randint(0, n_colors, (5, 7), dtype=np.uint8)
-        buf = encode_png_indexed(idx, palette, depth)
-        px = decode_image(buf)
-        assert px.shape == (5, 7, 3), depth
-        assert np.array_equal(px, palette[idx]), depth
-
-    # grayscale (color type 0): gray replicates into RGB; use filter 1
-    # (Sub) to pin the 1-byte left offset
-    g = rng.randint(0, 256, (4, 6), dtype=np.uint8)
-    lines = bytearray()
-    for y in range(4):
-        row = g[y].astype(np.int32)
-        enc = np.zeros(6, dtype=np.int32)
-        for x in range(6):
-            a = row[x - 1] if x >= 1 else 0
-            enc[x] = (row[x] - a) & 0xFF
-        lines.append(1)
-        lines.extend(enc.astype(np.uint8).tobytes())
-    ihdr = struct.pack(">IIBBBBB", 6, 4, 8, 0, 0, 0, 0)
-    buf = (
-        _PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(bytes(lines)))
-        + _png_chunk(b"IEND", b"")
-    )
-    px = decode_image(buf)
-    assert px.shape == (4, 6, 3)
-    assert np.array_equal(px[:, :, 0], g) and np.array_equal(px[:, :, 2], g)
-
-
-def test_gif_interlaced_roundtrip():
-    """Interlaced GIFs deinterlace exactly: the stream stores rows in
-    the 4-pass order (0,8.. / 4,12.. / 2,6.. / 1,3..) and the decoder
-    scatters them back; heights that end mid-pass must still cover
-    every row exactly once."""
-    import numpy as np
-
-    from transferdb_spark.ext.multimodal import decode_image, encode_gif
-
-    rng = np.random.RandomState(11)
-    for h in (1, 2, 5, 8, 9, 16):
-        px = rng.randint(0, 8, (h, 6, 1), dtype=np.uint8).repeat(3, axis=2)
-        plain = decode_image(encode_gif(px))
-        inter = decode_image(encode_gif(px, interlaced=True))
-        assert np.array_equal(plain, px), h
-        assert np.array_equal(inter, px), h
-
-
-def test_png_adam7_interlaced_roundtrip():
-    """Adam7 PNGs decode exactly: seven independently-filtered passes
-    scatter onto their (x0+i*dx, y0+j*dy) grids; odd sizes leave some
-    passes empty and must still cover every pixel once. All filter
-    types exercised inside passes."""
-    import numpy as np
-
-    from transferdb_spark.ext.multimodal import decode_image, encode_png
-
-    rng = np.random.RandomState(3)
-    for h, w in ((1, 1), (3, 5), (8, 8), (9, 13), (16, 7)):
-        px = rng.randint(0, 256, (h, w, 3), dtype=np.uint8)
-        buf = encode_png(px, filters=[0, 1, 2, 3, 4], interlaced=True)
-        got = decode_image(buf)
-        assert np.array_equal(got, px), (h, w)
-
-
-def test_png_16bit_downscales_to_high_byte():
-    """16-bit PNGs decode via high-byte downscale; the filter bpp is
-    2*channels bytes (Sub offset exercised), truecolor and gray."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    from transferdb_spark.ext.multimodal import _png_chunk, _PNG_SIG, decode_image
-
-    rng = np.random.RandomState(5)
-    for color, ch in ((2, 3), (0, 1)):
-        px16 = rng.randint(0, 65536, (3, 4, ch), dtype=np.uint16)
-        # big-endian sample stream, filter 0 rows
-        be = px16.astype(">u2").tobytes()
-        stride = 4 * ch * 2
-        lines = bytearray()
-        for y in range(3):
-            lines.append(0)
-            lines.extend(be[y * stride : (y + 1) * stride])
-        ihdr = struct.pack(">IIBBBBB", 4, 3, 16, color, 0, 0, 0)
-        buf = (
-            _PNG_SIG
-            + _png_chunk(b"IHDR", ihdr)
-            + _png_chunk(b"IDAT", zlib.compress(bytes(lines)))
-            + _png_chunk(b"IEND", b"")
-        )
-        got = decode_image(buf)
-        want8 = (px16 >> 8).astype(np.uint8)
-        if color == 0:
-            assert np.array_equal(got, np.repeat(want8, 3, axis=2))
-        else:
-            assert np.array_equal(got, want8)
 
 
 def test_gpt2_pretokenizer_parity_and_training(spark, docs):
@@ -2044,149 +1476,6 @@ def test_bm25_phrase_counts_consecutive_only(spark):
     assert got == {1: 2, 6: 1}
 
 
-def test_png_adam7_sub_byte_depths(spark):
-    """Adam7-interlaced palette PNGs at bit depths 1/2/4 (the last PNG
-    decoder gap): hand-built files with known indices decode to the
-    exact palette colors at awkward geometries (partial passes, single
-    pixel)."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    from transferdb_spark.ext.multimodal import _ADAM7, _decode_png
-
-    def chunk(t, d):
-        c = struct.pack(">I", len(d)) + t + d
-        return c + struct.pack(">I", zlib.crc32(t + d))
-
-    def build(idx, plte, depth):
-        h, w = idx.shape
-        out = b"\x89PNG\r\n\x1a\n"
-        out += chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, depth, 3, 0, 0, 1))
-        out += chunk(b"PLTE", plte.astype(np.uint8).tobytes())
-        raw = bytearray()
-        per_byte = 8 // depth
-        for x0, y0, dx, dy in _ADAM7:
-            sub = idx[y0::dy, x0::dx]
-            ph, pw = sub.shape
-            if ph == 0 or pw == 0:
-                continue
-            for y in range(ph):
-                b = bytearray((pw * depth + 7) // 8)
-                for x in range(pw):
-                    shift = 8 - depth * ((x % per_byte) + 1)
-                    b[x // per_byte] |= int(sub[y, x]) << shift
-                raw += b"\x00" + bytes(b)
-        out += chunk(b"IDAT", zlib.compress(bytes(raw)))
-        out += chunk(b"IEND", b"")
-        return bytes(out)
-
-    rng = np.random.default_rng(3)
-    for depth, ncol in ((1, 2), (2, 4), (4, 16)):
-        for h, w in ((13, 9), (8, 8), (3, 17), (1, 1)):
-            plte = rng.integers(0, 256, (ncol, 3), dtype=np.uint8)
-            idx = rng.integers(0, ncol, (h, w), dtype=np.uint8)
-            px = _decode_png(build(idx, plte, depth))
-            assert px.shape == (h, w, 3)
-            assert np.array_equal(px, plte[idx]), (depth, h, w)
-
-
-def test_mp4_probe_extracts_container_metadata(spark):
-    """ISO-BMFF probing: a hand-built minimal MP4 (ftyp/moov/mvhd/
-    trak/tkhd/mdhd/hdlr/stsd, v0 and v1 header variants, a 64-bit
-    largesize box) yields brand, durations, per-track kind/codec and
-    video dimensions; torn bytes raise ValueError."""
-    import struct
-
-    import pytest
-
-    from transferdb_spark.ext.multimodal import probe_mp4
-
-    def box(t, payload, large=False):
-        if large:
-            return struct.pack(">I", 1) + t + struct.pack(">Q", 16 + len(payload)) + payload
-        return struct.pack(">I", 8 + len(payload)) + t + payload
-
-    def tkhd(w, h, v1=False):
-        if v1:
-            head = bytes([1, 0, 0, 0]) + struct.pack(">QQIIQ", 0, 0, 1, 0, 450000)
-        else:
-            head = bytes(4) + struct.pack(">IIIII", 0, 0, 1, 0, 5000)
-        return box(b"tkhd", head + bytes(8 + 2 + 2 + 2 + 2 + 36)
-                   + struct.pack(">II", w << 16, h << 16))
-
-    def mdhd(ts, dur):
-        return box(b"mdhd", bytes(4) + struct.pack(">IIII", 0, 0, ts, dur) + bytes(4))
-
-    def hdlr(handler):
-        return box(b"hdlr", bytes(4) + bytes(4) + handler + bytes(12))
-
-    def stsd(codec):
-        entry = struct.pack(">I", 16) + codec + bytes(8)
-        return box(b"stsd", bytes(4) + struct.pack(">I", 1) + entry)
-
-    vide = box(b"trak", tkhd(320, 240) + box(
-        b"mdia", mdhd(90000, 450000) + hdlr(b"vide")
-        + box(b"minf", box(b"stbl", stsd(b"avc1")))))
-    soun = box(b"trak", tkhd(0, 0, v1=True) + box(
-        b"mdia", mdhd(48000, 96000) + hdlr(b"soun")
-        + box(b"minf", box(b"stbl", stsd(b"mp4a")))))
-    mvhd = box(b"mvhd", bytes(4) + struct.pack(">IIII", 0, 0, 1000, 5000) + bytes(76))
-    moov = box(b"moov", mvhd + vide + soun, large=True)  # exercise largesize
-    buf = box(b"ftyp", b"isom" + bytes(4) + b"isomavc1") + moov + box(b"mdat", b"\x00" * 32)
-
-    meta = probe_mp4(buf)
-    assert meta["brand"] == "isom"
-    assert meta["duration_ms"] == 5000
-    assert meta["n_tracks"] == 2
-    v, a = meta["tracks"]
-    assert v == {"kind": "video", "codec": "avc1", "width": 320, "height": 240,
-                 "duration_ms": 5000}
-    assert a["kind"] == "audio" and a["codec"] == "mp4a"
-    assert a["duration_ms"] == 2000 and a["width"] == 0
-
-    # len(buf)-45 cuts INTO moov (removing exactly the 40-byte mdat
-    # would still be a complete, valid file)
-    for cut in (3, 10, 40, len(buf) - 45):
-        with pytest.raises(ValueError):
-            probe_mp4(buf[:cut])
-    with pytest.raises(ValueError):
-        probe_mp4(b"\x00" * 64)
-
-
-def test_mp4_rides_feature_extraction_path(spark):
-    """kind=video MP4 payloads flow through the real (fake=False)
-    mapInPandas feature path using container-probe features —
-    duration/track-count/dimensions — with no frame decode."""
-    import struct
-
-    import numpy as np
-
-    from transferdb_spark.ext.multimodal import MEDIA_SCHEMA, extract_features
-
-    def box(t, payload):
-        return struct.pack(">I", 8 + len(payload)) + t + payload
-
-    tkhd = box(b"tkhd", bytes(4) + struct.pack(">IIIII", 0, 0, 1, 0, 7000)
-               + bytes(52) + struct.pack(">II", 640 << 16, 360 << 16))
-    mdia = box(b"mdia", box(b"mdhd", bytes(4) + struct.pack(">IIII", 0, 0, 1000, 7000)
-                            + bytes(4))
-               + box(b"hdlr", bytes(8) + b"vide" + bytes(12)))
-    moov = box(b"moov", box(b"mvhd", bytes(4) + struct.pack(">IIII", 0, 0, 1000, 7000)
-                            + bytes(76))
-               + box(b"trak", tkhd + mdia))
-    buf = box(b"ftyp", b"isom" + bytes(4)) + moov
-
-    media = spark.createDataFrame(
-        [(1, "video", buf, ("video/mp4", 640, 360, 7000))], MEDIA_SCHEMA
-    )
-    row = extract_features(media, fake=False).collect()[0]
-    f = np.array(row["features"])
-    assert f[0] == 7000.0 and f[1] == 1.0 and f[2] == 640.0 and f[3] == 360.0
-    assert row["n_bytes"] == len(buf)
-
-
 def test_bm25_proximity_boost_reorders(spark):
     """Two docs with IDENTICAL bags of the query terms: the one where
     the rare pair sits adjacent outranks the scattered one; a pair
@@ -2572,181 +1861,6 @@ def test_multiphrase_probes_materialized_index(spark, docs, tmp_path):
     assert [tuple(r) for r in via_index] == [tuple(r) for r in via_probe]
 
 
-def _mjpeg_fixture_frames(n=6, w=24, h=16):
-    """Deterministic JPEG frames with frame-dependent brightness so
-    motion between consecutive frames is measurable."""
-    import numpy as np
-
-    from transferdb_spark.ext.jpeg import encode_jpeg
-
-    frames_px, frames_jpg = [], []
-    for k in range(n):
-        yy, xx = np.mgrid[0:h, 0:w]
-        px = np.stack(
-            [(xx * 9 + k * 40) % 256, (yy * 13 + k * 40) % 256,
-             ((xx + yy) * 5 + k * 40) % 256], axis=-1,
-        ).astype(np.uint8)
-        frames_px.append(px)
-        frames_jpg.append(encode_jpeg(px))
-    return frames_px, frames_jpg
-
-
-def test_mjpeg_mp4_demux_roundtrip_exact():
-    """Mux → demux is byte-exact for every sample across stsc run
-    shapes (uneven chunking), the fixed-size stsz form (identical
-    frames), and 64-bit co64 offsets; sample timestamps follow stts."""
-    import pytest
-
-    from transferdb_spark.ext.mp4 import demux_samples, mux_mjpeg, sample_table
-
-    _, jpgs = _mjpeg_fixture_frames(7)
-    for pattern, co64 in (((1,), False), ((3, 2), False), ((2,), True)):
-        buf = mux_mjpeg(jpgs, fps=5, width=24, height=16,
-                        chunk_pattern=pattern, co64=co64)
-        assert demux_samples(buf) == jpgs, (pattern, co64)
-        st = sample_table(buf)
-        assert st["codec"] == "jpeg"
-        assert st["times_ms"] == [i * 200 for i in range(7)]  # fps=5
-
-    # identical frames -> muxer emits fixed-size stsz; still demuxes
-    fixed = mux_mjpeg([jpgs[0]] * 4, fps=10)
-    assert demux_samples(fixed) == [jpgs[0]] * 4
-
-    buf = mux_mjpeg(jpgs, chunk_pattern=(3, 2))
-    for cut in (10, 60, len(buf) // 2):
-        with pytest.raises(ValueError):
-            demux_samples(buf[:cut])
-    with pytest.raises(ValueError):
-        sample_table(b"\x00" * 64)
-
-
-def test_fragmented_mp4_demux_roundtrip_exact():
-    """fMP4 (moof/traf/trun) demux: mux_mjpeg_fragmented → demux is
-    byte-exact across the spec's branch points — fragment size
-    patterns, explicit base_data_offset vs default-base-is-moof,
-    split truns, tfdt-present vs accumulated-duration timelines —
-    and the timeline matches the flat muxer's for the same fps."""
-    import itertools
-
-    import pytest
-
-    from transferdb_spark.ext.mp4 import (
-        decode_mjpeg_frames,
-        demux_samples,
-        mux_mjpeg_fragmented,
-        sample_table,
-    )
-
-    _, jpgs = _mjpeg_fixture_frames(7)
-    for pattern, explicit_base, two_truns, omit_tfdt in itertools.product(
-        ((1,), (2,), (3, 1)), (False, True), (False, True), (False, True)
-    ):
-        buf = mux_mjpeg_fragmented(
-            jpgs, fps=5, width=24, height=16, frag_pattern=pattern,
-            explicit_base=explicit_base, two_truns=two_truns,
-            omit_tfdt=omit_tfdt,
-        )
-        tag = (pattern, explicit_base, two_truns, omit_tfdt)
-        assert demux_samples(buf) == jpgs, tag
-        st = sample_table(buf)
-        assert st["fragmented"] is True, tag
-        assert st["codec"] == "jpeg"
-        assert st["times_ms"] == [i * 200 for i in range(7)], tag
-
-    # ADVICE regression (§8.8.8): a trun WITHOUT the data-offset flag
-    # starts immediately after the previous run's data — a parser that
-    # resets to the traf base would re-read the first run's bytes.
-    # Exercise both base anchors so the carry-forward is proven
-    # independent of how the base was established.
-    for pattern, explicit_base in itertools.product(
-        ((2,), (3, 1), (4,)), (False, True)
-    ):
-        buf = mux_mjpeg_fragmented(
-            jpgs, fps=5, width=24, height=16, frag_pattern=pattern,
-            explicit_base=explicit_base, two_truns=True,
-            second_trun_no_offset=True,
-        )
-        tag = ("no-offset", pattern, explicit_base)
-        assert demux_samples(buf) == jpgs, tag
-        assert sample_table(buf)["times_ms"] == [i * 200 for i in range(7)], tag
-
-    # frame decode rides the same path as flat MP4s; the metadata
-    # probe reports the fragment layout
-    import transferdb_spark.ext.multimodal as _mm
-
-    buf = mux_mjpeg_fragmented(jpgs, fps=5, width=24, height=16)
-    assert len(decode_mjpeg_frames(buf, every=2)) == 4
-    info = _mm._probe_mp4(buf)
-    assert info["fragmented"] is True and info["n_fragments"] == 4
-
-    # torn fragments fail loudly, and an init segment with no moof at
-    # all is an error, not an empty table
-    with pytest.raises(ValueError):
-        demux_samples(buf[: len(buf) // 2])
-    init_only = buf[: buf.find(b"moof") - 4]
-    with pytest.raises(ValueError):
-        sample_table(init_only)
-
-
-def test_mjpeg_mp4_frames_decode_via_repo_jpeg():
-    """decode_mjpeg_frames returns real pixel arrays close to the
-    encoder inputs (JPEG-lossy tolerance); stride/max_frames subsample
-    without touching skipped samples; non-MJPEG codecs keep the
-    NotImplementedError dispatch."""
-    import numpy as np
-    import pytest
-
-    from transferdb_spark.ext.mp4 import decode_mjpeg_frames, mux_mjpeg
-
-    px, jpgs = _mjpeg_fixture_frames(6)
-    buf = mux_mjpeg(jpgs, fps=5, width=24, height=16, chunk_pattern=(2, 1))
-    frames = decode_mjpeg_frames(buf)
-    assert len(frames) == 6
-    for got, want in zip(frames, px):
-        assert got.shape == want.shape
-        assert float(np.mean(np.abs(got.astype(int) - want.astype(int)))) < 12.0
-
-    assert len(decode_mjpeg_frames(buf, every=2)) == 3
-    assert len(decode_mjpeg_frames(buf, max_frames=2)) == 2
-
-    avc = bytearray(mux_mjpeg(jpgs[:2]))
-    i = avc.find(b"jpeg", avc.find(b"stsd"))
-    avc[i : i + 4] = b"avc1"
-    with pytest.raises(NotImplementedError):
-        decode_mjpeg_frames(bytes(avc))
-
-
-def test_mjpeg_mp4_feature_and_frame_sampling(spark):
-    """End-to-end Spark plumbing: an MJPEG MP4 rides extract_features
-    (fake=False) with real decoded-frame stats appended after the
-    container features, and sample_frames yields the exact JPEG sample
-    bytes for each offset via the stts timeline."""
-    import numpy as np
-
-    from transferdb_spark.ext.mp4 import mux_mjpeg
-    from transferdb_spark.ext.multimodal import (
-        MEDIA_SCHEMA,
-        extract_features,
-        sample_frames,
-    )
-
-    _, jpgs = _mjpeg_fixture_frames(5)
-    buf = mux_mjpeg(jpgs, fps=2, width=24, height=16, chunk_pattern=(2,))
-    media = spark.createDataFrame(
-        [(7, "video", buf, ("video/mp4", 24, 16, 2500))], MEDIA_SCHEMA
-    )
-
-    f = np.array(extract_features(media, fake=False).collect()[0]["features"])
-    assert f[0] == 2500.0 and f[1] == 1.0 and f[2] == 24.0 and f[3] == 16.0
-    assert f[4] > 0.0  # mean luminance of decoded frames
-    assert f[6] > 0.0  # motion energy across frames
-
-    rows = sample_frames(media, every_ms=500, fps=2).collect()
-    by_off = {r["offset_ms"]: bytes(r["frame"]) for r in rows}
-    # fps=2 -> samples at 0/500/1000/1500/2000 ms map 1:1 to frames
-    assert by_off[0] == jpgs[0] and by_off[1000] == jpgs[2] and by_off[2000] == jpgs[4]
-
-
 def test_rm3_expansion_changes_ranking(spark, docs):
     """RM3: expansion terms are elected from the BM25 feedback docs by
     integer relevance-model weight (no originals, no short tokens),
@@ -2819,42 +1933,6 @@ def test_unicode_nfc_composes_decomposed_text(spark):
     assert out[1]["norm_text"] == composed and out[1]["changed"] is False
     assert out[2]["changed"] is False
     assert out[3]["norm_text"] is None and out[3]["changed"] is None
-
-
-def test_mjpeg_transcode_resizes_and_remuxes():
-    """transcode_mjpeg: output is a valid MJPEG MP4 at the new
-    dimensions with the same frame count/timeline, and decoded frames
-    match a direct resize of the originals (JPEG-lossy tolerance)."""
-    import numpy as np
-    import pytest
-
-    from transferdb_spark.ext.mp4 import (
-        decode_mjpeg_frames,
-        mux_mjpeg,
-        sample_table,
-        transcode_mjpeg,
-    )
-
-    px, jpgs = _mjpeg_fixture_frames(4, w=24, h=16)
-    buf = mux_mjpeg(jpgs, fps=5, width=24, height=16, chunk_pattern=(2,))
-    out = transcode_mjpeg(buf, width=12, height=8)
-
-    st = sample_table(out)
-    assert st["codec"] == "jpeg" and len(st["sizes"]) == 4
-    assert st["times_ms"] == [i * 200 for i in range(4)]  # fps preserved
-    frames = decode_mjpeg_frames(out)
-    for got, orig in zip(frames, px):
-        assert got.shape == (8, 12, 3)
-        yi = (np.arange(8) * 16 // 8).clip(0, 15)
-        xi = (np.arange(12) * 24 // 12).clip(0, 23)
-        want = orig[yi][:, xi]
-        assert float(np.mean(np.abs(got.astype(int) - want.astype(int)))) < 16.0
-
-    avc = bytearray(buf)
-    i = avc.find(b"jpeg", avc.find(b"stsd"))
-    avc[i : i + 4] = b"avc1"
-    with pytest.raises(NotImplementedError):
-        transcode_mjpeg(bytes(avc), 12, 8)
 
 
 def test_cross_source_overlap_counts_shared_leads(spark):
@@ -2958,32 +2036,6 @@ def test_pca_projection_matches_numpy(spark, sf_dir):
     assert v[0] >= v[1] >= v[2] > 0
 
 
-def test_resize_transcodes_mjpeg_video(spark):
-    """resize_images routes MJPEG MP4 rows through the transcode path
-    (new dimensions, same frame count) while undecodable video bytes
-    pass through untouched."""
-    from transferdb_spark.ext.mp4 import mux_mjpeg, sample_table
-    from transferdb_spark.ext.multimodal import MEDIA_SCHEMA, resize_images
-
-    _, jpgs = _mjpeg_fixture_frames(3)
-    buf = mux_mjpeg(jpgs, fps=5, width=24, height=16)
-    rows = [
-        (1, "video", buf, ("video/mp4", 24, 16, 600)),
-        (2, "video", b"\x00" * 64, ("video/raw-rgb24", 8, 6, 100)),
-    ]
-    out = {
-        r["media_id"]: r
-        for r in resize_images(
-            spark.createDataFrame(rows, MEDIA_SCHEMA), 12, 8
-        ).collect()
-    }
-    st = sample_table(bytes(out[1]["content"]))
-    assert st["codec"] == "jpeg" and len(st["sizes"]) == 3
-    assert out[1]["meta"]["mime"] == "video/mp4"
-    assert out[1]["meta"]["width"] == 12 and out[1]["meta"]["height"] == 8
-    assert bytes(out[2]["content"]) == b"\x00" * 64  # passthrough
-
-
 def test_compression_ratio_matches_zlib_and_ranks_entropy(spark):
     """Differential vs direct zlib, and the semantic property: repeated
     boilerplate compresses far below high-entropy text."""
@@ -3008,93 +2060,6 @@ def test_compression_ratio_matches_zlib_and_ranks_entropy(spark):
         assert out[i]["raw_len"] == len(text)
     assert out[0]["ratio"] < 0.15 < 0.5 < out[1]["ratio"]
     assert out[2]["zlib_len"] is None and out[2]["ratio"] is None
-
-
-def test_tiff_roundtrip_all_profiles(spark):
-    """TIFF: both byte orders x {none, LZW, PackBits} x strip splits x
-    gray/RGB round-trip byte-exact through the encoder twin; LZW with
-    predictor 2 (horizontal differencing) decodes; tiled/16-bit raise
-    NotImplementedError; torn bytes raise ValueError; the dispatch in
-    decode_image routes II/MM magics here."""
-    import numpy as np
-    import pytest
-
-    from transferdb_spark.ext.multimodal import decode_image
-    from transferdb_spark.ext.tiff import decode_tiff, encode_tiff
-
-    rng = np.random.default_rng(5)
-    for shape in ((13, 9, 3), (5, 17, 1)):
-        px = rng.integers(0, 256, shape, dtype=np.uint8)
-        want = np.repeat(px, 3, axis=-1) if shape[-1] == 1 else px
-        for comp in (1, 5, 32773):
-            for be in (False, True):
-                for rps in (None, 4):
-                    buf = encode_tiff(px, compression=comp, big_endian=be,
-                                      rows_per_strip=rps)
-                    assert np.array_equal(decode_tiff(buf), want), (shape, comp, be, rps)
-
-    # smooth gradient with predictor 2 + LZW (the scanned-doc profile)
-    yy, xx = np.mgrid[0:24, 0:31]
-    smooth = ((xx * 3 + yy * 5) % 256).astype(np.uint8)[:, :, None].repeat(3, -1)
-    buf = encode_tiff(smooth, compression=5, predictor=2)
-    assert np.array_equal(decode_tiff(buf), smooth)
-    # predictor shrinks the LZW stream on smooth data (sanity that the
-    # tag actually changed the encoding)
-    assert len(buf) < len(encode_tiff(smooth, compression=5))
-
-    # dispatch integration + 64-entry-LZW width growth on a big image
-    big = rng.integers(0, 256, (90, 110, 3), dtype=np.uint8)
-    assert np.array_equal(decode_image(encode_tiff(big, compression=5)), big)
-
-    for cut in (3, 9, 40, 200):
-        with pytest.raises(ValueError):
-            decode_tiff(encode_tiff(big)[:cut])
-    with pytest.raises(ValueError):
-        decode_tiff(b"II+\x00" + bytes(64))
-
-
-def test_audio_formats_ride_feature_path(spark):
-    """AIFF decodes to real DSP features matching its WAV twin of the
-    same tone; FLAC and MP3 ride probe-based features (duration, rate,
-    channels) — the filter-before-decode audio gate."""
-    import struct
-
-    import numpy as np
-
-    from transferdb_spark.ext.multimodal import (
-        MEDIA_SCHEMA,
-        encode_aiff,
-        extract_features,
-        synthetic_wav,
-    )
-
-    t = np.arange(2000) / 8000.0
-    wave = (np.sin(2 * np.pi * 440 * t) * 0.5).astype(np.float32)
-    aiff = encode_aiff(wave, 8000)
-    wav = synthetic_wav(440.0, ms=250, rate=8000)
-
-    bits20 = (22050 << 44) | (1 << 41) | (15 << 36) | 44100
-    body = bytes(10) + bits20.to_bytes(8, "big") + bytes(16)
-    flac = b"fLaC" + bytes([0x80]) + len(body).to_bytes(3, "big") + body
-    mp3 = bytes([0xFF, 0xFB, 0x90, 0x00]) + bytes(4000)
-
-    media = spark.createDataFrame(
-        [
-            (1, "audio", aiff, ("audio/aiff", 0, 0, 250)),
-            (2, "audio", wav, ("audio/wav", 0, 0, 250)),
-            (3, "audio", flac, ("audio/flac", 0, 0, 2000)),
-            (4, "audio", mp3, ("audio/mpeg", 0, 0, 0)),
-        ],
-        MEDIA_SCHEMA,
-    )
-    f = {r["media_id"]: np.array(r["features"])
-         for r in extract_features(media, fake=False).collect()}
-    # same tone, same rate: duration/RMS/ZCR agree between AIFF and WAV
-    assert abs(f[1][0] - f[2][0]) < 1e-3   # duration
-    assert abs(f[1][1] - f[2][1]) < 1e-3   # RMS
-    assert abs(f[1][3] - f[2][3]) < 2e-2   # zero-crossing rate
-    assert list(f[3][:3]) == [2000.0, 22050.0, 2.0]  # FLAC probe
-    assert f[4][1] == 44100.0 and f[4][3] == 128.0   # MP3 probe
 
 
 def test_funnel_first_touch_semantics(spark, tmp_path, monkeypatch):
@@ -3462,35 +2427,6 @@ def test_zipf_slope_separates_natural_from_uniform(spark):
     ).first()
     assert -1.2 < z["zipf_slope"] < -0.8, z
     assert abs(u["zipf_slope"]) < 0.05, u
-
-
-def test_jpeg_lossless_sof3_three_component_raw_roundtrip():
-    """ADVICE regression: 3-component SOF3 decode must NOT apply the
-    YCbCr->RGB transform — Annex H has no color model, lossless
-    sources (DNG/medical) carry raw component values. Encode three
-    random raw planes, decode, require EXACT equality per plane (the
-    transform would corrupt every sample with near-certainty)."""
-    import numpy as np
-
-    from transferdb_spark.ext.jpeg import (
-        decode_jpeg,
-        decode_jpeg_native,
-        encode_jpeg_lossless,
-    )
-
-    rng = np.random.default_rng(11)
-    img = rng.integers(0, 256, (17, 13, 3), dtype=np.uint8)
-    for pred in (1, 4, 7):
-        out = decode_jpeg(encode_jpeg_lossless(img, predictor=pred))
-        assert np.array_equal(out, img), pred
-
-    img16 = rng.integers(0, 65536, (9, 11, 3), dtype=np.uint16)
-    out16 = decode_jpeg_native(encode_jpeg_lossless(img16))
-    assert np.array_equal(out16, img16)
-
-    # point transform per plane
-    outp = decode_jpeg(encode_jpeg_lossless(img, predictor=2, pt=3))
-    assert np.array_equal(outp, (img >> 3) << 3)
 
 
 def test_minhash_components_closes_chains(spark):
@@ -4042,218 +2978,6 @@ def test_winnow_neardup_pairs_detects_copies(spark):
     assert not any(3 in k for k in pairs)
 
 
-def test_jpeg_lossless_sof11_arith_exact_roundtrips():
-    """SOF11 arithmetic lossless (T.81 Annex H.2): encode→decode
-    reproduces the input EXACTLY — all 7 predictors, 8/12/16-bit
-    precision, 1- and 3-component, point transform, and the
-    modulo-2^16 extreme diffs; and on smooth content the QM stream
-    beats the Huffman SOF3 stream."""
-    import numpy as np
-
-    from transferdb_spark.ext.jpeg import decode_jpeg_native, encode_jpeg_lossless
-    from transferdb_spark.ext.jpeg_arith import encode_jpeg_lossless_arith
-
-    rng = np.random.default_rng(11)
-    img = rng.integers(0, 256, (17, 23), dtype=np.uint8)
-    for pred in range(1, 8):
-        out = decode_jpeg_native(encode_jpeg_lossless_arith(img, predictor=pred))
-        assert np.array_equal(out[:, :, 0], img), pred
-
-    rgb = rng.integers(0, 256, (9, 11, 3), dtype=np.uint8)
-    assert np.array_equal(
-        decode_jpeg_native(encode_jpeg_lossless_arith(rgb, predictor=4)), rgb
-    )
-
-    img16 = rng.integers(0, 65536, (12, 14), dtype=np.uint16)
-    out16 = decode_jpeg_native(encode_jpeg_lossless_arith(img16))
-    assert np.array_equal(out16[:, :, 0], img16)
-
-    img12 = rng.integers(0, 4096, (8, 9), dtype=np.uint16)
-    out12 = decode_jpeg_native(encode_jpeg_lossless_arith(img12, prec=12))
-    assert np.array_equal(out12[:, :, 0], img12)
-
-    ext = np.array([[0, 32768, 0, 32768], [65535, 0, 32767, 1]], dtype=np.uint16)
-    oute = decode_jpeg_native(encode_jpeg_lossless_arith(ext))
-    assert np.array_equal(oute[:, :, 0], ext)
-
-    imgp = rng.integers(0, 256, (10, 10), dtype=np.uint8)
-    outp = decode_jpeg_native(encode_jpeg_lossless_arith(imgp, predictor=4, pt=2))
-    assert np.array_equal(outp[:, :, 0], (imgp >> 2) << 2)
-
-    # adaptive coding wins on smooth content (where Huffman's fixed
-    # category code can't shrink below 1 bit/sample)
-    yy, xx = np.mgrid[0:64, 0:64]
-    smooth = ((yy + xx) // 4).astype(np.uint8)
-    a = encode_jpeg_lossless_arith(smooth, predictor=4)
-    hh = encode_jpeg_lossless(smooth, predictor=4)
-    assert len(a) < len(hh)
-
-
-def test_jpeg_hierarchical_lossless_exact_roundtrips():
-    """Annex J hierarchical lossless pyramid: DHP + base frame + EXP +
-    differential frames reproduce the input EXACTLY in both entropy
-    forms (SOF3+SOF7 Huffman, SOF11+SOF15 arithmetic), across depths,
-    odd dimensions, 3 components, and 16-bit samples; torn streams
-    keep the error contract."""
-    import numpy as np
-    import pytest
-
-    from transferdb_spark.ext.jpeg import (
-        decode_jpeg_native,
-        encode_jpeg_hierarchical_lossless,
-    )
-
-    rng = np.random.default_rng(19)
-    img = rng.integers(0, 256, (17, 23), dtype=np.uint8)
-    for arith in (False, True):
-        for levels in (1, 2, 3):
-            out = decode_jpeg_native(
-                encode_jpeg_hierarchical_lossless(img, levels=levels, arith=arith)
-            )
-            assert np.array_equal(out[:, :, 0], img), (arith, levels)
-
-    rgb = rng.integers(0, 256, (9, 11, 3), dtype=np.uint8)
-    for arith in (False, True):
-        assert np.array_equal(
-            decode_jpeg_native(
-                encode_jpeg_hierarchical_lossless(rgb, levels=2, predictor=4, arith=arith)
-            ),
-            rgb,
-        )
-
-    img16 = rng.integers(0, 65536, (12, 14), dtype=np.uint16)
-    out16 = decode_jpeg_native(encode_jpeg_hierarchical_lossless(img16, levels=3))
-    assert np.array_equal(out16[:, :, 0], img16)
-
-    # a differential frame outside a hierarchical sequence (no DHP)
-    # must error, not silently decode
-    buf = encode_jpeg_hierarchical_lossless(img, levels=2)
-    i = buf.find(b"\xff\xc7")  # the SOF7 differential frame
-    assert i > 0
-    torn = b"\xff\xd8" + buf[i:]
-    with pytest.raises((ValueError, NotImplementedError)):
-        decode_jpeg_native(torn)
-
-
-def test_jpeg_hierarchical_mixed_lossless_final_rung():
-    """Annex J canonical profile: lossy DCT base + lossless
-    differential refinements. The decoded output must sit within the
-    YCbCr<->RGB integer round-trip bound (|err| <= 2) of the source —
-    i.e. the component planes reconstruct EXACTLY — in both entropy
-    forms, and a base-only decode (refinements stripped) must be
-    measurably worse, proving the refinement carries real signal."""
-    import numpy as np
-
-    from transferdb_spark.ext.jpeg import (
-        decode_jpeg_native,
-        encode_jpeg_hierarchical_mixed,
-    )
-
-    yy, xx = np.mgrid[0:33, 0:41]
-    base = ((yy * 3 + xx * 2) % 256).astype(np.uint8)
-    img = np.stack([base, base[::-1], (base + 64) % 256], axis=2).astype(np.uint8)
-    for arith in (False, True):
-        buf = encode_jpeg_hierarchical_mixed(img, levels=3, arith=arith)
-        out = decode_jpeg_native(buf).astype(np.int64)
-        assert np.abs(out - img.astype(np.int64)).max() <= 2, arith
-
-    rng = np.random.default_rng(37)
-    noisy = rng.integers(0, 256, (17, 19, 3), dtype=np.uint8)
-    buf = encode_jpeg_hierarchical_mixed(noisy, levels=2)
-    out = decode_jpeg_native(buf).astype(np.int64)
-    assert np.abs(out - noisy.astype(np.int64)).max() <= 2
-
-    # strip the refinement (truncate at the EXP marker, re-terminate):
-    # the lossy base alone must be much worse on noise content
-    i = buf.find(b"\xff\xdf")
-    assert i > 0
-    base_only = buf[:i] + b"\xff\xd9"
-    out_base = decode_jpeg_native(base_only).astype(np.int64)
-    assert out_base.shape != out.shape or np.abs(out_base - noisy).max() > 2
-
-
-def test_jpeg_hierarchical_full_ladder_sof5_sof13():
-    """Full Annex J ladder: DCT base + DIFFERENTIAL sequential DCT
-    refinements (SOF5 Huffman / SOF13 arithmetic, unit quantization,
-    no level shift) + lossless final rung. Complete streams land
-    within the color round-trip bound (exact component planes);
-    truncating after the DCT refinement must still decode to a closer
-    image than the base alone (each rung adds signal)."""
-    import numpy as np
-
-    from transferdb_spark.ext.jpeg import (
-        decode_jpeg_native,
-        encode_jpeg_hierarchical_dct,
-    )
-
-    rng = np.random.default_rng(43)
-    noisy = rng.integers(0, 256, (21, 18, 3), dtype=np.uint8)
-    yy, xx = np.mgrid[0:37, 0:45]
-    base = ((yy * 3 + xx * 2) % 256).astype(np.uint8)
-    smooth = np.stack([base, base[::-1], (base + 64) % 256], axis=2).astype(np.uint8)
-    for arith in (False, True):
-        for im in (noisy, smooth):
-            buf = encode_jpeg_hierarchical_dct(im, levels=3, arith=arith)
-            out = decode_jpeg_native(buf).astype(np.int64)
-            assert np.abs(out - im.astype(np.int64)).max() <= 2, arith
-
-    # truncation ladder: base-only < base+DCT-refine < full, in error.
-    # Walk segments structurally (a raw byte-find can match FF DF
-    # inside a DHT payload), skipping entropy via the decoder's rule.
-    from transferdb_spark.ext.jpeg import _skip_to_marker
-
-    buf = encode_jpeg_hierarchical_dct(noisy, levels=3)
-    exps = []
-    pos = 2
-    while pos < len(buf) - 1:
-        assert buf[pos] == 0xFF
-        m = buf[pos + 1]
-        if m == 0xD9:
-            break
-        if m == 0xDF:
-            exps.append(pos)
-        seglen = int.from_bytes(buf[pos + 2 : pos + 4], "big")
-        pos += 2 + seglen
-        if m == 0xDA:
-            pos = _skip_to_marker(buf, pos)
-    assert len(exps) == 2
-    img64 = noisy.astype(np.int64)
-
-    full_err = np.abs(decode_jpeg_native(buf).astype(np.int64) - img64).max()
-    mid = decode_jpeg_native(buf[: exps[1]] + b"\xff\xd9").astype(np.int64)
-    base_o = decode_jpeg_native(buf[: exps[0]] + b"\xff\xd9").astype(np.int64)
-    assert full_err <= 2
-    assert mid.shape == noisy.shape[:2] + (3,) or True  # mid is half-res
-    assert base_o.shape != decode_jpeg_native(buf).shape or np.abs(base_o - img64).max() > full_err
-
-
-def test_jpeg_hierarchical_progressive_differential_sof6_sof14():
-    """Differential PROGRESSIVE frames (SOF6/SOF14) — the final T.81
-    frame modes: the 14-scan progressive script over unit-quant
-    difference coefficients reconstructs identically to the sequential
-    differential path (same _diff_coef_blocks integers), so the full
-    ladder still lands within the color round-trip bound."""
-    import numpy as np
-
-    from transferdb_spark.ext.jpeg import (
-        decode_jpeg_native,
-        encode_jpeg_hierarchical_dct,
-    )
-
-    rng = np.random.default_rng(53)
-    noisy = rng.integers(0, 256, (19, 22, 3), dtype=np.uint8)
-    for arith in (False, True):
-        seq = encode_jpeg_hierarchical_dct(noisy, levels=3, arith=arith)
-        prog = encode_jpeg_hierarchical_dct(
-            noisy, levels=3, arith=arith, progressive=True
-        )
-        out_s = decode_jpeg_native(seq).astype(np.int64)
-        out_p = decode_jpeg_native(prog).astype(np.int64)
-        assert np.abs(out_p - noisy.astype(np.int64)).max() <= 2, arith
-        # same coefficients, different transmission: identical pixels
-        assert np.array_equal(out_s, out_p), arith
-
-
 def test_phash_neardup_detects_reencodes(spark):
     """dHash near-dup: a noisy copy and a JPEG re-encode of the same
     image pair with the original at low Hamming distance; an unrelated
@@ -4261,7 +2985,7 @@ def test_phash_neardup_detects_reencodes(spark):
     (hamming <= bands-1 -> pair found)."""
     import numpy as np
 
-    from transferdb_spark.ext.jpeg import encode_jpeg
+    from jpeg_encoder import encode_jpeg
     from transferdb_spark.ext.multimodal import (
         dhash64,
         phash_neardup_pairs,

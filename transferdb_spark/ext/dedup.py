@@ -987,12 +987,15 @@ def _reassemble_minus(toks: DataFrame, covered: DataFrame) -> DataFrame:
     (collect_set per doc — map-side combined, one exchange of the
     DUPLICATED fraction), joined onto the intact per-doc token
     arrays, and the deletion is one JVM pass per row:
-    array_except(sequence(1, n), cov) is hash-set based (O(n + m)),
-    order-preserving on its first argument, so the kept positions
-    come out ascending and the rebuilt text is position-ordered
-    without any sort. Token arrays themselves move through at most
-    ONE join exchange (none when the covered side broadcasts), never
-    exploded.
+    array_except(sequence(1, n), cov) is hash-set based (O(n + m)).
+    The rebuilt text is position-ordered without any sort because
+    array_except currently keeps the order of its first argument, so
+    the kept positions come out ascending. Spark does not document
+    that ordering: it is current Spark behaviour, pinned by
+    test_array_except_keeps_first_argument_order (a tripwire — if it
+    fails after a Spark upgrade, sort ``kp`` here). Token arrays
+    themselves move through at most ONE join exchange (none when the
+    covered side broadcasts), never exploded.
 
     OUTPUT CONTRACT: ``clean_tokens_text`` is rebuilt from the TOKENS
     relation — lowercased, whitespace-split, single-space-joined — so
@@ -1039,9 +1042,11 @@ def dup_span_removal(docs: DataFrame, n: int = 10) -> DataFrame:
     ``_reassemble_minus`` for the exact contract.
 
     Relational shape: duplicated spans explode to covered positions
-    (×n fan-out on the dup fraction only), distinct per (doc, pos),
-    anti-join against the exploded token relation, then per-doc
-    ordered reassembly. Shuffles carry positions and single tokens.
+    (×n fan-out on the dup fraction only), which collect_set groups per
+    doc (one map-side-combined exchange of the duplicated fraction);
+    the set joins onto the intact per-doc token arrays and
+    array_except(sequence(1, n), cov) drops the covered positions in
+    one pass per row. Shuffles carry positions, never exploded tokens.
     """
     toks, dup = _dup_spans(docs, n)
     # no .distinct(): _reassemble_minus collect_set-dedups per doc in

@@ -142,15 +142,6 @@ def _weights_from_counts(counts_by_doc: DataFrame) -> DataFrame:
     return counts.crossJoin(F.broadcast(totals)).select("bucket", w.alias("w"))
 
 
-def bucket_weights(docs: DataFrame) -> DataFrame:
-    """(bucket, w) — public single-pass form (no shared cache)."""
-    return _weights_from_counts(
-        _terms(docs)
-        .groupBy("doc_id", "is_target", "bucket")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-
-
 def doc_scores(docs: DataFrame) -> DataFrame:
     """(doc_id, is_target, n_grams, score) for every document.
 

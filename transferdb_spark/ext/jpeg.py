@@ -1,46 +1,13 @@
-"""JPEG codec — stdlib + numpy, no imaging library.
+"""Baseline JPEG decoder — stdlib + numpy, no imaging library.
 
-Decoder: baseline sequential DCT (SOF0/1) AND progressive DCT (SOF2,
-ITU T.81 Annex G: spectral selection, successive approximation, DC/AC
-first and refinement scans, EOB runs), Huffman entropy coding, 8-bit
-AND 12-bit samples (extended sequential SOF1 / progressive SOF2 with
-16-bit DQT, T.81 table B.2 Pq=1; level shift 2^(P-1), `decode_jpeg`
-folds 12-bit output to the uint8 corpus contract, `decode_jpeg_native`
-keeps the full range as uint16), grayscale or YCbCr with 4:4:4 /
-4:2:2 / 4:2:0 subsampling, restart markers. Arithmetic-coded
-sequential frames (SOF9 + DAC conditioning) decode via the Annex D
-QM-coder in ext/jpeg_arith.py, arithmetic progressive (SOF10) via its
-Annex G.2 scan decoders, LOSSLESS (SOF3, Annex H predictive —
-all 7 predictors, 2..16-bit, point transform, exact roundtrip) in
-this module, and ARITHMETIC LOSSLESS (SOF11, Annex H.2: the same
-predictors with QM-coded differences under the 2-D (Da, Db)
-conditioning model) via ext/jpeg_arith.py. HIERARCHICAL (Annex J)
-decodes both the all-lossless pyramid AND the canonical mixed
-profile (lossy DCT base at reduced resolution + lossless
-differential refinements): DHP + EXP reference expansion +
-differential lossless frames (SOF7 Huffman / SOF15 arithmetic) over
-a DCT (SOF0/1/9) or lossless base, with the Annex J.1.1.2
-interpolation and mod-2^16 component-domain reconstruction, plus
-DIFFERENTIAL DCT refinement frames in BOTH transmission orders —
-sequential (SOF5 Huffman / SOF13 arithmetic) and progressive
-(SOF6 / SOF14), unit-quant DCT of differences, no level shift,
-clamped sample-domain references. Every ITU T.81 SOF frame type
-(SOF0-3, 5-7, 9-11, 13-15) now decodes; the remaining external
-dispatch is non-T.81 formats (H.264-class video).
+Sequential Huffman DCT at 8-bit precision (SOF0/SOF1, ITU T.81 Annex F):
+grayscale or YCbCr with 4:4:4 / 4:2:2 / 4:2:0 subsampling and restart
+markers. Every other frame type (progressive, 12-bit, lossless,
+arithmetic, hierarchical) raises NotImplementedError, which the media
+operators quarantine like any other undecodable payload.
 
-Encoder: the test-side twin (4:4:4, ITU T.81 Annex K quantization and
-Huffman tables) so round-trips exercise the full marker → Huffman →
-DCT pipeline without trusting a matched pair of mistakes: the decoder
-is additionally validated against real-world JPEGs produced by other
-encoders. `encode_jpeg_progressive` emits a 14-scan progressive
-stream (shifted DC + DC refinement, two spectral AC bands at Al=1 +
-their refinement scans) sharing `encode_jpeg`'s quantizer, so the
-differential test can require progressive decode == baseline decode
-bit for bit.
-
-The 2-D DCT/IDCT run as two 8×8 matrix products against the
-orthonormal DCT-II basis (exact float, vectorized over all blocks at
-once) — no per-pixel Python in the transform.
+The 2-D IDCT runs as two 8×8 matrix products against the orthonormal
+DCT-II basis — no per-pixel Python in the transform.
 """
 
 from __future__ import annotations
@@ -56,66 +23,6 @@ _ZIGZAG = np.array(
         35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
         58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
     ]
-)
-
-# ITU T.81 Annex K.1 — luminance / chrominance quantization tables
-_QT_LUMA = np.array(
-    [
-        16, 11, 10, 16, 24, 40, 51, 61, 12, 12, 14, 19, 26, 58, 60, 55,
-        14, 13, 16, 24, 40, 57, 69, 56, 14, 17, 22, 29, 51, 87, 80, 62,
-        18, 22, 37, 56, 68, 109, 103, 77, 24, 35, 55, 64, 81, 104, 113, 92,
-        49, 64, 78, 87, 103, 121, 120, 101, 72, 92, 95, 98, 112, 100, 103, 99,
-    ]
-)
-_QT_CHROMA = np.array(
-    [
-        17, 18, 24, 47, 99, 99, 99, 99, 18, 21, 26, 66, 99, 99, 99, 99,
-        24, 26, 56, 99, 99, 99, 99, 99, 47, 66, 99, 99, 99, 99, 99, 99,
-        99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99,
-        99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99,
-    ]
-)
-
-# Annex K.3 — standard Huffman tables: (bits[1..16], values)
-_DC_LUMA = ([0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0], list(range(12)))
-_DC_CHROMA = ([0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0], list(range(12)))
-_AC_LUMA = (
-    [0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7D],
-    [
-        0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12, 0x21, 0x31, 0x41, 0x06,
-        0x13, 0x51, 0x61, 0x07, 0x22, 0x71, 0x14, 0x32, 0x81, 0x91, 0xA1, 0x08,
-        0x23, 0x42, 0xB1, 0xC1, 0x15, 0x52, 0xD1, 0xF0, 0x24, 0x33, 0x62, 0x72,
-        0x82, 0x09, 0x0A, 0x16, 0x17, 0x18, 0x19, 0x1A, 0x25, 0x26, 0x27, 0x28,
-        0x29, 0x2A, 0x34, 0x35, 0x36, 0x37, 0x38, 0x39, 0x3A, 0x43, 0x44, 0x45,
-        0x46, 0x47, 0x48, 0x49, 0x4A, 0x53, 0x54, 0x55, 0x56, 0x57, 0x58, 0x59,
-        0x5A, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68, 0x69, 0x6A, 0x73, 0x74, 0x75,
-        0x76, 0x77, 0x78, 0x79, 0x7A, 0x83, 0x84, 0x85, 0x86, 0x87, 0x88, 0x89,
-        0x8A, 0x92, 0x93, 0x94, 0x95, 0x96, 0x97, 0x98, 0x99, 0x9A, 0xA2, 0xA3,
-        0xA4, 0xA5, 0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4, 0xB5, 0xB6,
-        0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5, 0xC6, 0xC7, 0xC8, 0xC9,
-        0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA, 0xE1, 0xE2,
-        0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF1, 0xF2, 0xF3, 0xF4,
-        0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
-    ],
-)
-_AC_CHROMA = (
-    [0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 0x77],
-    [
-        0x00, 0x01, 0x02, 0x03, 0x11, 0x04, 0x05, 0x21, 0x31, 0x06, 0x12, 0x41,
-        0x51, 0x07, 0x61, 0x71, 0x13, 0x22, 0x32, 0x81, 0x08, 0x14, 0x42, 0x91,
-        0xA1, 0xB1, 0xC1, 0x09, 0x23, 0x33, 0x52, 0xF0, 0x15, 0x62, 0x72, 0xD1,
-        0x0A, 0x16, 0x24, 0x34, 0xE1, 0x25, 0xF1, 0x17, 0x18, 0x19, 0x1A, 0x26,
-        0x27, 0x28, 0x29, 0x2A, 0x35, 0x36, 0x37, 0x38, 0x39, 0x3A, 0x43, 0x44,
-        0x45, 0x46, 0x47, 0x48, 0x49, 0x4A, 0x53, 0x54, 0x55, 0x56, 0x57, 0x58,
-        0x59, 0x5A, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68, 0x69, 0x6A, 0x73, 0x74,
-        0x75, 0x76, 0x77, 0x78, 0x79, 0x7A, 0x82, 0x83, 0x84, 0x85, 0x86, 0x87,
-        0x88, 0x89, 0x8A, 0x92, 0x93, 0x94, 0x95, 0x96, 0x97, 0x98, 0x99, 0x9A,
-        0xA2, 0xA3, 0xA4, 0xA5, 0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4,
-        0xB5, 0xB6, 0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5, 0xC6, 0xC7,
-        0xC8, 0xC9, 0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA,
-        0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF2, 0xF3, 0xF4,
-        0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
-    ],
 )
 
 
@@ -221,45 +128,26 @@ def _extend(v: int, t: int) -> int:
 
 
 def decode_jpeg(buf: bytes) -> np.ndarray:
-    """bytes → (h, w, 3) uint8 RGB (grayscale replicated; 12-bit
-    streams are rescaled 0..4095 → 0..255 at this boundary).
+    """bytes → (h, w, 3) uint8 RGB (grayscale replicated).
 
     Boundary contract for corpus ingestion: arbitrary torn/corrupt
     bytes raise ValueError (or NotImplementedError for unsupported
-    modes), never a raw IndexError/KeyError from header parsing."""
+    frame types), never a raw IndexError/KeyError from header parsing."""
     try:
         return _decode_jpeg(buf)
     except (IndexError, KeyError, struct.error) as exc:
         raise ValueError(f"truncated or corrupt JPEG: {exc!r}") from exc
 
 
-def decode_jpeg_native(buf: bytes) -> np.ndarray:
-    """Like decode_jpeg but keeps the stream's sample precision:
-    (h, w, 3) uint8 for 8-bit streams, uint16 with samples 0..4095 for
-    12-bit — the feature-extraction path that must not throw away the
-    4 extra bits a scientific/medical corpus carries."""
-    try:
-        return _decode_jpeg(buf, native=True)
-    except (IndexError, KeyError, struct.error) as exc:
-        raise ValueError(f"truncated or corrupt JPEG: {exc!r}") from exc
-
-
-def _decode_jpeg(buf: bytes, native: bool = False) -> np.ndarray:
+def _decode_jpeg(buf: bytes) -> np.ndarray:
     if buf[:2] != b"\xff\xd8":
         raise NotImplementedError("not a JPEG (no SOI)")
     pos = 2
     qt: dict[int, np.ndarray] = {}
     huff_dc: dict[int, dict] = {}
     huff_ac: dict[int, dict] = {}
-    dc_cond: dict[int, tuple[int, int]] = {}
-    ac_cond: dict[int, int] = {}
     frame = None
     restart_interval = 0
-    coef = None  # progressive only: per-comp zigzag coefficient blocks
-    scans_done = 0
-    hier = None  # DHP seen: {"h","w","prec"} — hierarchical (Annex J)
-    ref = None  # hierarchical reference planes (int64, current res)
-    pending_exp = None  # EXP marker: (Eh, Ev) reference expansion
     while pos < len(buf):
         if buf[pos] != 0xFF:
             pos += 1
@@ -268,45 +156,6 @@ def _decode_jpeg(buf: bytes, native: bool = False) -> np.ndarray:
         if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
             pos += 2
             continue
-        if (
-            hier is not None
-            and frame is not None
-            and frame.get("progressive")
-            and scans_done
-            and (
-                marker in (0xD9, 0xDE, 0xDF)
-                or (0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC))
-            )
-        ):
-            # hierarchical progressive frame ends at the next
-            # structural marker: reconstruct and fold into the pyramid
-            planes = _reconstruct_progressive(
-                frame, coef, qt, native,
-                differential=frame.get("differential", False), want_planes=True,
-            )
-            fh, fw = frame["h"], frame["w"]
-            if frame.get("differential"):
-                if ref is None:
-                    raise ValueError("differential frame without reference")
-                if pending_exp is not None:
-                    ref = [_exp_upsample(rp, *pending_exp) for rp in ref]
-                    pending_exp = None
-                if any(rp.shape[0] < fh or rp.shape[1] < fw for rp in ref):
-                    raise ValueError("reference smaller than differential frame")
-                maxv = (1 << frame.get("prec", 8)) - 1
-                merged = []
-                for rp, d in zip(ref, planes):
-                    s = (rp[:fh, :fw] + d) & 0xFFFF
-                    s = np.where(s >= 32768, s - 65536, s)
-                    merged.append(np.clip(s, 0, maxv).astype(np.int64))
-                ref = merged
-            else:
-                hier["color"] = len(frame["comps"]) == 3
-                pending_exp = None
-                ref = planes
-            frame = None
-            coef = None
-            scans_done = 0
         if marker == 0xD9:  # EOI
             break
         seg_len = struct.unpack_from(">H", buf, pos + 2)[0]
@@ -318,7 +167,7 @@ def _decode_jpeg(buf: bytes, native: bool = False) -> np.ndarray:
                 if prec == 0:
                     qt[tid] = np.frombuffer(seg, np.uint8, 64, s + 1).astype(np.int32)
                     s += 65
-                elif prec == 1:  # Pq=1: 16-bit big-endian entries (12-bit frames)
+                elif prec == 1:  # Pq=1: 16-bit entries (8-bit SOF1 steps > 255)
                     qt[tid] = np.frombuffer(seg, ">u2", 64, s + 1).astype(np.int32)
                     s += 129
                 else:
@@ -332,111 +181,18 @@ def _decode_jpeg(buf: bytes, native: bool = False) -> np.ndarray:
                 vals = list(seg[s + 17 : s + 17 + n])
                 (huff_dc if cls == 0 else huff_ac)[tid] = _build_huffman(bits, vals)
                 s += 17 + n
-        elif marker in (0xC0, 0xC1, 0xC2, 0xC5, 0xC9, 0xCA, 0xCD):
-            # SOF0/1 sequential, SOF2 progressive, SOF9 arithmetic
-            # sequential, SOF10 arithmetic progressive, and the Annex J
-            # DIFFERENTIAL sequential forms (SOF5 Huffman, SOF13 arith)
+        elif marker in (0xC0, 0xC1):  # SOF0/SOF1 sequential Huffman DCT
             prec, h, w, nc = seg[0], *struct.unpack_from(">HH", seg, 1), seg[5]
-            if prec not in (8, 12):
+            if prec != 8:
                 raise NotImplementedError(f"{prec}-bit precision")
-            if prec == 12 and marker == 0xC0:
-                # T.81: baseline DCT is 8-bit only; 12-bit needs SOF1/SOF2/SOF9
-                raise ValueError("corrupt JPEG: SOF0 frame claims 12-bit samples")
             comps = []
             for i in range(nc):
                 cid, samp, qid = seg[6 + 3 * i : 9 + 3 * i]
                 comps.append({"id": cid, "h": samp >> 4, "v": samp & 0x0F, "q": qid})
-            frame = {
-                "h": h,
-                "w": w,
-                "comps": comps,
-                "progressive": marker in (0xC2, 0xCA),
-                "arith": marker in (0xC9, 0xCA, 0xCD),
-                "differential": marker in (0xC5, 0xCD),
-                "prec": prec,
-            }
-        elif marker in (0xC3, 0xC7):
-            # SOF3 lossless (T.81 Annex H): predictive, no DCT. The
-            # sample precision spans 2..16 bits; sampling stays 1:1 in
-            # practice (DNG/medical), enforced at scan decode. SOF7 is
-            # its DIFFERENTIAL hierarchical form (Annex J).
-            prec, h, w, nc = seg[0], *struct.unpack_from(">HH", seg, 1), seg[5]
-            if not 2 <= prec <= 16:
-                raise ValueError(f"invalid lossless precision {prec}")
-            comps = []
-            for i in range(nc):
-                cid, samp, qid = seg[6 + 3 * i : 9 + 3 * i]
-                comps.append({"id": cid, "h": samp >> 4, "v": samp & 0x0F, "q": qid})
-            frame = {
-                "h": h,
-                "w": w,
-                "comps": comps,
-                "progressive": False,
-                "arith": False,
-                "lossless": True,
-                "differential": marker == 0xC7,
-                "prec": prec,
-            }
-        elif marker in (0xCB, 0xCF):
-            # SOF11 arithmetic lossless (T.81 Annex H.2): predictive
-            # like SOF3, QM-coded differences with the 2-D (Da, Db)
-            # conditioning model in ext/jpeg_arith.py. SOF15 is its
-            # DIFFERENTIAL hierarchical form (Annex J).
-            prec, h, w, nc = seg[0], *struct.unpack_from(">HH", seg, 1), seg[5]
-            if not 2 <= prec <= 16:
-                raise ValueError(f"invalid lossless precision {prec}")
-            comps = []
-            for i in range(nc):
-                cid, samp, qid = seg[6 + 3 * i : 9 + 3 * i]
-                comps.append({"id": cid, "h": samp >> 4, "v": samp & 0x0F, "q": qid})
-            frame = {
-                "h": h,
-                "w": w,
-                "comps": comps,
-                "progressive": False,
-                "arith": True,
-                "lossless": True,
-                "differential": marker == 0xCF,
-                "prec": prec,
-            }
-        elif marker == 0xDE:
-            # DHP (Annex J): hierarchical progression — full-resolution
-            # dimensions; the frames that follow build the pyramid
-            prec, h, w, nc = seg[0], *struct.unpack_from(">HH", seg, 1), seg[5]
-            hier = {"h": h, "w": w, "prec": prec}
-        elif marker == 0xDF:
-            # EXP (Annex J): expand the reference before the next frame
-            pending_exp = (seg[0] >> 4, seg[0] & 0x0F)
-        elif marker in (0xC6, 0xCE):
-            # Annex J DIFFERENTIAL progressive frames (SOF6 Huffman,
-            # SOF14 arithmetic): standard progressive scan machinery
-            # over difference coefficients, no level shift
-            prec, h, w, nc = seg[0], *struct.unpack_from(">HH", seg, 1), seg[5]
-            comps = []
-            for i in range(nc):
-                cid, samp, qid = seg[6 + 3 * i : 9 + 3 * i]
-                comps.append({"id": cid, "h": samp >> 4, "v": samp & 0x0F, "q": qid})
-            frame = {
-                "h": h,
-                "w": w,
-                "comps": comps,
-                "progressive": True,
-                "arith": marker == 0xCE,
-                "differential": True,
-                "prec": prec,
-            }
-            coef = None
-            scans_done = 0
-        elif marker == 0xCC:  # DAC: arithmetic conditioning (B.2.4.3)
-            s = 0
-            while s + 1 < len(seg):
-                cls, tid = seg[s] >> 4, seg[s] & 0x0F
-                val = seg[s + 1]
-                if cls == 0:
-                    dc_cond[tid] = (val & 0x0F, val >> 4)  # (L, U)
-                else:
-                    ac_cond[tid] = val  # Kx
-                s += 2
+            frame = {"h": h, "w": w, "comps": comps}
+        elif (0xC2 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC)) or marker == 0xDE:
+            # progressive / lossless / arithmetic / differential SOFn, DHP
+            raise NotImplementedError(f"unsupported JPEG frame marker 0x{marker:02X}")
         elif marker == 0xDD:  # DRI
             restart_interval = struct.unpack_from(">H", seg, 0)[0]
         elif marker == 0xDA:  # SOS
@@ -447,170 +203,17 @@ def _decode_jpeg(buf: bytes, native: bool = False) -> np.ndarray:
             for i in range(ns):
                 cid, tids = seg[1 + 2 * i], seg[2 + 2 * i]
                 scan_sel.append({"id": cid, "dc": tids >> 4, "ac": tids & 0x0F})
-            data_pos = pos + 2 + seg_len
-            if frame.get("lossless"):
-                # SOF3/SOF11: Ss selects the predictor (1..7), Al is
-                # the point transform (0 for differential frames)
-                pred_sel = seg[1 + 2 * ns]
-                pt = seg[3 + 2 * ns] & 0x0F
-                diffr = frame.get("differential", False)
-                if hier is None:
-                    if diffr:
-                        raise ValueError("differential frame without DHP")
-                    if frame.get("arith"):
-                        return _decode_lossless_arith_scan(
-                            buf, data_pos, frame, scan_sel, dc_cond,
-                            restart_interval, pred_sel, pt, native,
-                        )
-                    return _decode_lossless_scan(
-                        buf, data_pos, frame, scan_sel, huff_dc,
-                        restart_interval, pred_sel, pt, native,
-                    )
-                if frame.get("arith"):
-                    planes, end = _decode_lossless_arith_scan(
-                        buf, data_pos, frame, scan_sel, dc_cond,
-                        restart_interval, pred_sel, pt, native,
-                        differential=diffr, want_planes=True,
-                    )
-                else:
-                    planes, end = _decode_lossless_scan(
-                        buf, data_pos, frame, scan_sel, huff_dc,
-                        restart_interval, pred_sel, pt, native,
-                        differential=diffr, want_planes=True,
-                    )
-                planes = [p.astype(np.int64) << pt for p in planes]
-                fh, fw = frame["h"], frame["w"]
-                if diffr:
-                    if ref is None:
-                        raise ValueError("differential frame without reference")
-                    if pending_exp is not None:
-                        ref = [_exp_upsample(r, *pending_exp) for r in ref]
-                        pending_exp = None
-                    if any(r.shape[0] < fh or r.shape[1] < fw for r in ref):
-                        raise ValueError("reference smaller than differential frame")
-                    # Annex J reconstruction: modulo-2^16 addition
-                    ref = [
-                        (r[:fh, :fw] + d) & 0xFFFF for r, d in zip(ref, planes)
-                    ]
-                else:
-                    pending_exp = None
-                    ref = planes
-                pos = _skip_to_marker(buf, end)
-                frame = None
-                continue
-            if frame.get("differential") and hier is None:
-                raise ValueError("differential frame without DHP")
-            if (
-                hier is not None
-                and not frame.get("lossless")
-                and not frame.get("progressive")
-            ):
-                # Annex J: a DCT frame inside a hierarchical sequence
-                # (re)establishes (or differentially refines) the
-                # reference in the component domain; progressive frames
-                # fall through to the scan-accumulate branches and fold
-                # in at the frame-boundary hook above
-                if frame.get("arith"):
-                    from transferdb_spark.ext.jpeg_arith import decode_arith_scan
-
-                    planes, end = decode_arith_scan(
-                        buf, data_pos, frame, scan_sel, qt, dc_cond, ac_cond,
-                        restart_interval, native, want_planes=True,
-                    )
-                    pos = _skip_to_arith_marker(buf, end)
-                else:
-                    planes, end = _decode_scan(
-                        buf, data_pos, frame, scan_sel, qt, huff_dc, huff_ac,
-                        restart_interval, native, want_planes=True,
-                    )
-                    pos = _skip_to_marker(buf, end)
-                fh, fw = frame["h"], frame["w"]
-                if frame.get("differential"):
-                    if ref is None:
-                        raise ValueError("differential frame without reference")
-                    if pending_exp is not None:
-                        ref = [_exp_upsample(rp, *pending_exp) for rp in ref]
-                        pending_exp = None
-                    if any(rp.shape[0] < fh or rp.shape[1] < fw for rp in ref):
-                        raise ValueError("reference smaller than differential frame")
-                    maxv = (1 << frame.get("prec", 8)) - 1
-                    merged = []
-                    for rp, d in zip(ref, planes):
-                        s = (rp[:fh, :fw] + d) & 0xFFFF
-                        s = np.where(s >= 32768, s - 65536, s)
-                        merged.append(np.clip(s, 0, maxv).astype(np.int64))
-                    ref = merged
-                else:
-                    hier["color"] = len(frame["comps"]) == 3
-                    pending_exp = None
-                    ref = planes
-                frame = None
-                continue
-            if frame.get("arith") and frame.get("progressive"):
-                # SOF10: each SOS is one band/bit layer, QM-coded;
-                # statistics re-initialize per scan
-                from transferdb_spark.ext.jpeg_arith import decode_arith_prog_scan
-
-                ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
-                ah, al = seg[3 + 2 * ns] >> 4, seg[3 + 2 * ns] & 0x0F
-                if coef is None:
-                    coef = _alloc_coef(frame)
-                end = decode_arith_prog_scan(
-                    buf, data_pos, frame, scan_sel, dc_cond, ac_cond,
-                    restart_interval, coef, ss, se, ah, al,
-                )
-                scans_done += 1
-                pos = _skip_to_arith_marker(buf, end)
-                continue
-            if frame.get("arith"):
-                from transferdb_spark.ext.jpeg_arith import decode_arith_scan
-
-                return decode_arith_scan(
-                    buf, data_pos, frame, scan_sel, qt, dc_cond, ac_cond,
-                    restart_interval, native,
-                )
-            if not frame["progressive"]:
-                return _decode_scan(
-                    buf, data_pos, frame, scan_sel, qt, huff_dc, huff_ac,
-                    restart_interval, native,
-                )
-            # progressive: each SOS deposits one band/bit layer into the
-            # per-component coefficient store; pixels come at EOI
-            ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
-            ah, al = seg[3 + 2 * ns] >> 4, seg[3 + 2 * ns] & 0x0F
-            if coef is None:
-                coef = _alloc_coef(frame)
-            end = _decode_progressive_scan(
-                buf, data_pos, frame, scan_sel, huff_dc, huff_ac,
-                restart_interval, coef, ss, se, ah, al,
+            return _decode_scan(
+                buf, pos + 2 + seg_len, frame, scan_sel, qt, huff_dc, huff_ac,
+                restart_interval,
             )
-            scans_done += 1
-            pos = _skip_to_marker(buf, end)
-            continue
         pos += 2 + seg_len
-    if hier is not None and ref is not None:
-        out = [
-            np.clip(r, 0, (1 << hier["prec"]) - 1).astype(np.int32) for r in ref
-        ]
-        if hier.get("color"):
-            # DCT-based pyramid: reference planes are YCbCr
-            return _planes_to_rgb(
-                [p.astype(np.float64) for p in out], hier["prec"], native
-            )
-        return _lossless_output(out, hier["prec"], 0, native)
-    if frame is not None and frame.get("progressive") and scans_done:
-        return _reconstruct_progressive(frame, coef, qt, native)
     raise ValueError("no scan data found")
 
 
-def _decode_scan(
-    buf, pos, frame, scan_sel, qt, huff_dc, huff_ac, restart_interval, native=False,
-    want_planes=False,
-):
+def _decode_scan(buf, pos, frame, scan_sel, qt, huff_dc, huff_ac, restart_interval):
     comps = frame["comps"]
     h, w = frame["h"], frame["w"]
-    # differential frames (Annex J) code DIFFERENCES: no level shift
-    shift = 0.0 if frame.get("differential") else float(1 << (frame.get("prec", 8) - 1))
     hmax = max(c["h"] for c in comps)
     vmax = max(c["v"] for c in comps)
     mcux = (w + 8 * hmax - 1) // (8 * hmax)
@@ -650,7 +253,7 @@ def _decode_scan(
                             pred[ci] = block[0]
                             deq = np.zeros(64, dtype=np.float64)
                             deq[_ZIGZAG] = block * qt[c["q"]]
-                            px = _A.T @ deq.reshape(8, 8) @ _A + shift
+                            px = _A.T @ deq.reshape(8, 8) @ _A + 128.0
                             y0 = (my * c["v"] + by) * 8
                             x0 = (mx * c["h"] + bx) * 8
                             planes[ci][y0 : y0 + 8, x0 : x0 + 8] = px
@@ -675,44 +278,21 @@ def _decode_scan(
         p = planes[ci]
         p = p.repeat(vmax // c["v"], axis=0).repeat(hmax // c["h"], axis=1)
         full.append(p[:h, :w])
-    if want_planes:
-        # hierarchical (Annex J): differential frames carry signed
-        # DIFFERENCES — keep them mod 2^16; base frames carry samples,
-        # rounded and CLAMPED to the sample range (a wrapped mod-2^16
-        # IDCT overshoot would poison the EXP interpolation across the
-        # wrap boundary)
-        if frame.get("differential"):
-            return [np.rint(p).astype(np.int64) & 0xFFFF for p in full], reader.pos
-        maxv = (1 << frame.get("prec", 8)) - 1
-        return [
-            np.clip(np.rint(p), 0, maxv).astype(np.int64) for p in full
-        ], reader.pos
-    return _planes_to_rgb(full, frame.get("prec", 8), native)
+    return _planes_to_rgb(full)
 
 
-def _planes_to_rgb(full: list[np.ndarray], prec: int = 8, native: bool = False) -> np.ndarray:
-    """Full-resolution component planes → (h, w, 3) RGB.
-
-    8-bit keeps the historical clip+truncate uint8 path bit-for-bit
-    (the progressive==baseline differential depends on it); 12-bit
-    clips to 0..4095 then either stays uint16 (native) or folds to
-    uint8 with a rounding rescale."""
-    maxv = float((1 << prec) - 1)
-    half = float(1 << (prec - 1))
+def _planes_to_rgb(full: list[np.ndarray]) -> np.ndarray:
+    """Full-resolution component planes → (h, w, 3) uint8 RGB
+    (clip, then truncate)."""
     if len(full) == 1:
         rgb = np.stack([full[0]] * 3, axis=2)
     else:
-        y, cb, cr = full[0], full[1] - half, full[2] - half
+        y, cb, cr = full[0], full[1] - 128.0, full[2] - 128.0
         r = y + 1.402 * cr
         g = y - 0.344136 * cb - 0.714136 * cr
         b = y + 1.772 * cb
         rgb = np.stack([r, g, b], axis=2)
-    rgb = np.clip(rgb, 0, maxv)
-    if prec == 8:
-        return rgb.astype(np.uint8)
-    if native:
-        return np.rint(rgb).astype(np.uint16)
-    return np.rint(rgb * (255.0 / maxv)).astype(np.uint8)
+    return np.clip(rgb, 0, 255.0).astype(np.uint8)
 
 
 def _decode_block(reader, dc_table, ac_table) -> np.ndarray:
@@ -734,1567 +314,3 @@ def _decode_block(reader, dc_table, ac_table) -> np.ndarray:
         out[k] = _extend(reader.read_bits(s), s)
         k += 1
     return out
-
-
-# ---------------------------------------------------------------------------
-# progressive decode (ITU T.81 Annex G, Huffman): each SOS carries one
-# (component, spectral band, bit layer); coefficients accumulate in a
-# zigzag-order store and pixels materialize once, at EOI.
-
-
-# ---------------------------------------------------------------------------
-# SOF3 lossless (T.81 Annex H): predictive coding, no DCT. Each sample
-# is huffman(category) + EXTEND bits of the difference from one of the
-# seven neighbor predictors; category 16 means diff = 32768 with no
-# extra bits, and all arithmetic is modulo 2^16.
-
-_LL_PREDICT = {
-    1: lambda ra, rb, rc: ra,
-    2: lambda ra, rb, rc: rb,
-    3: lambda ra, rb, rc: rc,
-    4: lambda ra, rb, rc: ra + rb - rc,
-    5: lambda ra, rb, rc: ra + ((rb - rc) >> 1),
-    6: lambda ra, rb, rc: rb + ((ra - rc) >> 1),
-    7: lambda ra, rb, rc: (ra + rb) >> 1,
-}
-
-
-def _decode_lossless_scan(
-    buf, pos, frame, scan_sel, huff_dc, restart_interval, pred_sel, pt, native,
-    differential=False, want_planes=False,
-):
-    """One lossless scan → pixels. Components interleave one sample
-    each per MCU (sampling must be 1:1 — the shape DNG/medical files
-    use); the first sample (and the first after a restart) predicts
-    2^(P-Pt-1), the rest of row 0 predict Ra, column 0 predicts Rb."""
-    comps = frame["comps"]
-    if any(c["h"] != 1 or c["v"] != 1 for c in comps):
-        raise NotImplementedError("subsampled lossless JPEG")
-    if len(comps) not in (1, 3):
-        raise NotImplementedError(f"{len(comps)}-component lossless JPEG")
-    if not differential and pred_sel not in _LL_PREDICT:
-        raise ValueError(f"invalid lossless predictor {pred_sel}")
-    h, w, prec = frame["h"], frame["w"], frame["prec"]
-    sel = {s["id"]: s for s in scan_sel}
-    for c in comps:
-        if sel[c["id"]]["dc"] not in huff_dc:
-            raise ValueError("lossless scan references undefined DHT")
-    planes = [np.zeros((h, w), dtype=np.int32) for _ in comps]
-    reader = _BitReader(buf, pos)
-    default_pred = 1 << (prec - pt - 1)
-    # differential frames (Annex J): the prediction is ZERO — the coded
-    # value IS the (mod 2^16) difference from the upsampled reference
-    predict = (lambda ra, rb, rc: 0) if differential else _LL_PREDICT[pred_sel]
-    mcu = 0
-    fresh = True  # start of scan / just past a restart
-    for y in range(h):
-        for x in range(w):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                try:
-                    while True:
-                        reader.read_bit()
-                except _RestartMarker:
-                    reader.align_after_restart()
-                    fresh = True
-                except _EndOfScan:
-                    raise ValueError("truncated lossless JPEG: missing restart")
-            try:
-                decoded = []
-                for ci, c in enumerate(comps):
-                    t = _decode_huff(reader, huff_dc[sel[c["id"]]["dc"]])
-                    if t == 16:
-                        decoded.append(32768)
-                    elif t:
-                        decoded.append(_extend(reader.read_bits(t), t))
-                    else:
-                        decoded.append(0)
-            except _RestartMarker:
-                raise ValueError("lossless JPEG: unexpected restart marker")
-            except _EndOfScan:
-                if (y, x) == (h - 1, w - 1):
-                    break  # padding ended exactly at the final sample
-                raise ValueError(
-                    f"truncated lossless JPEG: ended at sample ({y},{x})"
-                )
-            for ci, diff in enumerate(decoded):
-                p = planes[ci]
-                if differential:
-                    pred = 0
-                elif fresh:
-                    pred = default_pred
-                elif y == 0:
-                    pred = int(p[0, x - 1])  # row 0: Ra
-                elif x == 0:
-                    pred = int(p[y - 1, 0])  # column 0: Rb
-                else:
-                    pred = predict(
-                        int(p[y, x - 1]), int(p[y - 1, x]), int(p[y - 1, x - 1])
-                    )
-                v = (pred + diff) & 0xFFFF
-                p[y, x] = v
-            fresh = False
-            mcu += 1
-    if want_planes:
-        return planes, reader.pos
-    return _lossless_output(planes, prec, pt, native)
-
-
-def _lossless_output(planes, prec, pt, native):
-    """Assemble lossless planes: point-transform shift back, then raw
-    stacking (3-comp) or grayscale path — T.81 Annex H has no color
-    model, so no YCbCr transform on RAW component values."""
-    shifted = [(p.astype(np.int32) << pt) for p in planes]
-    if len(shifted) == 3:
-        maxv = (1 << prec) - 1
-        out = np.stack(shifted, axis=2)
-        np.clip(out, 0, maxv, out=out)
-        if prec == 8:
-            return out.astype(np.uint8)
-        if native:
-            return out.astype(np.uint16)
-        return np.rint(out.astype(np.float64) * (255.0 / maxv)).astype(np.uint8)
-    full = [p.astype(np.float64) for p in shifted]
-    return _planes_to_rgb(full, prec, native)
-
-
-def _exp_upsample(p, eh, ev):
-    """Annex J.1.1.2 reference expansion: even outputs copy the input,
-    odd outputs interpolate (a + b + 1) >> 1 with edge replication."""
-    if eh:
-        hh, ww = p.shape
-        q = np.zeros((hh, 2 * ww), dtype=p.dtype)
-        q[:, 0::2] = p
-        if ww > 1:
-            q[:, 1:-1:2] = (p[:, :-1] + p[:, 1:] + 1) >> 1
-        q[:, -1] = p[:, -1]
-        p = q
-    if ev:
-        hh, ww = p.shape
-        q = np.zeros((2 * hh, ww), dtype=p.dtype)
-        q[0::2, :] = p
-        if hh > 1:
-            q[1:-1:2, :] = (p[:-1, :] + p[1:, :] + 1) >> 1
-        q[-1, :] = p[-1, :]
-        p = q
-    return p
-
-
-def _ll_frame_fragment(comps, prec, predictor, differential, arith):
-    """SOF..entropy bytes for ONE lossless (or differential-lossless)
-    hierarchical frame. `comps` holds SAMPLE planes (non-differential,
-    predictive coding applies) or signed DIFFERENCE planes
-    (differential: prediction is zero, values code as-is)."""
-    h, w = comps[0].shape
-    ncomp = len(comps)
-    diffs_per_sample = []
-    if differential:
-        for y in range(h):
-            for x in range(w):
-                for p in comps:
-                    d = int(p[y, x]) & 0xFFFF
-                    if d >= 32768:
-                        d -= 65536
-                    diffs_per_sample.append(d)
-    else:
-        predict = _LL_PREDICT[predictor]
-        default_pred = 1 << (prec - 1)
-        for y in range(h):
-            for x in range(w):
-                for p in comps:
-                    if (y, x) == (0, 0):
-                        pred = default_pred
-                    elif y == 0:
-                        pred = int(p[0, x - 1])
-                    elif x == 0:
-                        pred = int(p[y - 1, 0])
-                    else:
-                        pred = predict(
-                            int(p[y, x - 1]), int(p[y - 1, x]), int(p[y - 1, x - 1])
-                        )
-                    d = (int(p[y, x]) - pred) & 0xFFFF
-                    if d >= 32768:
-                        d -= 65536
-                    diffs_per_sample.append(d)
-
-    out = bytearray()
-    if arith:
-        from transferdb_spark.ext.jpeg_arith import (
-            DEFAULT_DC_COND,
-            LL_STAT_BINS,
-            _ArithEncoder,
-            _encode_ll_diff,
-            _ll_ctx,
-            _ll_track,
-        )
-
-        lo, up = DEFAULT_DC_COND
-        out += _sof_segment(0xCF if differential else 0xCB, h, w, prec=prec, ncomp=ncomp)
-        out += b"\xff\xcc" + struct.pack(">H", 4) + bytes([0x00, (up << 4) | lo])
-        out += b"\xff\xda" + struct.pack(">HB", 6 + 2 * ncomp, ncomp)
-        for cid in range(1, ncomp + 1):
-            out += bytes([cid, 0x00])
-        out += bytes([0 if differential else predictor, 0, 0])
-        enc = _ArithEncoder()
-        st = bytearray(LL_STAT_BINS)
-        cls_above = [np.zeros(w, dtype=np.int64) for _ in comps]
-        cls_left = [0] * ncomp
-        i = 0
-        for y in range(h):
-            for ci in range(ncomp):
-                cls_left[ci] = 0
-            for x in range(w):
-                for ci in range(ncomp):
-                    d = diffs_per_sample[i]
-                    i += 1
-                    ca, cb = cls_left[ci], int(cls_above[ci][x])
-                    k = _encode_ll_diff(
-                        enc, st, _ll_ctx(ca, cb), _ll_track(cb), lo, up, d
-                    )
-                    cls_left[ci] = k
-                    cls_above[ci][x] = k
-        out += enc.finish()
-        return bytes(out)
-
-    ops: list[tuple[int, int, int]] = []
-    cats = set()
-    for d in diffs_per_sample:
-        raw = d & 0xFFFF
-        if raw == 32768:
-            t, code = 16, 0
-        else:
-            t, code = _magnitude(d)
-        cats.add(t)
-        ops.append((t, code, t if t != 16 else 0))
-    out += _sof_segment(0xC7 if differential else 0xC3, h, w, prec=prec, ncomp=ncomp)
-    bits, vals = _flat_table(sorted(cats))
-    out += b"\xff\xc4" + struct.pack(">H", 19 + len(vals))
-    out += bytes([0x00]) + bytes(bits) + bytes(vals)
-    codes = _encode_codes(bits, vals)
-    out += b"\xff\xda" + struct.pack(">HB", 6 + 2 * ncomp, ncomp)
-    for cid in range(1, ncomp + 1):
-        out += bytes([cid, 0x00])
-    out += bytes([0 if differential else predictor, 0, 0])
-    wtr = _BitWriter()
-    for t, code, nbits in ops:
-        hc, hl = codes[t]
-        wtr.write(hc, hl)
-        if nbits:
-            wtr.write(code & ((1 << nbits) - 1), nbits)
-    wtr.flush()
-    out += wtr.out
-    return bytes(out)
-
-
-def encode_jpeg_hierarchical_lossless(
-    img: np.ndarray,
-    levels: int = 2,
-    predictor: int = 1,
-    prec: int | None = None,
-    arith: bool = False,
-) -> bytes:
-    """Integer samples → HIERARCHICAL lossless JPEG (T.81 Annex J):
-    DHP, a reduced-resolution non-differential lossless base frame
-    (SOF3, or SOF11 when arith=True), then per level an EXP reference
-    expansion and a DIFFERENTIAL lossless frame (SOF7 / SOF15) coding
-    source − upsampled(reference) mod 2^16. Because every rung is
-    lossless, decode_jpeg_native reproduces the input exactly — the
-    progressive-resolution transmission mode with a lossless final
-    rung, round-trip-tested like the other codec rungs."""
-    if img.ndim == 2:
-        planes = [img]
-    elif img.ndim == 3 and img.shape[2] == 3:
-        planes = [img[:, :, ci] for ci in range(3)]
-    else:
-        raise ValueError("expected (h, w) grayscale or (h, w, 3) samples")
-    if prec is None:
-        prec = 8 if img.dtype == np.uint8 else 16
-    if not 2 <= prec <= 16:
-        raise ValueError("prec must be in 2..16")
-    if levels < 1:
-        raise ValueError("levels must be >= 1")
-    if predictor not in _LL_PREDICT:
-        raise ValueError(f"invalid lossless predictor {predictor}")
-    comps = [p.astype(np.int64) for p in planes]
-    h, w = img.shape[:2]
-
-    pyr = [comps]
-    for _ in range(levels - 1):
-        if min(pyr[-1][0].shape) < 2:
-            break  # can't halve further — shallower pyramid
-        pyr.append([p[::2, ::2] for p in pyr[-1]])
-
-    out = bytearray(b"\xff\xd8")
-    out += _sof_segment(0xDE, h, w, prec=prec, ncomp=len(comps))  # DHP
-    out += _ll_frame_fragment(pyr[-1], prec, predictor, False, arith)
-    recon = pyr[-1]
-    for k in range(len(pyr) - 2, -1, -1):
-        fh, fw = pyr[k][0].shape
-        ref = [_exp_upsample(r, 1, 1)[:fh, :fw] for r in recon]
-        dplanes = [(s - r) & 0xFFFF for s, r in zip(pyr[k], ref)]
-        out += b"\xff\xdf" + struct.pack(">H", 3) + bytes([0x11])  # EXP
-        out += _ll_frame_fragment(dplanes, prec, predictor, True, arith)
-        recon = pyr[k]
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def _diff_coef_blocks(dplanes):
-    """Signed difference planes → unit-quantized zigzag DCT blocks
-    (no level shift) — shared by the sequential and progressive
-    differential fragments AND the encoder-side reconstruction, so
-    all three see identical integers."""
-    fh, fw = dplanes[0].shape
-    bh, bw = (fh + 7) // 8, (fw + 7) // 8
-    coefs = []
-    for p in dplanes:
-        pad = np.pad(
-            p.astype(np.float64), ((0, bh * 8 - fh), (0, bw * 8 - fw)), mode="edge"
-        )
-        blocks = pad.reshape(bh, 8, bw, 8).transpose(0, 2, 1, 3)
-        coef = np.einsum("ij,abjk,kl->abil", _A, blocks, _A.T)
-        q = np.round(coef).astype(np.int32)  # unit quantization
-        coefs.append(q.reshape(bh, bw, 64)[:, :, _ZIGZAG])
-    return coefs
-
-
-def _dct_diff_fragment(dplanes, arith):
-    """SOF..entropy bytes for one DIFFERENTIAL sequential DCT frame
-    (SOF5 Huffman / SOF13 arithmetic): DCT of signed difference planes
-    with NO level shift and a unit quantization table (id 2), Huffman
-    via per-frame flat tables (diff magnitudes exceed Annex K's 8-bit
-    categories)."""
-    fh, fw = dplanes[0].shape
-    coefs = _diff_coef_blocks(dplanes)
-    bh, bw = coefs[0].shape[:2]
-
-    out = bytearray()
-    # unit DQT, table id 2 (Pq=0 8-bit entries)
-    out += b"\xff\xdb" + struct.pack(">H", 67) + bytes([0x02]) + bytes([1] * 64)
-    sof = bytearray(
-        bytes([0xFF, 0xCD if arith else 0xC5])
-        + struct.pack(">HBHHB", 8 + 9, 8, fh, fw, 3)
-    )
-    for cid in (1, 2, 3):
-        sof += bytes([cid, 0x11, 2])  # all components: unit table
-    out += sof
-
-    if arith:
-        from transferdb_spark.ext.jpeg_arith import (
-            AC_STAT_BINS,
-            DC_STAT_BINS,
-            DEFAULT_AC_COND,
-            DEFAULT_DC_COND,
-            _ArithEncoder,
-            _encode_ac_block,
-            _encode_dc_diff,
-            _sign_bin,
-        )
-
-        lo, up = DEFAULT_DC_COND
-        dc_val = (up << 4) | lo
-        out += b"\xff\xcc" + struct.pack(">H", 2 + 8)
-        out += bytes(
-            [0x00, dc_val, 0x01, dc_val, 0x10, DEFAULT_AC_COND, 0x11, DEFAULT_AC_COND]
-        )
-        out += b"\xff\xda" + struct.pack(">HB", 12, 3)
-        for cid, tids in ((1, 0x00), (2, 0x11), (3, 0x11)):
-            out += bytes([cid, tids])
-        out += b"\x00\x3f\x00"
-        enc = _ArithEncoder()
-        dc_st = {0: bytearray(DC_STAT_BINS), 1: bytearray(DC_STAT_BINS)}
-        ac_st = {0: bytearray(AC_STAT_BINS), 1: bytearray(AC_STAT_BINS)}
-        sign_st = _sign_bin()
-        last_dc = [0, 0, 0]
-        dc_ctx = [0, 0, 0]
-        for by in range(bh):
-            for bx in range(bw):
-                for ci in range(3):
-                    t = 0 if ci == 0 else 1
-                    zz = coefs[ci][by, bx]
-                    diff = int(zz[0]) - last_dc[ci]
-                    last_dc[ci] = int(zz[0])
-                    dc_ctx[ci] = _encode_dc_diff(
-                        enc, dc_st[t], dc_ctx[ci], lo, up, diff
-                    )
-                    _encode_ac_block(enc, ac_st[t], sign_st, DEFAULT_AC_COND, zz)
-        out += enc.finish()
-        return bytes(out)
-
-    ops = _seq_ops(coefs)
-    enc_tabs = {}
-    for cls in (0, 1):
-        for tsel in (0, 1):
-            syms = sorted(
-                {op[3] for op in ops if op[0] == "s" and op[1] == cls and op[2] == tsel}
-            )
-            if not syms:
-                syms = [0]
-            bits, vals = _flat_table(syms)
-            out += b"\xff\xc4" + struct.pack(">H", 19 + len(vals))
-            out += bytes([(cls << 4) | tsel]) + bytes(bits) + bytes(vals)
-            enc_tabs[(cls, tsel)] = _encode_codes(bits, vals)
-    out += b"\xff\xda" + struct.pack(">HB", 12, 3)
-    for cid, tids in ((1, 0x00), (2, 0x11), (3, 0x11)):
-        out += bytes([cid, tids])
-    out += b"\x00\x3f\x00"
-    wtr = _BitWriter()
-    for op in ops:
-        if op[0] == "s":
-            hc, hl = enc_tabs[(op[1], op[2])][op[3]]
-            wtr.write(hc, hl)
-        else:
-            wtr.write(op[1], op[2])
-    wtr.flush()
-    out += wtr.out
-    return bytes(out)
-
-
-def _prog_diff_fragment(dplanes, arith):
-    """SOF..entropy bytes for one DIFFERENTIAL progressive DCT frame
-    (SOF6 Huffman / SOF14 arithmetic): the standard 14-scan
-    progressive script over unit-quantized difference coefficients.
-    Coefficients come from the same _diff_coef_blocks as the
-    sequential differential fragment, so the two transmission orders
-    reconstruct identically."""
-    fh, fw = dplanes[0].shape
-    coefs = _diff_coef_blocks(dplanes)
-    bh, bw = coefs[0].shape[:2]
-
-    out = bytearray()
-    out += b"\xff\xdb" + struct.pack(">H", 67) + bytes([0x02]) + bytes([1] * 64)
-    sof = bytearray(
-        bytes([0xFF, 0xCE if arith else 0xC6])
-        + struct.pack(">HBHHB", 8 + 9, 8, fh, fw, 3)
-    )
-    for cid in (1, 2, 3):
-        sof += bytes([cid, 0x11, 2])
-    out += sof
-
-    bands = ((1, 5), (6, 63))
-    scans: list[tuple] = [("dc_first", None, 0, 0, 0, 1), ("dc_refine", None, 0, 0, 1, 0)]
-    for ci in range(3):
-        for ss, se in bands:
-            scans.append(("ac_first", ci, ss, se, 0, 1))
-    for ci in range(3):
-        for ss, se in bands:
-            scans.append(("ac_refine", ci, ss, se, 1, 0))
-
-    if arith:
-        from transferdb_spark.ext.jpeg_arith import (
-            AC_STAT_BINS,
-            DC_STAT_BINS,
-            DEFAULT_AC_COND,
-            DEFAULT_DC_COND,
-            _ArithEncoder,
-            _encode_ac_first_band,
-            _encode_ac_refine_band,
-            _encode_dc_diff,
-            _sign_bin,
-        )
-
-        lo, up = DEFAULT_DC_COND
-        dc_val = (up << 4) | lo
-        out += b"\xff\xcc" + struct.pack(">H", 2 + 8)
-        out += bytes(
-            [0x00, dc_val, 0x01, dc_val, 0x10, DEFAULT_AC_COND, 0x11, DEFAULT_AC_COND]
-        )
-        for kind, ci, ss, se, ah, al in scans:
-            in_scan = [0, 1, 2] if ci is None else [ci]
-            out += b"\xff\xda" + struct.pack(">HB", 6 + 2 * len(in_scan), len(in_scan))
-            for c in in_scan:
-                t = 0 if c == 0 else 1
-                out += bytes([c + 1, (t << 4) | t])
-            out += bytes([ss, se, (ah << 4) | al])
-            enc = _ArithEncoder()
-            dc_st = {0: bytearray(DC_STAT_BINS), 1: bytearray(DC_STAT_BINS)}
-            ac_st = {0: bytearray(AC_STAT_BINS), 1: bytearray(AC_STAT_BINS)}
-            sign_st = _sign_bin()
-            pred = [0, 0, 0]
-            dc_ctx = [0, 0, 0]
-            lo_, up_ = lo, up
-            if kind == "dc_first":
-                for by in range(bh):
-                    for bx in range(bw):
-                        for c in in_scan:
-                            t = 0 if c == 0 else 1
-                            v = int(coefs[c][by, bx][0]) >> al
-                            diff = v - pred[c]
-                            pred[c] = v
-                            dc_ctx[c] = _encode_dc_diff(
-                                enc, dc_st[t], dc_ctx[c], lo_, up_, diff
-                            )
-            elif kind == "dc_refine":
-                for by in range(bh):
-                    for bx in range(bw):
-                        for c in in_scan:
-                            bit = (int(coefs[c][by, bx][0]) >> al) & 1
-                            enc.encode(sign_st, 0, bit, adapt=False)
-            elif kind == "ac_first":
-                t = 0 if ci == 0 else 1
-                for by in range(bh):
-                    for bx in range(bw):
-                        _encode_ac_first_band(
-                            enc, ac_st[t], sign_st, DEFAULT_AC_COND,
-                            coefs[ci][by, bx], ss, se, al,
-                        )
-            else:
-                t = 0 if ci == 0 else 1
-                for by in range(bh):
-                    for bx in range(bw):
-                        _encode_ac_refine_band(
-                            enc, ac_st[t], sign_st, coefs[ci][by, bx], ss, se, al
-                        )
-            out += enc.finish()
-        return bytes(out)
-
-    for kind, ci, ss, se, ah, al in scans:
-        ops = _scan_ops(kind, coefs, ci, ss, se, ah, al)
-        codes = None
-        syms = sorted({op[1] for op in ops if op[0] == "s"})
-        if syms:
-            bits, vals = _flat_table(syms)
-            cls = 1 if kind.startswith("ac") else 0
-            out += b"\xff\xc4" + struct.pack(">H", 19 + len(vals))
-            out += bytes([(cls << 4) | 0]) + bytes(bits) + bytes(vals)
-            codes = _encode_codes(bits, vals)
-        in_scan = [0, 1, 2] if ci is None else [ci]
-        out += b"\xff\xda" + struct.pack(">HB", 6 + 2 * len(in_scan), len(in_scan))
-        for c in in_scan:
-            out += bytes([c + 1, 0x00])
-        out += bytes([ss, se, (ah << 4) | al])
-        wtr = _BitWriter()
-        for op in ops:
-            if op[0] == "s":
-                hc, hl = codes[op[1]]
-                wtr.write(hc, hl)
-            else:
-                wtr.write(op[1], op[2])
-        wtr.flush()
-        out += wtr.out
-    return bytes(out)
-
-
-def _dct_diff_recon(dplanes_coded, fh, fw):
-    """Replicate the decoder's reconstruction of a unit-quant
-    differential DCT frame: round-trip the coefficients through the
-    same per-block IDCT expression and rint grid."""
-    bh, bw = (fh + 7) // 8, (fw + 7) // 8
-    out = []
-    for q in _diff_coef_blocks(dplanes_coded):
-        plane = np.zeros((bh * 8, bw * 8), dtype=np.float64)
-        for by in range(bh):
-            for bx in range(bw):
-                deq = np.zeros(64, dtype=np.float64)
-                deq[_ZIGZAG] = q[by, bx]  # unit table
-                plane[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                    _A.T @ deq.reshape(8, 8) @ _A + 0.0
-                )
-        out.append(np.rint(plane[:fh, :fw]).astype(np.int64) & 0xFFFF)
-    return out
-
-
-def encode_jpeg_hierarchical_mixed(
-    px: np.ndarray, levels: int = 2, arith: bool = False
-) -> bytes:
-    """(h, w, 3) uint8 → the canonical Annex J profile: a LOSSY DCT
-    base frame at reduced resolution (SOF0, or SOF9 when arith=True)
-    followed by LOSSLESS differential refinement frames (SOF7/SOF15),
-    so decoding yields the encoder's integer YCbCr target exactly —
-    progressive-resolution delivery with a lossless final rung. The
-    encoder replicates the decoder's base reconstruction numerically
-    (same per-block IDCT expression, same rint grid), so the
-    refinement differences correct the REAL decoded reference, not an
-    idealized one."""
-    if px.ndim != 3 or px.shape[2] != 3 or px.dtype != np.uint8:
-        raise ValueError("expected (h, w, 3) uint8 RGB samples")
-    h, w = px.shape[:2]
-    if levels < 2:
-        raise ValueError("levels must be >= 2 (a base and one refinement)")
-
-    # integer YCbCr target pyramid (what the decode must reproduce)
-    f = px.astype(np.float64)
-    r, g, b = f[:, :, 0], f[:, :, 1], f[:, :, 2]
-    y = 0.299 * r + 0.587 * g + 0.114 * b
-    cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-    cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-    tgt = [np.rint(np.clip(p, 0, 255)).astype(np.int64) for p in (y, cb, cr)]
-    pyr = [tgt]
-    rgb_pyr = [px]
-    for _ in range(levels - 1):
-        if min(pyr[-1][0].shape) < 2:
-            break
-        pyr.append([p[::2, ::2] for p in pyr[-1]])
-        rgb_pyr.append(rgb_pyr[-1][::2, ::2])
-
-    # base frame: existing full-file DCT encoders, SOI/EOI stripped
-    if arith:
-        from transferdb_spark.ext.jpeg_arith import encode_jpeg_arith
-
-        base_file = encode_jpeg_arith(rgb_pyr[-1])
-    else:
-        base_file = encode_jpeg(rgb_pyr[-1])
-    base_frag = base_file[2:-2]
-
-    # replicate the decoder's base reconstruction: dequant + per-block
-    # IDCT with the decoder's exact float expression, then the rint
-    # grid the hier path applies
-    bh_img, bw_img = rgb_pyr[-1].shape[:2]
-    coefs = _coef_blocks(rgb_pyr[-1])
-    recon = []
-    for ci in range(3):
-        # DQT is serialized (and the decoder multiplies) in ZIGZAG order
-        qtab = (_QT_LUMA if ci == 0 else _QT_CHROMA)[_ZIGZAG]
-        bh, bw = coefs[ci].shape[:2]
-        plane = np.zeros((bh * 8, bw * 8), dtype=np.float64)
-        for by in range(bh):
-            for bx in range(bw):
-                deq = np.zeros(64, dtype=np.float64)
-                deq[_ZIGZAG] = coefs[ci][by, bx] * qtab
-                plane[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                    _A.T @ deq.reshape(8, 8) @ _A + 128.0
-                )
-        recon.append(
-            np.clip(np.rint(plane[:bh_img, :bw_img]), 0, 255).astype(np.int64)
-        )
-
-    out = bytearray(b"\xff\xd8")
-    out += _sof_segment(0xDE, h, w, prec=8, ncomp=3)  # DHP
-    out += base_frag
-    for k in range(len(pyr) - 2, -1, -1):
-        fh, fw = pyr[k][0].shape
-        ref = [_exp_upsample(rp, 1, 1)[:fh, :fw] for rp in recon]
-        dplanes = [(t - rp) & 0xFFFF for t, rp in zip(pyr[k], ref)]
-        out += b"\xff\xdf" + struct.pack(">H", 3) + bytes([0x11])  # EXP
-        out += _ll_frame_fragment(dplanes, 8, 1, True, arith)
-        recon = pyr[k]
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def encode_jpeg_hierarchical_dct(
-    px: np.ndarray, levels: int = 3, arith: bool = False, progressive: bool = False
-) -> bytes:
-    """Full Annex J ladder: lossy DCT base, DIFFERENTIAL sequential
-    DCT refinements (SOF5 / SOF13, unit quantization) at the
-    intermediate levels, and a lossless differential final rung
-    (SOF7 / SOF15) — so intermediate truncations give usable images
-    and the complete stream reconstructs the encoder's integer YCbCr
-    target exactly. The encoder replicates the decoder's
-    reconstruction (same IDCT expression, same rint grid) after every
-    lossy stage, so each refinement corrects the real reference."""
-    if px.ndim != 3 or px.shape[2] != 3 or px.dtype != np.uint8:
-        raise ValueError("expected (h, w, 3) uint8 RGB samples")
-    h, w = px.shape[:2]
-    if levels < 2:
-        raise ValueError("levels must be >= 2")
-
-    f = px.astype(np.float64)
-    r, g, b = f[:, :, 0], f[:, :, 1], f[:, :, 2]
-    y = 0.299 * r + 0.587 * g + 0.114 * b
-    cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-    cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-    tgt = [np.rint(np.clip(p, 0, 255)).astype(np.int64) for p in (y, cb, cr)]
-    pyr = [tgt]
-    rgb_pyr = [px]
-    for _ in range(levels - 1):
-        if min(pyr[-1][0].shape) < 2:
-            break
-        pyr.append([p[::2, ::2] for p in pyr[-1]])
-        rgb_pyr.append(rgb_pyr[-1][::2, ::2])
-
-    if arith:
-        from transferdb_spark.ext.jpeg_arith import encode_jpeg_arith
-
-        base_file = encode_jpeg_arith(rgb_pyr[-1])
-    else:
-        base_file = encode_jpeg(rgb_pyr[-1])
-
-    bh_img, bw_img = rgb_pyr[-1].shape[:2]
-    coefs = _coef_blocks(rgb_pyr[-1])
-    recon = []
-    for ci in range(3):
-        qtab = (_QT_LUMA if ci == 0 else _QT_CHROMA)[_ZIGZAG]
-        bh, bw = coefs[ci].shape[:2]
-        plane = np.zeros((bh * 8, bw * 8), dtype=np.float64)
-        for by in range(bh):
-            for bx in range(bw):
-                deq = np.zeros(64, dtype=np.float64)
-                deq[_ZIGZAG] = coefs[ci][by, bx] * qtab
-                plane[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                    _A.T @ deq.reshape(8, 8) @ _A + 128.0
-                )
-        recon.append(
-            np.clip(np.rint(plane[:bh_img, :bw_img]), 0, 255).astype(np.int64)
-        )
-
-    out = bytearray(b"\xff\xd8")
-    out += _sof_segment(0xDE, h, w, prec=8, ncomp=3)  # DHP
-    out += base_file[2:-2]
-    for k in range(len(pyr) - 2, -1, -1):
-        fh, fw = pyr[k][0].shape
-        ref = [_exp_upsample(rp, 1, 1)[:fh, :fw] for rp in recon]
-        draw = [(t - rp) & 0xFFFF for t, rp in zip(pyr[k], ref)]
-        dsigned = [np.where(d >= 32768, d - 65536, d) for d in draw]
-        out += b"\xff\xdf" + struct.pack(">H", 3) + bytes([0x11])  # EXP
-        if k > 0:
-            # intermediate rung: differential DCT (lossy, unit quant),
-            # sequential or progressive transmission — same coefficients
-            if progressive:
-                out += _prog_diff_fragment(dsigned, arith)
-            else:
-                out += _dct_diff_fragment(dsigned, arith)
-            coded = _dct_diff_recon(dsigned, fh, fw)
-            merged = []
-            for rp, c in zip(ref, coded):
-                s = (rp[:fh, :fw] + c) & 0xFFFF
-                s = np.where(s >= 32768, s - 65536, s)
-                merged.append(np.clip(s, 0, 255).astype(np.int64))
-            recon = merged
-        else:
-            # final rung: lossless differential — exact reconstruction
-            out += _ll_frame_fragment(draw, 8, 1, True, arith)
-            recon = pyr[k]
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def _decode_lossless_arith_scan(
-    buf, pos, frame, scan_sel, dc_cond, restart_interval, pred_sel, pt, native,
-    differential=False, want_planes=False,
-):
-    """SOF11 scan (T.81 Annex H.2): the SOF3 raster/prediction flow
-    with QM-coded differences — 2-D (Da, Db) conditioning, stats per
-    DAC table id, everything (decoder, statistics, predictions,
-    neighbor classes) re-initialized at restart markers."""
-    from transferdb_spark.ext.jpeg_arith import (
-        DEFAULT_DC_COND,
-        LL_STAT_BINS,
-        _ArithDecoder,
-        _decode_ll_diff,
-        _ll_ctx,
-        _ll_track,
-    )
-
-    comps = frame["comps"]
-    if any(c["h"] != 1 or c["v"] != 1 for c in comps):
-        raise NotImplementedError("subsampled lossless JPEG")
-    if len(comps) not in (1, 3):
-        raise NotImplementedError(f"{len(comps)}-component lossless JPEG")
-    if not differential and pred_sel not in _LL_PREDICT:
-        raise ValueError(f"invalid lossless predictor {pred_sel}")
-    h, w, prec = frame["h"], frame["w"], frame["prec"]
-    sel = {s["id"]: s for s in scan_sel}
-    planes = [np.zeros((h, w), dtype=np.int32) for _ in comps]
-    default_pred = 1 << (prec - pt - 1)
-    predict = (lambda ra, rb, rc: 0) if differential else _LL_PREDICT[pred_sel]
-
-    def fresh_state(p):
-        return (
-            _ArithDecoder(buf, p),
-            {sel[c["id"]]["dc"]: bytearray(LL_STAT_BINS) for c in comps},
-            [np.zeros(w, dtype=np.int64) for _ in comps],  # class above
-            [0] * len(comps),  # class left
-        )
-
-    dec, stats, cls_above, cls_left = fresh_state(pos)
-    mcu = 0
-    fresh = True
-    for y in range(h):
-        for ci in range(len(comps)):
-            cls_left[ci] = 0
-        for x in range(w):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                p = dec.bp
-                while p + 1 < len(buf) and not (
-                    buf[p] == 0xFF and 0xD0 <= buf[p + 1] <= 0xD7
-                ):
-                    p += 1
-                if p + 1 >= len(buf):
-                    raise ValueError(
-                        "truncated arithmetic JPEG: missing restart"
-                    )
-                dec, stats, cls_above, cls_left = fresh_state(p + 2)
-                fresh = True
-            for ci, c in enumerate(comps):
-                s = sel[c["id"]]
-                lo, up = dc_cond.get(s["dc"], DEFAULT_DC_COND)
-                ca, cb = cls_left[ci], int(cls_above[ci][x])
-                diff, k = _decode_ll_diff(
-                    dec, stats[s["dc"]], _ll_ctx(ca, cb), _ll_track(cb), lo, up
-                )
-                cls_left[ci] = k
-                cls_above[ci][x] = k
-                p_ = planes[ci]
-                if differential:
-                    pred = 0
-                elif fresh:
-                    pred = default_pred
-                elif y == 0:
-                    pred = int(p_[0, x - 1])
-                elif x == 0:
-                    pred = int(p_[y - 1, 0])
-                else:
-                    pred = predict(
-                        int(p_[y, x - 1]), int(p_[y - 1, x]), int(p_[y - 1, x - 1])
-                    )
-                p_[y, x] = (pred + diff) & 0xFFFF
-            fresh = False
-            mcu += 1
-    if want_planes:
-        return planes, dec.bp
-    return _lossless_output(planes, prec, pt, native)
-
-
-def encode_jpeg_lossless(
-    img: np.ndarray, predictor: int = 1, pt: int = 0, prec: int | None = None
-) -> bytes:
-    """Integer samples → SOF3 lossless JPEG — a TRUE lossless twin:
-    decode_jpeg_native(encode_jpeg_lossless(x)) must reproduce x
-    exactly (no DCT; NO color transform on either path — Annex H has
-    no color model, components carry raw values). (h, w) grayscale or
-    (h, w, 3) three raw component planes (the DNG/medical shape),
-    interleaved one sample per component per MCU like the decoder
-    expects. prec defaults to 8 for uint8 input, else 16."""
-    if img.ndim == 2:
-        planes = [img]
-    elif img.ndim == 3 and img.shape[2] == 3:
-        planes = [img[:, :, ci] for ci in range(3)]
-    else:
-        raise ValueError("expected (h, w) grayscale or (h, w, 3) samples")
-    if prec is None:
-        prec = 8 if img.dtype == np.uint8 else 16
-    if not 2 <= prec <= 16:
-        raise ValueError("prec must be in 2..16")
-    if predictor not in _LL_PREDICT:
-        raise ValueError(f"invalid lossless predictor {predictor}")
-    h, w = img.shape[:2]
-    comps = [(p.astype(np.int64) >> pt).astype(np.int64) for p in planes]
-
-    # category stream first, then one flat DHT covering what occurs
-    predict = _LL_PREDICT[predictor]
-    default_pred = 1 << (prec - pt - 1)
-    ops: list[tuple[int, int, int]] = []  # (category, code, nbits)
-    cats = set()
-    for y in range(h):
-        for x in range(w):
-            for samples in comps:
-                if (y, x) == (0, 0):
-                    pred = default_pred
-                elif y == 0:
-                    pred = int(samples[0, x - 1])
-                elif x == 0:
-                    pred = int(samples[y - 1, 0])
-                else:
-                    pred = predict(
-                        int(samples[y, x - 1]),
-                        int(samples[y - 1, x]),
-                        int(samples[y - 1, x - 1]),
-                    )
-                diff = (int(samples[y, x]) - pred) & 0xFFFF
-                if diff > 32768:
-                    diff -= 65536
-                if diff == 32768:
-                    t, code = 16, 0
-                else:
-                    t, code = _magnitude(diff)
-                cats.add(t)
-                ops.append((t, code, t if t != 16 else 0))
-
-    ncomp = len(comps)
-    out = bytearray(b"\xff\xd8")
-    out += _sof_segment(0xC3, h, w, prec=prec, ncomp=ncomp)
-    bits, vals = _flat_table(sorted(cats))
-    out += b"\xff\xc4" + struct.pack(">H", 19 + len(vals))
-    out += bytes([0x00]) + bytes(bits) + bytes(vals)
-    codes = _encode_codes(bits, vals)
-    out += b"\xff\xda" + struct.pack(">HB", 6 + 2 * ncomp, ncomp)
-    for cid in range(1, ncomp + 1):
-        out += bytes([cid, 0x00])  # all components share DC table 0
-    out += bytes([predictor, 0, pt])
-    wtr = _BitWriter()
-    for t, code, nbits in ops:
-        hc, hl = codes[t]
-        wtr.write(hc, hl)
-        if nbits:
-            wtr.write(code & ((1 << nbits) - 1), nbits)
-    wtr.flush()
-    out += wtr.out
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def _mcu_geometry(frame) -> tuple[int, int, int, int]:
-    comps = frame["comps"]
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    mcux = (frame["w"] + 8 * hmax - 1) // (8 * hmax)
-    mcuy = (frame["h"] + 8 * vmax - 1) // (8 * vmax)
-    return hmax, vmax, mcux, mcuy
-
-
-def _alloc_coef(frame) -> list[np.ndarray]:
-    _, _, mcux, mcuy = _mcu_geometry(frame)
-    return [
-        np.zeros((mcuy * c["v"], mcux * c["h"], 64), dtype=np.int32)
-        for c in frame["comps"]
-    ]
-
-
-def _skip_to_arith_marker(buf: bytes, pos: int) -> int:
-    """Arithmetic entropy data has no 0x00 stuffing: a data 0xFF is
-    followed by a byte <= 0x8F (7 payload bits under a stuffed 0 bit),
-    while true markers are 0xFF followed by > 0x8F. RSTn belong to the
-    scan and are consumed inside it, so they are skipped here."""
-    while pos + 1 < len(buf):
-        if (
-            buf[pos] == 0xFF
-            and buf[pos + 1] > 0x8F
-            and not 0xD0 <= buf[pos + 1] <= 0xD7
-        ):
-            return pos
-        pos += 1
-    return len(buf)
-
-
-def _skip_to_marker(buf: bytes, pos: int) -> int:
-    """Advance past entropy padding/stuffing to the next true marker."""
-    while pos < len(buf) - 1:
-        if buf[pos] != 0xFF:
-            pos += 1
-        elif buf[pos + 1] == 0xFF:  # fill byte
-            pos += 1
-        elif buf[pos + 1] == 0x00 or 0xD0 <= buf[pos + 1] <= 0xD7:
-            pos += 2
-        else:
-            return pos
-    return len(buf)
-
-
-def _decode_progressive_scan(
-    buf, pos, frame, scan_sel, huff_dc, huff_ac, restart_interval,
-    coef, ss, se, ah, al,
-):
-    """Decode one progressive SOS into `coef` (in place); return the
-    position just past its entropy-coded data.
-
-    DC scans (Ss=Se=0) may interleave components over MCUs; AC scans are
-    single-component, traversed over that component's own block grid.
-    `eobrun` carries end-of-band runs across blocks; restarts reset both
-    it and the DC predictors."""
-    comps = frame["comps"]
-    idx = {c["id"]: ci for ci, c in enumerate(comps)}
-    hmax, vmax, mcux, mcuy = _mcu_geometry(frame)
-    if (ss == 0) != (se == 0):
-        raise ValueError("progressive scan mixes DC and AC bands")
-    if ss > 0 and len(scan_sel) != 1:
-        raise ValueError("progressive AC scan must be single-component")
-    reader = _BitReader(buf, pos)
-    state = {"eobrun": 0, "pred": [0] * len(comps)}
-
-    if len(scan_sel) > 1:  # interleaved DC scan: MCU traversal
-        units = [(my, mx) for my in range(mcuy) for mx in range(mcux)]
-
-        def decode_unit(unit):
-            my, mx = unit
-            for s in scan_sel:
-                ci = idx[s["id"]]
-                c = comps[ci]
-                for by in range(c["v"]):
-                    for bx in range(c["h"]):
-                        blk = coef[ci][my * c["v"] + by, mx * c["h"] + bx]
-                        _prog_dc(reader, blk, huff_dc.get(s["dc"]), state, ci, ah, al)
-
-    else:  # non-interleaved: the component's own block grid
-        s = scan_sel[0]
-        ci = idx[s["id"]]
-        c = comps[ci]
-        cw = -(-(frame["w"] * c["h"]) // hmax)
-        ch = -(-(frame["h"] * c["v"]) // vmax)
-        bw, bh = -(-cw // 8), -(-ch // 8)
-        units = [(by, bx) for by in range(bh) for bx in range(bw)]
-        if ss == 0:
-
-            def decode_unit(unit):
-                _prog_dc(reader, coef[ci][unit], huff_dc.get(s["dc"]), state, ci, ah, al)
-
-        else:
-            ac = huff_ac.get(s["ac"])
-            if ac is None:
-                raise ValueError("progressive AC scan references undefined DHT")
-            if ah == 0:
-
-                def decode_unit(unit):
-                    _prog_ac_first(reader, coef[ci][unit], ac, state, ss, se, al)
-
-            else:
-
-                def decode_unit(unit):
-                    _prog_ac_refine(reader, coef[ci][unit], ac, state, ss, se, al)
-
-    last = len(units) - 1
-    for n, unit in enumerate(units):
-        if restart_interval and n and n % restart_interval == 0:
-            try:
-                while True:
-                    reader.read_bit()
-            except _RestartMarker:
-                reader.align_after_restart()
-                state["eobrun"] = 0
-                state["pred"] = [0] * len(comps)
-            except _EndOfScan:
-                raise ValueError("truncated JPEG: missing restart marker")
-        try:
-            decode_unit(unit)
-        except _RestartMarker:
-            reader.align_after_restart()
-            state["eobrun"] = 0
-            state["pred"] = [0] * len(comps)
-        except _EndOfScan:
-            if n != last:
-                raise ValueError(
-                    f"truncated JPEG: progressive scan ended at unit {n} of {len(units)}"
-                )
-    return reader.pos
-
-
-def _prog_dc(reader, blk, dc_table, state, ci, ah, al):
-    if ah == 0:  # first DC scan: baseline DPCM, shifted left by Al
-        if dc_table is None:
-            raise ValueError("progressive DC scan references undefined DHT")
-        t = _decode_huff(reader, dc_table)
-        diff = _extend(reader.read_bits(t), t) if t else 0
-        state["pred"][ci] += diff
-        blk[0] = state["pred"][ci] << al
-    else:  # refinement: one bit, OR'd into the Al position
-        if reader.read_bit():
-            blk[0] = int(blk[0]) | (1 << al)
-
-
-def _prog_ac_first(reader, blk, ac_table, state, ss, se, al):
-    if state["eobrun"] > 0:
-        state["eobrun"] -= 1
-        return
-    k = ss
-    while k <= se:
-        rs = _decode_huff(reader, ac_table)
-        r, s = rs >> 4, rs & 0x0F
-        if s == 0:
-            if r == 15:  # ZRL
-                k += 16
-                continue
-            state["eobrun"] = (1 << r) - 1  # this block consumes one
-            if r:
-                state["eobrun"] += reader.read_bits(r)
-            break
-        k += r
-        if k > se:
-            break  # run past the band: tolerate like baseline's k>63
-        blk[k] = _extend(reader.read_bits(s), s) << al
-        k += 1
-
-
-def _prog_ac_refine(reader, blk, ac_table, state, ss, se, al):
-    """Successive-approximation AC refinement (T.81 G.1.2.3 / figure
-    G.7): newly-significant coefficients arrive as run/size=r/1 symbols;
-    every already-nonzero coefficient crossed costs one correction bit."""
-    p1, m1 = 1 << al, -(1 << al)
-    k = ss
-    if state["eobrun"] == 0:
-        while k <= se:
-            rs = _decode_huff(reader, ac_table)
-            r, s = rs >> 4, rs & 0x0F
-            val = 0
-            if s == 0:
-                if r != 15:  # EOBn: rest of this block is correction-only
-                    # full run here; the post-loop below consumes this
-                    # block's share (reads its remaining correction bits
-                    # first), unlike ac_first where nothing follows EOB
-                    state["eobrun"] = 1 << r
-                    if r:
-                        state["eobrun"] += reader.read_bits(r)
-                    break
-                # r == 15 (ZRL): skip 16 zero-history coefficients
-            else:
-                val = p1 if reader.read_bit() else m1
-            while k <= se:
-                c = int(blk[k])
-                if c != 0:
-                    if reader.read_bit() and (c & p1) == 0:
-                        blk[k] = c + (p1 if c >= 0 else m1)
-                else:
-                    if r == 0:
-                        break
-                    r -= 1
-                k += 1
-            if val and k <= se:
-                blk[k] = val
-            k += 1
-    if state["eobrun"] > 0:
-        while k <= se:
-            c = int(blk[k])
-            if c != 0:
-                if reader.read_bit() and (c & p1) == 0:
-                    blk[k] = c + (p1 if c >= 0 else m1)
-            k += 1
-        state["eobrun"] -= 1
-
-
-def _reconstruct_progressive(
-    frame, coef, qt, native=False, differential=False, want_planes=False
-):
-    comps = frame["comps"]
-    h, w = frame["h"], frame["w"]
-    shift = 0.0 if differential else float(1 << (frame.get("prec", 8) - 1))
-    hmax, vmax, _, _ = _mcu_geometry(frame)
-    full = []
-    for ci, c in enumerate(comps):
-        cz = coef[ci]
-        bh, bw = cz.shape[:2]
-        if c["q"] not in qt:
-            raise ValueError(f"missing quantization table {c['q']}")
-        nat = np.zeros((bh, bw, 64), dtype=np.float64)
-        nat[:, :, _ZIGZAG] = cz * qt[c["q"]].astype(np.float64)
-        px = np.einsum("ij,abjk,kl->abil", _A.T, nat.reshape(bh, bw, 8, 8), _A) + shift
-        plane = px.transpose(0, 2, 1, 3).reshape(bh * 8, bw * 8)
-        plane = plane.repeat(vmax // c["v"], axis=0).repeat(hmax // c["h"], axis=1)
-        full.append(plane[:h, :w])
-    if want_planes:
-        if differential:
-            return [np.rint(p).astype(np.int64) & 0xFFFF for p in full]
-        maxv = (1 << frame.get("prec", 8)) - 1
-        return [np.clip(np.rint(p), 0, maxv).astype(np.int64) for p in full]
-    return _planes_to_rgb(full, frame.get("prec", 8), native)
-
-
-# ---------------------------------------------------------------------------
-# encoder (test-side twin): 4:4:4, Annex K tables
-
-
-class _BitWriter:
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, nbits: int) -> None:
-        for i in range(nbits - 1, -1, -1):
-            self.acc = (self.acc << 1) | ((value >> i) & 1)
-            self.nbits += 1
-            if self.nbits == 8:
-                self.out.append(self.acc)
-                if self.acc == 0xFF:
-                    self.out.append(0x00)  # byte stuffing
-                self.acc = 0
-                self.nbits = 0
-
-    def flush(self) -> None:
-        if self.nbits:
-            self.acc <<= 8 - self.nbits
-            self.acc |= (1 << (8 - self.nbits)) - 1  # pad with 1s
-            self.out.append(self.acc)
-            if self.acc == 0xFF:
-                self.out.append(0x00)
-            self.acc = 0
-            self.nbits = 0
-
-
-def _encode_codes(bits, values) -> dict[int, tuple[int, int]]:
-    """{value: (code, length)} from the canonical table."""
-    inv = {}
-    for (length, code), v in _build_huffman(bits, values).items():
-        inv[v] = (code, length)
-    return inv
-
-
-def _magnitude(v: int) -> tuple[int, int]:
-    """(category t, t-bit code) for EXTEND-compatible encoding."""
-    if v == 0:
-        return 0, 0
-    a = abs(v)
-    t = a.bit_length()
-    code = v if v > 0 else v + (1 << t) - 1
-    return t, code
-
-
-def _coef_blocks(px: np.ndarray, prec: int = 8) -> list[np.ndarray]:
-    """(h, w, 3) samples → per-component (bh, bw, 64) int32 quantized
-    DCT coefficients in zigzag order — the ONE quantizer all encoders
-    share, so a progressive stream carries bit-identical coefficients
-    to the baseline stream of the same image (zz[k] = natural index
-    _ZIGZAG[k], the inverse of the decoder's deq[_ZIGZAG] scatter).
-    prec parameterizes the level shift / chroma midpoint (2^(P-1)) and
-    the 12-bit quantizer scale."""
-    px = px.astype(np.float64)
-    h, w = px.shape[:2]
-    half = float(1 << (prec - 1))
-    qscale = _QSCALE_12 if prec == 12 else 1
-    r, g, b = px[:, :, 0], px[:, :, 1], px[:, :, 2]
-    y = 0.299 * r + 0.587 * g + 0.114 * b
-    cb = -0.168736 * r - 0.331264 * g + 0.5 * b + half
-    cr = 0.5 * r - 0.418688 * g - 0.081312 * b + half
-    qts = [_QT_LUMA.reshape(8, 8) * qscale, _QT_CHROMA.reshape(8, 8) * qscale]
-    bh, bw = (h + 7) // 8, (w + 7) // 8
-    coefs = []
-    for ci, plane in enumerate((y, cb, cr)):
-        p = np.pad(plane, ((0, bh * 8 - h), (0, bw * 8 - w)), mode="edge") - half
-        blocks = p.reshape(bh, 8, bw, 8).transpose(0, 2, 1, 3)
-        coef = np.einsum("ij,abjk,kl->abil", _A, blocks, _A.T)
-        q = np.round(coef / qts[0 if ci == 0 else 1]).astype(np.int32)
-        coefs.append(q.reshape(bh, bw, 64)[:, :, _ZIGZAG])
-    return coefs
-
-
-# 12-bit frames quantize with Annex K × 4: finer steps relative to the
-# 16× wider sample range (so 2 extra bits of fidelity survive), and the
-# scaled entries exceed 255, forcing the Pq=1 16-bit DQT path.
-_QSCALE_12 = 4
-
-
-def _dqt_segments(prec: int = 8) -> bytes:
-    """DQT carries the natural-order table serialized in zigzag order."""
-    out = bytearray()
-    for tid, qtab in ((0, _QT_LUMA), (1, _QT_CHROMA)):
-        zz = qtab.reshape(8, 8).flatten()[_ZIGZAG]
-        if prec == 8:
-            out += b"\xff\xdb" + struct.pack(">H", 67) + bytes([tid]) + bytes(
-                int(v) for v in zz
-            )
-        else:
-            out += b"\xff\xdb" + struct.pack(">H", 131) + bytes([0x10 | tid])
-            out += b"".join(struct.pack(">H", int(v) * _QSCALE_12) for v in zz)
-    return bytes(out)
-
-
-def _sof_segment(marker: int, h: int, w: int, prec: int = 8, ncomp: int = 3) -> bytes:
-    out = bytearray(
-        bytes([0xFF, marker]) + struct.pack(">HBHHB", 8 + 3 * ncomp, prec, h, w, ncomp)
-    )
-    for cid, qid in ((1, 0), (2, 1), (3, 1))[:ncomp]:
-        out += bytes([cid, 0x11, qid])  # 4:4:4
-    return bytes(out)
-
-
-def encode_jpeg(px: np.ndarray) -> bytes:
-    """(h, w, 3) uint8 → baseline JPEG bytes (4:4:4, Annex K tables)."""
-    h, w = px.shape[:2]
-    coefs = _coef_blocks(px)
-
-    out = bytearray(b"\xff\xd8")  # SOI
-    out += _dqt_segments()
-    out += _sof_segment(0xC0, h, w)
-    for cls, tid, (bits, vals) in (
-        (0, 0, _DC_LUMA),
-        (0, 1, _DC_CHROMA),
-        (1, 0, _AC_LUMA),
-        (1, 1, _AC_CHROMA),
-    ):
-        out += b"\xff\xc4" + struct.pack(">H", 19 + len(vals))
-        out += bytes([(cls << 4) | tid]) + bytes(bits) + bytes(vals)
-    out += b"\xff\xda" + struct.pack(">HB", 12, 3)
-    for cid, tids in ((1, 0x00), (2, 0x11), (3, 0x11)):
-        out += bytes([cid, tids])
-    out += b"\x00\x3f\x00"
-
-    dc_enc = [_encode_codes(*_DC_LUMA), _encode_codes(*_DC_CHROMA)]
-    ac_enc = [_encode_codes(*_AC_LUMA), _encode_codes(*_AC_CHROMA)]
-
-    wtr = _BitWriter()
-    for op in _seq_ops(coefs):
-        if op[0] == "s":
-            _, cls, tsel, sym = op
-            hc, hl = (dc_enc if cls == 0 else ac_enc)[tsel][sym]
-            wtr.write(hc, hl)
-        else:
-            wtr.write(op[1], op[2])
-    wtr.flush()
-    out += wtr.out
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def _seq_ops(coefs: list[np.ndarray]) -> list[tuple]:
-    """One interleaved sequential scan as an op list (('s', cls, tsel,
-    symbol) | ('b', value, nbits)) — shared by the 8-bit encoder
-    (Annex K tables) and the 12-bit encoder (tables derived from the
-    symbols actually used, since Annex K's categories only cover 8-bit
-    magnitudes)."""
-    ops: list[tuple] = []
-    pred = [0, 0, 0]
-    bh, bw = coefs[0].shape[:2]
-    for by in range(bh):
-        for bx in range(bw):
-            for ci in range(3):
-                tsel = 0 if ci == 0 else 1
-                zz = coefs[ci][by, bx]
-                diff = int(zz[0]) - pred[ci]
-                pred[ci] = int(zz[0])
-                t, code = _magnitude(diff)
-                ops.append(("s", 0, tsel, t))
-                if t:
-                    ops.append(("b", code, t))
-                k = 1
-                run = 0
-                last_nz = max([i for i in range(1, 64) if zz[i]] or [0])
-                while k <= last_nz:
-                    v = int(zz[k])
-                    if v == 0:
-                        run += 1
-                        k += 1
-                        continue
-                    while run > 15:
-                        ops.append(("s", 1, tsel, 0xF0))
-                        run -= 16
-                    t, code = _magnitude(v)
-                    ops.append(("s", 1, tsel, (run << 4) | t))
-                    ops.append(("b", code, t))
-                    run = 0
-                    k += 1
-                if last_nz < 63:
-                    ops.append(("s", 1, tsel, 0x00))  # EOB
-    return ops
-
-
-def encode_jpeg_12bit(px: np.ndarray) -> bytes:
-    """(h, w, 3) uint16 RGB with samples 0..4095 → 12-bit extended
-    sequential JPEG (SOF1, 4:4:4, 16-bit DQT): the test-side twin for
-    the decoder's 12-bit path. Huffman tables are canonical flat codes
-    built from the symbols each (class, destination) actually uses —
-    Annex K's tables stop at 8-bit magnitude categories, and
-    compression is not the point of the twin."""
-    if px.ndim != 3 or px.shape[2] != 3:
-        raise ValueError("expected (h, w, 3) RGB samples")
-    if int(px.max(initial=0)) > 4095 or int(px.min(initial=0)) < 0:
-        raise ValueError("12-bit samples must lie in 0..4095")
-    h, w = px.shape[:2]
-    coefs = _coef_blocks(px, prec=12)
-    ops = _seq_ops(coefs)
-
-    out = bytearray(b"\xff\xd8")
-    out += _dqt_segments(prec=12)
-    out += _sof_segment(0xC1, h, w, prec=12)
-
-    enc: dict[tuple[int, int], dict[int, tuple[int, int]]] = {}
-    for cls in (0, 1):
-        for tsel in (0, 1):
-            syms = sorted(
-                {op[3] for op in ops if op[0] == "s" and op[1] == cls and op[2] == tsel}
-            )
-            if not syms:
-                syms = [0]  # unused destination: any valid 1-entry table
-            bits, vals = _flat_table(syms)
-            out += b"\xff\xc4" + struct.pack(">H", 19 + len(vals))
-            out += bytes([(cls << 4) | tsel]) + bytes(bits) + bytes(vals)
-            enc[(cls, tsel)] = _encode_codes(bits, vals)
-
-    out += b"\xff\xda" + struct.pack(">HB", 12, 3)
-    for cid, tids in ((1, 0x00), (2, 0x11), (3, 0x11)):
-        out += bytes([cid, tids])
-    out += b"\x00\x3f\x00"
-
-    wtr = _BitWriter()
-    for op in ops:
-        if op[0] == "s":
-            hc, hl = enc[(op[1], op[2])][op[3]]
-            wtr.write(hc, hl)
-        else:
-            wtr.write(op[1], op[2])
-    wtr.flush()
-    out += wtr.out
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-# ---------------------------------------------------------------------------
-# progressive encoder (test-side twin for the Annex G decoder)
-
-
-def _flat_table(syms: list[int]) -> tuple[list[int], list[int]]:
-    """Canonical Huffman table giving every symbol the same code length
-    (the shortest L with n <= 2^L - 1, keeping the all-ones code of the
-    longest length unused as T.81 requires). Annex K's AC tables lack
-    the EOBn run symbols progressive scans need, so each scan ships its
-    own flat table — compression is not the point of the test twin."""
-    n = len(syms)
-    if not 0 < n <= 255:
-        raise ValueError(f"flat Huffman table needs 1..255 symbols, got {n}")
-    length = max(1, (n + 1 - 1).bit_length()) if n >= 1 else 1
-    while (1 << length) - 1 < n:
-        length += 1
-    bits = [0] * 16
-    bits[length - 1] = n
-    return bits, sorted(syms)
-
-
-def _scan_ops(kind, coefs, ci, ss, se, ah, al):
-    """One progressive scan as a symbol/bit op list (('s', symbol) |
-    ('b', value, nbits)) — built once, so the Huffman table can be
-    derived from the symbols actually used, then serialized."""
-    ops: list[tuple] = []
-    bh, bw = coefs[0].shape[:2]
-
-    if kind == "dc_first":
-        pred = [0, 0, 0]
-        for by in range(bh):
-            for bx in range(bw):
-                for c in range(3):
-                    t = int(coefs[c][by, bx, 0]) >> al
-                    diff = t - pred[c]
-                    pred[c] = t
-                    s, code = _magnitude(diff)
-                    ops.append(("s", s))
-                    if s:
-                        ops.append(("b", code, s))
-        return ops
-
-    if kind == "dc_refine":
-        for by in range(bh):
-            for bx in range(bw):
-                for c in range(3):
-                    ops.append(("b", (int(coefs[c][by, bx, 0]) >> al) & 1, 1))
-        return ops
-
-    if kind == "ac_first":
-        eobrun = 0
-
-        def flush_eob():
-            nonlocal eobrun
-            if eobrun:
-                nb = eobrun.bit_length() - 1
-                ops.append(("s", nb << 4))
-                if nb:
-                    ops.append(("b", eobrun & ((1 << nb) - 1), nb))
-                eobrun = 0
-
-        for by in range(bh):
-            for bx in range(bw):
-                zz = coefs[ci][by, bx]
-                r = 0
-                for k in range(ss, se + 1):
-                    v = int(zz[k])
-                    temp = (-v if v < 0 else v) >> al  # magnitude shift
-                    if temp == 0:
-                        r += 1
-                        continue
-                    flush_eob()
-                    while r > 15:
-                        ops.append(("s", 0xF0))
-                        r -= 16
-                    nbits = temp.bit_length()
-                    code = temp if v > 0 else (~temp) & ((1 << nbits) - 1)
-                    ops.append(("s", (r << 4) | nbits))
-                    ops.append(("b", code, nbits))
-                    r = 0
-                if r > 0:
-                    eobrun += 1
-                    if eobrun == 0x7FFF:
-                        flush_eob()
-        flush_eob()
-        return ops
-
-    if kind == "ac_refine":
-        # Mirrors the decoder's figure-G.7 walk: `be` buffers correction
-        # bits that ride with the pending EOB run (previous blocks),
-        # `br` buffers this block's bits since its last emitted symbol.
-        eobrun = 0
-        be: list[int] = []
-
-        def flush_eob():
-            nonlocal eobrun
-            if eobrun:
-                nb = eobrun.bit_length() - 1
-                ops.append(("s", nb << 4))
-                if nb:
-                    ops.append(("b", eobrun & ((1 << nb) - 1), nb))
-                eobrun = 0
-                ops.extend(("b", bit, 1) for bit in be)
-                be.clear()
-
-        for by in range(bh):
-            for bx in range(bw):
-                zz = coefs[ci][by, bx]
-                absv = [(-int(v) if v < 0 else int(v)) >> al for v in zz]
-                eob = ss - 1  # last newly-significant index in the band
-                for k in range(ss, se + 1):
-                    if absv[k] == 1:
-                        eob = k
-                r = 0
-                br: list[int] = []
-                for k in range(ss, se + 1):
-                    temp = absv[k]
-                    if temp == 0:
-                        r += 1
-                        continue
-                    while r > 15 and k <= eob:
-                        flush_eob()
-                        ops.append(("s", 0xF0))
-                        r -= 16
-                        ops.extend(("b", bit, 1) for bit in br)
-                        br.clear()
-                    if temp > 1:  # already nonzero: one correction bit
-                        br.append(temp & 1)
-                        continue
-                    flush_eob()
-                    ops.append(("s", (r << 4) | 1))
-                    ops.append(("b", 1 if int(zz[k]) >= 0 else 0, 1))
-                    ops.extend(("b", bit, 1) for bit in br)
-                    br.clear()
-                    r = 0
-                if r > 0 or br:
-                    eobrun += 1
-                    be.extend(br)
-                    if eobrun == 0x7FFF:
-                        flush_eob()
-        flush_eob()
-        return ops
-
-    raise ValueError(f"unknown scan kind {kind!r}")
-
-
-def encode_jpeg_progressive(px: np.ndarray) -> bytes:
-    """(h, w, 3) uint8 → progressive JPEG (SOF2, 4:4:4), 14 scans:
-    interleaved DC at Al=1 + DC refinement, then per component two
-    spectral AC bands (1-5, 6-63) at Al=1 and their Ah=1→Al=0
-    refinements. Coefficients come from the same `_coef_blocks`
-    quantizer as `encode_jpeg`, so decoding either stream must yield
-    bit-identical pixels — the differential test pins exactly that."""
-    h, w = px.shape[:2]
-    coefs = _coef_blocks(px)
-    out = bytearray(b"\xff\xd8")
-    out += _dqt_segments()
-    out += _sof_segment(0xC2, h, w)
-
-    bands = ((1, 5), (6, 63))
-    scans: list[tuple] = [("dc_first", None, 0, 0, 0, 1), ("dc_refine", None, 0, 0, 1, 0)]
-    for ci in range(3):
-        for ss, se in bands:
-            scans.append(("ac_first", ci, ss, se, 0, 1))
-    for ci in range(3):
-        for ss, se in bands:
-            scans.append(("ac_refine", ci, ss, se, 1, 0))
-
-    for kind, ci, ss, se, ah, al in scans:
-        ops = _scan_ops(kind, coefs, ci, ss, se, ah, al)
-        codes = None
-        syms = sorted({op[1] for op in ops if op[0] == "s"})
-        if syms:  # DC refinement is raw bits: no DHT at all
-            bits, vals = _flat_table(syms)
-            cls = 1 if kind.startswith("ac") else 0
-            out += b"\xff\xc4" + struct.pack(">H", 19 + len(vals))
-            out += bytes([(cls << 4) | 0]) + bytes(bits) + bytes(vals)
-            codes = _encode_codes(bits, vals)
-        in_scan = [0, 1, 2] if ci is None else [ci]
-        out += b"\xff\xda" + struct.pack(">HB", 6 + 2 * len(in_scan), len(in_scan))
-        for c in in_scan:
-            out += bytes([c + 1, 0x00])  # DC and AC selectors both 0
-        out += bytes([ss, se, (ah << 4) | al])
-        wtr = _BitWriter()
-        for op in ops:
-            if op[0] == "s":
-                hc, hl = codes[op[1]]
-                wtr.write(hc, hl)
-            else:
-                wtr.write(op[1], op[2])
-        wtr.flush()
-        out += wtr.out
-    out += b"\xff\xd9"
-    return bytes(out)

@@ -3,24 +3,22 @@
 Images/audio/video ride as opaque `binary` columns with a typed
 metadata struct. The Spark-side machinery — schema, Arrow-batched
 `mapInPandas`, partition sizing — is real and tested, and so is the
-codec work for every format decodable with the stdlib + numpy:
+codec work for the formats decodable with the stdlib + numpy:
 
-- **WAV (PCM)** audio: RIFF parse → waveform → real DSP features
-  (RMS, zero-crossing rate, FFT band energies via numpy.fft).
-- **PPM (P6)** and **BMP (24-bit BI_RGB)** images: header parse →
-  (h, w, 3) pixel array → channel stats / luminance histogram /
-  nearest-neighbour resize (re-encoded as PPM).
+- **WAV (PCM and G.711 mu-law)** audio: RIFF parse → waveform → real
+  DSP features (RMS, zero-crossing rate, FFT band energies via
+  numpy.fft).
+- **PPM (P6)**, **BMP (24-bit BI_RGB)** and **baseline JPEG**
+  (ext/jpeg.py) images: header parse → (h, w, 3) pixel array →
+  channel stats / luminance histogram / nearest-neighbour resize
+  (re-encoded as PPM) / dHash near-dup.
 - **raw RGB24 video** (concatenated frames): frame slicing by
   width×height×3 stride — real frame sampling.
 
-Compressed codecs decode in-repo where the stdlib + numpy can carry
-them: JPEG (baseline/progressive/12-bit/arithmetic — ext/jpeg.py),
-PNG (incl. Adam7/sub-byte), GIF (incl. interlaced), TIFF (none/LZW/
-PackBits, predictor 2 — ext/tiff.py), and MJPEG video inside MP4
-(ext/mp4.py sample-table demux). Inter-frame video codecs
-(H.264-class) genuinely need external libraries the container does
-not ship; those raise a clearly-marked `NotImplementedError` from
-the same dispatch point, so wiring ffmpeg in production replaces one
+Every other format raises NotImplementedError from the same dispatch
+point (`decode_image` / `decode_wav`), and the operators quarantine
+it: `image_phashes` gives NULL and `resize_images` passes the bytes
+through, so wiring a full codec library in production replaces one
 function.
 
 Scale design: media bytes never pass through Python row-at-a-time —
@@ -76,9 +74,9 @@ _FEATURES_SCHEMA = T.StructType(
 def decode_image(content: bytes) -> np.ndarray:
     """bytes → (h, w, 3) uint8 pixel array.
 
-    Real decode for PPM (P6) and uncompressed 24-bit BMP; compressed
-    codecs raise NotImplementedError — swap in Pillow here in
-    production deployments."""
+    Real decode for PPM (P6), uncompressed 24-bit BMP and baseline
+    JPEG; other formats raise NotImplementedError — swap in Pillow here
+    in production deployments."""
     if content[:2] == b"P6":
         return _decode_ppm(content)
     if content[:2] == b"BM":
@@ -87,465 +85,7 @@ def decode_image(content: bytes) -> np.ndarray:
         from transferdb_spark.ext.jpeg import decode_jpeg
 
         return decode_jpeg(content)
-    if content[:8] == b"\x89PNG\r\n\x1a\n":
-        return _decode_png(content)
-    if content[:6] in (b"GIF87a", b"GIF89a"):
-        return _decode_gif(content)
-    if content[:4] in (b"II*\x00", b"MM\x00*"):
-        from transferdb_spark.ext.tiff import decode_tiff
-
-        return decode_tiff(content)
     raise NotImplementedError(f"unrecognized image format: {content[:4]!r}")
-
-
-def _decode_gif(buf: bytes) -> np.ndarray:
-    """First frame of a GIF (87a/89a) with a hand-rolled LZW decoder —
-    global or local palette, no interlace. Stdlib-only like the PNG
-    path; animated GIFs yield frame 0 (frame iteration belongs to the
-    video sampler)."""
-    w, h = struct.unpack_from("<HH", buf, 6)
-    flags = buf[10]
-    pos = 13
-    palette = None
-    if flags & 0x80:
-        n = 2 << (flags & 0x07)
-        palette = np.frombuffer(buf, np.uint8, n * 3, pos).reshape(n, 3)
-        pos += n * 3
-    while pos < len(buf):
-        b0 = buf[pos]
-        if b0 == 0x21:  # extension block: skip sub-blocks
-            pos += 2
-            while buf[pos] != 0:
-                pos += 1 + buf[pos]
-            pos += 1
-        elif b0 == 0x2C:  # image descriptor
-            iw, ih = struct.unpack_from("<HH", buf, pos + 5)
-            iflags = buf[pos + 9]
-            pos += 10
-            interlaced = bool(iflags & 0x40)
-            if iflags & 0x80:  # local palette overrides
-                n = 2 << (iflags & 0x07)
-                palette = np.frombuffer(buf, np.uint8, n * 3, pos).reshape(n, 3)
-                pos += n * 3
-            if palette is None:
-                raise NotImplementedError("GIF without a palette")
-            min_code = buf[pos]
-            pos += 1
-            data = bytearray()
-            while buf[pos] != 0:
-                ln = buf[pos]
-                data += buf[pos + 1 : pos + 1 + ln]
-                pos += 1 + ln
-            idx = _lzw_decode(bytes(data), min_code, iw * ih)
-            rows = np.asarray(idx, dtype=np.int32).reshape(ih, iw)
-            if interlaced:
-                # Adam-style 4-pass row order (GIF89a appendix E):
-                # rows 0,8,16… then 4,12… then 2,6… then 1,3,5… —
-                # the stream stores them in pass order, so scatter
-                # them back to their display positions
-                order = np.concatenate(
-                    [
-                        np.arange(0, ih, 8),
-                        np.arange(4, ih, 8),
-                        np.arange(2, ih, 4),
-                        np.arange(1, ih, 2),
-                    ]
-                )
-                deinter = np.empty_like(rows)
-                deinter[order] = rows
-                rows = deinter
-            return np.ascontiguousarray(palette[rows])
-        elif b0 == 0x3B:  # trailer
-            break
-        else:
-            raise NotImplementedError(f"unexpected GIF block 0x{b0:02x}")
-    raise NotImplementedError("GIF contained no image data")
-
-
-def _lzw_decode(data: bytes, min_code: int, n_pixels: int) -> list[int]:
-    """GIF-variant LZW: variable code width, CLEAR/EOI codes, MSB-last
-    bit packing within little-endian byte stream."""
-    clear, eoi = 1 << min_code, (1 << min_code) + 1
-    out: list[int] = []
-    table: list[list[int]] = []
-
-    def reset():
-        nonlocal table, width, next_code
-        table = [[i] for i in range(1 << min_code)] + [[], []]
-        width = min_code + 1
-        next_code = eoi + 1
-
-    width = next_code = 0
-    reset()
-    acc = nbits = 0
-    prev: list[int] | None = None
-    for byte in data:
-        acc |= byte << nbits
-        nbits += 8
-        while nbits >= width:
-            code = acc & ((1 << width) - 1)
-            acc >>= width
-            nbits -= width
-            if code == clear:
-                reset()
-                prev = None
-                continue
-            if code == eoi:
-                return out[:n_pixels]
-            if prev is None:
-                entry = table[code]
-            elif code < next_code:
-                entry = table[code]
-                if next_code < 4096:
-                    table.append(prev + [entry[0]])
-                    next_code += 1
-            else:  # KwKwK case
-                entry = prev + [prev[0]]
-                if next_code < 4096:
-                    table.append(entry)
-                    next_code += 1
-            out.extend(entry)
-            if next_code == (1 << width) and width < 12:
-                width += 1
-            prev = entry
-            if len(out) >= n_pixels:
-                return out[:n_pixels]
-    return out[:n_pixels]
-
-
-def encode_gif(px: np.ndarray, interlaced: bool = False) -> bytes:
-    """Minimal GIF89a encoder (single frame, global 256-entry palette
-    built from the image's distinct colors, real compressing LZW) —
-    the test-side twin of _decode_gif. Images with >256 distinct
-    colors raise ValueError (that's GIF's format limit, not ours).
-    interlaced=True stores rows in the 4-pass order with the
-    interlace flag set."""
-    px = px.astype(np.uint8)
-    h, w = px.shape[:2]
-    if interlaced:
-        order = np.concatenate(
-            [
-                np.arange(0, h, 8),
-                np.arange(4, h, 8),
-                np.arange(2, h, 4),
-                np.arange(1, h, 2),
-            ]
-        )
-        px = px[order]
-    flat = px.reshape(-1, 3)
-    colors, inverse = np.unique(flat, axis=0, return_inverse=True)
-    if len(colors) > 256:
-        raise ValueError("GIF palette limit: more than 256 distinct colors")
-    pal_bits = max(1, int(np.ceil(np.log2(max(2, len(colors))))))
-    n_pal = 1 << pal_bits
-    palette = np.zeros((n_pal, 3), dtype=np.uint8)
-    palette[: len(colors)] = colors
-
-    min_code = max(2, pal_bits)
-    clear, eoi = 1 << min_code, (1 << min_code) + 1
-    codes: list[tuple[int, int]] = []  # (code, width at emission)
-    width = min_code + 1
-    next_code = eoi + 1
-    dic: dict[tuple[int, ...], int] = {(i,): i for i in range(1 << min_code)}
-    codes.append((clear, width))
-    prefix: tuple[int, ...] = ()
-    for s in inverse.astype(int).tolist():
-        cand = prefix + (s,)
-        if cand in dic:
-            prefix = cand
-            continue
-        codes.append((dic[prefix], width))
-        if next_code < 4096:
-            dic[cand] = next_code
-            next_code += 1
-            # decoder's table lags one entry (it builds e_k while
-            # reading c_{k+1}), so the encoder widens one code LATER
-            # than the decoder's next_code==2^width rule
-            if next_code == (1 << width) + 1 and width < 12:
-                width += 1
-        else:
-            codes.append((clear, width))
-            width = min_code + 1
-            next_code = eoi + 1
-            dic = {(i,): i for i in range(1 << min_code)}
-        prefix = (s,)
-    if prefix:
-        codes.append((dic[prefix], width))
-    codes.append((eoi, width))
-
-    acc = nbits = 0
-    payload = bytearray()
-    for code, cw in codes:
-        acc |= code << nbits
-        nbits += cw
-        while nbits >= 8:
-            payload.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-    if nbits:
-        payload.append(acc & 0xFF)
-
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", w, h, 0x80 | (pal_bits - 1), 0, 0)
-    out += palette.tobytes()
-    out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0x40 if interlaced else 0)
-    out.append(min_code)
-    for i in range(0, len(payload), 255):
-        block = payload[i : i + 255]
-        out.append(len(block))
-        out += block
-    out += b"\x00\x3b"
-    return bytes(out)
-
-
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
-
-
-def _paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    return b if pb <= pc else c
-
-
-def _decode_png(buf: bytes) -> np.ndarray:
-    """Real PNG decode with the stdlib only (zlib inflate + scanline
-    un-filtering): 8/16-bit truecolor (type 2), truecolor+alpha
-    (type 6, alpha dropped), grayscale (type 0), PALETTE (type 3, at
-    depth 1/2/4/8 via bit unpacking + PLTE lookup), and Adam7
-    interlace at EVERY supported depth, sub-byte included (16-bit
-    decodes via high-byte downscale). Swap in Pillow for throughput:
-    Sub/Paeth un-filtering has a per-pixel left dependency, fine for
-    fixtures, vectorized C in production."""
-    import zlib
-
-    pos, ihdr, idat, plte = len(_PNG_SIG), None, [], None
-    while pos < len(buf):
-        (length,) = struct.unpack_from(">I", buf, pos)
-        ctype = buf[pos + 4 : pos + 8]
-        data = buf[pos + 8 : pos + 8 + length]
-        if ctype == b"IHDR":
-            ihdr = struct.unpack(">IIBBBBB", data)
-        elif ctype == b"PLTE":
-            plte = np.frombuffer(data, np.uint8).reshape(-1, 3)
-        elif ctype == b"IDAT":
-            idat.append(data)
-        elif ctype == b"IEND":
-            break
-        pos += 12 + length
-    if ihdr is None or not idat:
-        raise NotImplementedError("malformed PNG (no IHDR/IDAT)")
-    w, h, depth, color, _comp, _filt, interlace = ihdr
-    ok = (depth in (8, 16) and color in (0, 2, 6)) or (
-        color == 3 and depth in (1, 2, 4, 8)
-    )
-    if not ok or interlace not in (0, 1):
-        raise NotImplementedError(
-            f"PNG variant depth={depth} color={color} interlace={interlace}"
-        )
-    if color == 3 and plte is None:
-        raise NotImplementedError("palette PNG without PLTE")
-    # sub-byte Adam7 needs no special case: each pass is an independent
-    # sub-image, its stride rounds (pw*depth*ch) up to whole bytes, and
-    # the palette bit-unpacker below already slices [:, :width] past the
-    # final byte's padding bits
-    # filtering operates on BYTES with the left-neighbour offset equal
-    # to the (whole) bytes per pixel — 1 for gray/indexed, incl.
-    # sub-byte depths (PNG spec: bpp rounds up to 1)
-    ch = {0: 1, 2: 3, 3: 1, 6: 4}[color]
-    bpp = max(1, (depth * ch) // 8)
-    raw = zlib.decompress(b"".join(idat))
-
-    def to_rgb(rows: np.ndarray, width: int) -> np.ndarray:
-        """(n, stride) unfiltered byte rows -> (n, width, 3) pixels."""
-        n = rows.shape[0]
-        if color == 3:
-            if depth == 8:
-                idx = rows[:, :width]
-            else:
-                # unpack big-endian bit groups: each byte holds
-                # 8//depth indices, most significant first
-                bits = np.unpackbits(rows, axis=1)
-                grouped = bits.reshape(n, rows.shape[1] * 8 // depth, depth)
-                weights = (1 << np.arange(depth - 1, -1, -1)).astype(np.uint8)
-                idx = (grouped * weights).sum(axis=2)[:, :width]
-            if idx.max(initial=0) >= len(plte):
-                raise NotImplementedError("palette index out of range")
-            return plte[idx]
-        if depth == 16:
-            # big-endian 16-bit samples downscale to their HIGH byte
-            # (the standard 16->8 approximation, error < 1/255)
-            rows = rows[:, 0::2]
-        if color == 0:
-            g = rows[:, :width]
-            return np.repeat(g[:, :, None], 3, axis=2)
-        return rows.reshape(n, width, ch)[:, :, :3]
-
-    if interlace == 0:
-        stride = (w * depth * ch + 7) // 8
-        rows, _ = _png_unfilter(raw, 0, h, stride, bpp)
-        return np.ascontiguousarray(to_rgb(rows, w))
-
-    # Adam7: seven independently-filtered sub-images scattered onto
-    # the (x0 + i*dx, y0 + j*dy) grids
-    out = np.zeros((h, w, 3), dtype=np.uint8)
-    pos = 0
-    for x0, y0, dx, dy in _ADAM7:
-        pw = (w - x0 + dx - 1) // dx
-        ph = (h - y0 + dy - 1) // dy
-        if pw <= 0 or ph <= 0:
-            continue
-        stride = (pw * depth * ch + 7) // 8
-        rows, pos = _png_unfilter(raw, pos, ph, stride, bpp)
-        out[y0::dy, x0::dx] = to_rgb(rows, pw)
-    return np.ascontiguousarray(out)
-
-
-# Adam7 pass grid: (x start, y start, x step, y step)
-_ADAM7 = [
-    (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-    (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
-]
-
-
-def _png_unfilter(
-    raw: bytes, pos: int, n_rows: int, stride: int, bpp: int
-) -> tuple[np.ndarray, int]:
-    """Un-filter ``n_rows`` scanlines of ``stride`` bytes starting at
-    ``pos``; returns (rows, next pos). Shared by the straight and
-    Adam7 paths (each Adam7 pass restarts prev at zero, per spec)."""
-    out = np.zeros((n_rows, stride), dtype=np.uint8)
-    prev = np.zeros(stride, dtype=np.int32)
-    for y in range(n_rows):
-        f = raw[pos]
-        row = np.frombuffer(raw, np.uint8, stride, pos + 1).astype(np.int32)
-        pos += 1 + stride
-        if f == 0:
-            cur = row
-        elif f == 2:  # Up — vectorized
-            cur = (row + prev) & 0xFF
-        elif f in (1, 3, 4):  # Sub/Average/Paeth — left-dependent
-            cur = np.zeros(stride, dtype=np.int32)
-            for x in range(stride):
-                a = cur[x - bpp] if x >= bpp else 0
-                b = prev[x]
-                c = prev[x - bpp] if x >= bpp else 0
-                if f == 1:
-                    pred = a
-                elif f == 3:
-                    pred = (a + b) >> 1
-                else:
-                    pred = _paeth(int(a), int(b), int(c))
-                cur[x] = (row[x] + pred) & 0xFF
-        else:
-            raise NotImplementedError(f"PNG filter type {f}")
-        out[y] = cur
-        prev = cur
-    return out, pos
-
-
-def encode_png(
-    px: np.ndarray, filters: list[int] | None = None, interlaced: bool = False
-) -> bytes:
-    """Minimal PNG encoder (truecolor 8-bit) — the test-side twin of
-    _decode_png. ``filters`` selects the per-row filter type (default
-    all 0) so every un-filter path is exercisable; interlaced=True
-    writes the seven Adam7 passes (each independently filtered, per
-    spec)."""
-    import zlib
-
-    px = px.astype(np.uint8)
-    h, w = px.shape[:2]
-    ch = 3
-
-    def encode_rows(sub: np.ndarray) -> bytearray:
-        n, width = sub.shape[:2]
-        stride = width * ch
-        flat = sub.reshape(n, stride).astype(np.int32)
-        lines = bytearray()
-        prev = np.zeros(stride, dtype=np.int32)
-        for y in range(n):
-            f = filters[y % len(filters)] if filters else 0
-            row = flat[y]
-            enc = np.zeros(stride, dtype=np.int32)
-            for x in range(stride):
-                a = row[x - ch] if x >= ch else 0
-                b = prev[x]
-                c = prev[x - ch] if x >= ch else 0
-                pred = {
-                    0: 0,
-                    1: a,
-                    2: b,
-                    3: (a + b) >> 1,
-                    4: _paeth(int(a), int(b), int(c)),
-                }[f]
-                enc[x] = (row[x] - pred) & 0xFF
-            lines.append(f)
-            lines.extend(enc.astype(np.uint8).tobytes())
-            prev = row
-        return lines
-
-    if interlaced:
-        lines = bytearray()
-        for x0, y0, dx, dy in _ADAM7:
-            sub = px[y0::dy, x0::dx]
-            if sub.size:
-                lines += encode_rows(sub)
-    else:
-        lines = encode_rows(px)
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 1 if interlaced else 0)
-    return (
-        _PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(bytes(lines)))
-        + _png_chunk(b"IEND", b"")
-    )
-
-
-def _png_chunk(ctype: bytes, data: bytes) -> bytes:
-    import zlib
-
-    body = ctype + data
-    return struct.pack(">I", len(data)) + body + struct.pack(
-        ">I", zlib.crc32(body) & 0xFFFFFFFF
-    )
-
-
-def encode_png_indexed(
-    idx: np.ndarray, palette: np.ndarray, depth: int = 8
-) -> bytes:
-    """Palette-PNG encoder (color type 3, depth 1/2/4/8, filter 0) —
-    the test-side twin of _decode_png's indexed branch; big-endian bit
-    packing per the PNG spec."""
-    import zlib
-
-    idx = idx.astype(np.uint8)
-    h, w = idx.shape
-    if depth == 8:
-        rows = idx
-    else:
-        per_byte = 8 // depth
-        padded_w = -(-w // per_byte) * per_byte
-        padded = np.zeros((h, padded_w), dtype=np.uint8)
-        padded[:, :w] = idx
-        bits = ((padded[:, :, None] >> (depth - 1 - np.arange(depth))) & 1).astype(
-            np.uint8
-        )
-        rows = np.packbits(bits.reshape(h, padded_w * depth), axis=1)
-    lines = bytearray()
-    for y in range(h):
-        lines.append(0)
-        lines.extend(rows[y].tobytes())
-    ihdr = struct.pack(">IIBBBBB", w, h, depth, 3, 0, 0, 0)
-    return (
-        _PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"PLTE", palette.astype(np.uint8).tobytes())
-        + _png_chunk(b"IDAT", zlib.compress(bytes(lines)))
-        + _png_chunk(b"IEND", b"")
-    )
 
 
 def _decode_ppm(buf: bytes) -> np.ndarray:
@@ -706,8 +246,8 @@ def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
 
     fake=True keeps the deterministic byte-fold (engine-stable, used by
     the declared query); fake=False runs the REAL decoders — WAV → DSP
-    features, PPM/BMP → image stats — and still raises loudly on
-    compressed codecs."""
+    features, PPM/BMP/JPEG → image stats — and still raises loudly on
+    unsupported formats."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -718,57 +258,7 @@ def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
                 elif c is None:
                     feats.append([0.0] * FEATURE_DIM)
                 elif kind == "audio":
-                    b = bytes(c)
-                    if b[:4] == b"FORM":
-                        feats.append(audio_features(*decode_aiff(b)))
-                    elif b[:4] == b"fLaC":
-                        m = probe_flac(b)
-                        f = [
-                            float(m["duration_ms"] or 0),
-                            float(m["rate"]),
-                            float(m["channels"]),
-                            float(m["bits"]),
-                        ]
-                        feats.append(f + [0.0] * (FEATURE_DIM - len(f)))
-                    elif b[:3] == b"ID3" or (
-                        len(b) > 1 and b[0] == 0xFF and (b[1] & 0xE0) == 0xE0
-                    ):
-                        m = probe_mp3(b)
-                        f = [
-                            float(m["duration_ms_estimate"] or 0),
-                            float(m["rate"]),
-                            float(m["channels"]),
-                            float(m["bitrate_kbps"]),
-                        ]
-                        feats.append(f + [0.0] * (FEATURE_DIM - len(f)))
-                    else:
-                        feats.append(audio_features(*decode_wav(b)))
-                elif kind == "video" and bytes(c)[4:8] == b"ftyp":
-                    # MP4: container-level features from the box walk;
-                    # MJPEG tracks additionally decode real frames
-                    # (other codecs keep the NotImplementedError
-                    # dispatch inside decode_mjpeg_frames)
-                    m = probe_mp4(bytes(c))
-                    v = next(
-                        (t for t in m["tracks"] if t.get("kind") == "video"), {}
-                    )
-                    f = [
-                        float(m.get("duration_ms") or 0),
-                        float(m["n_tracks"]),
-                        float(v.get("width") or 0),
-                        float(v.get("height") or 0),
-                    ]
-                    from transferdb_spark.ext.mp4 import (
-                        MJPEG_CODECS,
-                        decode_mjpeg_frames,
-                        mjpeg_video_features,
-                    )
-
-                    if v.get("codec") in MJPEG_CODECS:
-                        f += mjpeg_video_features(
-                            decode_mjpeg_frames(bytes(c), max_frames=8)
-                        )
-                    feats.append(f + [0.0] * (FEATURE_DIM - len(f)))
+                    feats.append(audio_features(*decode_wav(bytes(c))))
                 else:
                     feats.append(image_features(decode_image(bytes(c))))
             yield pd.DataFrame(
@@ -783,31 +273,21 @@ def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
 
 
 def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Nearest-neighbour resize of decodable media, images re-encoded
-    as PPM and MJPEG MP4 videos transcoded frame-by-frame (remuxed at
-    the new dimensions via ext/mp4.transcode_mjpeg).
+    """Nearest-neighbour resize of decodable images, re-encoded as PPM.
 
     Real pixel work in numpy (index-map resize); undecodable payloads
-    pass through unchanged so a mixed corpus doesn't abort — the same
-    quarantine stance as the chunk error log."""
+    and non-image media pass through unchanged so a mixed corpus
+    doesn't abort — the same quarantine stance as the chunk error log."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from transferdb_spark.ext.mp4 import transcode_mjpeg
-
         for pdf in batches:
             pdf = pdf.copy()
             out = []
             for kind, c in zip(pdf["kind"], pdf["content"]):
-                if c is None or kind not in ("image", "video"):
+                if c is None or kind != "image":
                     out.append(c)
                     continue
                 try:
-                    if kind == "video":
-                        if bytes(c)[4:8] != b"ftyp":
-                            out.append(c)  # raw/other containers pass through
-                            continue
-                        out.append(transcode_mjpeg(bytes(c), width, height))
-                        continue
                     px = decode_image(bytes(c))
                 except (NotImplementedError, ValueError):
                     out.append(c)  # passthrough: no codec for this format
@@ -819,17 +299,14 @@ def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
             pdf["content"] = out
             yield pdf
 
-    mime = F.when(F.col("kind") == "video", F.lit("video/mp4")).otherwise(
-        F.lit("image/x-portable-pixmap")
+    resized = F.struct(
+        F.lit("image/x-portable-pixmap").alias("mime"),
+        F.lit(width).alias("width"),
+        F.lit(height).alias("height"),
+        F.col("meta.duration_ms").alias("duration_ms"),
     )
     return media.mapInPandas(run, schema=MEDIA_SCHEMA).withColumn(
-        "meta",
-        F.struct(
-            mime.alias("mime"),
-            F.lit(width).alias("width"),
-            F.lit(height).alias("height"),
-            F.col("meta.duration_ms").alias("duration_ms"),
-        ),
+        "meta", F.when(F.col("kind") == "image", resized).otherwise(F.col("meta"))
     )
 
 
@@ -844,15 +321,11 @@ _FRAME_SCHEMA = T.StructType(
 
 def sample_frames(media: DataFrame, every_ms: int = 1000, fps: int = 10) -> DataFrame:
     """Video frame sampling with REAL frame extraction for raw RGB24
-    streams (mime video/raw-rgb24: concatenated width×height×3 frames)
-    and MJPEG MP4s (intra-only: each sampled offset slices exactly its
-    own JPEG sample via the stts timestamps — no other sample is read,
-    the point of frame sampling a 100 TB video corpus). Other
-    compressed containers yield NULL frames (decoder hook point)."""
+    streams (mime video/raw-rgb24: concatenated width×height×3
+    frames). Compressed containers yield NULL frames (decoder hook
+    point)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from transferdb_spark.ext.mp4 import MJPEG_CODECS, sample_table
-
         for pdf in batches:
             rows = []
             for mid, c, meta in zip(pdf["media_id"], pdf["content"], pdf["meta"]):
@@ -862,30 +335,11 @@ def sample_frames(media: DataFrame, every_ms: int = 1000, fps: int = 10) -> Data
                 raw = meta.get("mime") == "video/raw-rgb24" and c is not None and w and h
                 fsize = w * h * 3
                 n_frames = len(c) // fsize if raw else 0
-                st = None
-                if c is not None and bytes(c)[4:8] == b"ftyp":
-                    try:
-                        st = sample_table(bytes(c), "video")
-                        if st["codec"] not in MJPEG_CODECS:
-                            st = None
-                        elif not dur:
-                            dur = st["times_ms"][-1]
-                    except ValueError:
-                        st = None
                 for off in range(0, dur + 1, every_ms):
                     frame = None
                     if raw:
                         idx = min(off * fps // 1000, max(n_frames - 1, 0))
                         frame = bytes(c[idx * fsize : (idx + 1) * fsize]) or None
-                    elif st is not None:
-                        # last sample whose decode time is <= off
-                        idx = max(
-                            (i for i, t in enumerate(st["times_ms"]) if t <= off),
-                            default=0,
-                        )
-                        o, sz = st["offsets"][idx], st["sizes"][idx]
-                        if o + sz <= len(c):
-                            frame = bytes(c[o : o + sz])
                     rows.append((mid, off, frame))
             yield pd.DataFrame(rows, columns=["media_id", "offset_ms", "frame"])
 
@@ -928,262 +382,6 @@ def synthetic_raw_video(w: int = 8, h: int = 6, n_frames: int = 20) -> bytes:
     return b"".join(
         np.full((h, w, 3), k % 256, dtype=np.uint8).tobytes() for k in range(n_frames)
     )
-
-
-# ---------------------------------------------------------------------------
-# MP4 / ISO-BMFF container probing (metadata, no codec decode)
-
-
-def probe_mp4(content: bytes) -> dict:
-    """ISO-BMFF (MP4/MOV) container metadata, stdlib-only: brand,
-    movie duration, and per-track (kind, codec, width, height,
-    duration_ms) from ftyp/mvhd/tkhd/mdhd/hdlr/stsd.
-
-    This is the filter-before-decode stage a 100 TB media corpus
-    needs — resolution/duration/codec gating costs a header parse
-    (box walk over a few KB), while frame decode stays behind the
-    NotImplementedError dispatch for an ffmpeg-class library. Torn
-    or non-BMFF bytes raise ValueError (ingestion contract)."""
-    try:
-        return _probe_mp4(content)
-    except (struct.error, IndexError) as exc:
-        raise ValueError(f"truncated or corrupt MP4: {exc!r}") from exc
-
-
-def _boxes(buf: bytes, start: int, end: int):
-    """Yield (type, payload_start, payload_end) at one nesting level."""
-    pos = start
-    while pos + 8 <= end:
-        size = struct.unpack_from(">I", buf, pos)[0]
-        btype = buf[pos + 4 : pos + 8]
-        head = 8
-        if size == 1:  # 64-bit largesize
-            size = struct.unpack_from(">Q", buf, pos + 8)[0]
-            head = 16
-        elif size == 0:  # to end of enclosing box
-            size = end - pos
-        if size < head or pos + size > end:
-            raise ValueError(f"malformed box {btype!r} at {pos}")
-        yield btype, pos + head, pos + size
-        pos += size
-
-
-def _find(buf: bytes, start: int, end: int, btype: bytes):
-    for t, s, e in _boxes(buf, start, end):
-        if t == btype:
-            return s, e
-    return None
-
-
-def _probe_mp4(buf: bytes) -> dict:
-    top = list(_boxes(buf, 0, len(buf)))
-    types = [t for t, _, _ in top]
-    if b"ftyp" not in types or b"moov" not in types:
-        raise ValueError("not an ISO-BMFF file (no ftyp/moov)")
-    out: dict = {"tracks": []}
-    for t, s, e in top:
-        if t == b"ftyp":
-            out["brand"] = buf[s : s + 4].decode("latin1")
-        elif t == b"moov":
-            mv = _find(buf, s, e, b"mvhd")
-            if mv:
-                ms, _me = mv
-                ver = buf[ms]
-                if ver == 1:
-                    ts, dur = struct.unpack_from(">IQ", buf, ms + 4 + 16)
-                else:
-                    ts, dur = struct.unpack_from(">II", buf, ms + 4 + 8)
-                out["duration_ms"] = int(dur * 1000 // ts) if ts else None
-            for tt, tss, tee in _boxes(buf, s, e):
-                if tt != b"trak":
-                    continue
-                trk: dict = {"kind": None, "codec": None, "width": None, "height": None}
-                tk = _find(buf, tss, tee, b"tkhd")
-                if tk:
-                    ks, _ke = tk
-                    ver = buf[ks]
-                    # width/height are the LAST two 16.16 fixed-point
-                    # fields of tkhd (after matrix), same offset from
-                    # the end for v0 and v1
-                    base = ks + 4 + (32 if ver == 1 else 20) + 8 + 2 + 2 + 2 + 2 + 36
-                    wq, hq = struct.unpack_from(">II", buf, base)
-                    trk["width"], trk["height"] = wq >> 16, hq >> 16
-                md = _find(buf, tss, tee, b"mdia")
-                if md:
-                    mds, mde = md
-                    mh = _find(buf, mds, mde, b"mdhd")
-                    if mh:
-                        hs, _he = mh
-                        ver = buf[hs]
-                        if ver == 1:
-                            mts, mdur = struct.unpack_from(">IQ", buf, hs + 4 + 16)
-                        else:
-                            mts, mdur = struct.unpack_from(">II", buf, hs + 4 + 8)
-                        trk["duration_ms"] = int(mdur * 1000 // mts) if mts else None
-                    hd = _find(buf, mds, mde, b"hdlr")
-                    if hd:
-                        hls, _hle = hd
-                        handler = buf[hls + 8 : hls + 12]
-                        trk["kind"] = {b"vide": "video", b"soun": "audio"}.get(
-                            handler, handler.decode("latin1").strip()
-                        )
-                    mi = _find(buf, mds, mde, b"minf")
-                    if mi:
-                        sb = _find(buf, mi[0], mi[1], b"stbl")
-                        if sb:
-                            sd = _find(buf, sb[0], sb[1], b"stsd")
-                            if sd:
-                                # stsd: ver/flags u32, entry_count u32,
-                                # then the first sample entry's 4cc
-                                sds, _sde = sd
-                                n = struct.unpack_from(">I", buf, sds + 4)[0]
-                                if n >= 1:
-                                    trk["codec"] = buf[sds + 12 : sds + 16].decode(
-                                        "latin1"
-                                    )
-                out["tracks"].append(trk)
-    out["n_tracks"] = len(out["tracks"])
-    # fMP4/DASH: samples live in moof fragments, not moov's (empty)
-    # sample tables — surface the fragment count so a probe-driven
-    # filter can route fragmented files correctly
-    n_frags = sum(1 for t in types if t == b"moof")
-    if n_frags:
-        out["fragmented"] = True
-        out["n_fragments"] = n_frags
-    return out
-
-
-# ---------------------------------------------------------------------------
-# AIFF (big-endian PCM) — the Apple-lineage twin of decode_wav, and
-# compressed-audio PROBES (FLAC STREAMINFO, MPEG audio frame header):
-# the filter-before-decode metadata gate, same stance as probe_mp4.
-
-
-def decode_aiff(content: bytes) -> tuple[np.ndarray, int]:
-    """AIFF-C/AIFF bytes → (float32 mono waveform in [-1, 1], rate).
-
-    IFF chunk walk: COMM carries channels/bits and the sample rate as
-    an 80-bit IEEE extended float (parsed manually — struct has no
-    long-double on this ABI); SSND carries big-endian PCM after its
-    offset/blocksize header. 8/16-bit PCM ('NONE' compression) only;
-    AIFF-C codecs raise NotImplementedError."""
-    if content[:4] != b"FORM" or content[8:12] not in (b"AIFF", b"AIFC"):
-        raise ValueError("not an AIFF (no FORM/AIFF header)")
-    pos = 12
-    comm = ssnd = None
-    while pos + 8 <= len(content):
-        cid = content[pos : pos + 4]
-        (size,) = struct.unpack_from(">I", content, pos + 4)
-        body = content[pos + 8 : pos + 8 + size]
-        if cid == b"COMM":
-            comm = body
-        elif cid == b"SSND":
-            ssnd = body
-        pos += 8 + size + (size & 1)  # IFF chunks pad to even
-    if comm is None or ssnd is None:
-        raise ValueError("AIFF missing COMM/SSND chunk")
-    n_ch, _n_frames, bits = struct.unpack_from(">HIH", comm, 0)
-    # 80-bit extended: 1 sign + 15 exponent bits, 64-bit mantissa with
-    # explicit integer bit; rate = mantissa * 2^(exp - 16383 - 63)
-    exp = struct.unpack_from(">H", comm, 8)[0] & 0x7FFF
-    mant = struct.unpack_from(">Q", comm, 10)[0]
-    rate = int(round(mant * 2.0 ** (exp - 16383 - 63))) if mant else 0
-    if len(comm) >= 22 and comm[18:22] not in (b"NONE", b"twos"):
-        raise NotImplementedError(f"AIFF-C compression {comm[18:22]!r}")
-    pcm = ssnd[8:]  # skip offset/blocksize
-    if bits == 16:
-        wave = np.frombuffer(pcm, dtype=">i2").astype(np.float32) / 32768.0
-    elif bits == 8:
-        wave = np.frombuffer(pcm, dtype=np.int8).astype(np.float32) / 128.0
-    else:
-        raise NotImplementedError(f"{bits}-bit AIFF not supported")
-    if n_ch > 1:
-        wave = wave[: len(wave) - len(wave) % n_ch].reshape(-1, n_ch).mean(axis=1)
-    return wave, rate
-
-
-def encode_aiff(wave: np.ndarray, rate: int = 8000) -> bytes:
-    """Encoder twin: float [-1,1] mono → 16-bit AIFF."""
-    pcm = (np.clip(wave, -1.0, 1.0) * 32767).astype(">i2").tobytes()
-    # 80-bit extended from an integer rate
-    exp = 16383 + 63
-    mant = rate
-    while mant < (1 << 63):
-        mant <<= 1
-        exp -= 1
-    comm = struct.pack(">HIH", 1, len(pcm) // 2, 16) + struct.pack(">HQ", exp, mant)
-    ssnd = struct.pack(">II", 0, 0) + pcm
-    body = (
-        b"AIFF"
-        + b"COMM" + struct.pack(">I", len(comm)) + comm
-        + b"SSND" + struct.pack(">I", len(ssnd)) + ssnd
-    )
-    return b"FORM" + struct.pack(">I", len(body)) + body
-
-
-def probe_flac(content: bytes) -> dict:
-    """FLAC STREAMINFO: rate, channels, bits, total samples,
-    duration_ms — a 38-byte header parse, no decode."""
-    if content[:4] != b"fLaC":
-        raise ValueError("not a FLAC stream")
-    pos = 4
-    while pos + 4 <= len(content):
-        hdr = content[pos]
-        btype = hdr & 0x7F
-        size = int.from_bytes(content[pos + 1 : pos + 4], "big")
-        body = content[pos + 4 : pos + 4 + size]
-        if btype == 0:  # STREAMINFO
-            if len(body) < 18:
-                raise ValueError("truncated STREAMINFO")
-            bits20 = int.from_bytes(body[10:18], "big")
-            rate = bits20 >> 44
-            n_ch = ((bits20 >> 41) & 0x7) + 1
-            bps = ((bits20 >> 36) & 0x1F) + 1
-            total = bits20 & ((1 << 36) - 1)
-            return {
-                "rate": rate,
-                "channels": n_ch,
-                "bits": bps,
-                "total_samples": total,
-                "duration_ms": int(total * 1000 // rate) if rate else None,
-            }
-        if hdr & 0x80:  # last-block flag and no STREAMINFO seen
-            break
-        pos += 4 + size
-    raise ValueError("FLAC missing STREAMINFO")
-
-
-_MP3_BITRATES = [0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320]
-_MP3_RATES = [44100, 48000, 32000]
-
-
-def probe_mp3(content: bytes) -> dict:
-    """First MPEG-1 Layer III frame header: bitrate_kbps, rate,
-    channels, plus a whole-stream duration ESTIMATE from the byte
-    length at that bitrate (CBR assumption, flagged as estimate)."""
-    i = 0
-    if content[:3] == b"ID3":  # skip the ID3v2 tag (syncsafe size)
-        sz = ((content[6] & 0x7F) << 21 | (content[7] & 0x7F) << 14
-              | (content[8] & 0x7F) << 7 | (content[9] & 0x7F))
-        i = 10 + sz
-    while i + 4 <= len(content):
-        if content[i] == 0xFF and (content[i + 1] & 0xE0) == 0xE0:
-            b1, b2, b3 = content[i + 1], content[i + 2], content[i + 3]
-            if (b1 & 0x18) == 0x18 and (b1 & 0x06) == 0x02:  # MPEG-1 Layer III
-                br = _MP3_BITRATES[(b2 >> 4) & 0xF]
-                sr_idx = (b2 >> 2) & 0x3
-                if br and sr_idx < 3:
-                    rate = _MP3_RATES[sr_idx]
-                    channels = 1 if ((b3 >> 6) & 0x3) == 3 else 2
-                    dur = int((len(content) - i) * 8 // br) if br else None
-                    return {
-                        "bitrate_kbps": br,
-                        "rate": rate,
-                        "channels": channels,
-                        "duration_ms_estimate": dur,
-                    }
-        i += 1
-    raise ValueError("no MPEG-1 Layer III frame header found")
 
 
 # ---------------------------------------------------------------------------

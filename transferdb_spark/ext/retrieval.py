@@ -284,10 +284,6 @@ LIMIT {k}
 PROX_WINDOW = 8  # max token distance that earns a proximity boost
 
 
-def _pairs(terms: list[str]) -> list[tuple[str, str]]:
-    return [(a, b) for i, a in enumerate(terms) for b in terms[i + 1 :]]
-
-
 def bm25_proximity_topk(
     docs: DataFrame,
     query_terms: tuple[str, ...] = DEFAULT_QUERY,
@@ -499,9 +495,10 @@ def rrf_fusion_topk(
     the fused score is two correctly-rounded divides added in a fixed
     order: trivially exact across engines. This is the production
     hybrid shape at corpus scale: each list is an independent top-N
-    (posting-bounded BM25; brute-force here, the LSH/IVF index in
-    ext/ann_index.py when the corpus outgrows it — the fusion is
-    list-source-agnostic), and the fusion itself touches only 2N rows.
+    (posting-bounded BM25; brute-force here, similarity's
+    ann_topk_lsh_auto / ann_topk_multiprobe_auto when the corpus
+    outgrows it — the fusion is list-source-agnostic), and the fusion
+    itself touches only 2N rows.
 
     Returns (doc_id, lex_rank, sem_rank, rrf) ordered by rrf DESC,
     doc_id; the query doc is excluded from BOTH lists."""

@@ -79,7 +79,12 @@ def cms_heavy_hitters(docs: DataFrame, k: int = 20) -> DataFrame:
     instead of a second pass over the token stream — a cell's count is
     Σ exact(term) over the terms hashing into it, the identical
     integer cms_sketch computes from raw occurrences. Previously the
-    tokenize+explode pipeline ran twice (once per aggregation)."""
+    tokenize+explode pipeline ran twice (once per aggregation).
+
+    Caching: the exact-count relation is pinned with ``qpersist`` and
+    stays cached after the result is collected. Long-lived sessions
+    release it (with every other tracked builder cache) through
+    ``cache.release_query_caches()``."""
     from transferdb_spark.cache import qpersist
 
     toks = _tokens(docs)

@@ -27,10 +27,6 @@ TOKENS = "split(trim(lower(text)), '[\\\\s\\\\x00-\\\\x1f]+')"
 TOKENS_SQL = "regexp_split_to_array(trim(lower(text)), '[\\s\\x00-\\x1f]+')"
 
 
-def tokens_col() -> Column:
-    return F.expr(TOKENS)
-
-
 def token_stats(docs: DataFrame) -> DataFrame:
     """doc_id, n_tokens, n_chars, avg_token_len (rounded, stable)."""
     t = F.expr(TOKENS)
@@ -502,17 +498,6 @@ def pii_scrub(docs: DataFrame, text_col: str = "text") -> DataFrame:
         F.regexp_count(t, F.lit(PII_IP_RE)).cast("int").alias("n_ips"),
         redacted.alias("redacted"),
     )
-
-
-def pii_scrub_sql(text_expr: str = "text") -> str:
-    return f"""
-SELECT doc_id,
-       CAST(len(regexp_extract_all({text_expr}, '{PII_EMAIL_RE}')) AS INT) AS n_emails,
-       CAST(len(regexp_extract_all({text_expr}, '{PII_PHONE_RE}')) AS INT) AS n_phones,
-       CAST(len(regexp_extract_all({text_expr}, '{PII_IP_RE}')) AS INT) AS n_ips,
-       regexp_replace(regexp_replace(regexp_replace({text_expr}, '{PII_EMAIL_RE}', '<EMAIL>', 'g'), '{PII_PHONE_RE}', '<PHONE>', 'g'), '{PII_IP_RE}', '<IP>', 'g') AS redacted
-FROM documents
-"""
 
 
 # ---------------------------------------------------------------------------

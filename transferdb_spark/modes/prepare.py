@@ -37,17 +37,3 @@ def prepare_workspace(workdir: str) -> dict[str, str]:
     return paths
 
 
-def load_rule_overrides(workdir: str):
-    """Read user-edited rule JSON back into a RuleSet-compatible form."""
-    from transferdb_spark.rules.resolution import RuleSet
-
-    path = os.path.join(workdir, "rules", "overrides.json")
-    if not os.path.exists(path):
-        return RuleSet()
-    with open(path) as f:
-        raw = json.load(f)
-    return RuleSet(
-        column_rules={tuple(k.split(".")): v for k, v in raw.get("column", {}).items()},
-        table_rules={tuple(k.split(".")): v for k, v in raw.get("table", {}).items()},
-        schema_rules={tuple(k.split(".")): v for k, v in raw.get("schema", {}).items()},
-    )

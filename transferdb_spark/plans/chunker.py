@@ -93,12 +93,6 @@ def chunk_id_col(key: str, lo: int, width: int, n_chunks: int) -> Column:
     return F.least(F.greatest(raw, F.lit(0)), F.lit(n_chunks - 1)).cast("int")
 
 
-def chunk_id_sql(key: str, lo: int, width: int, n_chunks: int) -> str:
-    """DuckDB SQL equivalent of chunk_id_col (// = integer division)."""
-    raw = f"(({key} - {lo}) // {width})"
-    return f"CAST(LEAST(GREATEST({raw}, 0), {n_chunks - 1}) AS INT)"
-
-
 def with_chunk_id(
     df: DataFrame, key: str, n_chunks: int, bounds: tuple[int, int] | None = None
 ) -> tuple[DataFrame, int, int]:

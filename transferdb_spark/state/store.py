@@ -31,6 +31,16 @@ class ChunkState:
     error: str = ""
 
 
+def _write_json_atomic(path: str, obj, indent: int | None = None) -> None:
+    """Write ``obj`` to a sibling tmp file, then swap it into place: a
+    crash mid-write leaves the previous file intact, never a truncated
+    one."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f, indent=indent)
+    os.replace(tmp, path)
+
+
 class StateStore:
     def __init__(self, workdir: str, task: str):
         os.makedirs(workdir, exist_ok=True)
@@ -149,8 +159,7 @@ class StateStore:
         return out
 
     def _flush(self) -> None:
-        with open(self.path, "w") as f:
-            json.dump([asdict(c) for c in self._chunks.values()], f, indent=1)
+        _write_json_atomic(self.path, [asdict(c) for c in self._chunks.values()], indent=1)
 
 
 class IncrSyncMeta:
@@ -160,7 +169,7 @@ class IncrSyncMeta:
     (schema, table, global_scn) row per synced table and advances it
     with an UPDATE after each successful apply round).
 
-    Same durability discipline as StateStore (atomic tmp+rename swap)
+    Same durability discipline as StateStore (_write_json_atomic)
     plus an fcntl write lock around the read-modify-write, so the
     max-wins merge stays correct even if a second writer ever appears
     (two concurrent streaming queries pointed at one workdir). Reads
@@ -212,10 +221,7 @@ class IncrSyncMeta:
             cur = self.highs()
             for t, s in highs.items():
                 cur[t] = max(int(s), cur.get(t, -1))
-            tmp = self.path + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump(cur, fh)
-            os.rename(tmp, self.path)
+            _write_json_atomic(self.path, cur)
             return cur
 
     def record_errors(self, rows: list[dict]) -> None:

@@ -44,11 +44,9 @@ from pyspark.sql import functions as F
 from transferdb_spark.modes.apply import ApplyResult, apply_transactions
 from transferdb_spark.sources.jdbc import JdbcSink
 from transferdb_spark.streaming.redo import (
-    RedoStmt,
     group_table_transactions,
     group_transactions,
     redo_stream_to_changes,
-    translate_stmt,
     translate_transactions_df,
 )
 
@@ -65,17 +63,6 @@ def write_scn_checkpoint(path: str, scn: int) -> None:
     with open(tmp, "w") as fh:
         json.dump({"scn": scn}, fh)
     os.rename(tmp, path)  # single-writer (the streaming query) — atomic swap
-
-
-def _stmt_from_change(c) -> RedoStmt:
-    """Rebuild a RedoStmt from one grouped change struct."""
-    return RedoStmt(
-        operation=c["operation"],
-        schema=c["schema_name"],
-        table=c["table_name"],
-        data=json.loads(c["data_json"]),
-        before=json.loads(c["before_json"]),
-    )
 
 
 def apply_redo_batch(

@@ -174,104 +174,6 @@ def test_jdbc_session_init_statement_pins_snapshot_per_connection(spark, derby_u
     assert sorted(r["VAL"] for r in unpinned.collect()) == [100, 200, 300, 400]
 
 
-def test_cdc_stream_merge_apply_repairs_damaged_target(spark, sf_dir, derby_url, tmp_path):
-    """Full T-family loop against a LIVE JDBC target: stream events →
-    per-batch latest-wins dedupe → staging write → one set-based MERGE
-    (the reference's incr apply, o2m/apply.go:119-233). Damage the
-    target through plain SQL, re-deliver the stream, and the idempotent
-    MERGE must repair it to a zero-diff compare."""
-    from pyspark.sql import functions as F
-
-    from transferdb_spark.modes.compare_mode import compare_tables
-    from transferdb_spark.sources.jdbc import JdbcSink, JdbcSource
-    from transferdb_spark.sources.registry import load_table
-    from transferdb_spark.streaming.incr import apply_cdc_stream_to_jdbc, stream_events
-
-    events = (
-        load_table(spark, sf_dir, "events")
-        .select("event_id", "ts", "user_id", "event_type", "value")
-        .filter(F.col("event_id") % 5 == 0)  # deterministic subset
-    )
-    n_src = events.count()
-    assert n_src > 50
-    feed = str(tmp_path / "feed")
-    events.coalesce(1).write.mode("overwrite").parquet(feed)
-
-    sink = JdbcSink(url=derby_url, table="EVT", driver=DERBY_DRIVER)
-    sink.write(events.limit(0), mode="overwrite")  # create empty target
-
-    q = apply_cdc_stream_to_jdbc(
-        stream_events(spark, feed), sink, str(tmp_path / "ckpt1"), key="event_id"
-    )
-    q.awaitTermination(120)
-
-    def read_tgt():
-        t = JdbcSource(url=derby_url, table="EVT", driver=DERBY_DRIVER).load(spark)
-        return t.toDF(*[c.lower() for c in t.columns])
-
-    assert read_tgt().count() == n_src
-
-    # damage the target: one row deleted, one modified
-    k0, k1 = [r["event_id"] for r in events.orderBy("event_id").limit(2).collect()]
-    jvm = spark._jvm
-    conn = jvm.java.sql.DriverManager.getConnection(derby_url)
-    st = conn.createStatement()
-    st.executeUpdate(f'DELETE FROM EVT WHERE "event_id" = {k0}')
-    st.executeUpdate(f'UPDATE EVT SET "value" = -1 WHERE "event_id" = {k1}')
-    st.close()
-    conn.close()
-
-    bad = compare_tables(
-        spark, events, read_tgt(), "evt", str(tmp_path / "cmp1"), key="event_id", n_chunks=4
-    )
-    assert not bad.is_equal
-
-    # re-deliver from a fresh checkpoint: MERGE restores both rows
-    q2 = apply_cdc_stream_to_jdbc(
-        stream_events(spark, feed), sink, str(tmp_path / "ckpt2"), key="event_id"
-    )
-    q2.awaitTermination(120)
-    good = compare_tables(
-        spark, events, read_tgt(), "evt", str(tmp_path / "cmp2"), key="event_id", n_chunks=4
-    )
-    assert good.is_equal
-
-
-def test_jdbc_merge_scn_guard_blocks_stale_updates(spark, sf_dir, derby_url, tmp_path):
-    """merge_from_staging(scn_col=...) must apply only rows whose scn
-    exceeds the target's — a stale re-delivery cannot regress."""
-    from pyspark.sql import functions as F
-
-    from transferdb_spark.sources.jdbc import JdbcSink, JdbcSource
-    from transferdb_spark.sources.registry import load_table
-
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .select("user_id", "event_id", "value")
-        .filter(F.col("event_id") % 13 == 0)
-        .groupBy("user_id")
-        .agg(F.max("event_id").alias("event_id"), F.first("value").alias("value"))
-    )
-    sink = JdbcSink(url=derby_url, table="EVSTATE", driver=DERBY_DRIVER)
-    sink.write(ev, mode="overwrite")
-
-    u0 = ev.orderBy("user_id").first()
-    fresh = spark.createDataFrame(
-        [(u0["user_id"], u0["event_id"] + 1000, 111.0)], "user_id long, event_id long, value double"
-    )
-    stale = spark.createDataFrame(
-        [(u0["user_id"], 1, -1.0)], "user_id long, event_id long, value double"
-    )
-    sink.merge_from_staging(fresh, ["user_id"], scn_col="event_id")
-    sink.merge_from_staging(stale, ["user_id"], scn_col="event_id")
-
-    t = JdbcSource(url=derby_url, table="EVSTATE", driver=DERBY_DRIVER).load(spark)
-    t = t.toDF(*[c.lower() for c in t.columns])
-    got = t.filter(F.col("user_id") == u0["user_id"]).first()
-    assert got["event_id"] == u0["event_id"] + 1000
-    assert got["value"] == 111.0
-
-
 def test_reverse_apply_live_check_and_fix_sql_roundtrip(spark, sf_dir, tmp_path):
     """The reference writer's direct-DB branch (write.go:40-140
     RWriteDB), end to end against live Derby: reverse -> APPLY the DDL
@@ -595,6 +497,68 @@ def test_redo_apply_stream_end_to_end_with_scn_checkpoint(spark, tmp_path):
     assert state() == {1: 10, 3: 35}
     assert read_scn_checkpoint(scn_path) == 8
     assert os.path.exists(scn_path)
+
+
+def test_redo_apply_stream_halts_at_first_failure_and_replays(spark, tmp_path):
+    """on_error='halt' (the stream default) must stop at the FIRST
+    failed transaction: nothing after it may run, the error is logged,
+    and the checkpoint holds just below it. Once the cause is fixed,
+    replaying the held batch applies the rest exactly once."""
+    if not _derby_available(spark):
+        pytest.skip("no embedded Derby driver on the Spark classpath")
+    import json as _json
+
+    from transferdb_spark.modes.apply import apply_sql
+    from transferdb_spark.sources.jdbc import JdbcSink, JdbcSource
+    from transferdb_spark.streaming.live_apply import (
+        read_scn_checkpoint,
+        run_redo_apply_stream,
+    )
+
+    url = f"jdbc:derby:{tmp_path}/haltdb;create=true"
+    sink = JdbcSink(url=url, table="", driver=DERBY_DRIVER)
+    assert apply_sql(
+        spark, sink, ["CREATE TABLE T (ID INT, V INT)", "CREATE TABLE Z (ID INT)"]
+    ).ok
+
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    with open(feed / "log1.json", "w") as f:
+        for scn, xid, sql in [
+            (2, "t1", 'insert into "APP"."T"("ID","V") values (\'1\',\'10\');'),
+            (4, "t2", 'insert into "APP"."M"("ID") values (\'7\');'),
+            (6, "t3", 'drop table "APP"."Z";'),
+        ]:
+            f.write(_json.dumps({"scn": scn, "xid": xid, "sql_redo": sql}) + "\n")
+    scn_path = str(tmp_path / "scn.json")
+
+    def run():
+        return run_redo_apply_stream(
+            spark, str(feed), str(tmp_path / "ck"), sink, scn_path, target_schema="APP"
+        )
+
+    q = run()
+    with pytest.raises(Exception, match="redo apply failed"):
+        q.awaitTermination(180)
+        raise RuntimeError(q.exception() or "query did not fail")
+    with open(scn_path + ".errors.jsonl") as fh:
+        assert [_json.loads(line)["xid"] for line in fh] == ["t2"]
+    assert read_scn_checkpoint(scn_path) == 2
+
+    # fix the cause; the held batch replays from the same checkpoint
+    assert apply_sql(spark, sink, ["CREATE TABLE M (ID INT)"]).ok
+    q = run()
+    q.awaitTermination(180)
+    assert q.exception() is None
+    assert read_scn_checkpoint(scn_path) == 6
+
+    def rows(table):
+        src = JdbcSource(url=url, table=table, driver=DERBY_DRIVER)
+        return sorted(tuple(r) for r in src.load(spark).collect())
+
+    assert rows("T") == [(1, 10)] and rows("M") == [(7,)]
+    # t3 ran exactly once: Z is gone, so it can be created again
+    assert apply_sql(spark, sink, ["CREATE TABLE Z (ID INT)"]).ok
 
 
 def test_cli_check_against_live_target(spark, sf_dir, tmp_path):

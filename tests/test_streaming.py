@@ -386,6 +386,62 @@ def test_cdc_log_compaction(spark, tmp_path, source_dir, events):
     assert got["event_id"] == 9_000_000 and got["value"] == 42.0
 
 
+def test_cdc_gate_survives_crash_mid_write(spark, tmp_path, source_dir, events, monkeypatch):
+    """A crash while the SCN gate is being rewritten must leave the
+    previous gate readable: the restarted stream replays the batch and
+    the landed state is latest-wins over every drop."""
+    import json
+
+    from pyspark.sql.window import Window
+
+    from transferdb_spark.streaming.incr import (
+        apply_cdc_stream,
+        cdc_current_state,
+        stream_events,
+    )
+
+    target = str(tmp_path / "target_g")
+    ckpt = str(tmp_path / "ckpt_g")
+    q = apply_cdc_stream(stream_events(spark, source_dir), target, ckpt, key="user_id")
+    q.awaitTermination(120)
+
+    upd = events.limit(20).withColumn("event_id", F.col("event_id") + 2_000_000)
+    upd.coalesce(1).write.mode("append").parquet(source_dir)
+
+    real_dump = json.dump
+
+    def torn_dump(obj, fh, *args, **kwargs):
+        if "scn_gate.json" in getattr(fh, "name", ""):
+            fh.write('{"max_scn": ')
+            raise OSError("disk full")
+        return real_dump(obj, fh, *args, **kwargs)
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    q2 = apply_cdc_stream(stream_events(spark, source_dir), target, ckpt, key="user_id")
+    with pytest.raises(Exception):
+        q2.awaitTermination(120)
+    monkeypatch.setattr(json, "dump", real_dump)
+
+    q3 = apply_cdc_stream(stream_events(spark, source_dir), target, ckpt, key="user_id")
+    q3.awaitTermination(120)
+    assert q3.exception() is None
+
+    w = Window.partitionBy("user_id").orderBy(F.desc("event_id"), F.desc("ts"))
+    expected = {
+        r["user_id"]: (r["event_id"], r["value"])
+        for r in events.unionByName(upd)
+        .withColumn("_rn", F.row_number().over(w))
+        .filter("_rn = 1")
+        .collect()
+    }
+    got = {
+        r["user_id"]: (r["event_id"], r["value"])
+        for r in cdc_current_state(spark, target, key="user_id").collect()
+    }
+    assert got == expected
+    assert any(eid >= 2_000_000 for eid, _ in got.values())
+
+
 def test_redo_grammar_breadth():
     """CHR()/UNISTR()/EMPTY_CLOB()/|| concatenation and ALTER TABLE —
     the LogMiner literal forms beyond the plain restricted grammar."""
@@ -545,131 +601,6 @@ def test_redo_transaction_grouping(spark):
     assert [c["operation"] for c in txns[0]["changes"]] == ["INSERT", "UPDATE"]
 
 
-def test_distributed_apply_sqlite_end_to_end(spark, tmp_path):
-    """apply_changes_distributed runs ENTIRELY on executors: per-table
-    transaction units, commit-SCN order within each table, one DBAPI
-    connection per partition. Proof of distribution is instrumentation,
-    not trust — every status row carries the applying worker's PID,
-    which must differ from the driver's, and the plan's apply stage is
-    MapInPandas (no Collect of change payloads anywhere)."""
-    import os
-    import sqlite3
-
-    from transferdb_spark.streaming.live_apply import (
-        apply_changes_distributed,
-        distributed_apply_high_scns,
-    )
-    from transferdb_spark.streaming.redo import redo_stream_to_changes
-
-    db = str(tmp_path / "target.db")
-    with sqlite3.connect(db) as c:
-        c.execute("CREATE TABLE T1 (ID INT, V INT)")
-        c.execute("CREATE TABLE T2 (ID INT, V INT)")
-
-    rows = [
-        (2, "t1", 'insert into "T1"("ID","V") values (\'1\',\'10\');'),
-        (3, "t1", 'insert into "T2"("ID","V") values (\'1\',\'100\');'),
-        (5, "t2", 'insert into "T1"("ID","V") values (\'2\',\'20\');'),
-        (6, "t2", 'update "T1" set "V" = \'25\' where "ID" = \'2\' and "V" = \'20\';'),
-        # t3 is below the resume SCN -> must be skipped, not re-applied
-        (1, "t3", 'insert into "T1"("ID","V") values (\'9\',\'90\');'),
-        # t4 hits a missing table -> rolled back whole + quarantined
-        (8, "t4", 'insert into "NOPE"("ID") values (\'1\');'),
-    ]
-    df = spark.createDataFrame(rows, "scn long, xid string, sql_redo string")
-    changes = redo_stream_to_changes(df.select("scn", "sql_redo")).join(
-        df.select("scn", "xid"), "scn"
-    )
-
-    status_df = apply_changes_distributed(
-        changes,
-        lambda: sqlite3.connect(db, timeout=60),
-        resume_scn=1,
-        num_partitions=4,
-    )
-    assert "MapInPandas" in status_df._jdf.queryExecution().executedPlan().toString()
-    status = status_df.collect()
-
-    by = {(r["table_name"], r["xid"]): r for r in status}
-    assert by[("T1", "t1")]["status"] == "applied"
-    assert by[("T2", "t1")]["status"] == "applied"
-    assert by[("T1", "t2")]["status"] == "applied"
-    assert by[("T1", "t3")]["status"] == "skipped"
-    assert by[("NOPE", "t4")]["status"] == "failed" and by[("NOPE", "t4")]["error"]
-
-    # executor-side proof: no apply ran in the driver process
-    driver_pid = os.getpid()
-    assert all(r["worker_pid"] != driver_pid for r in status)
-
-    with sqlite3.connect(db) as c:
-        assert sorted(c.execute("SELECT ID, V FROM T1").fetchall()) == [(1, 10), (2, 25)]
-        assert c.execute("SELECT ID, V FROM T2").fetchall() == [(1, 100)]
-
-    highs = {r["table_name"]: r["high_scn"] for r in distributed_apply_high_scns(status_df).collect()}
-    assert highs == {"T1": 6, "T2": 3}
-
-
-def test_distributed_apply_stream_with_per_table_scn_resume(spark, tmp_path):
-    """The fully distributed live loop end-to-end on sqlite: a JSON
-    redo feed streams through executor-side parse/group/apply; the
-    per-TABLE SCN checkpoint (incr_sync_meta TableScnS twin) makes a
-    full redelivery idempotent while new transactions still apply —
-    per table, not via one global SCN."""
-    import sqlite3
-
-    from transferdb_spark.state.store import IncrSyncMeta
-    from transferdb_spark.streaming.live_apply import run_redo_apply_stream_dbapi
-
-    db = str(tmp_path / "t.db")
-    with sqlite3.connect(db) as c:
-        c.execute("CREATE TABLE A (ID INT, V INT)")
-        c.execute("CREATE TABLE B (ID INT, V INT)")
-
-    feed = tmp_path / "feed"
-    feed.mkdir()
-    meta = IncrSyncMeta(str(tmp_path), "resume")
-    import json as _json
-
-    def drop(name, rows):
-        with open(feed / name, "w") as f:
-            for scn, xid, sql in rows:
-                f.write(_json.dumps({"scn": scn, "xid": xid, "sql_redo": sql}) + "\n")
-
-    drop("log1.json", [
-        (2, "t1", 'insert into "A"("ID","V") values (\'1\',\'10\');'),
-        (3, "t2", 'insert into "B"("ID","V") values (\'1\',\'100\');'),
-        (5, "t3", 'update "A" set "V" = \'15\' where "ID" = \'1\' and "V" = \'10\';'),
-    ])
-
-    def run(ck):
-        q = run_redo_apply_stream_dbapi(
-            spark, str(feed), str(tmp_path / ck),
-            lambda: __import__("sqlite3").connect(db, timeout=60),
-            meta, num_partitions=2,
-        )
-        q.awaitTermination(180)
-
-    run("ck1")
-
-    def state(tbl):
-        with sqlite3.connect(db) as c:
-            return dict(c.execute(f"SELECT ID, V FROM {tbl}").fetchall())
-
-    assert state("A") == {1: 15} and state("B") == {1: 100}
-    assert meta.highs() == {"A": 5, "B": 3}
-
-    # FULL redelivery (fresh Spark checkpoint) + one new per-table txn:
-    # A's gate is 5, B's is 3 — only the new SCN-4 B txn applies even
-    # though it is BELOW A's high water (per-table gating, not global)
-    drop("log2.json", [
-        (4, "t4", 'insert into "B"("ID","V") values (\'2\',\'200\');'),
-    ])
-    run("ck2")
-    assert state("A") == {1: 15}  # no duplicate re-apply
-    assert state("B") == {1: 100, 2: 200}
-    assert meta.highs() == {"A": 5, "B": 4}
-
-
 def test_jdbc_apply_batch_never_collects_change_payload(spark, tmp_path, monkeypatch):
     """The JDBC live-apply path must stream translated transactions via
     toLocalIterator — a regression to DataFrame.collect() (full-batch
@@ -707,151 +638,6 @@ def test_jdbc_apply_batch_never_collects_change_payload(spark, tmp_path, monkeyp
     assert [(r["ID"], r["V"]) for r in t.collect()] == [(1, 15)]
 
 
-def test_cdc_stream_merges_into_snapshot_store(spark, sf_dir, tmp_path):
-    """Stream → merge_snapshot: the table image equals latest-wins over
-    the delivered events, each batch commits a time-travel-readable
-    version, and an update batch upserts instead of duplicating."""
-    from pyspark.sql import functions as F
-
-    from transferdb_spark.sources.registry import load_table
-    from transferdb_spark.state.snapshots import list_versions, read_snapshot
-    from transferdb_spark.streaming.incr import (
-        apply_cdc_stream_to_snapshot,
-        stream_events,
-    )
-
-    events = (
-        load_table(spark, sf_dir, "events")
-        .select("event_id", "ts", "user_id", "event_type", "value")
-        .filter(F.col("event_id") % 7 == 0)
-    )
-    feed = str(tmp_path / "feed")
-    events.coalesce(1).write.mode("overwrite").parquet(feed)
-    base = str(tmp_path / "snap")
-    ckpt = str(tmp_path / "ckpt")
-
-    q = apply_cdc_stream_to_snapshot(
-        stream_events(spark, feed), base, ckpt, key="user_id", stat_cols=["user_id"]
-    )
-    q.awaitTermination(120)
-    v1 = list_versions(base)[-1]
-    img = read_snapshot(spark, base)
-    n_users = events.select("user_id").distinct().count()
-    assert img.count() == n_users
-    assert img.groupBy("user_id").count().filter("count > 1").count() == 0
-
-    # an update for one existing user arrives in a later batch
-    u0 = img.orderBy("user_id").first()["user_id"]
-    upd = (
-        events.filter(F.col("user_id") == u0)
-        .limit(1)
-        .withColumn("event_id", F.lit(9_000_000).cast(events.schema["event_id"].dataType))
-        .withColumn("value", F.lit(777.0))
-    )
-    upd.coalesce(1).write.mode("append").parquet(feed)
-    q2 = apply_cdc_stream_to_snapshot(
-        stream_events(spark, feed), base, ckpt, key="user_id", stat_cols=["user_id"]
-    )
-    q2.awaitTermination(120)
-
-    img2 = read_snapshot(spark, base)
-    assert img2.count() == n_users  # upsert, not insert
-    got = img2.filter(F.col("user_id") == u0).first()
-    assert got["value"] == 777.0 and got["event_id"] == 9_000_000
-    # prior version still reads the pre-update image
-    assert read_snapshot(spark, base, v1).filter(
-        (F.col("user_id") == u0) & (F.col("value") == 777.0)
-    ).count() == 0
-
-
-def test_stale_redelivery_cannot_regress_snapshot_image(spark, sf_dir, tmp_path):
-    """A STALE event re-delivered in a LATER batch must not overwrite an
-    already-applied newer image — per-key latest-wins through
-    merge_snapshot(scn_col=...)."""
-    from pyspark.sql import functions as F
-
-    from transferdb_spark.sources.registry import load_table
-    from transferdb_spark.state.snapshots import read_snapshot
-    from transferdb_spark.streaming.incr import (
-        apply_cdc_stream_to_snapshot,
-        stream_events,
-    )
-
-    events = (
-        load_table(spark, sf_dir, "events")
-        .select("event_id", "ts", "user_id", "event_type", "value")
-        .filter(F.col("event_id") % 11 == 0)
-    )
-    feed = str(tmp_path / "feed")
-    events.coalesce(1).write.mode("overwrite").parquet(feed)
-    base, ckpt = str(tmp_path / "snap"), str(tmp_path / "ckpt")
-
-    q = apply_cdc_stream_to_snapshot(
-        stream_events(spark, feed), base, ckpt, key="user_id", stat_cols=["user_id"]
-    )
-    q.awaitTermination(120)
-    img = read_snapshot(spark, base)
-    u0 = img.orderBy("user_id").first()
-    assert u0["event_id"] > 1  # a stale event_id below it must exist
-
-    # re-deliver a STALE (older-scn) event for the same user
-    stale = (
-        events.filter(F.col("user_id") == u0["user_id"])
-        .limit(1)
-        .withColumn("event_id", F.lit(1).cast(events.schema["event_id"].dataType))
-        .withColumn("value", F.lit(-999.0))
-    )
-    stale.coalesce(1).write.mode("append").parquet(feed)
-    q2 = apply_cdc_stream_to_snapshot(
-        stream_events(spark, feed), base, ckpt, key="user_id", stat_cols=["user_id"]
-    )
-    q2.awaitTermination(120)
-
-    got = read_snapshot(spark, base).filter(F.col("user_id") == u0["user_id"]).first()
-    assert got["event_id"] == u0["event_id"], "stale event regressed the image"
-    assert got["value"] != -999.0
-
-
-def test_incr_sync_meta_concurrent_merge(tmp_path):
-    """IncrSyncMeta is the queryable state-TABLE twin of the per-table
-    SCN file (reference sync_meta_incr.go): max-wins merge under an
-    fcntl lock must survive concurrent writers without losing any
-    table's high-water."""
-    import threading
-
-    from transferdb_spark.state.store import IncrSyncMeta
-
-    meta = IncrSyncMeta(str(tmp_path), "incr")
-
-    def writer(base):
-        for i in range(20):
-            meta.merge({f"T{(base + i) % 7}": base * 100 + i, "SHARED": base * 100 + i})
-
-    threads = [threading.Thread(target=writer, args=(b,)) for b in range(1, 5)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-
-    highs = meta.highs()
-    assert highs["SHARED"] == 419  # max over all writers: 4*100+19
-    # every table key written by any writer survived (no lost update)
-    for b in range(1, 5):
-        for i in range(20):
-            k = f"T{(b + i) % 7}"
-            assert highs[k] >= b * 100 + i or highs[k] == max(
-                w * 100 + j for w in range(1, 5) for j in range(20) if (w + j) % 7 == (b + i) % 7
-            )
-    # max-wins: a stale merge can never regress
-    meta.merge({"SHARED": 1})
-    assert meta.highs()["SHARED"] == 419
-
-    meta.record_errors([{"table_name": "A", "xid": "t9", "commit_scn": 5,
-                         "status": "failed", "error": "boom"}])
-    errs = meta.errors("A")
-    assert len(errs) == 1 and errs[0]["error"] == "boom" and "ts" in errs[0]
-
-
 def test_apply_result_safe_scn_contiguous_watermark():
     """safe_scn never passes the first FAILED commit SCN — the JDBC
     checkpoint twin of the distributed contiguous-success watermark."""
@@ -864,183 +650,6 @@ def test_apply_result_safe_scn_contiguous_watermark():
     assert ok.safe_scn == 7
     only_fail = ApplyResult(failed=[("t1", "boom")], failed_scns=[3])
     assert only_fail.safe_scn == -1  # nothing applied -> no advance
-
-
-def test_distributed_apply_meta_table_makes_retry_exactly_once(spark, tmp_path):
-    """The TARGET-side incr_sync_meta table (same-transaction
-    checkpoint row) gates a re-run of the exact same units: the second
-    pass reports 'skipped / already applied (target meta)' and the
-    target holds exactly one copy of every row — the defense against
-    Spark task retries / speculative duplicates that a driver-side
-    checkpoint (captured at batch start) cannot provide."""
-    import sqlite3
-
-    from transferdb_spark.streaming.live_apply import apply_changes_distributed
-    from transferdb_spark.streaming.redo import redo_stream_to_changes
-
-    db = str(tmp_path / "t.db")
-    with sqlite3.connect(db) as c:
-        c.execute("CREATE TABLE A (ID INT, V INT)")
-
-    rows = [
-        (2, "t1", 'insert into "A"("ID","V") values (\'1\',\'10\');'),
-        (4, "t2", 'insert into "A"("ID","V") values (\'2\',\'20\');'),
-    ]
-    df = spark.createDataFrame(rows, "scn long, xid string, sql_redo string")
-    changes = redo_stream_to_changes(df.select("scn", "sql_redo")).join(
-        df.select("scn", "xid"), "scn"
-    )
-
-    def run():
-        return apply_changes_distributed(
-            changes, lambda: sqlite3.connect(db, timeout=60),
-            num_partitions=2, meta_table="incr_sync_meta",
-        ).collect()
-
-    first = {r["xid"]: r["status"] for r in run()}
-    assert first == {"t1": "applied", "t2": "applied"}
-
-    # same units again, NO driver-side gate (resume_scns empty) — the
-    # target meta rows alone must stop the re-apply
-    second = {r["xid"]: (r["status"], r["error"]) for r in run()}
-    assert second == {
-        "t1": ("skipped", "already applied (target meta)"),
-        "t2": ("skipped", "already applied (target meta)"),
-    }
-    with sqlite3.connect(db) as c:
-        assert sorted(c.execute("SELECT ID, V FROM A").fetchall()) == [(1, 10), (2, 20)]
-        metas = c.execute(
-            "SELECT table_name, xid, commit_scn FROM incr_sync_meta ORDER BY commit_scn"
-        ).fetchall()
-    assert metas == [("A", "t1", 2), ("A", "t2", 4)]
-
-
-def test_ensure_apply_meta_table_probes_usability(tmp_path):
-    """ensure_apply_meta_table must not swallow a CREATE failure that
-    leaves the table unusable (e.g. no DDL privilege): the probe SELECT
-    classifies 'already exists' (fine, idempotent) vs 'cannot host the
-    meta table' (ONE clear error at setup, instead of per-unit SELECT
-    failures deep inside the stream)."""
-    import sqlite3
-
-    import pytest as _pytest
-
-    from transferdb_spark.streaming.live_apply import ensure_apply_meta_table
-
-    db = str(tmp_path / "t.db")
-    conn = sqlite3.connect(db)
-    ensure_apply_meta_table(conn, "incr_sync_meta")  # creates
-    ensure_apply_meta_table(conn, "incr_sync_meta")  # idempotent (probe passes)
-    conn.close()
-
-    # read-only target: CREATE fails AND the table absent -> clear error
-    ro = sqlite3.connect(f"file:{db}?mode=ro", uri=True)
-    with _pytest.raises(RuntimeError, match="not usable on the target"):
-        ensure_apply_meta_table(ro, "other_meta")
-    # but a PRE-CREATED table on the same read-only target probes fine
-    ensure_apply_meta_table(ro, "incr_sync_meta")
-    ro.close()
-
-
-def test_distributed_apply_failed_txn_holds_watermark_and_replays(spark, tmp_path):
-    """ADVICE(high) regression: a FAILED transaction must be PERSISTED
-    to the error log and must hold its table's SCN checkpoint at
-    min(failed)-1, so a redelivery retries it — while the target-side
-    meta rows keep the already-applied units above the held watermark
-    from re-executing (no duplicates)."""
-    import json as _json
-    import sqlite3
-
-    from transferdb_spark.state.store import IncrSyncMeta
-    from transferdb_spark.streaming.live_apply import run_redo_apply_stream_dbapi
-
-    db = str(tmp_path / "t.db")
-    with sqlite3.connect(db) as c:
-        c.execute("CREATE TABLE A (ID INT PRIMARY KEY, V INT)")
-        c.execute("INSERT INTO A VALUES (7, 70)")  # makes scn-4 txn collide
-
-    feed = tmp_path / "feed"
-    feed.mkdir()
-    meta = IncrSyncMeta(str(tmp_path), "live")
-
-    def drop(name, rows):
-        with open(feed / name, "w") as f:
-            for scn, xid, sql in rows:
-                f.write(_json.dumps({"scn": scn, "xid": xid, "sql_redo": sql}) + "\n")
-
-    drop("log1.json", [
-        (2, "t1", 'insert into "A"("ID","V") values (\'1\',\'10\');'),
-        (4, "t2", 'insert into "A"("ID","V") values (\'7\',\'77\');'),  # PK clash -> fails
-        (6, "t3", 'insert into "A"("ID","V") values (\'2\',\'20\');'),
-    ])
-
-    def run(ck):
-        q = run_redo_apply_stream_dbapi(
-            spark, str(feed), str(tmp_path / ck),
-            lambda: __import__("sqlite3").connect(db, timeout=60),
-            meta=meta, num_partitions=2, on_error="continue",
-            meta_table="incr_sync_meta",
-        )
-        q.awaitTermination(180)
-
-    run("ck1")
-    # failure persisted, checkpoint held BELOW the failed scn
-    assert meta.highs() == {"A": 3}
-    errs = meta.errors("A")
-    assert len(errs) == 1 and errs[0]["xid"] == "t2" and errs[0]["status"] == "failed"
-    with sqlite3.connect(db) as c:
-        assert sorted(c.execute("SELECT ID, V FROM A").fetchall()) == [
-            (1, 10), (2, 20), (7, 70)]
-
-    # operator clears the conflict; FULL redelivery retries ONLY t2 —
-    # t1 is SCN-gated, t3 is above the held watermark but its target
-    # meta row proves the prior commit (no duplicate id=2 row)
-    with sqlite3.connect(db) as c:
-        c.execute("DELETE FROM A WHERE ID = 7")
-    run("ck2")
-    with sqlite3.connect(db) as c:
-        rows = sorted(c.execute("SELECT ID, V FROM A").fetchall())
-    assert rows == [(1, 10), (2, 20), (7, 77)]
-    # checkpoint caught up past the retried txn AND the meta-proven t3
-    assert meta.highs() == {"A": 6}
-
-
-def test_distributed_apply_stream_halts_on_failure(spark, tmp_path):
-    """on_error='halt' (default — the reference hard-fails the incr
-    round on any apply error) fails the streaming query AFTER
-    persisting the error log and the held watermark."""
-    import json as _json
-    import sqlite3
-
-    import pytest as _pytest
-
-    from transferdb_spark.state.store import IncrSyncMeta
-    from transferdb_spark.streaming.live_apply import run_redo_apply_stream_dbapi
-
-    db = str(tmp_path / "t.db")
-    with sqlite3.connect(db) as c:
-        c.execute("CREATE TABLE A (ID INT, V INT)")
-
-    feed = tmp_path / "feed"
-    feed.mkdir()
-    with open(feed / "log1.json", "w") as f:
-        f.write(_json.dumps({"scn": 2, "xid": "t1",
-                             "sql_redo": 'insert into "A"("ID","V") values (\'1\',\'10\');'}) + "\n")
-        f.write(_json.dumps({"scn": 4, "xid": "t2",
-                             "sql_redo": 'insert into "NOPE"("ID") values (\'1\');'}) + "\n")
-
-    meta = IncrSyncMeta(str(tmp_path), "halt")
-    q = run_redo_apply_stream_dbapi(
-        spark, str(feed), str(tmp_path / "ck"),
-        lambda: __import__("sqlite3").connect(db, timeout=60),
-        meta=meta, num_partitions=2,
-    )
-    with _pytest.raises(Exception, match="redo apply failed"):
-        q.awaitTermination(180)
-        raise RuntimeError(q.exception() or "query did not fail")
-    # the failure was persisted BEFORE the halt
-    assert [e["xid"] for e in meta.errors()] == ["t2"]
-    assert meta.highs() == {"A": 2}
 
 
 def test_stream_stream_attribution_join_matches_batch(spark, sf_dir, tmp_path):
@@ -1147,22 +756,3 @@ def test_attribution_pairs_hot_user_bucketed_join(spark):
     # the shuffle key must include the bucket, not user_id alone
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "bucket" in plan, plan
-
-
-def test_incr_sync_meta_is_sql_queryable(spark, tmp_path):
-    """The state-TABLE surface: highs and the error log expose
-    relations a SELECT can join/filter — the reference's meta-schema
-    queryability, not just a dict API."""
-    from transferdb_spark.state.store import IncrSyncMeta
-
-    meta = IncrSyncMeta(str(tmp_path), "q")
-    meta.merge({"A": 5, "B": 9})
-    meta.record_errors([
-        {"table_name": "A", "xid": "t3", "commit_scn": 7,
-         "status": "failed", "error": "boom"},
-    ])
-    got = {r["table_name"]: r["high_scn"] for r in meta.as_df(spark).collect()}
-    assert got == {"A": 5, "B": 9}
-    errs = meta.errors_df(spark)
-    row = errs.where("table_name = 'A' AND status = 'failed'").first()
-    assert row["xid"] == "t3" and row["commit_scn"] == 7 and row["ts"] > 0

@@ -107,21 +107,6 @@ def compact_files(
     else:
         shaped = df.coalesce(n_out)
 
-    from transferdb_spark.state import table_format as tf
-
-    if tf.HAS_TABLE_FORMAT:
-        # adapter seam: the staging -> backup -> rename swap collapses
-        # to ONE format commit (snapshot isolation makes the
-        # read-then-overwrite of the same table safe, and a torn swap
-        # impossible by construction)
-        tf.atomic_overwrite(shaped, path)
-        return CompactStats(
-            files_before=len(files),
-            files_after=n_out,
-            bytes_total=total,
-            rows=-1,
-        )
-
     shutil.rmtree(staging, ignore_errors=True)
     writer = shaped.write.mode("overwrite")
     for c in bloom_cols or []:

@@ -9,8 +9,8 @@ snapshot and writes MySQL via prepared multi-row INSERT/REPLACE
   partition per chunk predicate, pushdown of the range WHERE into the
   source (the DBMS_PARALLEL_EXECUTE analogue, P3/P4).
 - write: `df.write.jdbc(batchsize=…)` — batched prepared inserts are
-  built into the JVM writer; REPLACE/upsert semantics go through
-  `foreachBatch` MERGE at the sink dialect layer.
+  built into the JVM writer; live CDC apply replays translated redo
+  transactions over one connection (modes/apply.apply_transactions).
 
 No JDBC driver ships in this container, so everything here is pure
 plan/option construction (unit-testable); the one method that needs a
@@ -160,10 +160,8 @@ class JdbcSink:
     def execute(self, spark: SparkSession, sql: str) -> int:
         """Run one driver-side DDL/DML statement over JDBC (py4j).
 
-        Used for the set-based statements that bracket bulk writes
-        (MERGE from staging, DROP staging) — O(1) driver work per
-        batch regardless of batch size; row data never flows through
-        the driver."""
+        Used for DDL and generated fix-SQL — O(1) driver work per
+        statement; row data never flows through the driver."""
         jvm = spark._jvm
         if self.driver:
             jvm.java.lang.Class.forName(self.driver)
@@ -179,62 +177,6 @@ class JdbcSink:
                 st.close()
         finally:
             conn.close()
-
-    def merge_from_staging(
-        self,
-        df: DataFrame,
-        key_cols: list[str],
-        staging_table: str | None = None,
-        drop_staging: bool = True,
-        scn_col: str | None = None,
-    ) -> int:
-        """MERGE-style upsert: land df in a staging table (executor-side
-        batched JDBC write), then one set-based MERGE INTO target — the
-        scalable shape of the reference's REPLACE safe-mode apply
-        (o2m/apply.go:119-233, translate.go:118-128): per-batch work is
-        one bulk write + one statement, never per-row driver round
-        trips. Identifiers are double-quoted to match Spark's JDBC
-        writer casing. Returns the MERGE's affected-row count."""
-        spark = df.sparkSession
-        stg = staging_table or f"{self.table}__STG"
-        import dataclasses
-
-        stg_sink = dataclasses.replace(self, table=stg)
-        stg_sink.write(df, mode="overwrite")
-        cols = df.columns
-
-        def q(c: str) -> str:
-            return f'"{c}"'
-
-        on = " AND ".join(f"t.{q(c)} = s.{q(c)}" for c in key_cols)
-        sets = ", ".join(f"t.{q(c)} = s.{q(c)}" for c in cols if c not in key_cols)
-        ins_cols = ", ".join(q(c) for c in cols)
-        ins_vals = ", ".join(f"s.{q(c)}" for c in cols)
-        # a key-only table has nothing to update — MATCHED is a no-op
-        # and an empty SET list would be a syntax error.
-        # scn_col makes the update CONDITIONAL (s.scn >= t.scn): a
-        # strictly-older re-delivered row can never regress a newer
-        # target image, while an EQUAL-scn redelivery re-applies — the
-        # reference's ≥ half of the ≥/> dance, which is also what lets
-        # a replayed batch repair target corruption (same scn, fixed
-        # values). Per-key exact form of logminer.go:134-174's gate.
-        guard = f"AND s.{q(scn_col)} >= t.{q(scn_col)} " if scn_col else ""
-        matched = f"WHEN MATCHED {guard}THEN UPDATE SET {sets} " if sets else ""
-        stmt = (
-            f"MERGE INTO {self.table} t USING {stg} s ON {on} "
-            f"{matched}"
-            f"WHEN NOT MATCHED THEN INSERT ({ins_cols}) VALUES ({ins_vals})"
-        )
-        try:
-            return self.execute(spark, stmt)
-        finally:
-            if drop_staging:
-                # best-effort: a failed MERGE must not strand the
-                # staging table in the target database
-                try:
-                    self.execute(spark, f"DROP TABLE {stg}")
-                except Exception:  # noqa: BLE001 — keep the MERGE error primary
-                    pass
 
     def upsert_batch(self, df: DataFrame, key_cols: list[str]) -> str:
         """REPLACE-safe-mode statement text for a MERGE-style apply.

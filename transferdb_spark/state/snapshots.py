@@ -93,16 +93,6 @@ def write_snapshot(
     any footer — manifest-level scan planning, which is what keeps
     10^6-file tables plannable. Pair with a Z-ordered or sorted
     layout so the stats are actually tight."""
-    from transferdb_spark.state import table_format as tf
-
-    if tf.HAS_TABLE_FORMAT and not list_versions(base):
-        # adapter seam: the staging dir + put-if-absent manifest dance
-        # collapses to ONE format commit; the format's own log carries
-        # versions/stats/time-travel (read side: tf.read_version).
-        # A store that already has manifest versions keeps the manifest
-        # protocol — one protocol per store, never a mixed read/write.
-        (tf.atomic_overwrite if mode == "overwrite" else tf.atomic_append)(df, base)
-        return tf.committed_version(df.sparkSession, base)
     new_files = _write_staging(df, base)
 
     versions = list_versions(base)
@@ -208,26 +198,10 @@ def read_snapshot(
     [lo, hi] are read (files without stats for col are kept — pruning
     must never drop data it cannot rule out), and the residual filter
     is still applied row-level. Planning cost is O(manifest), zero
-    footer reads.
-
-    Format-armed stores (written by write_snapshot through the
-    table_format seam, so no manifest versions exist at base) read
-    through tf.read_version: the format's own log supplies the version
-    pinning / time travel, its data skipping replaces manifest-stats
-    pruning, and the predicate becomes a residual row filter."""
+    footer reads."""
     from pyspark.sql import functions as F
 
-    from transferdb_spark.state import table_format as tf
-
     versions = list_versions(base)
-    if tf.HAS_TABLE_FORMAT and not versions:
-        if version is not None and as_of_ms is not None:
-            raise ValueError("pass either version or as_of_ms, not both")
-        out = tf.read_version(spark, base, version, timestamp_ms=as_of_ms)
-        if predicate is not None:
-            col, lo, hi = predicate
-            out = out.filter(F.col(col).between(lo, hi))
-        return out
     if not versions:
         raise FileNotFoundError(f"no snapshot versions under {base}")
     if as_of_ms is not None:
@@ -262,7 +236,6 @@ def merge_snapshot(
     batch: DataFrame,
     key: str,
     stat_cols: list[str] | None = None,
-    scn_col: str | None = None,
     evolution: str = "strict",
 ) -> int:
     """Copy-on-write MERGE (upsert by ``key``) into the versioned
@@ -286,12 +259,7 @@ def merge_snapshot(
     ``stat_cols``, defaulting to whatever columns the previous
     manifest tracked.
 
-    scn_col=None: the batch unconditionally replaces matching keys.
-    scn_col='...': LATEST-WINS — for a key present on both sides the
-    row with the higher scn survives (ties prefer the batch), so a
-    late-redelivered STALE event cannot regress an already-applied
-    newer image. This is the per-key exact form of the reference's
-    SCN gate (logminer.go:134-174).
+    The batch unconditionally replaces matching keys.
 
     NULL merge keys are rejected: NULL never equals NULL in the join,
     so an upsert contract over a NULL key is unsatisfiable — each
@@ -300,31 +268,11 @@ def merge_snapshot(
     At 100 TB the rewrite cost is proportional to the TOUCHED key
     range, not the table — which is why merge targets should be
     written sorted/Z-ordered on the merge key (tight per-file ranges =
-    tight pruning).
-
-    Format-armed stores merge through tf.atomic_merge (the format's
-    own MERGE does the file pruning; scn_col maps to the matched-
-    update condition) — NOT via write_snapshot(mode='overwrite'),
-    which would clobber the stored image. Schema evolution under the
-    format is the format's own enforcement; 'union' requires its
-    autoMerge knob and is refused here rather than half-honored."""
+    tight pruning)."""
     from pyspark.sql import functions as F
 
     versions = list_versions(base)
     if not versions:
-        from transferdb_spark.state import table_format as tf
-
-        if tf.HAS_TABLE_FORMAT and tf.is_format_table(spark, base):
-            if evolution == "union":
-                raise ValueError(
-                    "merge_snapshot: evolution='union' is not supported on a "
-                    "format-armed store — enable the format's own schema "
-                    "evolution instead"
-                )
-            if not batch.where(F.col(key).isNull()).isEmpty():
-                raise ValueError(f"merge_snapshot: NULL values in merge key {key!r}")
-            tf.atomic_merge(spark, batch, base, key, scn_col=scn_col)
-            return tf.committed_version(spark, base)
         return write_snapshot(batch, base, stat_cols=stat_cols)
     man = _manifest(base, versions[-1])
     files, stats = man["files"], man.get("stats", {})
@@ -412,25 +360,8 @@ def merge_snapshot(
         old = reader.parquet(*touched)
         if not evolved:
             old = old.select(*batch.columns)
-        if scn_col is None:
-            remaining = old.join(batch.select(key).distinct(), key, "left_anti")
-            image_delta = remaining.unionByName(batch, allowMissingColumns=evolved)
-        else:
-            # per-key latest-wins: old rows and batch rows compete on
-            # scn; ties prefer the batch (idempotent redelivery)
-            from pyspark.sql.window import Window
-
-            combined = old.withColumn("__src", F.lit(0)).unionByName(
-                batch.withColumn("__src", F.lit(1)), allowMissingColumns=evolved
-            )
-            w = Window.partitionBy(key).orderBy(
-                F.desc(scn_col), F.desc("__src")
-            )
-            image_delta = (
-                combined.withColumn("__rn", F.row_number().over(w))
-                .filter("__rn = 1")
-                .drop("__rn", "__src")
-            )
+        remaining = old.join(batch.select(key).distinct(), key, "left_anti")
+        image_delta = remaining.unionByName(batch, allowMissingColumns=evolved)
     else:
         image_delta = batch
 

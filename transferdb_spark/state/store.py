@@ -160,112 +160,3 @@ class StateStore:
 
     def _flush(self) -> None:
         _write_json_atomic(self.path, [asdict(c) for c in self._chunks.values()], indent=1)
-
-
-class IncrSyncMeta:
-    """Per-table incremental-apply SCN checkpoint TABLE — the
-    incr_sync_meta twin of the reference's queryable meta store
-    (/root/reference/database/meta/sync_meta_incr.go keeps one
-    (schema, table, global_scn) row per synced table and advances it
-    with an UPDATE after each successful apply round).
-
-    Same durability discipline as StateStore (_write_json_atomic)
-    plus an fcntl write lock around the read-modify-write, so the
-    max-wins merge stays correct even if a second writer ever appears
-    (two concurrent streaming queries pointed at one workdir). Reads
-    are always fresh from disk — the store is the source of truth, not
-    a cached dict.
-
-    Failure rows are append-only in a sibling error log (the
-    error_log_detail stance): a failed transaction is PERSISTED, never
-    silently dropped, and the caller advances each table's SCN only to
-    its contiguous-success watermark so the failed txn replays."""
-
-    def __init__(self, workdir: str, task: str):
-        os.makedirs(workdir, exist_ok=True)
-        self.path = os.path.join(workdir, f"{task}_incr_sync_meta.json")
-        self.error_log_path = os.path.join(workdir, f"{task}_apply_error_log.jsonl")
-        self._lock_path = self.path + ".lock"
-
-    def _locked(self):
-        import fcntl
-        from contextlib import contextmanager
-
-        @contextmanager
-        def hold():
-            with open(self._lock_path, "a") as lk:
-                fcntl.flock(lk, fcntl.LOCK_EX)
-                try:
-                    yield
-                finally:
-                    fcntl.flock(lk, fcntl.LOCK_UN)
-
-        return hold()
-
-    def highs(self) -> dict[str, int]:
-        """Fresh per-table SCN high-waters ({table: high_scn})."""
-        if not os.path.exists(self.path):
-            return {}
-        with open(self.path) as fh:
-            return {k: int(v) for k, v in json.load(fh).items()}
-
-    def high(self, table: str) -> int:
-        return self.highs().get(table, -1)
-
-    def merge(self, highs: dict[str, int]) -> dict[str, int]:
-        """Max-wins merge under the write lock: re-read inside the
-        lock, take per-table max, atomic-swap. A replayed batch (or a
-        concurrent writer's interleaved merge) can never regress a
-        table's SCN. Returns the merged state."""
-        with self._locked():
-            cur = self.highs()
-            for t, s in highs.items():
-                cur[t] = max(int(s), cur.get(t, -1))
-            _write_json_atomic(self.path, cur)
-            return cur
-
-    def record_errors(self, rows: list[dict]) -> None:
-        """Append failed/quarantined apply-status rows (error_log_detail
-        semantics — every occurrence kept, append-only)."""
-        if not rows:
-            return
-        import time
-
-        ts = time.time()
-        with self._locked(), open(self.error_log_path, "a") as fh:
-            for r in rows:
-                fh.write(json.dumps({**r, "ts": ts}) + "\n")
-
-    def errors(self, table: str | None = None) -> list[dict]:
-        if not os.path.exists(self.error_log_path):
-            return []
-        with open(self.error_log_path) as fh:
-            rows = [json.loads(line) for line in fh if line.strip()]
-        return [r for r in rows if table is None or r.get("table_name") == table]
-
-    def as_df(self, spark):
-        """The checkpoint as a queryable relation (table_name,
-        high_scn) — the SELECT surface the reference gets for free
-        from its MySQL meta schema."""
-        return spark.createDataFrame(
-            sorted(self.highs().items()), "table_name string, high_scn long"
-        )
-
-    def errors_df(self, spark):
-        """The append-only apply error log as a relation."""
-        rows = [
-            (
-                r.get("table_name", ""),
-                r.get("xid", ""),
-                int(r.get("commit_scn", -1)),
-                r.get("status", ""),
-                r.get("error", ""),
-                float(r.get("ts", 0.0)),
-            )
-            for r in self.errors()
-        ]
-        return spark.createDataFrame(
-            rows,
-            "table_name string, xid string, commit_scn long, "
-            "status string, error string, ts double",
-        )

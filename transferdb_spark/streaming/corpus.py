@@ -108,22 +108,9 @@ def ingest_documents_stream(
             .filter("_rn = 1")
             .drop("_rn")
         )
-        from transferdb_spark.state import table_format as tf
-
-        if tf.HAS_TABLE_FORMAT:
-            # adapter seam: per-batch landing becomes one atomic
-            # partition-replace commit (replay rewrites the same
-            # partition in a single transaction)
-            tf.atomic_replace_partition(
-                survivors.withColumn("batch_id", F.lit(batch_id)),
-                target_dir,
-                "batch_id",
-                [batch_id],
-            )
-        else:
-            survivors.write.mode("overwrite").parquet(
-                os.path.join(target_dir, f"batch_id={batch_id}")
-            )
+        survivors.write.mode("overwrite").parquet(
+            os.path.join(target_dir, f"batch_id={batch_id}")
+        )
 
     writer = (
         stream.writeStream.outputMode("append")
@@ -143,59 +130,20 @@ def corpus_current_state(spark: SparkSession, target_dir: str) -> DataFrame:
     (deterministic, engine-stable). The dedup mirror of
     cdc_current_state's latest-wins; like it, `batch_id` is dropped so
     a compaction snapshot stores no physical copy of the partition
-    column.
-
-    A format-armed store (landed via tf.atomic_replace_partition) must
-    be read through the format: a raw-parquet read of its directory
-    would resurrect tombstoned rows from replaced batches."""
-    log = _read_corpus_log(spark, target_dir)
+    column."""
+    log = spark.read.parquet(target_dir)
     rn = F.row_number().over(
         Window.partitionBy(DIGEST_COL).orderBy("batch_id", "doc_id")
     )
     return log.withColumn("_rn", rn).filter("_rn = 1").drop("_rn").drop("batch_id")
 
 
-def _read_corpus_log(spark: SparkSession, target_dir: str) -> DataFrame:
-    """The ingest log through the right protocol: format read when the
-    store is a committed format table, raw partition-dir parquet
-    otherwise."""
-    from transferdb_spark.state import table_format as tf
-
-    if tf.HAS_TABLE_FORMAT and tf.is_format_table(spark, target_dir):
-        return tf.read_version(spark, target_dir)
-    return spark.read.parquet(target_dir)
-
-
 def compact_corpus(spark: SparkSession, target_dir: str) -> dict:
     """Rewrite the ingest log to its survivor snapshot (same
-    underscore-tmp + rename-aside swap as compact_cdc_log; a table
-    format would make this one atomic commit). Survivors keep their
-    place at the EARLIEST batch id, so first-wins ordering against
-    future (higher-id) batches is preserved. Returns {"live_rows", "dirs_removed"}.
-
-    Batch discovery matches the store's protocol: a format-armed store
-    has no batch_id= directories to list (the format owns the layout),
-    so the live batch ids come from the table itself."""
-    from transferdb_spark.state import table_format as tf
-
-    if tf.HAS_TABLE_FORMAT and tf.is_format_table(spark, target_dir):
-        old_ids = sorted(
-            r["batch_id"]
-            for r in _read_corpus_log(spark, target_dir)
-            .select("batch_id")
-            .distinct()
-            .collect()
-        )
-        if len(old_ids) <= 1:
-            return {"live_rows": None, "dirs_removed": 0}
-        # replace every old batch partition with the survivor snapshot
-        # at the earliest id in ONE commit — readers never see a
-        # half-compacted store
-        snap = corpus_current_state(spark, target_dir)
-        snap_bid = snap.withColumn("batch_id", F.lit(old_ids[0]))
-        tf.atomic_replace_partition(snap_bid, target_dir, "batch_id", old_ids)
-        return {"live_rows": None, "dirs_removed": len(old_ids)}
-
+    underscore-tmp + rename-aside swap as compact_cdc_log). Survivors
+    keep their place at the EARLIEST batch id, so first-wins ordering
+    against future (higher-id) batches is preserved. Returns
+    {"live_rows", "dirs_removed"}."""
     old_dirs = sorted(d for d in os.listdir(target_dir) if d.startswith("batch_id="))
     if len(old_dirs) <= 1:
         return {"live_rows": None, "dirs_removed": 0}

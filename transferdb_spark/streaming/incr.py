@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from transferdb_spark.state.store import _write_json_atomic
+
 OP_WHITELIST = ("click", "view", "purchase", "signup", "error")
 
 
@@ -65,8 +67,7 @@ def filter_ops(stream: DataFrame, min_scn: int = 0) -> DataFrame:
 
 def _latest_per_key(batch: DataFrame, key: str, scn_col: str) -> DataFrame:
     """Newest image per business key within one micro-batch — the
-    UPDATE = DELETE+REPLACE collapse every applier shares (ties break
-    on ts; extend HERE, not per-applier)."""
+    UPDATE = DELETE+REPLACE collapse (ties break on ts)."""
     return (
         batch.withColumn(
             "_rn",
@@ -141,8 +142,7 @@ def apply_cdc_stream(
         # keep only this batch's floor: earlier batches are committed
         gate = {"max_scn": new_max, "batch_floors": {bkey: floor}}
         os.makedirs(checkpoint_dir, exist_ok=True)
-        with open(gate_path, "w") as fh:
-            json.dump(gate, fh)
+        _write_json_atomic(gate_path, gate)
 
     writer = (
         stream.writeStream.outputMode("append")
@@ -153,108 +153,6 @@ def apply_cdc_stream(
         writer = writer.trigger(availableNow=True)
     else:
         writer = writer.trigger(processingTime="300 milliseconds")  # reference poll cadence
-    return writer.start()
-
-
-def apply_cdc_stream_to_jdbc(
-    stream: DataFrame,
-    sink,
-    checkpoint_dir: str,
-    key: str = "event_id",
-    scn_col: str = "event_id",
-    available_now: bool = True,
-):
-    """Stream → MERGE into a live JDBC target — the end-to-end analogue
-    of the reference's incr apply loop (o2m/apply.go:119-233: ordered
-    appliers executing REPLACE against the target database).
-
-    Per micro-batch: dedupe to the newest image per business key
-    (latest-wins, the UPDATE = DELETE+REPLACE collapse), then
-    JdbcSink.merge_from_staging lands the batch executor-side and runs
-    ONE set-based MERGE — re-delivered batches re-merge the same
-    images, so the apply is idempotent and the streaming checkpoint's
-    at-least-once delivery upgrades to effectively-once on the target.
-    """
-
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        # persist: the dedupe window feeds the isEmpty probe AND the
-        # staging write — without it the shuffle runs twice per batch
-        latest = _latest_per_key(batch, key, scn_col).persist()
-        try:
-            if latest.isEmpty():
-                return
-            sink.merge_from_staging(
-                latest,
-                [key],
-                staging_table=f"{sink.table}__STG_{batch_id}",
-                scn_col=scn_col,
-            )
-        finally:
-            latest.unpersist()
-
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(apply_batch)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="300 milliseconds")
-    return writer.start()
-
-
-def apply_cdc_stream_to_snapshot(
-    stream: DataFrame,
-    base: str,
-    checkpoint_dir: str,
-    key: str = "event_id",
-    scn_col: str = "event_id",
-    stat_cols: list[str] | None = None,
-    available_now: bool = True,
-):
-    """Stream → copy-on-write MERGE into the versioned snapshot store —
-    the lakehouse twin of apply_cdc_stream_to_jdbc: each micro-batch
-    dedupes to the newest image per key and merge_snapshot rewrites
-    only the files whose key ranges the batch touches, committing one
-    new manifest version per batch (so the CDC history is time-travel
-    readable: version N = state after batch N).
-
-    Idempotence: a re-delivered batch re-merges the same images —
-    the file set changes but the logical image does not, so
-    at-least-once delivery is effectively-once on the table image."""
-    from transferdb_spark.state.snapshots import merge_snapshot
-
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        # persist: the dedupe window feeds the empty probe, the NULL
-        # check, the touch test, and the merge write
-        latest = _latest_per_key(batch, key, scn_col).persist()
-        try:
-            if latest.isEmpty():
-                return
-            # scn_col makes the merge latest-wins PER KEY: a stale
-            # event re-delivered in a later batch cannot regress an
-            # already-applied newer image
-            merge_snapshot(
-                batch.sparkSession,
-                base,
-                latest,
-                key,
-                stat_cols=stat_cols,
-                scn_col=scn_col,
-            )
-        finally:
-            latest.unpersist()
-
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(apply_batch)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="300 milliseconds")
     return writer.start()
 
 

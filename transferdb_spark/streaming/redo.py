@@ -689,62 +689,29 @@ def group_transactions(changes: DataFrame, xid_col: str = "xid") -> DataFrame:
     )
 
 
-def group_table_transactions(changes: DataFrame, xid_col: str = "xid") -> DataFrame:
-    """Per-TABLE transaction units — the reference's actual apply
-    parallelism: applyOracleIncrRecord keys its worker map by table
-    name and checkpoints a per-table SCN
-    (/root/reference/module/migrate/sql/oracle/o2m/apply.go:58-233,
-    incr_sync_meta TableScnS). One row per (table_name, xid): the
-    statements a per-table applier replays atomically, ordered across
-    units by commit_scn WITHIN each table.
-
-    Same shuffle shape as group_transactions (one pass over changes,
-    keyed groupBy); the extra key just makes the apply units
-    partitionable by table so executors can own disjoint tables."""
-    from pyspark.sql import functions as F
-
-    change_struct = F.struct(
-        "scn", "operation", "schema_name", "table_name", "data_json", "before_json"
-    )
-    return (
-        changes.groupBy(
-            F.col("table_name"), F.col(xid_col).alias("xid")
-        )
-        .agg(
-            F.min("scn").alias("first_scn"),
-            F.max("scn").alias("commit_scn"),
-            F.count(F.lit(1)).alias("n_changes"),
-            F.array_sort(F.collect_list(change_struct)).alias("changes"),
-        )
-    )
-
-
-TXN_SQL_SCHEMA = (
-    "table_name string, xid string, commit_scn long, stmts array<string>"
-)
+TXN_SQL_SCHEMA = "xid string, commit_scn long, stmts array<string>"
 
 
 def translate_transactions_df(
     txns: DataFrame, target_schema: str = "", dialect: str = "ansi"
 ) -> DataFrame:
     """Executor-side translation of grouped transactions (the output of
-    group_transactions or group_table_transactions) into target-dialect
-    statement lists — (table_name, xid, commit_scn, stmts).
+    group_transactions) into target-dialect statement lists —
+    (xid, commit_scn, stmts).
 
     This keeps the heavy part of the apply path (change payloads →
     SQL text) OFF the driver: the driver only ever sees the translated
     statements it must ship over its connection, never the raw
     before/after images. An untranslatable change quarantines its
     whole transaction as one `-- UNTRANSLATABLE` comment statement —
-    comment-only statements are skipped by both appliers, so the error
-    is visible in the unit without aborting the batch (error_log_detail
+    comment-only statements never execute (modes/apply._executable
+    drops them), so the error is visible in the unit without aborting the batch (error_log_detail
     stance)."""
 
     def translate_batches(batches: Iterator) -> Iterator:
         import pandas as pd
 
         for pdf in batches:
-            has_tbl = "table_name" in pdf.columns
             rows = []
             for idx in range(len(pdf)):
                 r = pdf.iloc[idx]
@@ -763,17 +730,8 @@ def translate_transactions_df(
                         )
                 except (ValueError, KeyError) as e:
                     stmts = [f"-- UNTRANSLATABLE txn {r['xid']}: {e}"]
-                rows.append(
-                    (
-                        str(r["table_name"]) if has_tbl else "",
-                        str(r["xid"]),
-                        int(r["commit_scn"]),
-                        stmts,
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["table_name", "xid", "commit_scn", "stmts"]
-            )
+                rows.append((str(r["xid"]), int(r["commit_scn"]), stmts))
+            yield pd.DataFrame(rows, columns=["xid", "commit_scn", "stmts"])
 
     return txns.mapInPandas(translate_batches, schema=TXN_SQL_SCHEMA)
 

@@ -3141,11 +3141,12 @@ def url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed BPE merge training (ext/bpe.py) — corpus collapses
-    to a word-frequency table (one shuffle), then each merge iteration
-    is a map-side-combined pair count + a single argmax row to the
-    driver. Oracle: the loop unrolled into chained DuckDB CTEs
-    (ext/bpe.train_merges_sql); a differential pytest additionally
-    pins it against a pure-Python Sennrich reference."""
+    to a word-frequency table (one shuffle, the one Spark action),
+    which is collected once; the merge loop runs in plain Python over
+    that vocabulary-sized table. Oracle: the loop unrolled into
+    chained DuckDB CTEs (ext/bpe.train_merges_sql); a differential
+    pytest additionally pins it against a pure-Python Sennrich
+    reference."""
     from transferdb_spark.ext.bpe import merges_frame
 
     return merges_frame(_t(spark, sf_dir, "documents"), n_merges=5)
@@ -3164,10 +3165,12 @@ def wordpiece_train_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenizer) — the third tokenizer rung next to BPE and unigram-LM:
     merges the pair with the highest likelihood gain
     count(lr)/(count(l)*count(r)) over the current segmentation, with
-    ##-continuation prefixes. The score argmax uses integer-quantized
+    ##-continuation prefixes. Same shape as bpe_train_merges: one
+    word-count job, then the merge loop in plain Python over the
+    collected word table. The score argmax uses integer-quantized
     floor division so the unrolled-CTE DuckDB oracle replays training
-    EXACTLY (ext/wordpiece.py; same discipline as bpe_train_merges).
-    Returns (rank, left, right, freq, score_q)."""
+    EXACTLY (ext/wordpiece.py). Returns (rank, left, right, freq,
+    score_q)."""
     from transferdb_spark.ext.wordpiece import train_wordpiece_df
 
     return train_wordpiece_df(_t(spark, sf_dir, "documents"), n_merges=5)

@@ -313,3 +313,43 @@ def test_wordpiece_oracle_tie_fuzz(spark):
         want = con.execute(train_wordpiece_sql(n_merges=4)).df()
         for c in ("rank", "left", "right", "freq", "score_q"):
             assert got[c].tolist() == want[c].tolist(), (trial, c)
+
+
+def test_bpe_oracle_tie_non_ascii_fuzz(spark):
+    """String BPE trainer vs its unrolled-CTE oracles on tie-heavy,
+    multi-byte corpora: short words over 'abé☃' make pair frequencies
+    collide, so the (freq DESC, l, r) tie chain runs on 2- and 3-byte
+    symbols, where Python's str order must match both engines'
+    UTF-8 binary order and the code-point split must match substr."""
+    import pandas as pd
+
+    from transferdb_spark.ext.bpe import (
+        encoded_length_histogram,
+        encoded_length_histogram_sql,
+        merges_frame,
+        train_merges_sql,
+    )
+
+    rng = random.Random(20261017)
+    for trial in range(3):
+        rows = [
+            (
+                i,
+                " ".join(
+                    "".join(rng.choice("abé☃") for _ in range(rng.randint(1, 4)))
+                    for _ in range(rng.randint(2, 12))
+                ),
+            )
+            for i in range(40)
+        ]
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        con = duckdb.connect()
+        con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
+        got = merges_frame(docs, 4).toPandas()
+        want = con.execute(train_merges_sql(4)).df()
+        for c in ("rank", "left", "right", "freq"):
+            assert got[c].tolist() == want[c].tolist(), (trial, c)
+        got = encoded_length_histogram(docs, 4).toPandas()
+        want = con.execute(encoded_length_histogram_sql(4)).df()
+        for c in ("n_syms", "n_words", "n_occurrences"):
+            assert got[c].tolist() == want[c].tolist(), (trial, c)

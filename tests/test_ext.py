@@ -584,6 +584,53 @@ def test_bpe_merges_frame_shape(spark, docs):
     assert all(r["freq"] >= 2 for r in rows)
 
 
+def test_tokenizer_trainers_run_fixed_jobs_and_leak_no_cache(spark, docs):
+    """Job-count and leak tripwire: the three trainers collect the word
+    table once and run the merge loop in Python, so the Spark jobs
+    of a call do not grow with the number of merges, and no call (nor
+    the length histogram's frame) leaves a persisted RDD behind."""
+    from transferdb_spark.ext.bpe import (
+        encoded_length_histogram,
+        train_bytes,
+        train_merges,
+    )
+    from transferdb_spark.ext.wordpiece import train_wordpiece
+
+    sc = spark.sparkContext
+    sample = docs.limit(60)
+    trainers = {
+        "train_bytes": lambda k: train_bytes(sample, vocab_size=256 + k),
+        "train_merges": lambda k: train_merges(sample, n_merges=k),
+        "train_wordpiece": lambda k: train_wordpiece(sample, n_merges=k),
+    }
+
+    def persisted():
+        return set(sc._jsc.getPersistentRDDs().keySet().toArray())
+
+    def run(group, call):
+        before = persisted()
+        sc.setJobGroup(group, group)
+        try:
+            out = call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert persisted() == before, group
+        # job ids reach the status store through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    for name, train in trainers.items():
+        few, jobs_few = run(f"tripwire-{name}-2", lambda: train(2))
+        many, jobs_many = run(f"tripwire-{name}-12", lambda: train(12))
+        assert len(few) == 2 and len(many) > 2, name
+        assert 0 < jobs_many <= jobs_few, (name, jobs_few, jobs_many)
+
+    before = persisted()
+    assert encoded_length_histogram(sample, n_merges=12).collect()
+    assert persisted() == before
+
+
 def test_mulaw_wav_decode(spark):
     """G.711 mu-law WAV: compress a sine, wrap in RIFF fmt-tag-7,
     decode, and recover the waveform within mu-law quantization error."""

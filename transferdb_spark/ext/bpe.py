@@ -9,20 +9,22 @@ presuppose.
 
 Scale shape (100 TB of text):
 - The corpus collapses to a (word, count) frequency table first — ONE
-  groupBy over the tokenized corpus; everything after iterates over
-  unique words (orders of magnitude smaller, and the classic reason
-  word-level BPE training is tractable at all).
-- Each merge iteration is: explode adjacent symbol pairs weighted by
-  word count → map-side-combined groupBy(pair) → take the argmax row
-  (driver sees ONE row, deterministic lexicographic tie-break) →
-  apply the merge as a JVM aggregate fold over the word table (no
-  Python boundary in the loop — round 9, guide §4.1). A per-merge
-  LAZY localCheckpoint truncates lineage; the next argmax job doubles
-  as its materializing action (the same iterative-plan discipline as
-  dedup's connected components).
+  groupBy over the tokenized corpus, the one Spark action a trainer runs.
+  The table is vocabulary-sized by construction (distinct words, not
+  occurrences), so it is collected once.
+- The merge loop then runs in plain Python over that table
+  (`merge_words`, shared by the string, byte and WordPiece trainers and
+  the length histogram), as Sennrich et al. and production BPE trainers
+  do: each merge recounts adjacent-pair frequencies weighted by word
+  count, takes the argmax and rewrites every word with a greedy
+  left-to-right non-overlapping pass. The same loop as Spark jobs
+  would pay a pair-count job and a materialisation per merge —
+  O(merges) jobs over a table that fits in local memory.
 - Merges are deterministic: ties break on the lexicographically
   smallest (left, right) pair, so two engines (and re-runs) produce
-  identical merge tables.
+  identical merge tables. Python str order equals Spark's and DuckDB's
+  UTF-8 binary order, and `list(word)` splits on code points like their
+  `substring`.
 
 Oracle: the merge loop is unrolled into chained DuckDB CTEs
 (train_merges_sql — full hash-checked parity in the driver gate);
@@ -32,7 +34,8 @@ pure-Python reference implementation on the same corpus.
 
 from __future__ import annotations
 
-import re
+from collections import Counter
+from typing import Any, Callable
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -42,6 +45,7 @@ from pyspark.sql.functions import pandas_udf
 
 from transferdb_spark.ext.text import TOKENS
 from transferdb_spark.ext.text import spread_narrow as _spread
+
 
 def word_counts(docs: DataFrame) -> DataFrame:
     """(word, cnt) frequency table — the one corpus-wide shuffle."""
@@ -53,51 +57,73 @@ def word_counts(docs: DataFrame) -> DataFrame:
     )
 
 
-# Initial char split as a JVM transform (round-9, guide §4.1): no
-# Python boundary in the trainer seed pass. word_counts filters empty
-# words, so sequence(1, length(word)) is always ascending.
-_CHARS_EXPR = "transform(sequence(1, length(word)), i -> substring(word, i, 1))"
+def merge_words(
+    words: list[tuple[list, int]],
+    n_merges: int,
+    min_freq: int,
+    join: Callable[[Any, Any, int], Any],
+    score: Callable[[int, int, int], int] | None = None,
+) -> tuple[list[tuple[Any, Any, int, int | None]], list[tuple[list, int]]]:
+    """The merge loop over a collected (syms, cnt) word table.
 
+    Each step sums pair frequencies over adjacent symbols weighted by
+    cnt, drops pairs below ``min_freq`` (none left: stop) and takes the
+    argmax — (freq desc, left, right), or with ``score`` (WordPiece:
+    score(freq, count(left), count(right)) over per-symbol counts of the
+    current segmentation) (score desc, freq desc, left, right). Every
+    word is then rewritten with a greedy left-to-right non-overlapping
+    pass that replaces (left, right) by ``join(left, right, step)``.
 
-def _merge_strs_col(left: str, right: str):
-    """Greedy left-to-right non-overlapping merge application as a JVM
-    fold (round-9, guide §4.1 — the same machine as
-    wordpiece._wp_merge_col; replaces the per-iteration pandas UDF and
-    its Python-worker round-trip). State = (out, pend): each symbol
-    either completes the (left, right) pair with the pending symbol,
-    or flushes the pending symbol and becomes pending itself — exactly
-    the two-pointer loop of the old UDF (a merged pair consumes both
-    symbols, so an emitted merge can never re-merge with the next
-    symbol within the same pass). left/right bind via F.lit, not SQL
-    literals, so arbitrary symbol bytes need no escaping."""
-    merged = left + right
+    Each merge recounts the whole table: O(merges · table symbols),
+    plenty for the tens of merges the queries, pipeline and tests ask
+    for. The next step for real vocabulary sizes (tens of thousands of
+    merges) is an incremental pair index that updates only the counts
+    of the words containing the merged pair.
 
-    def step(acc, s):
-        out, pend = acc["out"], acc["pend"]
-        return (
-            F.when(pend.isNull(), F.struct(out.alias("out"), s.alias("pend")))
-            .when(
-                (pend == F.lit(left)) & (s == F.lit(right)),
-                F.struct(
-                    F.array_append(out, F.lit(merged)).alias("out"),
-                    F.lit(None).cast("string").alias("pend"),
-                ),
+    Returns ([(left, right, freq, score or None)], final word table)."""
+    merges: list[tuple[Any, Any, int, int | None]] = []
+    for step in range(n_merges):
+        pair_freq: Counter = Counter()
+        for syms, cnt in words:
+            for pair in zip(syms, syms[1:]):
+                pair_freq[pair] += cnt
+        cands = [(freq, pair) for pair, freq in pair_freq.items() if freq >= min_freq]
+        if not cands:
+            break
+        if score is None:
+            q = None
+            freq, (left, right) = min(cands, key=lambda c: (-c[0], c[1]))
+        else:
+            sym_freq: Counter = Counter()
+            for syms, cnt in words:
+                for s in syms:
+                    sym_freq[s] += cnt
+            q, freq, (left, right) = min(
+                ((score(f, sym_freq[p[0]], sym_freq[p[1]]), f, p) for f, p in cands),
+                key=lambda c: (-c[0], -c[1], c[2]),
             )
-            .otherwise(
-                F.struct(F.array_append(out, pend).alias("out"), s.alias("pend"))
-            )
-        )
+        merges.append((left, right, freq, q))
+        new = join(left, right, step)
+        words = [(_merge_pair(syms, left, right, new), cnt) for syms, cnt in words]
+    return merges, words
 
-    def fin(acc):
-        return F.when(acc["pend"].isNull(), acc["out"]).otherwise(
-            F.array_append(acc["out"], acc["pend"])
-        )
 
-    zero = F.struct(
-        F.expr("CAST(array() AS ARRAY<STRING>)").alias("out"),
-        F.lit(None).cast("string").alias("pend"),
-    )
-    return F.aggregate(F.col("syms"), zero, step, fin)
+def _merge_pair(syms: list, left, right, new) -> list:
+    out, i = [], 0
+    while i < len(syms):
+        if i + 1 < len(syms) and syms[i] == left and syms[i + 1] == right:
+            out.append(new)
+            i += 2
+        else:
+            out.append(syms[i])
+            i += 1
+    return out
+
+
+def _train_strings(docs: DataFrame, n_merges: int, min_freq: int):
+    """String BPE over the code-point split of the collected word table."""
+    words = [(list(w), cnt) for w, cnt in word_counts(docs).collect()]
+    return merge_words(words, n_merges, min_freq, lambda l, r, _: l + r)
 
 
 def train_merges(
@@ -107,112 +133,8 @@ def train_merges(
 
     Stops early when no pair reaches ``min_freq``.
     """
-    merges, words, live = _train_merges_with_words(docs, n_merges, min_freq)
-    # the word table is discarded here, so BOTH still-pinned
-    # checkpoints can be freed (the final one may be unmaterialized —
-    # freeing it just drops the persist mark). Fixes the round-9
-    # advice: this path used to leak two pinned RDDs per call.
-    for ids in live:
-        _free_checkpoint(words, ids)
-    return merges
-
-
-def _tracked_local_checkpoint(df: DataFrame, eager: bool = True) -> tuple[DataFrame, set]:
-    """localCheckpoint plus the ids of the RDD blocks it pinned, so the
-    iterative trainers can FREE superseded checkpoints via
-    _free_checkpoint: Dataset.unpersist() only talks to the SQL cache
-    manager and leaves checkpoint blocks resident for the whole
-    session — every training run would otherwise leak one cached RDD
-    per merge iteration. Driver code here is single-threaded, so the
-    before/after id diff cannot sweep someone else's cache.
-
-    eager=False registers the checkpoint (persist happens at marking
-    time, so the id diff still sees it) but defers materialization to
-    the next job over the relation — used by the merge loops so the
-    following argmax job doubles as the materializing action. Callers
-    must NOT free a lazy checkpoint's PARENT until some job has
-    materialized it (localCheckpoint is non-reliable: dropped parent
-    blocks cannot be recomputed)."""
-    sc = df.sparkSession.sparkContext
-    before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
-    out = df.localCheckpoint(eager=eager)
-    ids = set(sc._jsc.getPersistentRDDs().keySet().toArray()) - before
-    return out, ids
-
-
-def _free_checkpoint(df: DataFrame, ids: set) -> None:
-    scala_map = df.sparkSession.sparkContext._jsc.sc().getPersistentRDDs()
-    for rid in ids:
-        ref = scala_map.get(rid)
-        if ref.isDefined():
-            ref.get().unpersist(False)
-
-
-def _train_merges_with_words(
-    docs: DataFrame, n_merges: int, min_freq: int
-) -> tuple[list[tuple[str, str, int]], DataFrame, list[set]]:
-    """Training loop that also returns the fully-merged (syms, cnt)
-    word table — the apply stage (encoded_length_histogram) consumes
-    it directly instead of re-running every merge pass — plus the
-    list of still-pinned checkpoint id sets. A caller that consumes
-    the word table must keep them alive (the final checkpoint may be
-    unmaterialized and its parent is non-reliable); a caller that
-    discards the table should free them all."""
-    # initial checkpoint LAZY too (round-10): the first iteration's
-    # argmax job doubles as its materializing action — one fewer
-    # driver job per trainer call; the un-checkpointed word_counts
-    # lineage is recomputable, so laziness is safe even if nothing
-    # ever materializes it (n_merges=0)
-    words, ckpt = _tracked_local_checkpoint(
-        word_counts(docs).select(F.expr(_CHARS_EXPR).alias("syms"), "cnt"),
-        eager=False,
-    )
-    merges: list[tuple[str, str, int]] = []
-    # Per-merge LAZY localCheckpoint (round-9, the star-contraction
-    # discipline): lineage truncation is structural either way, and
-    # the next iteration's argmax job doubles as the materializing
-    # action — no extra checkpoint job per merge (the old eager form
-    # paid one), and every argmax reads a depth-≤1 fold over
-    # materialized blocks (a cadence-8 variant was A/B-measured: the
-    # recompute + codegen of 8-deep fold chains cost MORE cold than
-    # the per-merge materialize job it saved). Freeing is DEFERRED one
-    # iteration: a lazy checkpoint's parent blocks must stay alive
-    # until the argmax job has materialized it (localCheckpoint is
-    # non-reliable — dropped parent blocks cannot be recomputed).
-    old_ckpt: set | None = None
-    for _ in range(n_merges):
-        pairs = words.select(
-            F.explode(
-                F.expr(
-                    "transform(slice(syms, 1, size(syms) - 1),"
-                    " (s, i) -> struct(s AS l, syms[i + 1] AS r))"
-                )
-            ).alias("p"),
-            "cnt",
-        ).groupBy("p.l", "p.r").agg(F.sum("cnt").alias("freq"))
-        top = pairs.orderBy(F.desc("freq"), F.asc("l"), F.asc("r")).first()
-        # the argmax job above materialized the current lazy
-        # checkpoint, so its parent (two checkpoints back) is now
-        # safely recomputation-free to drop
-        if old_ckpt is not None:
-            _free_checkpoint(words, old_ckpt)
-            old_ckpt = None
-        if top is None or top["freq"] < min_freq:
-            break
-        merges.append((top["l"], top["r"], int(top["freq"])))
-        words, new_ckpt = _tracked_local_checkpoint(
-            words.select(
-                _merge_strs_col(top["l"], top["r"]).alias("syms"), "cnt"
-            ),
-            eager=False,
-        )
-        old_ckpt = ckpt
-        ckpt = new_ckpt
-    # the FINAL checkpoint stays alive: callers consume the word table
-    # (plus its parent when the last merge's checkpoint is still
-    # unmaterialized — the consumer's first job materializes it)
-    live = [ids for ids in (old_ckpt, ckpt) if ids is not None]
-    return merges, words, live
+    merges, _ = _train_strings(docs, n_merges, min_freq)
+    return [(l, r, f) for l, r, f, _ in merges]
 
 
 def encoded_length_histogram(docs: DataFrame, n_merges: int = 5) -> DataFrame:
@@ -221,25 +143,18 @@ def encoded_length_histogram(docs: DataFrame, n_merges: int = 5) -> DataFrame:
     compression curve a tokenizer team reads before shipping a vocab
     (n_syms → distinct words at that length, corpus occurrences).
 
-    Same scale shape as training — and the same WORK: the training
-    loop's final word table IS the fully-merged symbolization, so the
-    apply stage reuses it instead of re-tokenizing and re-running
-    every merge pass."""
-    # still-pinned trainer checkpoints deliberately stay alive: the
-    # returned lazy DataFrame consumes the word table, and a lazy
-    # final checkpoint's parent must survive until the consumer's
-    # first job materializes it (localCheckpoint is non-reliable).
-    # ContextCleaner frees both once the result is garbage.
-    _, words, _live = _train_merges_with_words(docs, n_merges, min_freq=2)
-    return (
-        words.select(F.size("syms").alias("n_syms"), "cnt")
-        .groupBy("n_syms")
-        .agg(
-            F.count(F.lit(1)).alias("n_words"),
-            F.sum("cnt").alias("n_occurrences"),
-        )
-        .orderBy("n_syms")
-    )
+    The training loop's final word table IS the fully-merged
+    symbolization, so the histogram is read off it locally."""
+    _, words = _train_strings(docs, n_merges, min_freq=2)
+    hist: dict[int, list[int]] = {}
+    for syms, cnt in words:
+        h = hist.setdefault(len(syms), [0, 0])
+        h[0] += 1
+        h[1] += cnt
+    return docs.sparkSession.createDataFrame(
+        [(n, w, o) for n, (w, o) in sorted(hist.items())],
+        schema="n_syms int, n_words long, n_occurrences long",
+    ).orderBy("n_syms")
 
 
 def encoded_length_histogram_sql(n_merges: int = 5, min_freq: int = 2) -> str:
@@ -336,10 +251,10 @@ w{k} AS (
 # Byte-level BPE (GPT-2-style): symbols are ints — 0..255 are raw
 # UTF-8 bytes, merged symbols take ids 256, 257, ... in merge order.
 # Training stops at ``vocab_size`` (the real tokenizer-training stop
-# condition) or when no pair reaches ``min_freq``. Compared to the
-# word-level trainer above, every shuffle carries 8-byte int pairs
-# instead of strings, and there is no out-of-vocabulary symbol by
-# construction (any byte sequence is encodable).
+# condition) or when no pair reaches ``min_freq``. Same local merge
+# loop as the word-level trainer above, over int symbols, and there is
+# no out-of-vocabulary symbol by construction (any byte sequence is
+# encodable).
 # ---------------------------------------------------------------------------
 
 _ARR_INT = T.ArrayType(T.IntegerType())
@@ -371,16 +286,6 @@ def gpt2_pre_tokenize(text: str) -> list[str]:
     return re.findall(GPT2_PRETOK_PY, text)
 
 
-# UTF-8 byte split as a JVM transform (round-9, guide §4.1): hex() of
-# a 1-byte binary slice conv'd back to decimal is the exact byte value
-# — verified equal to list(word.encode('utf-8')) including multi-byte
-# code points. No Python boundary in the trainer seed pass.
-_BYTES_EXPR = (
-    "transform(sequence(1, octet_length(encode(word, 'UTF-8'))),"
-    " i -> CAST(conv(hex(substring(encode(word, 'UTF-8'), i, 1)), 16, 10) AS INT))"
-)
-
-
 def word_counts_gpt2(docs: DataFrame) -> DataFrame:
     """(token, cnt) under GPT-2 pre-tokenization — case-preserving and
     whitespace-carrying (' word' tokens), unlike the lowercased
@@ -396,39 +301,6 @@ def word_counts_gpt2(docs: DataFrame) -> DataFrame:
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-
-
-def _merge_ints_col(left: int, right: int, new_id: int):
-    """Integer-symbol variant of _merge_strs_col: the same greedy
-    non-overlapping (left, right) → new_id fold as a JVM aggregate
-    (round-9, guide §4.1 — replaces the per-merge pandas UDF)."""
-
-    def step(acc, s):
-        out, pend = acc["out"], acc["pend"]
-        return (
-            F.when(pend.isNull(), F.struct(out.alias("out"), s.alias("pend")))
-            .when(
-                (pend == F.lit(left)) & (s == F.lit(right)),
-                F.struct(
-                    F.array_append(out, F.lit(new_id)).alias("out"),
-                    F.lit(None).cast("int").alias("pend"),
-                ),
-            )
-            .otherwise(
-                F.struct(F.array_append(out, pend).alias("out"), s.alias("pend"))
-            )
-        )
-
-    def fin(acc):
-        return F.when(acc["pend"].isNull(), acc["out"]).otherwise(
-            F.array_append(acc["out"], acc["pend"])
-        )
-
-    zero = F.struct(
-        F.expr("CAST(array() AS ARRAY<INT>)").alias("out"),
-        F.lit(None).cast("int").alias("pend"),
-    )
-    return F.aggregate(F.col("syms"), zero, step, fin)
 
 
 def train_bytes(
@@ -454,48 +326,9 @@ def train_bytes(
     if vocab_size <= 256:
         return []
     wc = word_counts_gpt2(docs) if pre_tokenizer == "gpt2" else word_counts(docs)
-    # initial checkpoint lazy — same argument as _train_merges_with_words
-    words, ckpt = _tracked_local_checkpoint(
-        wc.select(F.expr(_BYTES_EXPR).alias("syms"), "cnt"),
-        eager=False,
-    )
-    merges: list[tuple[int, int, int, int]] = []
-    # per-merge LAZY checkpoint with one-iteration deferred freeing —
-    # see _train_merges_with_words for the full argument
-    old_ckpt: set | None = None
-    for step in range(vocab_size - 256):
-        pairs = words.select(
-            F.explode(
-                F.expr(
-                    "transform(slice(syms, 1, size(syms) - 1),"
-                    " (s, i) -> struct(s AS l, syms[i + 1] AS r))"
-                )
-            ).alias("p"),
-            "cnt",
-        ).groupBy("p.l", "p.r").agg(F.sum("cnt").alias("freq"))
-        top = pairs.orderBy(F.desc("freq"), F.asc("l"), F.asc("r")).first()
-        if old_ckpt is not None:  # materialized by the argmax job above
-            _free_checkpoint(words, old_ckpt)
-            old_ckpt = None
-        if top is None or top["freq"] < min_freq:
-            break
-        new_id = 256 + step
-        merges.append((int(top["l"]), int(top["r"]), new_id, int(top["freq"])))
-        words, new_ckpt = _tracked_local_checkpoint(
-            words.select(
-                _merge_ints_col(top["l"], top["r"], new_id).alias("syms"), "cnt"
-            ),
-            eager=False,
-        )
-        old_ckpt = ckpt
-        ckpt = new_ckpt
-    # merges are collected; nothing reads the table — free BOTH live
-    # checkpoints (the last one may be unmaterialized; freeing an
-    # unmaterialized lazy checkpoint is just dropping its persist mark)
-    if old_ckpt is not None:
-        _free_checkpoint(words, old_ckpt)
-    _free_checkpoint(words, ckpt)
-    return merges
+    words = [(list(w.encode("utf-8")), cnt) for w, cnt in wc.collect()]
+    merges, _ = merge_words(words, vocab_size - 256, min_freq, lambda l, r, k: 256 + k)
+    return [(l, r, 256 + k, f) for k, (l, r, f, _) in enumerate(merges)]
 
 
 def vocab_tokens(merges: list[tuple[int, int, int, int]]) -> dict[int, bytes]:

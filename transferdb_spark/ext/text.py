@@ -1507,10 +1507,6 @@ def spread_narrow(df: DataFrame) -> DataFrame:
     condition, not the operator, is what makes it scale-safe. This is
     categorically different from the rejected relational shapes, which
     shuffled the n-gram EXPLOSION (~9x corpus text) by content key."""
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_NO_SPREAD"):
-        return df
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     try:

@@ -19,162 +19,47 @@ division the argmax orders by the integer-quantized
 
 — integer floor division is bit-identical on Spark and DuckDB, so the
 oracle is a full unrolled-CTE replay like BPE's, not a rows-only row.
-Ties break (score_q DESC, freq DESC, l, r). BIGINT bounds: freq·10^12
-needs freq < 9.2·10^6 — fine for the gate corpus; at 100-TB corpus
-scale the same expression moves to DECIMAL(38,0) unchanged in both
-engines (documented here rather than paid everywhere).
+Ties break (score_q DESC, freq DESC, l, r). The trainer computes
+score_q on Python ints, exact at any freq. The DuckDB twin computes it
+in BIGINT: freq·10^12 needs freq < 9.2·10^6 — fine for the gate
+corpus; at 100-TB corpus scale the twin's expression moves to
+DECIMAL(38,0) (documented here rather than paid everywhere).
 
-Scale shape = the BPE trainer's (the audited one): corpus → (word,
-cnt) once, then per merge: pair explode → map-side-combined groupBy,
-plus one symbol-count groupBy for the denominators; the driver sees
-ONE argmax row per iteration; merge application is a lazy JVM fold
-over the distinct-word table (round 9 — no Python round-trip), with
-localCheckpoint every 8 merges bounding the lineage and explicit
-block freeing.
+Scale shape = the BPE trainer's: corpus → (word, cnt) once, the one
+Spark action, collected once (vocabulary-sized by construction);
+the merge loop runs in plain Python in `bpe.merge_words`, which
+adds the per-symbol counts of the current segmentation as the score
+denominators.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from transferdb_spark.ext.bpe import (
-    _free_checkpoint,
-    _tracked_local_checkpoint,
-    word_counts,
-)
+from transferdb_spark.ext.bpe import merge_words, word_counts
 
 SCORE_SCALE = 10**12
 
 
-# initial segmentation as a JVM expression (round-9, guide §4.1): one
-# character per symbol with the ##-continuation prefix — substring and
-# length are code-point based on both engines, matching the Python
-# w[0]/w[1:] split the pandas UDF used to do, without the Arrow
-# round-trip on the training table's build pass.
-_WP_CHARS = (
-    "transform(sequence(1, length(word)),"
-    " i -> IF(i = 1, substring(word, 1, 1), '##' || substring(word, i, 1)))"
-)
-
-
-def _wp_merge_col(left: str, right: str):
-    """Greedy left-to-right non-overlapping merge application as a
-    JVM fold (round-9, guide §4.1 — replaces the per-iteration pandas
-    UDF and its Python-worker round-trip). State = (out, pend): each
-    symbol either completes the (left, right) pair with the pending
-    symbol, or flushes the pending symbol and becomes pending itself —
-    exactly the two-pointer loop of the old UDF (merged pairs consume
-    both symbols, so an emitted merge can never re-merge with the next
-    symbol this round). left/right bind via F.lit, not SQL literals,
-    so arbitrary token bytes need no escaping."""
-    merged = left + (right[2:] if right.startswith("##") else right)
-
-    def step(acc, s):
-        out, pend = acc["out"], acc["pend"]
-        return (
-            F.when(pend.isNull(), F.struct(out.alias("out"), s.alias("pend")))
-            .when(
-                (pend == F.lit(left)) & (s == F.lit(right)),
-                F.struct(
-                    F.array_append(out, F.lit(merged)).alias("out"),
-                    F.lit(None).cast("string").alias("pend"),
-                ),
-            )
-            .otherwise(
-                F.struct(F.array_append(out, pend).alias("out"), s.alias("pend"))
-            )
-        )
-
-    def fin(acc):
-        return F.when(acc["pend"].isNull(), acc["out"]).otherwise(
-            F.array_append(acc["out"], acc["pend"])
-        )
-
-    zero = F.struct(
-        F.expr("CAST(array() AS ARRAY<STRING>)").alias("out"),
-        F.lit(None).cast("string").alias("pend"),
-    )
-    return F.aggregate(F.col("syms"), zero, step, fin)
+def _wp_join(left: str, right: str, _step: int) -> str:
+    return left + (right[2:] if right.startswith("##") else right)
 
 
 def train_wordpiece(
     docs: DataFrame, n_merges: int = 10, min_freq: int = 2
 ) -> list[tuple[str, str, int, int]]:
     """Learn ``n_merges`` WordPiece merges over the documents corpus;
-    returns [(left, right, freq, score_q)] in merge order."""
-    # initial checkpoint LAZY (round-10, same as the BPE trainers):
-    # the first argmax job doubles as its materializing action — one
-    # fewer driver job per train; the un-checkpointed word_counts
-    # lineage is recomputable, so laziness is safe
-    words, ckpt = _tracked_local_checkpoint(
-        word_counts(docs).select(F.expr(_WP_CHARS).alias("syms"), "cnt"),
-        eager=False,
+    returns [(left, right, freq, score_q)] in merge order. The seed
+    segmentation is one symbol per code point, every non-initial one
+    carrying the ``##`` continuation prefix."""
+    words = [
+        ([w[0]] + ["##" + c for c in w[1:]], cnt)
+        for w, cnt in word_counts(docs).collect()
+    ]
+    merges, _ = merge_words(
+        words, n_merges, min_freq, _wp_join,
+        score=lambda freq, lcnt, rcnt: freq * SCORE_SCALE // (lcnt * rcnt),
     )
-    merges: list[tuple[str, str, int, int]] = []
-    # checkpoint CADENCE (round-9): merge application is now a lazy JVM
-    # fold, so a per-iteration localCheckpoint (one extra job each
-    # merge) is overkill — lineage still needs truncating for long
-    # trainings, but every 8 merges bounds the chain at ≤8 stacked
-    # folds (narrow, per-row, no Python) recomputed at most twice per
-    # argmax job. Measured at sf0.1: the per-iteration checkpoint was
-    # ~0.2 s/merge of pure job overhead on a vocabulary-sized table.
-    ckpt_every = 8
-    pending = 0
-    for _ in range(n_merges):
-        pairs = (
-            words.select(
-                F.explode(
-                    F.expr(
-                        "transform(slice(syms, 1, size(syms) - 1),"
-                        " (s, i) -> struct(s AS l, syms[i + 1] AS r))"
-                    )
-                ).alias("p"),
-                "cnt",
-            )
-            .groupBy("p.l", "p.r")
-            .agg(F.sum("cnt").alias("freq"))
-        )
-        # vocabulary-sized (≤ seed chars + merges so far): broadcast
-        # both denominator joins so the only shuffle per iteration is
-        # the two map-side-combined groupBys. (A round-9 A/B replaced
-        # the two broadcasts with one one-row map broadcast — it
-        # measured ~0.2 s SLOWER per train: the collect_list funnel
-        # adds a single-partition stage that costs more than the
-        # second broadcast build saves.)
-        sym_counts = (
-            words.select(F.explode("syms").alias("sym"), "cnt")
-            .groupBy("sym")
-            .agg(F.sum("cnt").alias("scnt"))
-        )
-        scored = (
-            pairs.join(F.broadcast(sym_counts.withColumnRenamed("sym", "l")), "l")
-            .withColumnRenamed("scnt", "lcnt")
-            .join(F.broadcast(sym_counts.withColumnRenamed("sym", "r")), "r")
-            .withColumnRenamed("scnt", "rcnt")
-            .where(F.col("freq") >= min_freq)
-            # integer-quantized likelihood score — exact in both engines
-            .withColumn(
-                "score_q",
-                F.expr(f"CAST(freq * {SCORE_SCALE}L DIV (lcnt * rcnt) AS BIGINT)"),
-            )
-        )
-        top = scored.orderBy(
-            F.desc("score_q"), F.desc("freq"), F.asc("l"), F.asc("r")
-        ).first()
-        if top is None:
-            break
-        merges.append((top["l"], top["r"], int(top["freq"]), int(top["score_q"])))
-        words = words.select(
-            _wp_merge_col(top["l"], top["r"]).alias("syms"), "cnt"
-        )
-        pending += 1
-        if pending >= ckpt_every:
-            words, new_ckpt = _tracked_local_checkpoint(words)
-            _free_checkpoint(words, ckpt)
-            ckpt = new_ckpt
-            pending = 0
-    _free_checkpoint(words, ckpt)
     return merges
 
 
@@ -192,7 +77,7 @@ def train_wordpiece_df(
 
 def wordpiece_vocab(merges: list[tuple[str, str, int, int]]) -> list[str]:
     """Merge table → added vocabulary tokens, in merge order."""
-    return [l + (r[2:] if r.startswith("##") else r) for l, r, _, _ in merges]
+    return [_wp_join(l, r, 0) for l, r, _, _ in merges]
 
 
 def encode_wordpiece(word: str, vocab: set[str], unk: str = "[UNK]") -> list[str]:

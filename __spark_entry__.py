@@ -284,10 +284,10 @@ ORDER BY 1
 def compare_diff_inserts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1/U3 — source-minus-target rows (INSERT repairs).
 
-    Production fast path: hash-weighted diff shuffles 16-byte row
-    hashes instead of the full payload, then recovers the (damage-
-    bounded) excess rows by joining back — see operators/diff.py
-    hashed_diff. Output multiset identical to exceptAll."""
+    Hash-weighted diff: shuffles 16-byte row hashes instead of the
+    full payload, then recovers the (damage-bounded) excess rows by
+    joining back — see operators/diff.py hashed_diff. Output multiset
+    identical to exceptAll."""
     from transferdb_spark.operators.diff import hashed_diff
 
     li = _t(spark, sf_dir, "lineitem")
@@ -585,8 +585,8 @@ ASSESS_NDV_SQL = "\nUNION ALL ".join(
 
 
 def assess_join_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join-key skew census — the input to the salted/hybrid join
-    decision (operators/skew.py) and AQE skew thresholds.
+    """Join-key skew census — the input to AQE skew-join thresholds
+    and to the choice between a broadcast and a shuffle join.
 
     For each candidate join key, the 3 hottest key values with their
     frequency and skew ratio (count / mean count per distinct key).

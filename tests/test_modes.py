@@ -663,40 +663,6 @@ def test_full_migrate_partitioned_layout_prunes(spark, sf_dir, workdir, lineitem
     assert out.count() == li.filter("ship_year = 1996").count()
 
 
-def test_incremental_compare_skips_unchanged_chunks(spark, sf_dir, tmp_path, lineitem):
-    from transferdb_spark.modes.compare_mode import compare_tables
-    from transferdb_spark.operators.compare_fixture import mutated_target
-
-    wd = str(tmp_path / "inc")
-    tgt = mutated_target(lineitem)
-    r1 = compare_tables(
-        spark, lineitem, tgt, "lineitem", wd, key="l_orderkey", n_chunks=8,
-        incremental=True,
-    )
-    assert r1.mismatched_chunks  # corruption detected on first run
-    assert r1.skipped_chunks == []
-    # second run, nothing changed on either side: every damaged chunk's
-    # checksums match the recorded state -> no phase-2 rescan, but the
-    # tables are STILL unequal — 'unchanged since last run' must not be
-    # conflated with 'equal'
-    r2 = compare_tables(
-        spark, lineitem, tgt, "lineitem", wd, key="l_orderkey", n_chunks=8,
-        incremental=True,
-    )
-    assert r2.mismatched_chunks == r1.mismatched_chunks
-    assert r2.skipped_chunks == r1.mismatched_chunks
-    assert r2.rescan_chunks == []
-    assert not r2.is_equal
-    # new damage in one chunk reactivates exactly that chunk's phase 2
-    tgt2 = tgt.filter("l_orderkey <> 42")
-    r3 = compare_tables(
-        spark, lineitem, tgt2, "lineitem", wd, key="l_orderkey", n_chunks=8,
-        incremental=True,
-    )
-    assert len(r3.rescan_chunks) == 1
-    assert set(r3.mismatched_chunks) >= set(r3.rescan_chunks)
-
-
 def test_keyless_rowid_chunk_plan(tmp_path, spark):
     """ROWID-analogue planning: contiguous, size-balanced file groups
     covering every part-file exactly once (full.go:42-93 semantics)."""
@@ -1138,7 +1104,7 @@ def test_prune_mode_lifecycle_and_snapshot(spark, sf_dir, workdir):
     assert json.load(open(s["summary_path"]))["docs_kept"] == s["docs_kept"]
 
     # stratified variant: every language retains ~its top quartile
-    s2 = prune_corpus(spark, sf_dir, workdir, per_lang=True, write_snapshot=False)
+    s2 = prune_corpus(spark, sf_dir, workdir, per_lang=True)
     assert persistent_ids() <= before
     assert s2["mode"] == "per_lang_quartile"
     assert 0 < s2["docs_kept"] < s2["docs_clean"]
@@ -1311,9 +1277,7 @@ def test_prune_mode_kn_scorer(spark, sf_dir, workdir):
         return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
 
     before = persistent_ids()
-    s = prune_corpus(
-        spark, sf_dir, workdir, keep_deciles=3, scorer="kn_lm", write_snapshot=False
-    )
+    s = prune_corpus(spark, sf_dir, workdir, keep_deciles=3, scorer="kn_lm")
     assert persistent_ids() <= before
     assert s["scorer"] == "kn_lm"
     assert 0 < s["docs_kept"] <= s["docs_clean"] <= s["docs_total"]

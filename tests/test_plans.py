@@ -268,52 +268,3 @@ def test_plan_lint_first_fold_no_hard_flags(queries, spark):
         tree = tree_of(p)
         for h in lint.HARD:
             assert h not in tree, (name, h)
-
-
-def test_bucketed_join_eliminates_both_exchanges(spark, sf_dir):
-    """Co-bucketed tables join with ZERO Exchange (and zero Sort when
-    bucket-sorted) — the write-once-shuffle-never-again layout for
-    repeated fact joins; an unbucketed twin join must show Exchanges,
-    proving the assertion bites."""
-    from pyspark.sql import functions as F
-
-    from transferdb_spark.plans.bucketing import (
-        bucketed_join,
-        joins_without_exchange,
-        write_bucketed,
-    )
-    from transferdb_spark.sources.registry import load_table
-
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    li = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("o_orderkey"), "l_quantity"
-    )
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # at fixture scale the planner would BROADCAST the small side
-        # (correctly — bucketing pays off when neither side fits);
-        # force the merge-join path the 100 TB shape would take
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        write_bucketed(orders, "bt_orders", "o_orderkey", n_buckets=8)
-        write_bucketed(li, "bt_lineitem", "o_orderkey", n_buckets=8)
-
-        j = bucketed_join(spark, "bt_orders", "bt_lineitem", "o_orderkey")
-        assert joins_without_exchange(j), (
-            j._jdf.queryExecution().executedPlan().toString()[:2000]
-        )
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("Bucketed: true") == 2  # both scans bucket-aware
-
-        # results match the plain join exactly
-        plain = orders.join(li, "o_orderkey")
-        assert j.count() == plain.count()
-        got = j.agg(F.sum(F.col("l_quantity").cast("decimal(18,2)"))).first()[0]
-        want = plain.agg(F.sum(F.col("l_quantity").cast("decimal(18,2)"))).first()[0]
-        assert got == want
-
-        # negative control: the unbucketed join DOES exchange
-        assert not joins_without_exchange(plain)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.sql("DROP TABLE IF EXISTS bt_orders")
-        spark.sql("DROP TABLE IF EXISTS bt_lineitem")

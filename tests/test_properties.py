@@ -224,7 +224,8 @@ def test_mulaw_codec_bounds_error_everywhere():
     and near-zero — not just a mid-amplitude sine."""
     import numpy as np
 
-    from transferdb_spark.ext.multimodal import _mulaw_expand, mulaw_compress
+    from media_fixtures import mulaw_compress
+    from transferdb_spark.ext.multimodal import _mulaw_expand
 
     rng = np.random.default_rng(99)
     for wave in [

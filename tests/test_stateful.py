@@ -5,61 +5,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 
-def test_user_activity_profile_matches_batch(spark, sf_dir, tmp_path):
-    from transferdb_spark.sources.registry import load_table
-    from transferdb_spark.streaming.stateful import run_profile_to_memory
-
-    events = load_table(spark, sf_dir, "events").drop("props")
-    src = str(tmp_path / "src")
-    events.coalesce(1).write.parquet(src)
-
-    q = run_profile_to_memory(spark, src, str(tmp_path / "ckpt"), name="t_profiles")
-    q.awaitTermination(120)
-
-    got = {
-        r["user_id"]: (r["cnt"], round(r["total"], 6))
-        for r in spark.sql("SELECT * FROM t_profiles").collect()
-    }
-    expected = {
-        r["user_id"]: (r["cnt"], round(r["total"], 6))
-        for r in events.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("cnt"), F.sum("value").alias("total"))
-        .collect()
-    }
-    assert got == expected
-
-
-def test_state_accumulates_across_batches(spark, sf_dir, tmp_path):
-    """Second micro-batch (one file per trigger) folds into existing
-    per-user state within one query run."""
-    from transferdb_spark.sources.registry import load_table
-    from transferdb_spark.streaming.stateful import run_profile_to_memory
-
-    events = load_table(spark, sf_dir, "events").drop("props")
-    first = events.filter(F.col("event_id") <= 500)
-    second = events.filter(F.col("event_id") > 500)
-
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    first.coalesce(1).write.mode("overwrite").parquet(src)
-    second.coalesce(1).write.mode("append").parquet(src)
-    q = run_profile_to_memory(spark, src, ckpt, name="t_acc", max_files_per_trigger=1)
-    q.awaitTermination(180)
-
-    # latest update per user must equal the full batch aggregate
-    latest = {
-        r["user_id"]: r["cnt"]
-        for r in spark.sql(
-            "SELECT user_id, max_by(cnt, cnt) AS cnt FROM t_acc GROUP BY user_id"
-        ).collect()
-    }
-    expected = {
-        r["user_id"]: r["cnt"]
-        for r in events.groupBy("user_id").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    assert latest == expected
-
-
 def test_streaming_dedup_first_seen_wins(spark, sf_dir, tmp_path):
     """Exact dedup over a document stream: duplicates WITHIN a batch
     collapse to the min doc_id, and duplicates of content seen in an
@@ -257,66 +202,6 @@ def test_streaming_funnel_matches_batch_counts(spark, sf_dir, tmp_path):
     want = {
         r["step"]: r["n_users"]
         for r in entry.funnel_conversion(spark, sf_dir).collect()
-    }
-    assert got == want
-
-
-def test_streaming_sessionize_matches_gap_sessions(spark, tmp_path):
-    """Event-time sessionization: out-of-order events inside a batch
-    sort into the right sessions, an in-key event farther than the gap
-    closes the previous session immediately, and the watermark tick
-    (driven by a later sentinel batch) flushes the final open
-    sessions. Closed sessions match the batch gap logic exactly."""
-    from datetime import datetime, timedelta
-
-    from transferdb_spark.streaming.stateful import streaming_sessionize
-
-    t0 = datetime(2026, 1, 1, 12, 0, 0)
-
-    def ev(uid, mins, val):
-        return (uid, t0 + timedelta(minutes=mins), float(val))
-
-    # user 1: session A = (0, 10, 20) min, session B = (80, 85) min
-    # user 2: one session = (5, 15) min; out-of-order arrival in batch
-    batch1 = [ev(1, 10, 2.0), ev(1, 0, 1.0), ev(2, 15, 5.0), ev(2, 5, 4.0)]
-    batch2 = [ev(1, 20, 3.0), ev(1, 80, 7.0), ev(1, 85, 8.0)]
-    sentinel = [ev(99, 24 * 60, 0.0)]  # far future: advances watermark
-    sentinel2 = [ev(98, 48 * 60, 0.0)]  # one more batch applies it
-
-    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
-    schema = "user_id long, ts timestamp, value double"
-    for i, rows in enumerate([batch1, batch2, sentinel, sentinel2]):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append" if i else "overwrite"
-        ).parquet(src)
-
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        streaming_sessionize(stream, gap_s=1800.0, watermark="0 seconds")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("t_sess")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    got = {
-        (r["user_id"], r["session_start"].minute + 60 * r["session_start"].hour,
-         r["n_events"], r["sum_value"])
-        for r in spark.sql(
-            "SELECT * FROM t_sess WHERE user_id IN (1, 2)"
-        ).collect()
-    }
-    want = {
-        (1, 12 * 60 + 0, 3, 6.0),   # 12:00-12:20, events at 0/10/20 min
-        (1, 13 * 60 + 20, 2, 15.0),  # 13:20-13:25
-        (2, 12 * 60 + 5, 2, 9.0),    # 12:05-12:15
     }
     assert got == want
 

@@ -198,41 +198,6 @@ def test_redo_stream_to_changes_distributed(spark):
     assert state == {"1": {"ID": "1", "BAL": "15"}}
 
 
-def test_op_filter_gate(spark, events):
-    from transferdb_spark.streaming.incr import OP_WHITELIST, filter_ops
-
-    out = filter_ops(events, min_scn=500)
-    rows = out.collect()
-    assert all(r["event_id"] > 500 for r in rows)
-    assert {r["event_type"] for r in rows} <= set(OP_WHITELIST)
-
-
-def test_session_windows_match_batch(spark, tmp_path, source_dir, events):
-    """Streaming session windows == batch session_window aggregation."""
-    from transferdb_spark.streaming.incr import run_sessions_to_memory
-
-    q = run_sessions_to_memory(spark, source_dir, str(tmp_path / "ck_sess"), name="t_sessions")
-    q.awaitTermination(180)
-
-    got = {
-        (r["user_id"], r["session_start"], r["n_events"], r["session_value"])
-        for r in spark.sql("SELECT * FROM t_sessions").collect()
-    }
-    batch = (
-        events.groupBy(F.session_window("ts", "30 minutes").alias("win"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,3)")).cast("double").alias("session_value"),
-        )
-        .select("user_id", F.col("win.start").alias("session_start"), "n_events", "session_value")
-    )
-    want = {
-        (r["user_id"], r["session_start"], r["n_events"], r["session_value"])
-        for r in batch.collect()
-    }
-    assert got == want
-
-
 def test_dedup_stream_drops_redelivered(spark, tmp_path, events):
     """Events delivered twice across micro-batches survive exactly once."""
     from transferdb_spark.streaming.incr import dedup_stream, stream_events
@@ -260,31 +225,6 @@ def test_dedup_stream_drops_redelivered(spark, tmp_path, events):
     got = spark.sql("SELECT event_id, COUNT(*) c FROM t_dedup GROUP BY 1 HAVING c > 1")
     assert got.count() == 0
     assert spark.sql("SELECT COUNT(*) c FROM t_dedup").collect()[0]["c"] == 600
-
-
-def test_stream_dimension_enrichment(spark, tmp_path, source_dir, events, sf_dir):
-    from transferdb_spark.sources.registry import load_table
-    from transferdb_spark.streaming.incr import enrich_stream_with_dimension, stream_events
-
-    # dimension: event_type -> weight
-    dim = spark.createDataFrame(
-        [("click", 1), ("view", 2), ("purchase", 3), ("signup", 4), ("error", 0)],
-        "event_type string, weight int",
-    )
-    stream = stream_events(spark, source_dir)
-    q = (
-        enrich_stream_with_dimension(stream, dim, "event_type")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("t_enrich")
-        .option("checkpointLocation", str(tmp_path / "ck_enrich"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    out = spark.sql("SELECT COUNT(*) c, COUNT(weight) w FROM t_enrich").collect()[0]
-    assert out["c"] == events.count()
-    assert out["w"] == out["c"]  # every type resolved
 
 
 def test_attribution_join_matches_batch(spark, tmp_path, events):

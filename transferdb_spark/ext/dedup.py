@@ -3,9 +3,10 @@
 Scale design (100 TB):
 - exact: hash-groupBy — map-side partial agg, shuffle carries one row
   per distinct digest.
-- n-gram Jaccard: shingle-inverted-index self-join — shuffle keyed on
-  shingle; hot shingles are the skew risk, handled by AQE skew split
-  (a frequency cap can be added as a pre-filter).
+- n-gram Jaccard, containment and the source-pair matrices: one
+  inverted-index self-join (`posting_pairs`) — shuffle keyed on the
+  posting key; hot shingles are the skew risk, bounded by the df cap
+  of the default path and by AQE skew split.
 - MinHash+LSH: signatures are computed *within the row* (array
   expressions, no explode until banding), then candidates emerge from
   a band-hash groupBy — O(docs × bands) shuffle rows instead of O(n²)
@@ -280,6 +281,46 @@ FROM documents
 """
 
 
+def posting_pairs(
+    rel: DataFrame,
+    key: str,
+    item: str,
+    names: tuple[str, str],
+    count: str,
+    carry: str | None = None,
+) -> DataFrame:
+    """(names[0], names[1][, n_a, n_b], count): every ``item`` pair
+    (a < b) sharing at least one ``key`` in the posting relation
+    ``rel``, with the number of keys they share. ``carry`` is a
+    per-item column kept for both sides as n_a / n_b.
+
+    The one inverted-index self-join of the dedup family. It is a
+    SHUFFLE_HASH join, not the default broadcast: both sides are the
+    SAME relation (callers persist it), so the two key exchanges are
+    identical subtrees and the second becomes a ReusedExchange — the
+    broadcast build (collect + hash-relation build + per-side cache
+    re-read) disappears. AQE skew-splitting applies (it never does for
+    broadcast), and at real scale the relation exceeds the broadcast
+    threshold anyway — this pins the plan the 100 TB run needs instead
+    of letting tiny-SF estimates pick a broadcast. Per-key fan-out is
+    the caller's bound: a df cap or the source count. A/B (alternating
+    ×5): sf0.1 med 2.32→1.61 s, sf0.5 med 3.59→2.90 s on the jaccard
+    form."""
+    a, b = rel.alias("a"), rel.alias("b")
+    groups = [F.col(f"a.{item}").alias(names[0]), F.col(f"b.{item}").alias(names[1])]
+    if carry is not None:
+        groups += [F.col(f"a.{carry}").alias("n_a"), F.col(f"b.{carry}").alias("n_b")]
+    return (
+        a.join(
+            b.hint("SHUFFLE_HASH"),
+            (F.col(f"a.{key}") == F.col(f"b.{key}"))
+            & (F.col(f"a.{item}") < F.col(f"b.{item}")),
+        )
+        .groupBy(*groups)
+        .agg(F.count(F.lit(1)).alias(count))
+    )
+
+
 def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Near-dup pairs by exact Jaccard over distinct word shingles.
 
@@ -294,22 +335,7 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
         "doc_id", F.size("sh").alias("n_sh"), F.expr(SHINGLE_HASHES).alias("shh")
     ).persist()
     sh = arr.select("doc_id", "n_sh", F.explode("shh").alias("shingle"))
-    a, b = sh.alias("a"), sh.alias("b")
-    # SHUFFLE_HASH self-join (round 10, §2.4/§3.1): both sides explode
-    # the SAME cached relation, so shuffling them on shingle makes the
-    # two exchanges identical and the second a ReusedExchange — the
-    # explode+shuffle pipeline runs once, and the broadcast build of
-    # the full exploded relation disappears.
-    common = (
-        a.join(b.hint("SHUFFLE_HASH"), (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.n_sh").alias("n_a"),
-            F.col("b.n_sh").alias("n_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
+    common = posting_pairs(sh, "shingle", "doc_id", ("doc_a", "doc_b"), "common", "n_sh")
     jac = stable_round(
         F.col("common") / (F.col("n_a") + F.col("n_b") - F.col("common")), 5
     )
@@ -568,30 +594,28 @@ ORDER BY p.doc_a, p.doc_b
 DF_CAP = 20
 
 
-def ngram_jaccard_rare_pairs(docs: DataFrame, threshold: float = 0.5, df_cap: int = DF_CAP) -> DataFrame:
-    """Jaccard over RARE shingles only (global document frequency <=
-    df_cap). The scale-hardening variant of ngram_jaccard_pairs: hot
-    shingles are exactly the inverted-index join's skew term (a
-    df=100k shingle alone yields 10^10 candidate pairs), and they
-    carry the least similarity signal. Capping df bounds per-shingle
-    join fan-out at df_cap^2 while the per-doc denominator counts only
-    rare shingles — semantics the oracle mirrors exactly."""
+def _rare_shingles(docs: DataFrame, df_cap: int) -> DataFrame:
+    """Persisted (doc_id, shingle, n_sh) over shingles whose global
+    document frequency is <= df_cap; n_sh counts a doc's rare
+    shingles. The df-capped posting relation of
+    [[ngram_jaccard_rare_pairs]] and [[containment_pairs]]: the cap
+    bounds every posting list, and so the self-join's per-key fan-out,
+    at df_cap rows per side.
+
+    df filtering and the per-doc rare count are windows over the
+    exploded relation — each is one shuffle, replacing the
+    groupBy+join pairs (two fewer shuffles and no broadcast of the
+    rare-shingle set). The persist sits ABOVE the window chain, so both
+    self-join sides read the cached relation and the windows run once.
+    Round-9 A/B (REJECTED): a groupBy(shingle)+collect_list
+    posting-list form (hot-shingle broadcast anti-join prefilter,
+    row-local pair generation from the ≤cap sorted list, per-doc counts
+    attached by join) measured 1.93 s vs 1.28 s for this shape at sf0.1
+    — the extra df-count pass over the exploded relation plus the two
+    attach joins cost more than the window sorts they replaced.
+    Oracle-green both ways; reverted on measurement (§1.2)."""
     from pyspark.sql.window import Window
 
-    # persist BEFORE the df-count so tokenize+shingle (the expensive
-    # narrow stage) runs once, not once per consumer; df filtering and
-    # the per-doc rare count are windows over the exploded relation —
-    # each is one shuffle, replacing the groupBy+join pairs (two fewer
-    # shuffles and no broadcast of the rare-shingle set).
-    # Round-9 A/B (REJECTED): a groupBy(shingle)+collect_list posting-
-    # list form (hot-shingle broadcast anti-join prefilter, row-local
-    # pair generation from the ≤cap sorted list, per-doc counts
-    # attached by join) measured 1.93 s vs 1.28 s for this shape at
-    # sf0.1 — the extra df-count pass over the exploded relation plus
-    # the two attach joins cost more than the window sorts they
-    # replaced, and AQE already reuses the identical shuffle stages of
-    # the self-join's two sides at runtime. Oracle-green both ways;
-    # reverted on measurement (§1.2).
     arr = _shingled(docs).select(
         "doc_id", F.explode(F.expr(SHINGLE_HASHES)).alias("shingle")
     )
@@ -600,36 +624,21 @@ def ngram_jaccard_rare_pairs(docs: DataFrame, threshold: float = 0.5, df_cap: in
         .filter(F.col("df") <= df_cap)
         .drop("df")
     )
-    sh = kept.withColumn(
+    return kept.withColumn(
         "n_sh", F.count(F.lit(1)).over(Window.partitionBy("doc_id"))
     ).persist()
-    a, b = sh.alias("a"), sh.alias("b")
-    # SHUFFLE_HASH self-join instead of the default broadcast (round
-    # 10, guide §2.4/§3.1): both sides are the SAME cached relation,
-    # so the two shingle exchanges are identical subtrees and the
-    # second becomes a ReusedExchange — the broadcast build (collect +
-    # hash-relation build + per-side cache re-read) disappears.
-    # Skew-safe by construction: df <= df_cap bounds every join key to
-    # <= df_cap rows per side, so no partition's hash table can be
-    # dominated by one key, and AQE skew-splitting applies (it never
-    # does for broadcast). At real scale the relation exceeds the
-    # broadcast threshold anyway — this pins the plan the 100 TB run
-    # needs instead of letting tiny-SF estimates pick a broadcast.
-    # A/B (alternating ×5): sf0.1 med 2.32→1.61 s, sf0.5 med
-    # 3.59→2.90 s on the jaccard form.
-    common = (
-        a.join(
-            b.hint("SHUFFLE_HASH"),
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.n_sh").alias("n_a"),
-            F.col("b.n_sh").alias("n_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("common"))
+
+
+def ngram_jaccard_rare_pairs(docs: DataFrame, threshold: float = 0.5, df_cap: int = DF_CAP) -> DataFrame:
+    """Jaccard over RARE shingles only (global document frequency <=
+    df_cap). The scale-hardening variant of ngram_jaccard_pairs: hot
+    shingles are exactly the inverted-index join's skew term (a
+    df=100k shingle alone yields 10^10 candidate pairs), and they
+    carry the least similarity signal. Capping df bounds per-shingle
+    join fan-out at df_cap^2 while the per-doc denominator counts only
+    rare shingles — semantics the oracle mirrors exactly."""
+    common = posting_pairs(
+        _rare_shingles(docs, df_cap), "shingle", "doc_id", ("doc_a", "doc_b"), "common", "n_sh"
     )
     jac = stable_round(F.col("common") / (F.col("n_a") + F.col("n_b") - F.col("common")), 5)
     return common.select(
@@ -729,50 +738,8 @@ def containment_pairs(docs: DataFrame, threshold: float = 0.8, df_cap: int = DF_
     either direction crosses the threshold. Denominators count RARE
     shingles only — mirrored exactly by the oracle.
     """
-    from pyspark.sql.window import Window
-
-    arr = _shingled(docs).select(
-        "doc_id", F.explode(F.expr(SHINGLE_HASHES)).alias("shingle")
-    )
-    kept = (
-        arr.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("shingle")))
-        .filter(F.col("df") <= df_cap)
-        .drop("df")
-    )
-    # persist ABOVE the window chain (round 9, same move as
-    # ngram_jaccard_rare_pairs): the broadcast self-join's sides cannot
-    # share shuffle stages, so a below-window persist ran both windows
-    # once per side
-    sh = kept.withColumn(
-        "n_sh", F.count(F.lit(1)).over(Window.partitionBy("doc_id"))
-    ).persist()
-    a, b = sh.alias("a"), sh.alias("b")
-    # SHUFFLE_HASH self-join instead of the default broadcast (round
-    # 10, guide §2.4/§3.1): both sides are the SAME cached relation,
-    # so the two shingle exchanges are identical subtrees and the
-    # second becomes a ReusedExchange — the broadcast build (collect +
-    # hash-relation build + per-side cache re-read) disappears.
-    # Skew-safe by construction: df <= df_cap bounds every join key to
-    # <= df_cap rows per side, so no partition's hash table can be
-    # dominated by one key, and AQE skew-splitting applies (it never
-    # does for broadcast). At real scale the relation exceeds the
-    # broadcast threshold anyway — this pins the plan the 100 TB run
-    # needs instead of letting tiny-SF estimates pick a broadcast.
-    # A/B (alternating ×5): sf0.1 med 2.32→1.61 s, sf0.5 med
-    # 3.59→2.90 s on the jaccard form.
-    common = (
-        a.join(
-            b.hint("SHUFFLE_HASH"),
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.n_sh").alias("n_a"),
-            F.col("b.n_sh").alias("n_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("common"))
+    common = posting_pairs(
+        _rare_shingles(docs, df_cap), "shingle", "doc_id", ("doc_a", "doc_b"), "common", "n_sh"
     )
     c_ab = stable_round(F.col("common") / F.col("n_a"), 5)
     c_ba = stable_round(F.col("common") / F.col("n_b"), 5)
@@ -1208,17 +1175,7 @@ def cross_source_overlap(docs: DataFrame, prefix_tokens: int = 8) -> DataFrame:
     # same argument as source_jaccard (round 9)
     d = docs.select("source", portable_hash64(lead).alias("digest")).distinct().persist()
     per_source = d.groupBy("source").agg(F.count(F.lit(1)).alias("n_distinct"))
-    a, b = d.alias("a"), d.alias("b")
-    # SHUFFLE_HASH self-join (round 10): per-digest fan-out is bounded
-    # by the source count, and the cached sides share one exchange.
-    shared = (
-        a.join(b.hint("SHUFFLE_HASH"), "digest")
-        .where(F.col("a.source") < F.col("b.source"))
-        .groupBy(
-            F.col("a.source").alias("source_a"), F.col("b.source").alias("source_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
+    shared = posting_pairs(d, "digest", "source", ("source_a", "source_b"), "n_shared")
     na = per_source.select(
         F.col("source").alias("source_a"), F.col("n_distinct").alias("n_a")
     )
@@ -1595,15 +1552,7 @@ def source_jaccard(docs: DataFrame) -> DataFrame:
     # (broadcast sides cannot reuse shuffle stages — round 9)
     pairs = _source_shingle_hashes(docs).distinct().persist()
     totals = pairs.groupBy("src").agg(F.count(F.lit(1)).alias("n"))
-    a, b = pairs.alias("a"), pairs.alias("b")
-    # SHUFFLE_HASH self-join (round 10): per-hash fan-out is bounded
-    # by the source count, and the cached sides share one exchange.
-    inter = (
-        a.join(b.hint("SHUFFLE_HASH"), "h")
-        .where(F.col("a.src") < F.col("b.src"))
-        .groupBy(F.col("a.src").alias("source_a"), F.col("b.src").alias("source_b"))
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
+    inter = posting_pairs(pairs, "h", "src", ("source_a", "source_b"), "n_inter")
     na = totals.select(F.col("src").alias("source_a"), F.col("n").alias("n_a"))
     nb = totals.select(F.col("src").alias("source_b"), F.col("n").alias("n_b"))
     return (

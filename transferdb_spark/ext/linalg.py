@@ -6,8 +6,7 @@ pruning, matryoshka truncation checks. Spark-first shape: the d×d
 second-moment matrix is one explode over the (i<=j) pair list and one
 groupBy with map-side combine — shuffle carries d(d+1)/2 keyed rows
 per partition, never the vectors; the matrix itself is model-sized
-(d², driver-legal), so eigendecomposition runs in numpy on the driver
-and the projection goes back out as a narrow per-row expression.
+(d², driver-legal).
 
 Cross-engine exactness: elements quantize to int64 at 2^20 (the
 ext/similarity.py contract — power-of-two multiply is exact on the
@@ -19,7 +18,6 @@ bit with no float-order concerns.
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -75,50 +73,3 @@ FROM q CROSS JOIN pairs
 GROUP BY i, j
 ORDER BY i, j
 """
-
-
-def covariance_matrix(emb: DataFrame, dims: int) -> tuple[np.ndarray, np.ndarray]:
-    """Driver-side (d×d covariance, d-vector means) assembled from the
-    exact integer moments (d² values — model-sized by definition)."""
-    rows = embedding_second_moments(emb, dims).collect()
-    cov = np.zeros((dims, dims))
-    means = np.zeros(dims)
-    for r in rows:
-        n = int(r["n"])
-        s_x, s_y, s_xy = (float(r["s_x"]), float(r["s_y"]), float(r["s_xy"]))
-        c = (s_xy - s_x * s_y / n) / n / (QSCALE * QSCALE)
-        cov[r["i"] - 1, r["j"] - 1] = c
-        cov[r["j"] - 1, r["i"] - 1] = c
-        if r["i"] == r["j"]:
-            means[r["i"] - 1] = s_x / n / QSCALE
-    return cov, means
-
-
-def pca_project(emb: DataFrame, k: int = 4, dims: int = 64) -> DataFrame:
-    """(vec_id, pc ARRAY<DOUBLE>) — embeddings projected onto the top-k
-    principal components.
-
-    The eigendecomposition is numpy on the d×d driver matrix (the only
-    sane place for it); the projection ships the k×d component matrix
-    back as LITERALS inside a narrow aggregate expression — one scan,
-    no shuffle, no UDF. Component sign is fixed deterministically
-    (largest-|loading| coordinate made positive) so the output is
-    reproducible across eigensolvers."""
-    cov, means = covariance_matrix(emb, dims)
-    vals, vecs = np.linalg.eigh(cov)
-    order = np.argsort(vals)[::-1][:k]
-    comps = vecs[:, order].T  # (k, d)
-    for r in range(comps.shape[0]):
-        lead = int(np.argmax(np.abs(comps[r])))
-        if comps[r, lead] < 0:
-            comps[r] = -comps[r]
-    proj_cols = []
-    for r in range(comps.shape[0]):
-        # float() before !r: numpy>=2 reprs scalars as np.float64(x),
-        # which the SQL parser rejects
-        terms = " + ".join(
-            f"(embedding[{d}] - {float(means[d])!r}d) * {float(comps[r, d])!r}d"
-            for d in range(dims)
-        )
-        proj_cols.append(F.expr(terms).cast("double"))
-    return emb.select("vec_id", F.array(*proj_cols).alias("pc")).orderBy("vec_id")

@@ -10,16 +10,12 @@ codec work for the formats decodable with the stdlib + numpy:
   numpy.fft).
 - **PPM (P6)**, **BMP (24-bit BI_RGB)** and **baseline JPEG**
   (ext/jpeg.py) images: header parse → (h, w, 3) pixel array →
-  channel stats / luminance histogram / nearest-neighbour resize
-  (re-encoded as PPM) / dHash near-dup.
-- **raw RGB24 video** (concatenated frames): frame slicing by
-  width×height×3 stride — real frame sampling.
+  channel stats / luminance histogram / dHash near-dup.
 
 Every other format raises NotImplementedError from the same dispatch
 point (`decode_image` / `decode_wav`), and the operators quarantine
-it: `image_phashes` gives NULL and `resize_images` passes the bytes
-through, so wiring a full codec library in production replaces one
-function.
+it (`image_phashes` gives NULL), so wiring a full codec library in
+production replaces one function.
 
 Scale design: media bytes never pass through Python row-at-a-time —
 `mapInPandas` streams Arrow record batches; partition counts follow
@@ -108,11 +104,6 @@ def _decode_ppm(buf: bytes) -> np.ndarray:
     return np.frombuffer(buf, dtype=np.uint8, count=w * h * 3, offset=pos).reshape(h, w, 3)
 
 
-def encode_ppm(px: np.ndarray) -> bytes:
-    h, w = px.shape[:2]
-    return b"P6 %d %d 255\n" % (w, h) + px.astype(np.uint8).tobytes()
-
-
 def _decode_bmp(buf: bytes) -> np.ndarray:
     # BITMAPFILEHEADER (14B) + BITMAPINFOHEADER: uncompressed 24bpp only
     data_off = struct.unpack_from("<I", buf, 10)[0]
@@ -175,16 +166,6 @@ def _mulaw_expand(u: np.ndarray) -> np.ndarray:
     mant = u & 0x0F
     mag = ((mant.astype(np.int32) << 3) + 0x84 << exp) - 0x84
     return (sign * mag / 32635.0).astype(np.float32)
-
-
-def mulaw_compress(wave: np.ndarray) -> bytes:
-    """Encoder twin for tests (float [-1,1] → mu-law bytes)."""
-    x = np.clip(wave, -1.0, 1.0)
-    sign = np.where(x < 0, 0x80, 0)
-    mag = np.minimum((np.abs(x) * 32635.0).astype(np.int32) + 0x84, 0x7FFF)
-    exp = (np.floor(np.log2(mag)) - 7).astype(np.int32)
-    mant = (mag >> (exp + 3)) & 0x0F
-    return (((sign | (exp << 4) | mant) ^ 0xFF) & 0xFF).astype(np.uint8).tobytes()
 
 
 # ---------------------------------------------------------------------------
@@ -270,118 +251,6 @@ def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
             )
 
     return media.mapInPandas(run, schema=_FEATURES_SCHEMA)
-
-
-def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Nearest-neighbour resize of decodable images, re-encoded as PPM.
-
-    Real pixel work in numpy (index-map resize); undecodable payloads
-    and non-image media pass through unchanged so a mixed corpus
-    doesn't abort — the same quarantine stance as the chunk error log."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            out = []
-            for kind, c in zip(pdf["kind"], pdf["content"]):
-                if c is None or kind != "image":
-                    out.append(c)
-                    continue
-                try:
-                    px = decode_image(bytes(c))
-                except (NotImplementedError, ValueError):
-                    out.append(c)  # passthrough: no codec for this format
-                    continue
-                h, w = px.shape[:2]
-                yi = (np.arange(height) * h // height).clip(0, h - 1)
-                xi = (np.arange(width) * w // width).clip(0, w - 1)
-                out.append(encode_ppm(px[yi][:, xi]))
-            pdf["content"] = out
-            yield pdf
-
-    resized = F.struct(
-        F.lit("image/x-portable-pixmap").alias("mime"),
-        F.lit(width).alias("width"),
-        F.lit(height).alias("height"),
-        F.col("meta.duration_ms").alias("duration_ms"),
-    )
-    return media.mapInPandas(run, schema=MEDIA_SCHEMA).withColumn(
-        "meta", F.when(F.col("kind") == "image", resized).otherwise(F.col("meta"))
-    )
-
-
-_FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("offset_ms", T.IntegerType()),
-        T.StructField("frame", T.BinaryType()),
-    ]
-)
-
-
-def sample_frames(media: DataFrame, every_ms: int = 1000, fps: int = 10) -> DataFrame:
-    """Video frame sampling with REAL frame extraction for raw RGB24
-    streams (mime video/raw-rgb24: concatenated width×height×3
-    frames). Compressed containers yield NULL frames (decoder hook
-    point)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, c, meta in zip(pdf["media_id"], pdf["content"], pdf["meta"]):
-                meta = meta or {}
-                dur = int(meta.get("duration_ms") or 0)
-                w, h = int(meta.get("width") or 0), int(meta.get("height") or 0)
-                raw = meta.get("mime") == "video/raw-rgb24" and c is not None and w and h
-                fsize = w * h * 3
-                n_frames = len(c) // fsize if raw else 0
-                for off in range(0, dur + 1, every_ms):
-                    frame = None
-                    if raw:
-                        idx = min(off * fps // 1000, max(n_frames - 1, 0))
-                        frame = bytes(c[idx * fsize : (idx + 1) * fsize]) or None
-                    rows.append((mid, off, frame))
-            yield pd.DataFrame(rows, columns=["media_id", "offset_ms", "frame"])
-
-    return media.filter(F.col("kind") == "video").mapInPandas(run, schema=_FRAME_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# synthetic fixtures (deterministic, no external files)
-
-
-def synthetic_media(spark, n: int = 64, kind: str = "image") -> DataFrame:
-    """Deterministic fake media table for tests (no external files)."""
-    rows = []
-    for i in range(n):
-        payload = bytes((i * 31 + j * 7) % 256 for j in range(128 + i))
-        rows.append((i, kind, payload, ("application/octet-stream", 8, 8, 4000)))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def synthetic_wav(freq_hz: float = 440.0, ms: int = 250, rate: int = 8000) -> bytes:
-    """A real PCM-16 WAV byte string (sine tone), built with struct."""
-    t = np.arange(int(rate * ms / 1000)) / rate
-    pcm = (np.sin(2 * np.pi * freq_hz * t) * 0.5 * 32767).astype("<i2").tobytes()
-    hdr = b"RIFF" + struct.pack("<I", 36 + len(pcm)) + b"WAVE"
-    fmt = b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, rate, rate * 2, 2, 16)
-    return hdr + fmt + b"data" + struct.pack("<I", len(pcm)) + pcm
-
-
-def synthetic_ppm(w: int = 16, h: int = 12, seed: int = 0) -> bytes:
-    """A real P6 PPM byte string with a deterministic gradient."""
-    yy, xx = np.mgrid[0:h, 0:w]
-    px = np.stack(
-        [(xx * 17 + seed) % 256, (yy * 29 + seed) % 256, (xx + yy + seed) % 256], axis=-1
-    ).astype(np.uint8)
-    return encode_ppm(px)
-
-
-def synthetic_raw_video(w: int = 8, h: int = 6, n_frames: int = 20) -> bytes:
-    """Concatenated raw RGB24 frames; frame k is filled with value k."""
-    return b"".join(
-        np.full((h, w, 3), k % 256, dtype=np.uint8).tobytes() for k in range(n_frames)
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -22,9 +22,9 @@ Spark-first plan shape (designed for the 100 TB case):
   integers per iteration — a legal small aggregate, not row data.
 - ASSIGNMENT is a stateless narrow pass (no join, no shuffle).
 - PRUNING self-joins on the cluster key — one hash shuffle keyed on
-  cluster; pair work is bounded by cluster sizes, which is why
-  `recommended_k` scales k with the corpus (SemDeDup production runs
-  use k ≈ n/5000-class clusters for the same reason). A pathological
+  cluster; pair work is bounded by cluster sizes, which is why k must
+  scale with the corpus (SemDeDup production runs use k ≈
+  n/5000-class clusters for this reason). A pathological
   giant cluster is the skew knob: AQE skew-join splitting handles the
   join side, and the k sizing keeps expected |cluster| flat as n grows.
 
@@ -63,27 +63,11 @@ from transferdb_spark.ext.similarity import (
 )
 from transferdb_spark.functions.canonical import stable_round, stable_round_sql
 
-K = 8  # oracle-pinned test scale; production passes recommended_k(count)
+K = 8  # oracle-pinned test scale; production grows k with the row count
 ITERS = 2  # fixed Lloyd rounds — the oracle unrolls them, so keep small
 THRESHOLD = 0.3  # fixture embeddings are near-orthogonal; SemDeDup's
 # paper threshold (~0.95+ on L2-normalized CLIP space) maps here to the
 # same "top fraction of in-cluster cosines" regime.
-
-
-def recommended_k(n_rows: int, target_cluster_rows: int = 4096) -> int:
-    """Data-driven cluster count: prune work is Σ|cluster|² ≈
-    n·target_cluster_rows when clusters stay near the target size, so
-    k must grow linearly with the corpus. At 10^10 vectors and the
-    default target this asks for ~2.4M clusters — at that point the
-    centroid matrix no longer fits a UDF closure and assignment
-    becomes the IVF route (ext/similarity.ivf_assign) over a coarse
-    quantizer; the clamp documents where this implementation's
-    closure-shipped design stops."""
-    import math
-
-    if n_rows <= target_cluster_rows:
-        return K
-    return max(K, min(65536, math.ceil(n_rows / target_cluster_rows)))
 
 
 def _init_centroids(emb: DataFrame, k: int) -> list[list[int]]:
@@ -456,7 +440,7 @@ def cluster_balanced_sample(emb: DataFrame, k: int = K, iters: int = ITERS) -> D
 
     Scale: one hash shuffle on the cluster key (shared with the size
     window), then per-cluster windows — parallel across k clusters,
-    with |cluster| kept flat by `recommended_k`. sqrt and ceil are
+    with |cluster| kept flat by growing k with the corpus. sqrt and ceil are
     correctly-rounded IEEE ops, so quotas are engine-exact."""
     from pyspark.sql import Window
 

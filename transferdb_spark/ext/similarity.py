@@ -262,18 +262,6 @@ def derived_planes(
     return max(lo, min(hi, math.ceil(math.log2(n_rows / target_bucket_rows))))
 
 
-def recommended_planes(n_rows: int, target_bucket_rows: int = 4096) -> int:
-    """Data-driven hyperplane count: enough planes that the EXPECTED
-    bucket occupancy n/2^p lands at ~target_bucket_rows, clamped to
-    [N_PLANES, 24]. This is the 100 TB guard the fixed test-scale
-    N_PLANES=4 lacks: at 10^10 vectors, 4 planes = 16 buckets of ~6×10^8
-    candidates each (an unbounded straggler bucket); 21-24 planes keep
-    the per-bucket exact-cosine work bounded. More planes trade recall
-    for cost — recover recall with multi-probe (ann_topk_multiprobe
-    probes the 1-bit-flip neighbourhood, cost ×(1+p))."""
-    return derived_planes(n_rows, target_bucket_rows)
-
-
 def ann_topk_lsh_auto(
     emb: DataFrame,
     query_vec_id: int = 0,
@@ -452,7 +440,7 @@ def lsh_buckets(emb: DataFrame, n_planes: int | None = None) -> DataFrame:
     """vec_id, bucket — one narrow pass, no shuffle.
 
     n_planes=None keeps the oracle-pinned test-scale default; production
-    passes recommended_planes(count) to bound bucket occupancy."""
+    passes derived_planes(count) to bound bucket occupancy."""
     udf = bucket_udf if n_planes is None else make_bucket_udf(n_planes)
     return emb.select("vec_id", udf(F.col("embedding")).alias("bucket"))
 
@@ -687,21 +675,6 @@ N_CELLS = 16
 N_PROBE = 4
 
 
-def recommended_cells(n_rows: int, target_cell_rows: int = 4096, n_probe: int = N_PROBE) -> int:
-    """Data-driven IVF cell count: candidate work per query is
-    ~n·n_probe/cells, so size cells to keep the probed candidate set
-    near n_probe·target_cell_rows. Same 100 TB guard as
-    recommended_planes — a fixed 16 cells means ~6×10⁸ candidates per
-    cell at 10^10 vectors. Clamped to [N_CELLS, 65536]; production
-    would also switch pivots from the first-k rows to sampled k-means
-    centroids (the first-k choice here keeps the oracle deterministic)."""
-    import math
-
-    if n_rows <= target_cell_rows:
-        return N_CELLS
-    return max(N_CELLS, min(65536, math.ceil(n_rows / target_cell_rows)))
-
-
 def _pivot_matrix(emb: DataFrame, n_cells: int = N_CELLS) -> np.ndarray:
     rows = (
         emb.filter(F.col("vec_id") < n_cells)
@@ -745,8 +718,9 @@ def ann_topk_ivf(
 ) -> DataFrame:
     """IVF ANN top-k: exact cosine within the probed cells only.
 
-    n_cells defaults to the oracle-pinned test scale; production passes
-    recommended_cells(count) to bound per-cell candidate work."""
+    n_cells defaults to the oracle-pinned test scale; production sizes
+    it from the row count (about count / 4096 cells) to bound per-cell
+    candidate work."""
     pivots = _pivot_matrix(emb, n_cells)
     q_row = emb.filter(F.col("vec_id") == query_vec_id).select("embedding").collect()
     qvec = np.array([q_row[0]["embedding"]], dtype=np.float64)
@@ -851,7 +825,7 @@ def knn_label_vote(emb: DataFrame, k: int = 5) -> DataFrame:
     of the k nearest in-bucket neighbours (exact quantized cosine;
     candidate set bounded by the LSH bucket, never all-pairs, so the
     self-join cost is Σ bucket² — the standard banded-kNN shape that
-    survives 10^10 vectors with recommended_planes). Vectors alone in
+    survives 10^10 vectors with derived_planes). Vectors alone in
     their bucket have no neighbours and drop out (an ANN index that
     cannot produce candidates cannot vote). Deterministic ties:
     neighbour rank (cosine DESC, vec_id ASC), vote rank

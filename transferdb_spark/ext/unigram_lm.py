@@ -56,7 +56,6 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from transferdb_spark.ext.bpe import word_counts
-from transferdb_spark.ext.text import spread_narrow as _spread
 
 SCALE = 1_000_000
 VOCAB_SIZE = 200
@@ -243,37 +242,3 @@ def unigram_vocab(
     rows = [(p, c, s) for p, (c, s) in sorted(model.items())]
     out = spark.createDataFrame(rows, "piece string, cnt bigint, score_micro bigint")
     return out.orderBy(F.desc("score_micro"), "piece")
-
-
-def unigram_encode_stats(
-    docs: DataFrame,
-    vocab_size: int = VOCAB_SIZE,
-    seed_size: int = SEED_SIZE,
-    max_piece_len: int = MAX_PIECE_LEN,
-    iters: int = ITERS,
-    k: int = 20,
-) -> DataFrame:
-    """Encode the corpus with the trained model: per-doc piece count
-    and total path score; top-k docs by piece count (desc), doc_id.
-
-    The encode pass is the production shape: model broadcast in the
-    UDF closure, one narrow Arrow pass over the corpus, no shuffle
-    beyond the final ordered take."""
-    model = train_unigram(docs, vocab_size, seed_size, max_piece_len, iters)
-    scores = {p: s for p, (_, s) in model.items()}
-    seg = _segment_udf(scores, max_piece_len)
-    from transferdb_spark.ext.text import TOKENS
-
-    toks = _spread(docs).select("doc_id", F.expr(TOKENS).alias("t"))
-    per_word = toks.select(
-        "doc_id", F.explode("t").alias("word")
-    ).select("doc_id", seg(F.col("word")).alias("pieces"))
-    return (
-        per_word.groupBy("doc_id")
-        .agg(
-            F.sum(F.size("pieces")).cast("long").alias("n_pieces"),
-            F.count(F.lit(1)).cast("long").alias("n_words"),
-        )
-        .orderBy(F.desc("n_pieces"), "doc_id")
-        .limit(k)
-    )

@@ -75,34 +75,6 @@ def train_wordpiece_df(
     ).orderBy("rank")
 
 
-def wordpiece_vocab(merges: list[tuple[str, str, int, int]]) -> list[str]:
-    """Merge table → added vocabulary tokens, in merge order."""
-    return [_wp_join(l, r, 0) for l, r, _, _ in merges]
-
-
-def encode_wordpiece(word: str, vocab: set[str], unk: str = "[UNK]") -> list[str]:
-    """BERT's greedy longest-match-first encoding (public reference:
-    google-research/bert tokenization.py WordpieceTokenizer)."""
-    out: list[str] = []
-    i = 0
-    while i < len(word):
-        end = len(word)
-        cur = None
-        while end > i:
-            piece = word[i:end]
-            if i > 0:
-                piece = "##" + piece
-            if piece in vocab:
-                cur = piece
-                break
-            end -= 1
-        if cur is None:
-            return [unk]
-        out.append(cur)
-        i = end
-    return out
-
-
 # ---------------------------------------------------------------------------
 # DuckDB oracle — the BPE unrolled-CTE replay with the WordPiece score
 

@@ -75,17 +75,3 @@ def encode_as(col: Column | str, charset: str) -> Column:
         return s.map(lambda v: None if pd.isna(v) else v.encode(codec))
 
     return _enc(c)
-
-
-def transcode_bytes(col: Column | str, src: str, dst: str) -> Column:
-    """binary -> binary via the reference's src → UTF-8 → dst hop."""
-    if canonical_charset(src) == canonical_charset(dst):
-        return F.col(col) if isinstance(col, str) else col
-    return encode_as(decode_from(col, src), dst)
-
-
-def convert_bytes(raw: bytes, src: str, dst: str) -> bytes:
-    """Driver-side twin for names/defaults (strings.go:383-451)."""
-    return raw.decode(_PY_CODEC[canonical_charset(src)]).encode(
-        _PY_CODEC[canonical_charset(dst)]
-    )

@@ -36,18 +36,3 @@ def glob_to_regex(pattern: str) -> str:
 def glob_match(patterns: list[str], name: str) -> bool:
     """Table include/exclude filter (P6, filter/matchers.go:37-72)."""
     return any(re.match(glob_to_regex(p), name) for p in patterns)
-
-
-def is_subset(a: list | set, b: list | set) -> bool:
-    """U4 — subset test (common/strings.go:66-82 IsSubsetString)."""
-    return set(a) <= set(b)
-
-
-def df_is_subset(a, b, cols: list[str] | None = None) -> bool:
-    """U4 at DataFrame granularity: every row of `a` appears in `b`.
-
-    exceptAll keeps multiplicity (a row repeated more often in `a`
-    than in `b` breaks subset-ness), matching multiset semantics."""
-    if cols:
-        a, b = a.select(*cols), b.select(*cols)
-    return a.exceptAll(b).isEmpty()

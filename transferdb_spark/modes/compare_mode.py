@@ -31,25 +31,15 @@ from transferdb_spark.plans.chunker import elect_split_key, plan_chunks
 class CompareReport:
     table: str
     total_chunks: int = 0
-    # raw phase-1 mismatch set: every chunk whose (cnt, checksum) differs
+    # phase-1 mismatch set: every chunk whose (cnt, checksum) differs
     mismatched_chunks: list[int] = field(default_factory=list)
-    # incremental runs: mismatched chunks whose BOTH-side checksums are
-    # unchanged since the previous run (phase 2 skipped, still unequal)
-    skipped_chunks: list[int] = field(default_factory=list)
     insert_rows: int = 0
     delete_rows: int = 0
     fix_sql_path: str = ""
 
     @property
     def is_equal(self) -> bool:
-        """Derived from the RAW mismatch set — a chunk skipped as
-        'unchanged since last run' is still unequal."""
         return not self.mismatched_chunks
-
-    @property
-    def rescan_chunks(self) -> list[int]:
-        """Chunks phase 2 actually re-derived repairs for."""
-        return [c for c in self.mismatched_chunks if c not in self.skipped_chunks]
 
 
 def compare_tables(
@@ -61,22 +51,13 @@ def compare_tables(
     key: str | None = None,
     n_chunks: int = 32,
     only_rows: bool = False,
-    incremental: bool = False,
     dialect: str = "mysql",
 ) -> CompareReport:
     """Compare src vs tgt; emit fix-SQL for divergent rows.
 
     only_rows=True is the reference's `only-check-rows` fast path
     (COUNT(1) per chunk, no checksum).
-    incremental=True persists per-chunk (src, tgt) checksums under
-    workdir and, on the next run, skips phase 2 for chunks whose BOTH
-    checksums are unchanged since the last run — re-verify cost tracks
-    the changed fraction, the way the reference's data_compare_meta
-    lets a re-run touch only unfinished chunks. Skipped chunks stay in
-    mismatched_chunks (they are still divergent); see skipped_chunks.
     """
-    import json
-
     report = CompareReport(table=table, total_chunks=n_chunks)
     key = key or elect_split_key(src)
 
@@ -90,38 +71,13 @@ def compare_tables(
         mism = summary.filter("NOT is_match").select("chunk_id").collect()
     report.mismatched_chunks = sorted(r["chunk_id"] for r in mism)
 
-    if incremental:
-        state_path = os.path.join(workdir, f"compare_state_{table}.json")
-        rows = summary.select(
-            "chunk_id", "src_checksum", "tgt_checksum"
-        ).collect()
-        current = {
-            str(r["chunk_id"]): [r["src_checksum"], r["tgt_checksum"]] for r in rows
-        }
-        previous = {}
-        if os.path.exists(state_path):
-            with open(state_path) as fh:
-                previous = json.load(fh)
-        # a mismatched chunk whose both-side checksums are identical to
-        # the previous run would re-derive the identical repair rows —
-        # skip its phase 2, but it remains counted as unequal
-        report.skipped_chunks = [
-            c
-            for c in report.mismatched_chunks
-            if current.get(str(c)) == previous.get(str(c))
-        ]
-        os.makedirs(workdir, exist_ok=True)
-        with open(state_path, "w") as fh:
-            json.dump(current, fh)
-
-    todo = report.rescan_chunks
-    if not todo:
+    if not report.mismatched_chunks:
         return report
 
     # phase 2 — restrict both sides to damaged chunk ranges only,
     # using the SAME grid phase 1 aggregated over
     chunks = plan_chunks(src, key, n_chunks, bounds=bounds)
-    preds = [chunks[i].predicate for i in todo]
+    preds = [chunks[i].predicate for i in report.mismatched_chunks]
     where = " OR ".join(f"({p})" for p in preds)
     ins_df, del_df = dataset_diff(src.filter(where), tgt.filter(where))
 

@@ -51,7 +51,6 @@ def prune_corpus(
     workdir: str,
     keep_deciles: int = 3,
     per_lang: bool = False,
-    write_snapshot: bool = True,
     scorer: str = "bigram_lm",
 ) -> dict:
     """Clean -> score -> rank -> keep the top slice -> snapshot.
@@ -126,11 +125,10 @@ def prune_corpus(
         }
         summary["kept_by_lang"] = dict(sorted(by_lang.items()))
 
-        if write_snapshot:
-            snap_dir = os.path.join(workdir, "pruned_documents")
-            version = snapshots.write_snapshot(pruned, snap_dir, stat_cols=["doc_id"])
-            summary["snapshot_dir"] = snap_dir
-            summary["snapshot_version"] = version
+        snap_dir = os.path.join(workdir, "pruned_documents")
+        version = snapshots.write_snapshot(pruned, snap_dir, stat_cols=["doc_id"])
+        summary["snapshot_dir"] = snap_dir
+        summary["snapshot_version"] = version
         os.makedirs(workdir, exist_ok=True)
         summary_path = os.path.join(workdir, "prune_summary.json")
         with open(summary_path, "w") as f:

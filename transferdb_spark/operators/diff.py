@@ -70,8 +70,10 @@ def _row_hash_args(cols: list[str]) -> list:
 def hashed_diff(
     src: DataFrame, tgt: DataFrame, broadcast_excess: bool = True
 ) -> tuple[DataFrame, DataFrame]:
-    """(source_minus_target, target_minus_source) — the production fast
-    path for dataset_diff.
+    """(source_minus_target, target_minus_source) — a hash-weighted
+    form of dataset_diff. Only the compare_diff_inserts /
+    compare_diff_deletes queries call it; compare mode phase 2 runs
+    dataset_diff.
 
     exceptAll shuffles the FULL row payload; at 100 TB that is the
     whole table through the wire to find a damaged fraction of rows.

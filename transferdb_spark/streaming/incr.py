@@ -27,8 +27,6 @@ from pyspark.sql.window import Window
 
 from transferdb_spark.state.store import _write_json_atomic
 
-OP_WHITELIST = ("click", "view", "purchase", "signup", "error")
-
 
 def stream_events(
     spark: SparkSession,
@@ -56,13 +54,6 @@ def stream_events(
     from transferdb_spark.sources.registry import _normalize_ntz
 
     return _normalize_ntz(reader.parquet(source_dir))
-
-
-def filter_ops(stream: DataFrame, min_scn: int = 0) -> DataFrame:
-    """P7 — op whitelist + SCN gate (logminer.go:100-193)."""
-    return stream.filter(
-        (F.col("event_id") > min_scn) & F.col("event_type").isin(*OP_WHITELIST)
-    )
 
 
 def _latest_per_key(batch: DataFrame, key: str, scn_col: str) -> DataFrame:
@@ -273,43 +264,6 @@ def run_rollup_to_memory(
     return q
 
 
-def session_window_stream(stream: DataFrame, gap: str = "30 minutes", watermark: str = "1 hour") -> DataFrame:
-    """Dynamic-gap session windows per user — the streaming twin of the
-    batch sessionize operator. State closes when event time passes
-    session end + watermark, so state size tracks *open* sessions
-    (active users), not stream length."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("win"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,3)")).cast("double").alias("session_value"),
-        )
-        .select(
-            "user_id",
-            F.col("win.start").alias("session_start"),
-            F.col("win.end").alias("session_end"),
-            "n_events",
-            "session_value",
-        )
-    )
-
-
-def run_sessions_to_memory(
-    spark: SparkSession, source_dir: str, checkpoint_dir: str, name: str = "sessions"
-):
-    stream = stream_events(spark, source_dir)
-    return (
-        session_window_stream(stream)
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def dedup_stream(
     stream: DataFrame, keys: list[str] | None = None, watermark: str = "1 hour"
 ) -> DataFrame:
@@ -323,14 +277,6 @@ def dedup_stream(
     dropped by key, not by offset arithmetic."""
     keys = keys or ["event_id"]
     return stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
-
-
-def enrich_stream_with_dimension(stream: DataFrame, dim: DataFrame, on: str) -> DataFrame:
-    """Stream-static join: every micro-batch joins the latest snapshot
-    of the dimension (broadcast — never a stateful stream-stream join
-    when one side is a table). The migrate analogue: tagging CDC rows
-    with rule/catalog metadata."""
-    return stream.join(F.broadcast(dim), on, "left")
 
 
 def attribution_join_stream(

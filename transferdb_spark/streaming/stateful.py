@@ -5,14 +5,12 @@ is the SCN checkpoint). This is the Spark-native extension point for
 them: arbitrary per-key state evolved across micro-batches with
 exactly-once semantics from the streaming checkpoint.
 
-Operators: (1) running per-user activity profile over the event
-stream — count, value sum, last-seen timestamp — as an update stream;
-(2) streaming exact dedup — first-seen-wins survivor emission keyed
-by content hash, the streaming twin of ext/dedup.dedup_exact, with an
-optional processing-time TTL bounding state to the active window;
-(3) streaming sessionization — event-time gap sessions closed by the
-watermark (EventTimeTimeout), the streaming twin of the batch
-sessionize_events window query. At scale, state is partitioned by key
+Operators: (1) streaming exact dedup — first-seen-wins survivor
+emission keyed by content hash, the streaming twin of
+ext/dedup.dedup_exact, with an optional processing-time TTL bounding
+state to the active window; (2) streaming event transitions and
+(3) streaming funnel progress, the real-time twins of the batch
+transition matrix and funnel. At scale, state is partitioned by key
 across executors and bounded by the key count (plus timeouts for
 eviction).
 """
@@ -27,52 +25,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-STATE_SCHEMA = "cnt LONG, total DOUBLE, last_ts TIMESTAMP"
-OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("cnt", T.LongType()),
-        T.StructField("total", T.DoubleType()),
-        T.StructField("last_ts", T.TimestampType()),
-    ]
-)
-
-
-def _update_profile(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    (user_id,) = key
-    if state.exists:
-        cnt, total, last_ts = state.get
-    else:
-        cnt, total, last_ts = 0, 0.0, None
-    for pdf in pdfs:
-        cnt += len(pdf)
-        total += float(pdf["value"].sum())
-        batch_max = pdf["ts"].max()
-        if last_ts is None or batch_max > last_ts:
-            last_ts = batch_max
-    state.update((cnt, total, last_ts))
-    yield pd.DataFrame(
-        {"user_id": [user_id], "cnt": [cnt], "total": [total], "last_ts": [last_ts]}
-    )
-
-
-def user_activity_profile(stream: DataFrame) -> DataFrame:
-    """Evolve per-user (count, sum, last_ts) state across batches."""
-    return (
-        stream.select("user_id", "ts", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _update_profile,
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
 
 DEDUP_STATE_SCHEMA = "first_id LONG, n_dups LONG"
 DEDUP_OUTPUT_SCHEMA = T.StructType(
@@ -204,29 +156,6 @@ def run_dedup_to_memory(
             spark.conf.unset(prov_key)
         else:
             spark.conf.set(prov_key, old_prov)
-
-
-def run_profile_to_memory(
-    spark,
-    source_dir: str,
-    checkpoint_dir: str,
-    name: str = "profiles",
-    max_files_per_trigger: int | None = None,
-):
-    from transferdb_spark.streaming.incr import stream_events
-
-    stream = stream_events(
-        spark, source_dir, max_files_per_trigger=max_files_per_trigger
-    )
-    return (
-        user_activity_profile(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -456,109 +385,5 @@ def streaming_funnel(
                 if ttl_ms is not None
                 else GroupStateTimeout.NoTimeout
             ),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# streaming sessionization — event-time gap sessions with watermark-
-# driven closure. The streaming twin of the batch sessionize_events
-# query (lag/gap window): per-user open-session state evolves across
-# micro-batches; a session CLOSES either when a later event in the
-# same key is farther than the gap (emitted immediately) or when the
-# event-time watermark passes last_ts + gap (EventTimeTimeout tick).
-# State per key is ONE open session (4 scalars) — bounded by active
-# users, not history.
-
-SESSION_STATE_SCHEMA = (
-    "start_ms LONG, last_ms LONG, n_events LONG, sum_value DOUBLE"
-)
-SESSION_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("session_start", T.TimestampType()),
-        T.StructField("session_end", T.TimestampType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("sum_value", T.DoubleType()),
-    ]
-)
-
-
-def _make_sessionize_fn(gap_s: float):
-    gap_ms = int(gap_s * 1000)
-
-    def _sessionize(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-
-        def emit(start_ms, last_ms, n, total):
-            # tz-aware UTC so the Arrow round-trip is exact regardless
-            # of spark.sql.session.timeZone (naive values would be
-            # re-interpreted as session-local wall time)
-            return pd.DataFrame(
-                {
-                    "user_id": [int(user_id)],
-                    "session_start": [pd.Timestamp(start_ms, unit="ms", tz="UTC")],
-                    "session_end": [pd.Timestamp(last_ms, unit="ms", tz="UTC")],
-                    "n_events": [int(n)],
-                    "sum_value": [float(total)],
-                }
-            )
-
-        if state.hasTimedOut:
-            start_ms, last_ms, n, total = state.get
-            state.remove()
-            yield emit(start_ms, last_ms, n, total)
-            return
-
-        rows = pd.concat(list(pdfs), ignore_index=True).sort_values("ts_ms")
-        open_sess = state.get if state.exists else None
-        for t, value in zip(rows["ts_ms"], rows["value"]):
-            t = int(t)
-            v = float(value) if value is not None else 0.0
-            if open_sess is None:
-                open_sess = (t, t, 1, v)
-            elif t - open_sess[1] > gap_ms:
-                yield emit(*open_sess)  # closed by a later in-key event
-                open_sess = (t, t, 1, v)
-            else:
-                # a late in-gap event may land BEFORE the open session's
-                # start — take min so the bounds match the batch twin
-                open_sess = (
-                    min(open_sess[0], t),
-                    max(open_sess[1], t),
-                    open_sess[2] + 1,
-                    open_sess[3] + v,
-                )
-        state.update(tuple(open_sess))
-        # close when the WATERMARK passes last_ts + gap (event time,
-        # late-data-safe — processing-time TTLs would close sessions
-        # during replay/backfill). ts_ms is TRUE epoch millis computed
-        # Spark-side: the naive pandas timestamps Spark hands over are
-        # already shifted to the session timezone, so round-tripping
-        # them through .timestamp() would skew this by the zone offset
-        # (under west-of-UTC zones, below the watermark → query failure).
-        state.setTimeoutTimestamp(open_sess[1] + gap_ms)
-
-    return _sessionize
-
-
-def streaming_sessionize(
-    stream: DataFrame, gap_s: float = 1800.0, watermark: str = "1 hour"
-) -> DataFrame:
-    """Closed gap-sessions (user_id, session_start, session_end,
-    n_events, sum_value) as an append stream."""
-    return (
-        stream.select("user_id", "ts", "value")
-        .withWatermark("ts", watermark)
-        .withColumn("ts_ms", F.unix_millis(F.col("ts").cast("timestamp")))
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _make_sessionize_fn(gap_s),
-            outputStructType=SESSION_OUTPUT_SCHEMA,
-            stateStructType=SESSION_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )

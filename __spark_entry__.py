@@ -249,11 +249,10 @@ ZORDER_CODE_SQL = _zorder_code_sql()
 
 
 def compare_chunk_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A2 — commutative per-chunk checksum over canonical row strings."""
+    """A2 — commutative per-chunk checksum over canonical row strings
+    (md5, so the checksum VALUES match the DuckDB oracle bit for bit)."""
     li = _t(spark, sf_dir, "lineitem")
-    # portable=True: the checksum VALUES are compared against the
-    # DuckDB oracle, so both engines must hash bit-identically (md5)
-    return chunk_checksums(li, "l_orderkey", N_CHUNKS, portable=True).orderBy("chunk_id")
+    return chunk_checksums(li, "l_orderkey", N_CHUNKS).orderBy("chunk_id")
 
 
 def compare_checksum_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -284,23 +283,22 @@ ORDER BY 1
 def compare_diff_inserts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1/U3 — source-minus-target rows (INSERT repairs).
 
-    Hash-weighted diff: shuffles 16-byte row hashes instead of the
-    full payload, then recovers the (damage-bounded) excess rows by
-    joining back — see operators/diff.py hashed_diff. Output multiset
-    identical to exceptAll."""
-    from transferdb_spark.operators.diff import hashed_diff
+    One weighted aggregation keyed on the full row (src +1 / tgt -1)
+    — see operators/diff.py dataset_diff. Output multiset identical to
+    exceptAll."""
+    from transferdb_spark.operators.diff import dataset_diff
 
     li = _t(spark, sf_dir, "lineitem")
-    ins, _ = hashed_diff(li, mutated_target(li))
+    ins, _ = dataset_diff(li, mutated_target(li))
     return ins
 
 
 def compare_diff_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1/U3 — target-minus-source rows (DELETE repairs)."""
-    from transferdb_spark.operators.diff import hashed_diff
+    from transferdb_spark.operators.diff import dataset_diff
 
     li = _t(spark, sf_dir, "lineitem")
-    _, dels = hashed_diff(li, mutated_target(li))
+    _, dels = dataset_diff(li, mutated_target(li))
     return dels
 
 

@@ -55,16 +55,13 @@ def test_compare_identical_matches(lineitem):
 
 
 def test_hash_interface_split(lineitem):
-    """Production compare hashes with JVM xxhash64; md5 appears only in
-    the portable (oracle-facing) variant."""
+    """md5 appears only in the portable (oracle-facing) chunk checksum;
+    the production native plan is pinned free of it by
+    test_native_checksum_verdicts_match_portable."""
     from transferdb_spark.operators.checksum import chunk_checksums
 
-    fast_plan = chunk_checksums(lineitem, "l_orderkey", 8)._jdf.queryExecution().toString()
-    assert "xxhash64" in fast_plan and "md5" not in fast_plan
     portable_plan = (
-        chunk_checksums(lineitem, "l_orderkey", 8, portable=True)
-        ._jdf.queryExecution()
-        .toString()
+        chunk_checksums(lineitem, "l_orderkey", 8)._jdf.queryExecution().toString()
     )
     assert "md5" in portable_plan
 
@@ -83,12 +80,12 @@ def test_native_checksum_verdicts_match_portable(lineitem):
     tgt = mutated_target(lineitem)
     bounds = shared_chunk_bounds(lineitem, tgt, "l_orderkey")
 
-    def verdicts(fn, **kw):
-        s = {r["chunk_id"]: (r["cnt"], r["checksum"]) for r in fn(lineitem, "l_orderkey", 8, bounds=bounds, **kw).collect()}
-        t = {r["chunk_id"]: (r["cnt"], r["checksum"]) for r in fn(tgt, "l_orderkey", 8, bounds=bounds, **kw).collect()}
+    def verdicts(fn):
+        s = {r["chunk_id"]: (r["cnt"], r["checksum"]) for r in fn(lineitem, "l_orderkey", 8, bounds=bounds).collect()}
+        t = {r["chunk_id"]: (r["cnt"], r["checksum"]) for r in fn(tgt, "l_orderkey", 8, bounds=bounds).collect()}
         return {cid: s.get(cid) == t.get(cid) for cid in set(s) | set(t)}
 
-    assert verdicts(chunk_checksums_native) == verdicts(chunk_checksums, portable=True)
+    assert verdicts(chunk_checksums_native) == verdicts(chunk_checksums)
     # native plan stays free of rendering and md5
     plan = chunk_checksums_native(lineitem, "l_orderkey", 8)._jdf.queryExecution().toString()
     assert "xxhash64" in plan and "md5" not in plan and "date_format" not in plan
@@ -218,28 +215,30 @@ def test_diff_roundtrip_repair(lineitem):
     assert lineitem.exceptAll(repaired).count() == 0
 
 
-def test_hashed_diff_matches_exceptall(lineitem):
-    """hashed_diff (16-byte-shuffle fast path) emits the exact multiset
-    exceptAll produces — both directions, multiplicity included."""
+def test_dataset_diff_matches_exceptall(lineitem):
+    """dataset_diff (one weighted aggregation) emits the exact multiset
+    Spark's exceptAll produces — both directions, multiplicity
+    included."""
     from transferdb_spark.operators.compare_fixture import mutated_target
-    from transferdb_spark.operators.diff import dataset_diff, hashed_diff
+    from transferdb_spark.operators.diff import dataset_diff
 
     tgt = mutated_target(lineitem)
-    e_ins, e_del = dataset_diff(lineitem, tgt)
-    h_ins, h_del = hashed_diff(lineitem, tgt)
+    e_ins, e_del = lineitem.exceptAll(tgt), tgt.exceptAll(lineitem)
+    h_ins, h_del = dataset_diff(lineitem, tgt)
+    assert e_ins.count() > 0 and e_del.count() > 0
     assert h_ins.exceptAll(e_ins).count() == 0
     assert e_ins.exceptAll(h_ins).count() == 0
     assert h_del.exceptAll(e_del).count() == 0
     assert e_del.exceptAll(h_del).count() == 0
 
 
-def test_hashed_diff_preserves_multiplicity(spark):
+def test_dataset_diff_preserves_multiplicity(spark):
     """A row appearing 3x in src and 1x in tgt yields exactly 2 copies."""
-    from transferdb_spark.operators.diff import hashed_diff
+    from transferdb_spark.operators.diff import dataset_diff
 
     src = spark.createDataFrame([("a", 1)] * 3 + [("b", 2)], ["k", "v"])
     tgt = spark.createDataFrame([("a", 1), ("c", 3), ("c", 3)], ["k", "v"])
-    ins, dels = hashed_diff(src, tgt)
+    ins, dels = dataset_diff(src, tgt)
     assert sorted(tuple(r) for r in ins.collect()) == [("a", 1), ("a", 1), ("b", 2)]
     assert sorted(tuple(r) for r in dels.collect()) == [("c", 3), ("c", 3)]
 
@@ -462,9 +461,9 @@ def test_range_join_matches_naive(spark, sf_dir):
 
 
 def test_diff_summary_null_columns_not_aliased(spark):
-    """xxhash64 skips NULL inputs, so without interleaved null flags
-    ('a', NULL) and (NULL, 'a') would hash identically and the diff
-    would silently report zero. Pin the flag interleaving."""
+    """('a', NULL) and (NULL, 'a') are different rows: a row key that
+    dropped or merged NULL positions (xxhash64 skips NULL inputs, for
+    one) would group them together and report zero. Pin it."""
     from transferdb_spark.operators.diff import diff_summary
 
     a = spark.createDataFrame([("a", None)], "x string, y string")

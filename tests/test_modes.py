@@ -566,6 +566,38 @@ def test_compare_corrupted_emits_fix_sql(spark, sf_dir, workdir, lineitem):
     assert "INSERT INTO lineitem_tgt" in text and "DELETE FROM lineitem_tgt" in text
 
 
+def test_compare_fix_sql_write_is_atomic(spark, workdir, lineitem, monkeypatch):
+    """A crash while the fix file is assembled leaves the previous one
+    intact: a truncated file whose header still claims the full counts
+    would make `--mode compare --apply` run a partial repair."""
+    from transferdb_spark.modes import compare_mode
+    from transferdb_spark.operators.compare_fixture import mutated_target
+
+    def run():
+        return compare_mode.compare_tables(
+            spark, lineitem, mutated_target(lineitem), "lineitem_atomic", workdir, n_chunks=8
+        )
+
+    path = run().fix_sql_path
+    with open(path) as fh:
+        before = fh.read()
+
+    real_copy = compare_mode.shutil.copyfileobj
+    copies = []
+
+    def copy_then_crash(fsrc, fdst, *args):
+        copies.append(fsrc)
+        if len(copies) == 2:
+            raise OSError("disk full")
+        return real_copy(fsrc, fdst, *args)
+
+    monkeypatch.setattr(compare_mode.shutil, "copyfileobj", copy_then_crash)
+    with pytest.raises(OSError, match="disk full"):
+        run()
+    with open(path) as fh:
+        assert fh.read() == before
+
+
 def test_csv_roundtrip(spark, sf_dir, workdir):
     from transferdb_spark.modes.csv_mode import csv_export, csv_import
     from transferdb_spark.operators.normalize import normalize_projection

@@ -268,3 +268,20 @@ def test_plan_lint_first_fold_no_hard_flags(queries, spark):
         tree = tree_of(p)
         for h in lint.HARD:
             assert h not in tree, (name, h)
+
+
+def test_compare_repair_reuses_diff_exchange(lineitem):
+    """Compare phase 2 scans and shuffles each side once: both
+    directions of dataset_diff read ONE row-weight aggregate, so the
+    final adaptive plan of the repair union reuses its exchange instead
+    of planning a second full-payload shuffle."""
+    from transferdb_spark.operators.compare_fixture import mutated_target
+    from transferdb_spark.operators.diff import dataset_diff, repair_statements
+
+    stmts = repair_statements(*dataset_diff(lineitem, mutated_target(lineitem)), "lineitem")
+    stmts.collect()
+    plan = stmts._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    nodes = [ln.lstrip(" :+-") for ln in final.splitlines()]
+    assert sum(n.startswith("Exchange hashpartitioning") for n in nodes) == 1, final
+    assert sum(n.startswith("ReusedExchange") for n in nodes) == 1, final

@@ -57,8 +57,6 @@ from transferdb_spark.ext.similarity import (
     QSCALE,
     ROUND,
     _qmat,
-    dot_udf,
-    norm_udf,
     qdot_nd_udf,
 )
 from transferdb_spark.functions.canonical import stable_round, stable_round_sql

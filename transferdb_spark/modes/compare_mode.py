@@ -3,7 +3,8 @@
 Phase 1 (fast): per-chunk COUNT + commutative checksum on both sides
 over ONE shared chunk grid, joined — only mismatching chunks continue
 (report.go:74-166, 168-304).
-Phase 2 (slow): two-sided exceptAll on just those chunk ranges →
+Phase 2 (slow): one weighted row-set diff (operators.diff.dataset_diff:
+both directions from one aggregation) on just those chunk ranges →
 INSERT/DELETE repair rows → fix-SQL file (report.go:236-302).
 
 At 100 TB the phase-2 scan is bounded by the damaged key ranges
@@ -50,14 +51,9 @@ def compare_tables(
     workdir: str,
     key: str | None = None,
     n_chunks: int = 32,
-    only_rows: bool = False,
     dialect: str = "mysql",
 ) -> CompareReport:
-    """Compare src vs tgt; emit fix-SQL for divergent rows.
-
-    only_rows=True is the reference's `only-check-rows` fast path
-    (COUNT(1) per chunk, no checksum).
-    """
+    """Compare src vs tgt; emit fix-SQL for divergent rows."""
     report = CompareReport(table=table, total_chunks=n_chunks)
     key = key or elect_split_key(src)
 
@@ -65,10 +61,7 @@ def compare_tables(
     # WHERE ranges to both databases (chunk.go:108-399)
     bounds = shared_chunk_bounds(src, tgt, key)
     summary = compare_chunks(src, tgt, key, n_chunks, bounds=bounds)
-    if only_rows:
-        mism = summary.filter("src_cnt <> tgt_cnt").select("chunk_id").collect()
-    else:
-        mism = summary.filter("NOT is_match").select("chunk_id").collect()
+    mism = summary.filter("NOT is_match").select("chunk_id").collect()
     report.mismatched_chunks = sorted(r["chunk_id"] for r in mism)
 
     if not report.mismatched_chunks:
@@ -98,9 +91,13 @@ def compare_tables(
 
     # assemble the single fix file the reference emits
     # (module/compare/file.go) by streaming the part files — constant
-    # driver memory, no py4j row transfer
+    # driver memory, no py4j row transfer. Assembled in a sibling tmp
+    # file and swapped into place, so a crash mid-copy leaves the
+    # previous fix file intact — never a truncated one whose header
+    # claims the full counts (--apply would run a partial repair).
     report.fix_sql_path = os.path.join(workdir, f"compare_{table}.sql")
-    with open(report.fix_sql_path, "w") as out:
+    tmp = report.fix_sql_path + ".tmp"
+    with open(tmp, "w") as out:
         out.write(
             f"-- fix SQL for {table}: {report.insert_rows} inserts, "
             f"{report.delete_rows} deletes\n"
@@ -108,5 +105,6 @@ def compare_tables(
         for part in sorted(glob.glob(os.path.join(stmt_dir, "part-*"))):
             with open(part) as src_fh:
                 shutil.copyfileobj(src_fh, out)
+    os.replace(tmp, report.fix_sql_path)
     shutil.rmtree(stmt_dir, ignore_errors=True)
     return report

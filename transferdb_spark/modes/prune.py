@@ -126,7 +126,7 @@ def prune_corpus(
         summary["kept_by_lang"] = dict(sorted(by_lang.items()))
 
         snap_dir = os.path.join(workdir, "pruned_documents")
-        version = snapshots.write_snapshot(pruned, snap_dir, stat_cols=["doc_id"])
+        version = snapshots.write_snapshot(pruned, snap_dir)
         summary["snapshot_dir"] = snap_dir
         summary["snapshot_version"] = version
         os.makedirs(workdir, exist_ok=True)

@@ -19,14 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from transferdb_spark.functions.hashing import fast_hash64, portable_hash64
-from transferdb_spark.functions.canonical import row_string
+from transferdb_spark.functions.hashing import row_hash
 from transferdb_spark.plans.chunker import with_chunk_id
-
-
-def _row_hash(schema, cols, portable: bool):
-    s = row_string(schema, cols)
-    return portable_hash64(s) if portable else fast_hash64(s)
 
 
 def chunk_checksums(
@@ -35,20 +29,18 @@ def chunk_checksums(
     n_chunks: int,
     cols: list[str] | None = None,
     bounds: tuple[int, int] | None = None,
-    portable: bool = False,
 ) -> DataFrame:
     """Per-chunk (cnt, checksum) — columns: chunk_id, cnt, checksum.
 
     `bounds` pins the chunk grid (lo, hi) externally so two tables can
     be aggregated over the SAME key ranges (see shared_chunk_bounds).
-    `portable=True` switches the row hash to the md5-based
-    engine-portable variant — needed only when the checksum VALUE is
-    compared against another engine (the DuckDB oracle); Spark-vs-Spark
-    compare uses xxhash64 (~3-5× cheaper)."""
+    The row hash is the md5-based engine-portable one, so the checksum
+    VALUES match another engine's (the DuckDB oracle); Spark-vs-Spark
+    compare runs chunk_checksums_native (xxhash64, ~3-5× cheaper)."""
     from transferdb_spark.ext.text import spread_narrow
 
     tagged, _, _ = with_chunk_id(df, key, n_chunks, bounds=bounds)
-    h = _row_hash(df.schema, cols, portable)
+    h = row_hash(df.schema, cols)
     # spread_narrow (round-9): the canonical render + hash is the
     # expensive narrow stage and otherwise runs on however few
     # partitions the scan produced (ONE for the single-row-group sf
@@ -132,7 +124,7 @@ def table_checksum(
     df: DataFrame, cols: list[str] | None = None, portable: bool = False
 ) -> DataFrame:
     """Whole-table (cnt, checksum) — one row."""
-    h = _row_hash(df.schema, cols, portable)
+    h = row_hash(df.schema, cols, portable)
     return df.select(h.alias("h")).agg(
         F.count(F.lit(1)).alias("cnt"), F.sum("h").alias("checksum")
     )

@@ -6,9 +6,11 @@ source-minus-target rows become INSERT repairs, target-minus-source
 become DELETE repairs
 (/root/reference/module/compare/oracle/o2m/report.go:236-302).
 
-Spark-first: `exceptAll` both directions — Catalyst plans it as a
-hash/sort-merge anti-difference keyed on all columns; at 100 TB the
-rows are pre-normalized (narrow) and the diff runs only on chunks whose
+Spark-first: one weighted aggregation keyed on the full row (src +1,
+tgt -1, summed per distinct row) yields both directions at once — the
+exact multiset `exceptAll` computes, with one scan of each side and
+one shuffle instead of exceptAll's two. At 100 TB the rows are
+pre-normalized (narrow) and the diff runs only on chunks whose
 checksums mismatched, so the shuffled volume is bounded by the damaged
 fraction, not the table.
 """
@@ -19,115 +21,43 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def dataset_diff(src: DataFrame, tgt: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(source_minus_target, target_minus_source) with multiplicity.
+def _row_weights(src: DataFrame, tgt: DataFrame) -> DataFrame:
+    """Distinct rows with `_w` = (copies in src) - (copies in tgt), only
+    where that is non-zero. Grouping on the row itself (not a hash) is
+    exact and groups NULLs together — the same key exceptAll uses."""
+    tagged = src.withColumn("_w", F.lit(1)).unionAll(tgt.withColumn("_w", F.lit(-1)))
+    return (
+        tagged.groupBy(*src.columns)
+        .agg(F.sum("_w").alias("_w"))
+        .filter(F.col("_w") != 0)
+    )
 
-    exceptAll keeps duplicate multiplicity — matches the reference's
+
+def dataset_diff(src: DataFrame, tgt: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(source_minus_target, target_minus_source) with multiplicity —
+    `src.exceptAll(tgt)`, `tgt.exceptAll(src)`, matching the reference's
     multiset semantics over rendered row strings.
-    """
-    return src.exceptAll(tgt), tgt.exceptAll(src)
+
+    Both outputs read the SAME aggregate, so a plan that consumes both
+    (repair_statements' union) reuses its exchange: each side is scanned
+    and shuffled once. Each excess row is emitted |w| times."""
+    w = _row_weights(src, tgt)
+
+    def _excess(weight: F.Column) -> DataFrame:
+        copies = F.explode(F.sequence(F.lit(1), weight))
+        return w.filter(weight > 0).withColumn("_w", copies).select(*src.columns)
+
+    return _excess(F.col("_w")), _excess(-F.col("_w"))
 
 
 def diff_summary(src: DataFrame, tgt: DataFrame) -> DataFrame:
-    """One-row summary: rows to insert / delete (fix-SQL accounting).
-
-    Single-shuffle formulation: tag src rows +1 / tgt rows -1, sum the
-    weights per distinct row, then inserts = Σ max(w,0) and deletes =
-    Σ max(-w,0). One wide aggregation instead of the two exceptAll
-    plans (each of which is itself a union+aggregate) — halves the
-    shuffled volume, which is what dominates at 100 TB.
-
-    The grouping key is the full-width 64-bit xxhash64 over the native
-    column values (codegen'd, no string rendering), not the row itself:
-    the shuffle then carries 16 bytes per row instead of the whole
-    payload (~6× less for a lineitem-wide row). Only the ±1 weights are
-    summed — hashes are group KEYS — so the 40-bit sum-overflow concern
-    of the checksum path doesn't apply; a count error would need an
-    exact 64-bit collision between a src-only and tgt-only row (odds
-    ~n²/2⁶⁵ ≈ 10⁻⁸ at 10⁸ rows — the same multiset trust model as the
-    reference's in-memory string sets, report.go:236-302). Each value
-    is interleaved with its null flag because xxhash64 SKIPS null
-    inputs — without flags ('a', NULL) and (NULL, 'a') would alias
-    structurally, not probabilistically."""
-    cols = src.columns
-    args = [x for c in cols for x in (F.col(c), F.col(c).isNull())]
-    tagged = src.select(F.xxhash64(*args).alias("_h"), F.lit(1).alias("_w")).unionAll(
-        tgt.select(F.xxhash64(*args).alias("_h"), F.lit(-1).alias("_w"))
+    """One-row summary: rows to insert / delete (fix-SQL accounting) —
+    inserts = Σ max(w,0), deletes = Σ max(-w,0) over the row weights."""
+    w = F.col("_w")
+    return _row_weights(src, tgt).agg(
+        F.coalesce(F.sum(F.greatest(w, F.lit(0))), F.lit(0)).alias("insert_rows"),
+        F.coalesce(F.sum(F.greatest(-w, F.lit(0))), F.lit(0)).alias("delete_rows"),
     )
-    per_row = tagged.groupBy("_h").agg(F.sum("_w").alias("_w"))
-    return per_row.agg(
-        F.coalesce(F.sum(F.greatest(F.col("_w"), F.lit(0))), F.lit(0)).alias("insert_rows"),
-        F.coalesce(F.sum(F.greatest(-F.col("_w"), F.lit(0))), F.lit(0)).alias("delete_rows"),
-    )
-
-
-def _row_hash_args(cols: list[str]) -> list:
-    # null flags interleaved — xxhash64 skips NULL inputs, so without
-    # flags ('a', NULL) and (NULL, 'a') would alias structurally
-    return [x for c in cols for x in (F.col(c), F.col(c).isNull())]
-
-
-def hashed_diff(
-    src: DataFrame, tgt: DataFrame, broadcast_excess: bool = True
-) -> tuple[DataFrame, DataFrame]:
-    """(source_minus_target, target_minus_source) — a hash-weighted
-    form of dataset_diff. Only the compare_diff_inserts /
-    compare_diff_deletes queries call it; compare mode phase 2 runs
-    dataset_diff.
-
-    exceptAll shuffles the FULL row payload; at 100 TB that is the
-    whole table through the wire to find a damaged fraction of rows.
-    This formulation shuffles 16 bytes/row instead:
-
-      1. tag src +1 / tgt -1 on xxhash64(row), one wide aggregation —
-         identical topology to diff_summary;
-      2. rows with weight > 0 are src-excess, < 0 tgt-excess — a
-         relation bounded by the DAMAGED fraction, not the table;
-      3. re-scan each side and join it to its excess-hash set to
-         recover the payloads. With broadcast_excess=True (default)
-         the excess set is broadcast, so the re-scan has NO exchange
-         at all — the right plan for the compare use case, where
-         divergence is a damaged fraction (AQE alone still pays the
-         map-side shuffle write of the full payload before it can
-         demote the join). Pass broadcast_excess=False when the two
-         inputs may diverge wholesale (excess ~ table size) and let
-         AQE decide from runtime stats.
-      4. multiset multiplicity is preserved exactly: each excess hash
-         carries its weight w, and a row_number over the (small)
-         matched relation emits exactly w copies — the same output
-         multiset exceptAll produces.
-
-    Trust model: a wrong row requires an exact 64-bit collision
-    between a src-only and tgt-only row (~n²/2⁶⁵) — the regime the
-    reference already accepts for its in-memory string sets
-    (report.go:236-302). `dataset_diff` remains the collision-free
-    exact form; equivalence is pinned by pytest.
-    """
-    from pyspark.sql.window import Window
-
-    cols = src.columns
-    h = F.xxhash64(*_row_hash_args(cols))
-    tagged = src.select(h.alias("_h"), F.lit(1).alias("_w")).unionAll(
-        tgt.select(h.alias("_h"), F.lit(-1).alias("_w"))
-    )
-    weights = tagged.groupBy("_h").agg(F.sum("_w").alias("_w"))
-
-    def _recover(side: DataFrame, excess: DataFrame) -> DataFrame:
-        if broadcast_excess:
-            excess = F.broadcast(excess)
-        matched = side.withColumn("_h", h).join(excess, "_h")
-        rn = F.row_number().over(Window.partitionBy("_h").orderBy(F.lit(1)))
-        return (
-            matched.withColumn("_rn", rn)
-            .filter(F.col("_rn") <= F.col("_w"))
-            .select(*cols)
-        )
-
-    src_excess = weights.filter(F.col("_w") > 0)
-    tgt_excess = weights.filter(F.col("_w") < 0).select(
-        "_h", (-F.col("_w")).alias("_w")
-    )
-    return _recover(src, src_excess), _recover(tgt, tgt_excess)
 
 
 def repair_sql(

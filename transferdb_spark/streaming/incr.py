@@ -7,7 +7,8 @@ applies them through ordered worker pools with UPDATE = DELETE+REPLACE
 public/logminer.go:100-193, o2m/apply.go:58-233).
 
 Structured Streaming replaces every piece of that machinery:
-- poll loop        -> micro-batch trigger (ProcessingTime / availableNow)
+- poll loop        -> micro-batch trigger (availableNow: drain what has
+                      landed, then stop)
 - SCN checkpoints  -> the streaming checkpoint (offsets, exactly-once)
 - ≥/> re-read gate -> idempotent anti-join apply in foreachBatch
 - ordered appliers -> per-key dedupe inside the batch + idempotent merge
@@ -77,7 +78,6 @@ def apply_cdc_stream(
     checkpoint_dir: str,
     key: str = "event_id",
     scn_col: str = "event_id",
-    available_now: bool = True,
 ):
     """foreachBatch idempotent apply — the T4-T6 replacement.
 
@@ -135,16 +135,13 @@ def apply_cdc_stream(
         os.makedirs(checkpoint_dir, exist_ok=True)
         _write_json_atomic(gate_path, gate)
 
-    writer = (
+    return (
         stream.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
         .foreachBatch(apply_batch)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="300 milliseconds")  # reference poll cadence
-    return writer.start()
 
 
 def cdc_current_state(

@@ -123,7 +123,6 @@ def run_redo_apply_stream(
     scn_path: str,
     target_schema: str = "",
     dialect: str = "ansi",
-    available_now: bool = True,
     on_error: str = "halt",
 ):
     """Stream a JSON-lines redo feed ((scn, xid, sql_redo) rows, one
@@ -143,9 +142,9 @@ def run_redo_apply_stream(
             dialect=dialect, on_error=on_error,
         )
 
-    writer = stream.writeStream.foreachBatch(sink_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return (
+        stream.writeStream.foreachBatch(sink_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -243,6 +243,20 @@ def test_dataset_diff_preserves_multiplicity(spark):
     assert sorted(tuple(r) for r in dels.collect()) == [("c", 3), ("c", 3)]
 
 
+def test_dataset_diff_data_column_named_like_weight(spark):
+    """A data column named like the internal weight column (any case)
+    is diffed as data, not shadowed by the +1/-1 tags."""
+    from transferdb_spark.operators.diff import dataset_diff, diff_summary
+
+    src = spark.createDataFrame([(7, 1, "a"), (7, 1, "a"), (8, 2, "b")], ["_w", "__W", "v"])
+    tgt = spark.createDataFrame([(7, 1, "a"), (9, 3, "c")], ["_w", "__W", "v"])
+    ins, dels = dataset_diff(src, tgt)
+    assert sorted(tuple(r) for r in ins.collect()) == [(7, 1, "a"), (8, 2, "b")]
+    assert sorted(tuple(r) for r in dels.collect()) == [(9, 3, "c")]
+    r = diff_summary(src, tgt).first()
+    assert (r["insert_rows"], r["delete_rows"]) == (2, 1)
+
+
 def test_diff_zero_on_identical(lineitem):
     from transferdb_spark.operators.diff import diff_summary
 

@@ -21,40 +21,43 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _row_weights(src: DataFrame, tgt: DataFrame) -> DataFrame:
-    """Distinct rows with `_w` = (copies in src) - (copies in tgt), only
-    where that is non-zero. Grouping on the row itself (not a hash) is
-    exact and groups NULLs together — the same key exceptAll uses."""
-    tagged = src.withColumn("_w", F.lit(1)).unionAll(tgt.withColumn("_w", F.lit(-1)))
-    return (
-        tagged.groupBy(*src.columns)
-        .agg(F.sum("_w").alias("_w"))
-        .filter(F.col("_w") != 0)
-    )
+def _row_weights(src: DataFrame, tgt: DataFrame) -> tuple[DataFrame, str]:
+    """(weights, w): the distinct rows with column `w` = (copies in src)
+    - (copies in tgt), only where that is non-zero. Grouping on the row
+    itself (not a hash) is exact and groups NULLs together — the same
+    key exceptAll uses. `w` is named to shadow no data column (Spark
+    resolves names case-insensitively)."""
+    w = "_w"
+    while w.lower() in {c.lower() for c in src.columns}:
+        w = "_" + w
+    tagged = src.withColumn(w, F.lit(1)).unionAll(tgt.withColumn(w, F.lit(-1)))
+    weights = tagged.groupBy(*src.columns).agg(F.sum(w).alias(w))
+    return weights.filter(F.col(w) != 0), w
 
 
 def dataset_diff(src: DataFrame, tgt: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(source_minus_target, target_minus_source) with multiplicity —
-    `src.exceptAll(tgt)`, `tgt.exceptAll(src)`, matching the reference's
-    multiset semantics over rendered row strings.
+    the multiset `exceptAll` returns in each direction, matching the
+    reference's multiset semantics over rendered row strings.
 
     Both outputs read the SAME aggregate, so a plan that consumes both
     (repair_statements' union) reuses its exchange: each side is scanned
     and shuffled once. Each excess row is emitted |w| times."""
-    w = _row_weights(src, tgt)
+    weights, w = _row_weights(src, tgt)
 
     def _excess(weight: F.Column) -> DataFrame:
         copies = F.explode(F.sequence(F.lit(1), weight))
-        return w.filter(weight > 0).withColumn("_w", copies).select(*src.columns)
+        return weights.filter(weight > 0).withColumn(w, copies).select(*src.columns)
 
-    return _excess(F.col("_w")), _excess(-F.col("_w"))
+    return _excess(F.col(w)), _excess(-F.col(w))
 
 
 def diff_summary(src: DataFrame, tgt: DataFrame) -> DataFrame:
     """One-row summary: rows to insert / delete (fix-SQL accounting) —
     inserts = Σ max(w,0), deletes = Σ max(-w,0) over the row weights."""
-    w = F.col("_w")
-    return _row_weights(src, tgt).agg(
+    weights, name = _row_weights(src, tgt)
+    w = F.col(name)
+    return weights.agg(
         F.coalesce(F.sum(F.greatest(w, F.lit(0))), F.lit(0)).alias("insert_rows"),
         F.coalesce(F.sum(F.greatest(-w, F.lit(0))), F.lit(0)).alias("delete_rows"),
     )

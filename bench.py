@@ -236,44 +236,27 @@ def main() -> None:
             pass
         load_samples.append(_load1())
 
-    # Streaming path: availableNow micro-batch rollup over the events
-    # table (file source -> windowed agg -> memory sink). Timed once —
-    # streaming checkpoint setup dominates and a median over re-created
-    # checkpoints measures tmpfs, not the plan.
-    # untimed streaming WARMUP first (round-9 measurement fix,
-    # disclosed in OPTIMIZATION_r09.md): the first streaming query of
-    # a session pays ~2 s of one-time machinery cost (streaming class
-    # loading, state-store/codegen init) that the batch section's q1
-    # warmup already removes for batch queries — without this, that
-    # one-time cost lands on whichever stream happens to run first and
-    # is indistinguishable from its plan cost. Each timed stream still
-    # pays its own FULL checkpoint + state setup on a fresh tmpdir.
+    # Streaming path: each _stream_table row is timed once — streaming
+    # checkpoint setup dominates and a median over re-created
+    # checkpoints measures tmpfs, not the plan. The untimed warmup row
+    # runs first (round-9 measurement fix, OPTIMIZATION_r09.md).
     # probe hygiene: SPARK_GRAFT_BENCH_ONLY (a local A/B tool — the
     # driver never sets it) filters the stream section too, so a
     # batch-query probe doesn't pay ~2 min of stream spin-up. A full
     # driver run (no ONLY) is unchanged.
-    stream_benches = [
-        ("stream_rollup", _bench_stream_rollup),
-        ("stream_dedup", _bench_stream_dedup),
-        ("stream_transitions", _bench_stream_transitions),
-        ("stream_funnel", _bench_stream_funnel),
-        ("stream_join", _bench_stream_join),
-        ("stream_novelty", _bench_stream_novelty),
-        ("stream_drift", _bench_stream_drift),
-    ]
-    if only:
-        stream_benches = [(n, f) for n, f in stream_benches if n in only]
-    if stream_benches:
+    warmup, stream_rows = _stream_table()
+    stream_rows = [r for r in stream_rows if not only or r[0] in only]
+    if stream_rows:
         try:
-            _warm_streaming(spark)
+            _run_stream(spark, *warmup)
         except Exception:  # noqa: BLE001 — warmup failure must not kill the run
             pass
-    for sname, sfn in stream_benches:
+    for row in stream_rows:
         try:
-            timings[sname] = round(sfn(spark), 3)
-            total += timings[sname]
+            timings[row[0]] = round(_run_stream(spark, *row), 3)
+            total += timings[row[0]]
         except Exception as exc:  # noqa: BLE001 — isolate per query
-            errors[sname] = f"{type(exc).__name__}: {exc}"[:300]
+            errors[row[0]] = f"{type(exc).__name__}: {exc}"[:300]
 
     # estimator hygiene: "best"/"best_total" are BATCH best-of-N only
     # (the snapshot above — stream queries are single-shot cold numbers
@@ -366,308 +349,90 @@ def main() -> None:
     print(json.dumps(out, separators=(",", ":")), flush=True)
 
 
-def _warm_streaming(spark) -> None:
-    """One untimed availableNow pass (file source -> narrow projection
-    -> memory sink) to absorb the session's one-time streaming
-    machinery cost before the timed stream section — the streaming
-    analogue of the q1 batch warmup above. Uses its own throwaway
-    checkpoint; the timed streams keep paying their full per-query
-    checkpoint/state setup."""
+def _stream_table() -> tuple[tuple, list[tuple]]:
+    """(warmup row, one row per timed stream). A row is (stdout key,
+    fixture table, drops, start, monitor): ``start(spark, feed, ckpt,
+    tgt, name)`` starts the availableNow query over the feed dir; a
+    ``monitor`` row is a corpus monitor whose metric rows land in
+    ``tgt/<monitor>`` and whose store table is dropped afterwards, every
+    other row fills the memory table ``name``. The two monitor feeds
+    are the same file twice, so batch 1 reads the bucketed store batch
+    0 built (0% novel, drift ~0).
+
+    The warmup row (file source -> narrow projection -> memory sink,
+    untimed) absorbs the session's one-time streaming machinery cost
+    (~2 s: class loading, state-store/codegen init) before the timed
+    rows — the streaming analogue of the q1 batch warmup; each timed
+    row still pays its own full checkpoint and state setup."""
+    from transferdb_spark.streaming import corpus, incr, joins, stateful
+
+    def to_memory(build, output_mode="append"):
+        def start(spark, feed, ckpt, tgt, name):
+            events = incr.stream_events(spark, feed).drop("props")
+            return incr.run_available(build(events), ckpt, name, output_mode=output_mode)
+
+        return start
+
+    def corpus_monitor(ingest):
+        def start(spark, feed, ckpt, tgt, name):
+            return ingest(spark, feed, tgt, ckpt, max_files_per_trigger=1)
+
+        return start
+
+    warmup = ("stream_warmup", "events", 1, to_memory(lambda ev: ev.select("user_id")), None)
+    return warmup, [
+        ("stream_rollup", "events", 1, to_memory(incr.hourly_rollup_stream, "complete"), None),
+        (
+            "stream_dedup", "documents", 1,
+            lambda spark, feed, ckpt, tgt, name: stateful.run_dedup_to_memory(
+                spark, feed, ckpt, name=name
+            ),
+            None,
+        ),
+        ("stream_transitions", "events", 1, to_memory(stateful.streaming_transitions), None),
+        ("stream_funnel", "events", 1, to_memory(stateful.streaming_funnel), None),
+        ("stream_join", "events", 1, to_memory(joins.streaming_attribution_join), None),
+        ("stream_novelty", "documents", 2, corpus_monitor(corpus.ingest_novelty_stream), "novelty"),
+        ("stream_drift", "documents", 2, corpus_monitor(corpus.ingest_drift_stream), "drift"),
+    ]
+
+
+def _run_stream(spark, key, table, drops, start, monitor) -> float:
+    """Time one availableNow pass of a stream table row (query start to
+    termination) over ``drops`` symlinks of the fixture table, on a
+    fresh temp dir and checkpoint with 8 shuffle partitions.
+
+    State-partition sizing: a streaming agg's state partition count =
+    spark.sql.shuffle.partitions AT FIRST START (pinned into the
+    checkpoint forever after). 32 state stores for one availableNow
+    pass over one file is pure per-task overhead — production sizes
+    this to expected state volume before the first start, so the bench
+    does too (measured: rollup 1.2s -> 0.75s warm at sf0.1)."""
     import shutil
     import tempfile
 
-    src = os.path.join(SF_DIR, "events.parquet")
-    work = tempfile.mkdtemp(prefix="bench_swarm_")
-    try:
-        feed = os.path.join(work, "feed")
-        os.makedirs(feed)
-        os.symlink(src, os.path.join(feed, "events.parquet"))
-        stream = (
-            spark.readStream.schema(spark.read.parquet(src).schema)
-            .parquet(feed)
-            .drop("props")
-            .select("user_id")
-        )
-        q = (
-            stream.writeStream.outputMode("append")
-            .format("memory")
-            .queryName("bench_stream_warmup")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        spark.catalog.dropTempView("bench_stream_warmup")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    from transferdb_spark.streaming.corpus import _store_name
 
-
-def _bench_stream_dedup(spark) -> float:
-    """Time one availableNow pass of the STATEFUL streaming exact
-    dedup (applyInPandasWithState first-seen-wins) over the documents
-    table — the custom-stateful-operator path, complementing the
-    built-in windowed-agg path of stream_rollup."""
-    import shutil
-    import tempfile
-
-    from transferdb_spark.streaming.stateful import run_dedup_to_memory
-
-    src = os.path.join(SF_DIR, "documents.parquet")
-    work = tempfile.mkdtemp(prefix="bench_sdedup_")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        feed = os.path.join(work, "feed")
-        os.makedirs(feed)
-        os.symlink(src, os.path.join(feed, "documents.parquet"))
-        ckpt = os.path.join(work, "ckpt")
-        t0 = time.time()
-        q = run_dedup_to_memory(spark, feed, ckpt, name="bench_stream_dedup")
-        q.awaitTermination()
-        dt = time.time() - t0
-        spark.sql("SELECT count(*) FROM bench_stream_dedup").collect()
-        return dt
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        shutil.rmtree(work, ignore_errors=True)
-
-
-def _bench_stream_transitions(spark) -> float:
-    """Time one availableNow pass of the stateful streaming Markov
-    transition matrix (per-user last-event state, round 7) over the
-    events table."""
-    import shutil
-    import tempfile
-
-    from transferdb_spark.streaming.stateful import streaming_transitions
-
-    src = os.path.join(SF_DIR, "events.parquet")
-    work = tempfile.mkdtemp(prefix="bench_strans_")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        feed = os.path.join(work, "feed")
-        os.makedirs(feed)
-        os.symlink(src, os.path.join(feed, "events.parquet"))
-        stream = (
-            spark.readStream.schema(spark.read.parquet(src).schema)
-            .parquet(feed)
-            .drop("props")
-        )
-        t0 = time.time()
-        q = (
-            streaming_transitions(stream)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName("bench_stream_transitions")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        dt = time.time() - t0
-        spark.sql("SELECT count(*) FROM bench_stream_transitions").collect()
-        return dt
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        shutil.rmtree(work, ignore_errors=True)
-
-
-def _bench_stream_join(spark) -> float:
-    """Time one availableNow pass of the stream-stream interval join
-    (click->purchase attribution, round 8) over the events table —
-    the two watermarked sides + interval condition exercise the
-    symmetric stateful join buffers."""
-    import shutil
-    import tempfile
-
-    from transferdb_spark.streaming.joins import streaming_attribution_join
-
-    src = os.path.join(SF_DIR, "events.parquet")
-    work = tempfile.mkdtemp(prefix="bench_sjoin_")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        feed = os.path.join(work, "feed")
-        os.makedirs(feed)
-        os.symlink(src, os.path.join(feed, "events.parquet"))
-        stream = (
-            spark.readStream.schema(spark.read.parquet(src).schema)
-            .parquet(feed)
-            .drop("props")
-        )
-        t0 = time.time()
-        q = (
-            streaming_attribution_join(stream)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName("bench_stream_join")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        dt = time.time() - t0
-        spark.sql("SELECT count(*) FROM bench_stream_join").collect()
-        return dt
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        shutil.rmtree(work, ignore_errors=True)
-
-
-def _bench_stream_funnel(spark) -> float:
-    """Time one availableNow pass of the stateful streaming first-touch
-    funnel (round 7) over the events table."""
-    import shutil
-    import tempfile
-
-    from transferdb_spark.streaming.stateful import streaming_funnel
-
-    src = os.path.join(SF_DIR, "events.parquet")
-    work = tempfile.mkdtemp(prefix="bench_sfun_")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        feed = os.path.join(work, "feed")
-        os.makedirs(feed)
-        os.symlink(src, os.path.join(feed, "events.parquet"))
-        stream = (
-            spark.readStream.schema(spark.read.parquet(src).schema)
-            .parquet(feed)
-            .drop("props")
-        )
-        t0 = time.time()
-        q = (
-            streaming_funnel(stream)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName("bench_stream_funnel")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        dt = time.time() - t0
-        spark.sql("SELECT count(*) FROM bench_stream_funnel").collect()
-        return dt
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        shutil.rmtree(work, ignore_errors=True)
-
-
-def _bench_stream_rollup(spark) -> float:
-    """Time one availableNow pass of the hourly rollup stream.
-
-    Streams the events table from a temp dir (symlinked file) through
-    the windowed-agg + watermark plan into a memory sink."""
-    import shutil
-    import tempfile
-
-    from transferdb_spark.streaming.incr import run_rollup_to_memory
-
-    src = os.path.join(SF_DIR, "events.parquet")
     work = tempfile.mkdtemp(prefix="bench_stream_")
-    # State-partition sizing: a streaming agg's state partition count =
-    # spark.sql.shuffle.partitions AT FIRST START (pinned into the
-    # checkpoint forever after). 32 state stores for one availableNow
-    # pass over one file is pure per-task overhead — production sizes
-    # this to expected state volume before the first start, so the
-    # bench does too (measured: 1.2s -> 0.75s warm at sf0.1).
+    feed, tgt, name = os.path.join(work, "feed"), os.path.join(work, "tgt"), "bench_" + key
     old_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        feed = os.path.join(work, "feed")
         os.makedirs(feed)
-        os.symlink(src, os.path.join(feed, "events.parquet"))
-        ckpt = os.path.join(work, "ckpt")
+        for i in range(drops):
+            os.symlink(
+                os.path.join(SF_DIR, f"{table}.parquet"), os.path.join(feed, f"drop{i}.parquet")
+            )
         t0 = time.time()
-        q = run_rollup_to_memory(spark, feed, ckpt, name="bench_stream_rollup")
-        q.awaitTermination()
+        start(spark, feed, os.path.join(work, "ckpt"), tgt, name).awaitTermination()
         dt = time.time() - t0
-        spark.sql("SELECT count(*) FROM bench_stream_rollup").collect()
+        (spark.read.parquet(os.path.join(tgt, monitor)) if monitor else spark.table(name)).count()
         return dt
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        shutil.rmtree(work, ignore_errors=True)
-
-
-
-
-def _bench_stream_novelty(spark) -> float:
-    """Time an availableNow pass of the ingest-time shingle-novelty
-    monitor (round 9) over the documents table fed as TWO drops (the
-    same file twice): batch 0 builds the bucketed shingle store, batch
-    1 anti-joins it in place (0% novel) — the Exchange-free
-    store-gating pattern the incremental dedup ingest also uses."""
-    import shutil
-    import tempfile
-
-    from transferdb_spark.streaming.corpus import (
-        _shingle_store_name,
-        ingest_novelty_stream,
-    )
-
-    src = os.path.join(SF_DIR, "documents.parquet")
-    work = tempfile.mkdtemp(prefix="bench_snov_")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    tgt = os.path.join(work, "tgt")
-    try:
-        feed = os.path.join(work, "feed")
-        os.makedirs(feed)
-        os.symlink(src, os.path.join(feed, "drop0.parquet"))
-        os.symlink(src, os.path.join(feed, "drop1.parquet"))
-        t0 = time.time()
-        q = ingest_novelty_stream(
-            spark, feed, tgt, os.path.join(work, "ckpt"), max_files_per_trigger=1
-        )
-        q.awaitTermination()
-        dt = time.time() - t0
-        spark.read.parquet(os.path.join(tgt, "novelty")).collect()
-        return dt
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        spark.sql(f"DROP TABLE IF EXISTS {_shingle_store_name(tgt)}")
-        shutil.rmtree(work, ignore_errors=True)
-
-
-
-
-def _bench_stream_drift(spark) -> float:
-    """Time an availableNow pass of the ingest-time KL-drift monitor
-    (round 9) over the documents table fed as TWO drops: batch 0
-    builds the bucketed token-count store, batch 1 measures drift
-    against it (same file -> drift ~0) via the Exchange-free store
-    join + scalar history from the metric rows."""
-    import shutil
-    import tempfile
-
-    from transferdb_spark.streaming.corpus import (
-        _term_store_name,
-        ingest_drift_stream,
-    )
-
-    src = os.path.join(SF_DIR, "documents.parquet")
-    work = tempfile.mkdtemp(prefix="bench_sdrift_")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    tgt = os.path.join(work, "tgt")
-    try:
-        feed = os.path.join(work, "feed")
-        os.makedirs(feed)
-        os.symlink(src, os.path.join(feed, "drop0.parquet"))
-        os.symlink(src, os.path.join(feed, "drop1.parquet"))
-        t0 = time.time()
-        q = ingest_drift_stream(
-            spark, feed, tgt, os.path.join(work, "ckpt"), max_files_per_trigger=1
-        )
-        q.awaitTermination()
-        dt = time.time() - t0
-        spark.read.parquet(os.path.join(tgt, "drift")).collect()
-        return dt
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        spark.sql(f"DROP TABLE IF EXISTS {_term_store_name(tgt)}")
+        spark.catalog.dropTempView(name)
+        if monitor:
+            spark.sql(f"DROP TABLE IF EXISTS {_store_name(monitor, tgt)}")
         shutil.rmtree(work, ignore_errors=True)
 
 

@@ -184,6 +184,33 @@ def test_cli_all_mode_runs_full_plus_incremental(tmp_path, capsys, spark):
     assert out["incr_rows"] > 0  # incremental phase consumed the stream
 
 
+def test_cli_compact_keeps_the_all_mode_cdc_state(tmp_path, capsys, spark):
+    """`compact` rewrites the CDC log `all` landed on the same business
+    key: the latest-wins state has the same rows before and after."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from transferdb_spark.streaming.incr import cdc_current_state
+
+    wd = str(tmp_path / "wd_compact")
+    argv = ["--mode", "all", "--workdir", wd, "--tables", "nation", "--chunks", "2"]
+    run_cli(argv, capsys)
+    # a second log drop -> a second batch dir for compaction to fold
+    src = os.path.join(wd, "events_source")
+    spark.read.parquet(src).limit(20).withColumn(
+        "event_id", F.col("event_id") + 10_000_000
+    ).coalesce(1).write.mode("append").parquet(src)
+    run_cli(argv, capsys)
+
+    target = os.path.join(wd, "target", "events_incr")
+    before = sorted(cdc_current_state(spark, target).collect())
+    out = run_cli(["--mode", "compact", "--workdir", wd], capsys)
+    assert out["dirs_removed"] == 2
+    assert out["live_rows"] == len(before)
+    assert sorted(cdc_current_state(spark, target).collect()) == before
+
+
 def test_cli_export_mode(tmp_path, capsys, spark):
     wd = str(tmp_path / "wd")
     out = run_cli(["--mode", "export", "--workdir", wd], capsys)

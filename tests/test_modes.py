@@ -722,10 +722,10 @@ def test_keyless_rowid_chunk_plan(tmp_path, spark):
 
 def test_keyless_full_migrate_then_compare(tmp_path, spark):
     """End-to-end keyless path: a table with no numeric column migrates
-    via file-group chunks and compares clean (whole-table checksum —
-    compare without a split key)."""
+    via file-group chunks and compares clean (the exact row-set diff
+    needs no split key)."""
     from transferdb_spark.modes.full import full_migrate_keyless
-    from transferdb_spark.operators.checksum import table_checksum
+    from transferdb_spark.operators.diff import dataset_diff
     from transferdb_spark.plans.chunker import elect_split_key
 
     src = str(tmp_path / "keyless_src")
@@ -741,9 +741,8 @@ def test_keyless_full_migrate_then_compare(tmp_path, spark):
     target = full_migrate_keyless(spark, src, "keyless", wd, n_chunks=3)
     tgt_df = spark.read.parquet(target)
     assert tgt_df.count() == 3000
-    s = table_checksum(src_df).first()
-    t = table_checksum(tgt_df).first()
-    assert (s["cnt"], s["checksum"]) == (t["cnt"], t["checksum"])
+    missing, extra = dataset_diff(src_df, tgt_df)
+    assert missing.count() == 0 and extra.count() == 0
 
 
 def test_keyless_resume_rereads_only_failed_groups(tmp_path, spark):

@@ -59,6 +59,7 @@ def test_streaming_dedup_ttl_evicts_idle_state(spark, tmp_path):
     the first survivor is visible and an idle tick has passed."""
     import time
 
+    from transferdb_spark.streaming.incr import stream_events
     from transferdb_spark.streaming.stateful import streaming_dedup
 
     src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
@@ -66,8 +67,7 @@ def test_streaming_dedup_ttl_evicts_idle_state(spark, tmp_path):
         1
     ).write.parquet(src)
 
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
+    stream = stream_events(spark, src)
     q = (
         streaming_dedup(stream, ttl_ms=1)
         .writeStream.outputMode("append")
@@ -109,6 +109,7 @@ def test_streaming_transitions_match_batch_matrix(spark, sf_dir, tmp_path):
     import importlib.util
 
     from transferdb_spark.sources.registry import load_table
+    from transferdb_spark.streaming.incr import run_available, stream_events
     from transferdb_spark.streaming.stateful import streaming_transitions
 
     spec = importlib.util.spec_from_file_location(
@@ -125,20 +126,8 @@ def test_streaming_transitions_match_batch_matrix(spark, sf_dir, tmp_path):
     first.coalesce(1).write.mode("overwrite").parquet(src)
     second.coalesce(1).write.mode("append").parquet(src)
 
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        streaming_transitions(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("t_trans")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    stream = stream_events(spark, src, max_files_per_trigger=1)
+    q = run_available(streaming_transitions(stream), str(tmp_path / "ckpt"), "t_trans")
     q.awaitTermination(180)
 
     got = {
@@ -163,6 +152,7 @@ def test_streaming_funnel_matches_batch_counts(spark, sf_dir, tmp_path):
     import importlib.util
 
     from transferdb_spark.sources.registry import load_table
+    from transferdb_spark.streaming.incr import run_available, stream_events
     from transferdb_spark.streaming.stateful import streaming_funnel
 
     spec = importlib.util.spec_from_file_location(
@@ -177,20 +167,8 @@ def test_streaming_funnel_matches_batch_counts(spark, sf_dir, tmp_path):
     events.filter(F.col("ts") <= mid).coalesce(1).write.mode("overwrite").parquet(src)
     events.filter(F.col("ts") > mid).coalesce(1).write.mode("append").parquet(src)
 
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        streaming_funnel(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("t_funnel")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    stream = stream_events(spark, src, max_files_per_trigger=1)
+    q = run_available(streaming_funnel(stream), str(tmp_path / "ckpt"), "t_funnel")
     q.awaitTermination(180)
 
     got = {
@@ -223,24 +201,17 @@ def test_streaming_funnel_drop_terminal_frees_state(spark, tmp_path):
         spark.createDataFrame(b1, cols).coalesce(1).write.mode("overwrite").parquet(src)
         spark.createDataFrame(b2, cols).coalesce(1).write.mode("append").parquet(src)
 
+    from transferdb_spark.streaming.incr import run_available, stream_events
     from transferdb_spark.streaming.stateful import streaming_funnel
 
     def run(name, **kw):
         src = str(tmp_path / f"src_{name}")
         drops(src)
-        stream = (
-            spark.readStream.schema(spark.read.parquet(src).schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            streaming_funnel(stream, steps=["view", "click"], **kw)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", str(tmp_path / f"ck_{name}"))
-            .trigger(availableNow=True)
-            .start()
+        stream = stream_events(spark, src, max_files_per_trigger=1)
+        q = run_available(
+            streaming_funnel(stream, steps=["view", "click"], **kw),
+            str(tmp_path / f"ck_{name}"),
+            name,
         )
         q.awaitTermination(180)
         return {
@@ -264,6 +235,7 @@ def test_streaming_transitions_ttl_evicts_idle_users(spark, tmp_path):
     import datetime as dt
     import time
 
+    from transferdb_spark.streaming.incr import stream_events
     from transferdb_spark.streaming.stateful import streaming_transitions
 
     src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
@@ -271,7 +243,7 @@ def test_streaming_transitions_ttl_evicts_idle_users(spark, tmp_path):
     cols = ["user_id", "ts", "event_id", "event_type"]
     spark.createDataFrame([(1, t0, 1, "a")], cols).coalesce(1).write.parquet(src)
 
-    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+    stream = stream_events(spark, src)
     q = (
         streaming_transitions(stream, ttl_ms=1)
         .writeStream.outputMode("append")
@@ -318,6 +290,7 @@ def test_transition_matrix_custom_whitelist_differential(spark, sf_dir, tmp_path
         transitions_sql_from_types,
     )
     from transferdb_spark.sources.registry import load_table, table_path
+    from transferdb_spark.streaming.incr import run_available, stream_events
     from transferdb_spark.streaming.stateful import streaming_transitions
 
     types = ["click", "purchase", "view"]  # drops signup/error -> re-links
@@ -341,19 +314,9 @@ def test_transition_matrix_custom_whitelist_differential(spark, sf_dir, tmp_path
     src = str(tmp_path / "src")
     ev.filter(F.col("ts") <= mid).coalesce(1).write.mode("overwrite").parquet(src)
     ev.filter(F.col("ts") > mid).coalesce(1).write.mode("append").parquet(src)
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        streaming_transitions(stream, event_types=types)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("t_trans_wl")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    stream = stream_events(spark, src, max_files_per_trigger=1)
+    q = run_available(
+        streaming_transitions(stream, event_types=types), str(tmp_path / "ckpt"), "t_trans_wl"
     )
     q.awaitTermination(180)
     summed = {

@@ -24,9 +24,18 @@ def source_dir(tmp_path, events):
 
 
 def test_rollup_stream_matches_batch(spark, tmp_path, source_dir, events):
-    from transferdb_spark.streaming.incr import run_rollup_to_memory
+    from transferdb_spark.streaming.incr import (
+        hourly_rollup_stream,
+        run_available,
+        stream_events,
+    )
 
-    q = run_rollup_to_memory(spark, source_dir, str(tmp_path / "ckpt"), name="t_rollup")
+    q = run_available(
+        hourly_rollup_stream(stream_events(spark, source_dir)),
+        str(tmp_path / "ckpt"),
+        "t_rollup",
+        output_mode="complete",
+    )
     q.awaitTermination(120)
     got = {
         (r["hour"], r["event_type"]): r["cnt"]
@@ -200,7 +209,7 @@ def test_redo_stream_to_changes_distributed(spark):
 
 def test_dedup_stream_drops_redelivered(spark, tmp_path, events):
     """Events delivered twice across micro-batches survive exactly once."""
-    from transferdb_spark.streaming.incr import dedup_stream, stream_events
+    from transferdb_spark.streaming.incr import dedup_stream, run_available, stream_events
 
     src = str(tmp_path / "dup_src")
     half = events.filter("event_id < 500")
@@ -212,15 +221,7 @@ def test_dedup_stream_drops_redelivered(spark, tmp_path, events):
     ).parquet(src)
 
     stream = stream_events(spark, src, max_files_per_trigger=1)
-    q = (
-        dedup_stream(stream, ["event_id"])
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("t_dedup")
-        .option("checkpointLocation", str(tmp_path / "ck_dedup"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = run_available(dedup_stream(stream, ["event_id"]), str(tmp_path / "ck_dedup"), "t_dedup")
     q.awaitTermination(180)
     got = spark.sql("SELECT event_id, COUNT(*) c FROM t_dedup GROUP BY 1 HAVING c > 1")
     assert got.count() == 0
@@ -229,7 +230,11 @@ def test_dedup_stream_drops_redelivered(spark, tmp_path, events):
 
 def test_attribution_join_matches_batch(spark, tmp_path, events):
     """Stream-stream range join equals the batch join over the same data."""
-    from transferdb_spark.streaming.incr import attribution_join_stream, stream_events
+    from transferdb_spark.streaming.incr import (
+        attribution_join_stream,
+        run_available,
+        stream_events,
+    )
 
     clicks_dir = str(tmp_path / "clicks")
     purch_dir = str(tmp_path / "purchases")
@@ -241,14 +246,7 @@ def test_attribution_join_matches_batch(spark, tmp_path, events):
     joined = attribution_join_stream(
         stream_events(spark, clicks_dir), stream_events(spark, purch_dir)
     )
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("t_attr")
-        .option("checkpointLocation", str(tmp_path / "ck_attr"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = run_available(joined, str(tmp_path / "ck_attr"), "t_attr")
     q.awaitTermination(180)
 
     got = spark.sql("SELECT click_id, purchase_id FROM t_attr")
@@ -380,6 +378,54 @@ def test_cdc_gate_survives_crash_mid_write(spark, tmp_path, source_dir, events, 
     }
     assert got == expected
     assert any(eid >= 2_000_000 for eid, _ in got.values())
+
+
+def test_cdc_batch_reads_its_input_once(spark, tmp_path, source_dir, events):
+    """Tripwire: one CDC micro-batch runs at most two jobs — the write
+    (its max SCN observed in the same pass) and nothing that re-reads
+    the batch. A separate max-SCN aggregation doubles the jobs and the
+    source rows each batch reads."""
+    from transferdb_spark.streaming.incr import apply_cdc_stream, stream_events
+
+    events.limit(30).withColumn("event_id", F.col("event_id") + 3_000_000).coalesce(
+        1
+    ).write.mode("append").parquet(source_dir)
+    q = apply_cdc_stream(
+        stream_events(spark, source_dir, max_files_per_trigger=1),
+        str(tmp_path / "target_j"),
+        str(tmp_path / "ckpt_j"),
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    batches = [p for p in q.recentProgress if p.numInputRows > 0]
+    assert len(batches) >= 2
+    assert sum(p.numInputRows for p in batches) == events.count() + 30
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert 0 < len(jobs) <= 2 * len(batches), (len(jobs), len(batches))
+
+
+def test_package_starts_every_stream_through_run_available():
+    """One stream harness: the package's only writeStream is in
+    run_available; readStream appears only in stream_events (parquet
+    feeds) and in the fixed-schema JSON redo feed of live_apply."""
+    import ast
+    import glob
+
+    root = os.path.join(os.path.dirname(__file__), "..", "transferdb_spark")
+    sites: dict[str, list] = {"readStream": [], "writeStream": []}
+    for path in sorted(glob.glob(os.path.join(root, "**", "*.py"), recursive=True)):
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        for node in tree.body:
+            for n in ast.walk(node):
+                if isinstance(n, ast.Attribute) and n.attr in sites:
+                    owner = getattr(node, "name", "<module>")
+                    sites[n.attr].append((os.path.basename(path), owner))
+    assert sites["writeStream"] == [("incr.py", "run_available")]
+    assert sorted(sites["readStream"]) == [
+        ("incr.py", "stream_events"),
+        ("live_apply.py", "run_redo_apply_stream"),
+    ]
 
 
 def test_redo_grammar_breadth():
@@ -603,6 +649,7 @@ def test_stream_stream_attribution_join_matches_batch(spark, sf_dir, tmp_path):
     from pyspark.sql import functions as F
 
     from transferdb_spark.sources.registry import load_table
+    from transferdb_spark.streaming.incr import run_available, stream_events
     from transferdb_spark.streaming.joins import (
         attribution_pairs,
         streaming_attribution_join,
@@ -620,20 +667,8 @@ def test_stream_stream_attribution_join_matches_batch(spark, sf_dir, tmp_path):
     events.filter(F.col("ts") <= mid).coalesce(1).write.mode("overwrite").parquet(src)
     events.filter(F.col("ts") > mid).coalesce(1).write.mode("append").parquet(src)
 
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        streaming_attribution_join(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("t_attrib")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    stream = stream_events(spark, src, max_files_per_trigger=1)
+    q = run_available(streaming_attribution_join(stream), str(tmp_path / "ckpt"), "t_attrib")
     q.awaitTermination(300)
     got = {
         (r["user_id"], r["src_event_id"], r["dst_event_id"])

@@ -20,6 +20,10 @@ import json
 import os
 import sys
 
+# business key of the events CDC log: `all` lands it, `compact` rewrites
+# it — the same key in both, or compaction collapses distinct events
+EVENTS_CDC_KEY = "event_id"
+
 
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="transferdb_spark", description=__doc__)
@@ -322,7 +326,7 @@ def main(argv: list[str] | None = None) -> int:
         from transferdb_spark.streaming.incr import compact_cdc_log
 
         target = os.path.join(args.workdir, "target", "events_incr")
-        out.update(compact_cdc_log(spark, target, key="user_id"))
+        out.update(compact_cdc_log(spark, target, key=EVENTS_CDC_KEY))
 
     elif args.mode == "prune":
         from transferdb_spark.modes.prune import prune_corpus
@@ -449,6 +453,7 @@ def main(argv: list[str] | None = None) -> int:
             stream_events(spark, src_dir),
             os.path.join(args.workdir, "target", "events_incr"),
             os.path.join(args.workdir, "checkpoints", "incr"),
+            key=EVENTS_CDC_KEY,
         )
         q.awaitTermination(300)
         out["incr_rows"] = spark.read.parquet(

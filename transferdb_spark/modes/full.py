@@ -127,7 +127,9 @@ def full_migrate_table(
         return w
 
     if len(pending) == len(states):
-        # fresh run: one job, chunk-aligned range partitioning
+        # fresh run: one range-partitioned write (repartitionByRange
+        # samples the input in jobs of its own, and its bounds are
+        # sampled quantiles, not the chunk grid)
         try:
             if layout_cols and partition_cols:
                 # cluster WITHIN each hive partition: shuffling on the

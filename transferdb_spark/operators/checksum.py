@@ -120,16 +120,6 @@ def shared_chunk_bounds(src: DataFrame, tgt: DataFrame, key: str) -> tuple[int, 
     return None
 
 
-def table_checksum(
-    df: DataFrame, cols: list[str] | None = None, portable: bool = False
-) -> DataFrame:
-    """Whole-table (cnt, checksum) — one row."""
-    h = row_hash(df.schema, cols, portable)
-    return df.select(h.alias("h")).agg(
-        F.count(F.lit(1)).alias("cnt"), F.sum("h").alias("checksum")
-    )
-
-
 def compare_chunks(
     src: DataFrame,
     tgt: DataFrame,

@@ -25,6 +25,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from transferdb_spark.streaming.incr import run_available, stream_events
+
 
 def _write_metric_row(
     spark: SparkSession, path: str, cols: list[tuple[str, object, str]]
@@ -45,16 +47,38 @@ def _write_metric_row(
 SIG_BUCKETS = 16
 
 
+def _store_name(kind: str, target_dir: str) -> str:
+    """Catalog name of the ``kind`` monitor's store table ("novelty":
+    shingle hashes, "drift": term counts), one per target dir."""
+    import hashlib
+
+    prefix = {"novelty": "novelty_sh_", "drift": "drift_tc_"}[kind]
+    return prefix + hashlib.md5(target_dir.encode()).hexdigest()[:10]
+
+
+def _rewrite_store_partition(
+    spark: SparkSession, rows: DataFrame, table: str, batch_id: int, key: str
+) -> None:
+    """Land ``rows`` as the store's ``batch_id`` partition, bucketed
+    and sorted by ``key``: DROP the partition first, so a redelivered
+    batch rewrites its own rows instead of duplicating them."""
+    if spark.catalog.tableExists(table):
+        spark.sql(f"ALTER TABLE {table} DROP IF EXISTS PARTITION (batch_id={batch_id})")
+    (
+        rows.withColumn("batch_id", F.lit(batch_id))
+        .write.mode("append")
+        .partitionBy("batch_id")
+        .bucketBy(SIG_BUCKETS, key)
+        .sortBy(key)
+        .format("parquet")
+        .saveAsTable(table)
+    )
+
+
 # ---------------------------------------------------------------------------
 # ingest-time NOVELTY accounting — the freshness monitor of a continuous
 # corpus ingest: per micro-batch, how many of the batch's distinct
 # shingles has the store never seen?
-
-
-def _shingle_store_name(target_dir: str) -> str:
-    import hashlib
-
-    return "novelty_sh_" + hashlib.md5(target_dir.encode()).hexdigest()[:10]
 
 
 def ingest_novelty_stream(
@@ -63,8 +87,6 @@ def ingest_novelty_stream(
     target_dir: str,
     checkpoint_dir: str,
     max_files_per_trigger: int | None = None,
-    store_table: str | None = None,
-    store_buckets: int = SIG_BUCKETS,
 ):
     """Documents stream → per-batch shingle-novelty rate, persisted to
     ``target_dir/novelty`` as (batch_id, n_shingles, n_novel,
@@ -83,13 +105,8 @@ def ingest_novelty_stream(
     not O(store)."""
     from transferdb_spark.ext.dedup import SHINGLE_HASHES, _shingled
 
-    schema = spark.read.parquet(source_dir).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
     out_dir = os.path.join(target_dir, "novelty")
-    table = store_table or _shingle_store_name(target_dir)
+    table = _store_name("novelty", target_dir)
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
         hashes = (
@@ -149,28 +166,12 @@ def ingest_novelty_stream(
                     ("novelty_rate", rate, "double"),
                 ],
             )
-            if spark.catalog.tableExists(table):
-                spark.sql(
-                    f"ALTER TABLE {table} DROP IF EXISTS PARTITION (batch_id={batch_id})"
-                )
-            (
-                novel.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("append")
-                .partitionBy("batch_id")
-                .bucketBy(store_buckets, "h")
-                .sortBy("h")
-                .format("parquet")
-                .saveAsTable(table)
-            )
+            _rewrite_store_partition(spark, novel, table, batch_id, "h")
         finally:
             hashes.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    stream = stream_events(spark, source_dir, max_files_per_trigger=max_files_per_trigger)
+    return run_available(stream, checkpoint_dir, apply_batch)
 
 
 # ---------------------------------------------------------------------------
@@ -179,20 +180,12 @@ def ingest_novelty_stream(
 # order: per micro-batch, KL(batch ‖ everything ingested before it).
 
 
-def _term_store_name(target_dir: str) -> str:
-    import hashlib
-
-    return "drift_tc_" + hashlib.md5(target_dir.encode()).hexdigest()[:10]
-
-
 def ingest_drift_stream(
     spark: SparkSession,
     source_dir: str,
     target_dir: str,
     checkpoint_dir: str,
     max_files_per_trigger: int | None = None,
-    store_table: str | None = None,
-    store_buckets: int = SIG_BUCKETS,
 ):
     """Documents stream → per-batch vocabulary KL drift, persisted to
     ``target_dir/drift`` as (batch_id, n_tokens, vocab, v_new,
@@ -214,13 +207,8 @@ def ingest_drift_stream(
     not O(store)."""
     from transferdb_spark.ext.text import TOKENS
 
-    schema = spark.read.parquet(source_dir).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
     out_dir = os.path.join(target_dir, "drift")
-    table = store_table or _term_store_name(target_dir)
+    table = _store_name("drift", target_dir)
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
         counts = (
@@ -296,25 +284,9 @@ def ingest_drift_stream(
                     ("kl_drift", kl, "double"),
                 ],
             )
-            if spark.catalog.tableExists(table):
-                spark.sql(
-                    f"ALTER TABLE {table} DROP IF EXISTS PARTITION (batch_id={batch_id})"
-                )
-            (
-                counts.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("append")
-                .partitionBy("batch_id")
-                .bucketBy(store_buckets, "term")
-                .sortBy("term")
-                .format("parquet")
-                .saveAsTable(table)
-            )
+            _rewrite_store_partition(spark, counts, table, batch_id, "term")
         finally:
             counts.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    stream = stream_events(spark, source_dir, max_files_per_trigger=max_files_per_trigger)
+    return run_available(stream, checkpoint_dir, apply_batch)

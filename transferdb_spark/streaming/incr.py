@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -55,6 +55,26 @@ def stream_events(
     from transferdb_spark.sources.registry import _normalize_ntz
 
     return _normalize_ntz(reader.parquet(source_dir))
+
+
+def run_available(
+    df: DataFrame, checkpoint_dir: str, sink, output_mode: str = "append"
+):
+    """Start ``df`` as an availableNow query (drain what has landed,
+    then stop) and return the started query — the one stream harness.
+
+    ``sink`` is either a foreachBatch function ``(batch, batch_id)`` or
+    the name of an in-memory table (the memory sink). The checkpoint
+    holds the source offsets, so a restart resumes where the last run
+    committed."""
+    w = (
+        df.writeStream.outputMode(output_mode)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+    )
+    if isinstance(sink, str):
+        return w.format("memory").queryName(sink).start()
+    return w.foreachBatch(sink).start()
 
 
 def _latest_per_key(batch: DataFrame, key: str, scn_col: str) -> DataFrame:
@@ -122,11 +142,17 @@ def apply_cdc_stream(
         else:
             floor = gate["max_scn"]
         gated = batch if floor is None else batch.filter(F.col(scn_col) > floor)
-        latest = _latest_per_key(gated, key, scn_col)
+        # the batch's max SCN is observed DURING the write: each key
+        # keeps its max-SCN row, so max over `latest` = max over `gated`
+        # and the batch is read once (an empty batch observes None)
+        obs = Observation()
+        latest = _latest_per_key(gated, key, scn_col).observe(
+            obs, F.max(scn_col).alias("max_scn")
+        )
         latest.write.mode("overwrite").parquet(
             os.path.join(target_dir, f"batch_id={batch_id}")
         )
-        batch_max = gated.agg(F.max(scn_col)).first()[0]  # one scalar to the driver
+        batch_max = obs.get["max_scn"]
         new_max = gate["max_scn"]
         if batch_max is not None:
             new_max = batch_max if new_max is None else max(new_max, batch_max)
@@ -135,13 +161,7 @@ def apply_cdc_stream(
         os.makedirs(checkpoint_dir, exist_ok=True)
         _write_json_atomic(gate_path, gate)
 
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_available(stream, checkpoint_dir, apply_batch)
 
 
 def cdc_current_state(
@@ -220,7 +240,15 @@ def hourly_rollup_stream(stream: DataFrame, watermark: str = "10 minutes") -> Da
 
     The reference has no window semantics (SCN ordering only) — this is
     the Spark-native upgrade: tumbling 1h windows, late events beyond
-    the watermark dropped deterministically."""
+    the watermark dropped deterministically.
+
+    Sizing note: a streaming aggregation's STATE partition count is
+    spark.sql.shuffle.partitions at the query's FIRST start and is
+    pinned into the checkpoint permanently — set it to the expected
+    state volume (keys, not input rows) BEFORE first start; per-task
+    state-store overhead makes oversizing expensive at every trigger.
+    Drive it with ``run_available(hourly_rollup_stream(stream_events(
+    spark, src)), ckpt, name, output_mode="complete")``."""
     return (
         stream.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
@@ -235,30 +263,6 @@ def hourly_rollup_stream(stream: DataFrame, watermark: str = "10 minutes") -> Da
             "sum_value",
         )
     )
-
-
-def run_rollup_to_memory(
-    spark: SparkSession, source_dir: str, checkpoint_dir: str, name: str = "rollup"
-):
-    """Drive the rollup with availableNow into an in-memory sink
-    (complete mode) — the test/verification harness path.
-
-    Sizing note: a streaming aggregation's STATE partition count is
-    spark.sql.shuffle.partitions at the query's FIRST start and is
-    pinned into the checkpoint permanently — set it to the expected
-    state volume (keys, not input rows) BEFORE first start; per-task
-    state-store overhead makes oversizing expensive at every trigger."""
-    stream = stream_events(spark, source_dir)
-    q = (
-        hourly_rollup_stream(stream)
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q
 
 
 def dedup_stream(

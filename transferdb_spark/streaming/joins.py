@@ -121,12 +121,11 @@ def streaming_attribution_join(
     wrapper adds is the generic (src_type, dst_type) parameterization,
     a 2x-window lateness allowance, and — via attribution_pairs above
     — an ORACLE-CHECKED batch definition the stream must converge to.
-    Output columns match the batch twin."""
+    Output columns match the batch twin. ``stream`` comes from
+    incr.stream_events, which already reads ``ts`` as TIMESTAMP (the
+    type watermarks need)."""
     from transferdb_spark.streaming.incr import attribution_join_stream
 
-    # raw parquet streams read ts as TIMESTAMP_NTZ (Spark 4), which
-    # watermarks reject — same normalization as sources/registry
-    stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     if "value" not in stream.columns:
         stream = stream.withColumn("value", F.lit(None).cast("double"))
     joined = attribution_join_stream(

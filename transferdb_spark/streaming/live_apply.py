@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from transferdb_spark.modes.apply import ApplyResult, apply_transactions
 from transferdb_spark.sources.jdbc import JdbcSink
 from transferdb_spark.state.store import _write_json_atomic
+from transferdb_spark.streaming.incr import run_available
 from transferdb_spark.streaming.redo import (
     group_transactions,
     redo_stream_to_changes,
@@ -142,9 +143,4 @@ def run_redo_apply_stream(
             dialect=dialect, on_error=on_error,
         )
 
-    return (
-        stream.writeStream.foreachBatch(sink_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_available(stream, checkpoint_dir, sink_batch)

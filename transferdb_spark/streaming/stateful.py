@@ -26,6 +26,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from transferdb_spark.streaming.incr import run_available, stream_events
+
 DEDUP_STATE_SCHEMA = "first_id LONG, n_dups LONG"
 DEDUP_OUTPUT_SCHEMA = T.StructType(
     [
@@ -133,24 +135,12 @@ def run_dedup_to_memory(
     sessions): dedup median 2.94→2.53 s and 3.22→2.52 s, best
     2.31→2.09 / 2.30→1.94; join and rollup regressed under RocksDB,
     so the choice is per-operator, not global."""
-    schema = spark.read.parquet(source_dir).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = stream_events(spark, source_dir, max_files_per_trigger=max_files_per_trigger)
     prov_key = "spark.sql.streaming.stateStore.providerClass"
     old_prov = spark.conf.get(prov_key, None)
     spark.conf.set(prov_key, _ROCKSDB_PROVIDER)
     try:
-        return (
-            streaming_dedup(stream)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
+        return run_available(streaming_dedup(stream), checkpoint_dir, name)
     finally:
         if old_prov is None:
             spark.conf.unset(prov_key)
@@ -214,7 +204,8 @@ def streaming_transitions(
     event_types: list[str] | None = None,
 ) -> DataFrame:
     """Per-batch (src, dst, n) transition increments as an append
-    stream; SUM over the sink gives the live Markov matrix.
+    stream; SUM over the sink gives the live Markov matrix. ``stream``
+    comes from incr.stream_events, which reads ``ts`` as TIMESTAMP.
 
     event_types is the saved-workload whitelist (the batch
     transition_matrix's parameter relation, passed as a list here):
@@ -235,10 +226,7 @@ def streaming_transitions(
     return (
         stream.select(
             "user_id",
-            # cast first: raw parquet streams read ts as TIMESTAMP_NTZ
-            # (Spark 4), which unix_millis rejects — same normalization
-            # as sources/registry load_table
-            F.unix_millis(F.col("ts").cast("timestamp")).alias("ts_ms"),
+            F.unix_millis("ts").alias("ts_ms"),
             F.col("event_id").cast("long").alias("event_id"),
             "event_type",
         )
@@ -347,7 +335,8 @@ def streaming_funnel(
 ) -> DataFrame:
     """Per-batch (step, n) completion increments as an append stream;
     SUM over the sink gives the live funnel counts. Defaults to the
-    batch funnel's saved workload.
+    batch funnel's saved workload. ``stream`` comes from
+    incr.stream_events, which reads ``ts`` as TIMESTAMP.
 
     State-growth knobs for unbounded streams (both off by default so
     the batch-equivalence contract holds exactly):
@@ -365,7 +354,7 @@ def streaming_funnel(
     return (
         stream.select(
             "user_id",
-            F.unix_millis(F.col("ts").cast("timestamp")).alias("ts_ms"),
+            F.unix_millis("ts").alias("ts_ms"),
             F.col("event_id").cast("long").alias("event_id"),
             "event_type",
         )

@@ -186,7 +186,8 @@ def test_cli_all_mode_runs_full_plus_incremental(tmp_path, capsys, spark):
 
 def test_cli_compact_keeps_the_all_mode_cdc_state(tmp_path, capsys, spark):
     """`compact` rewrites the CDC log `all` landed on the same business
-    key: the latest-wins state has the same rows before and after."""
+    key: the latest-wins state has the same rows before and after. Each
+    `all` run reports the rows its own batches landed, not the log's."""
     import os
 
     from pyspark.sql import functions as F
@@ -195,13 +196,14 @@ def test_cli_compact_keeps_the_all_mode_cdc_state(tmp_path, capsys, spark):
 
     wd = str(tmp_path / "wd_compact")
     argv = ["--mode", "all", "--workdir", wd, "--tables", "nation", "--chunks", "2"]
-    run_cli(argv, capsys)
+    first = run_cli(argv, capsys)
     # a second log drop -> a second batch dir for compaction to fold
     src = os.path.join(wd, "events_source")
+    assert first["incr_rows"] == spark.read.parquet(src).select("event_id").distinct().count()
     spark.read.parquet(src).limit(20).withColumn(
         "event_id", F.col("event_id") + 10_000_000
     ).coalesce(1).write.mode("append").parquet(src)
-    run_cli(argv, capsys)
+    assert run_cli(argv, capsys)["incr_rows"] == 20
 
     target = os.path.join(wd, "target", "events_incr")
     before = sorted(cdc_current_state(spark, target).collect())

@@ -32,7 +32,46 @@ def test_chunk_plan_covers_range(lineitem):
 def test_split_key_election(lineitem):
     from transferdb_spark.plans.chunker import elect_split_key
 
-    assert elect_split_key(lineitem, approx=False) == "l_orderkey"
+    assert elect_split_key(lineitem, approx=False)[0] == "l_orderkey"
+
+
+def test_split_key_election_bounds_fused(spark, sf_dir):
+    """One aggregate elects the key and returns its exact (min, max):
+    the same key the selectivity rule picked from its own aggregate, on
+    every fixture table; an empty table returns no bounds."""
+    import pytest
+
+    from transferdb_spark.plans.chunker import elect_split_key
+    from transferdb_spark.sources.registry import load_tables
+
+    for name, df in load_tables(spark, sf_dir).items():
+        numeric = [
+            f.name for f in df.schema.fields
+            if f.dataType.typeName() in ("long", "integer", "short", "byte")
+        ]
+        if not numeric:
+            with pytest.raises(ValueError):
+                elect_split_key(df)
+            continue
+        d = df.select([F.approx_count_distinct(c).alias(c) for c in numeric]).first()
+        expected = max(numeric, key=lambda c: (d[c], -numeric.index(c)))
+        key, bounds = elect_split_key(df)
+        assert key == expected, name
+        lo, hi = df.agg(F.min(key), F.max(key)).first()
+        assert bounds == (lo, hi), name
+    empty = spark.createDataFrame([], "k long, v string")
+    assert elect_split_key(empty) == ("k", None)
+
+
+def test_quantile_plan_uses_passed_bounds(spark):
+    from transferdb_spark.plans.chunker import plan_chunks_quantile
+
+    df = spark.range(1000).withColumnRenamed("id", "k")
+    own = plan_chunks_quantile(df, "k", 4)
+    assert (own[0].lower, own[-1].upper) == (0, 999)
+    pinned = plan_chunks_quantile(df, "k", 4, bounds=(-500, 5000))
+    assert (pinned[0].lower, pinned[-1].upper) == (-500, 5000)
+    assert [c.lower for c in pinned[1:]] == [c.lower for c in own[1:]]
 
 
 def test_split_key_election_no_numeric(spark):

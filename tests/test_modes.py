@@ -1380,3 +1380,69 @@ def test_compare_fix_sql_large_divergence_never_full_collects(spark, tmp_path):
     with open(report.fix_sql_path) as fh:
         stmts = [ln for ln in fh if ln.startswith("REPLACE") or ln.startswith("INSERT")]
     assert len(stmts) == 20_000
+
+
+def test_full_migrate_fresh_write_is_one_narrow_job(spark, lineitem, tmp_path):
+    """The default fresh write is one scan → project → write job with no
+    exchange: chunk identity is the persisted plan, so nothing samples
+    or shuffles the table. Tripwire: Spark does not document that a
+    narrow parquet write runs as one single-stage job."""
+    from transferdb_spark.modes.full import full_migrate_table
+    from transferdb_spark.plans.chunker import elect_split_key
+
+    key, bounds = elect_split_key(lineitem)
+    sc = spark.sparkContext
+    group = "tripwire-full-narrow-write"
+    sc.setJobGroup(group, group)
+    try:
+        target = full_migrate_table(
+            spark, lineitem, "lineitem", str(tmp_path), n_chunks=8, key=key, bounds=bounds
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert len(jobs) == 1
+    # a shuffle exchange would add a stage (or, under AQE, a job)
+    assert len(tracker.getJobInfo(jobs[0]).stageIds) == 1
+    assert spark.read.parquet(target).count() == lineitem.count()
+
+
+def test_full_migrate_crash_mid_marks_resumes_exactly(spark, lineitem, tmp_path, monkeypatch):
+    """A crash while the fresh run marks its chunks (the state flush
+    raises from call k on, as if the process died there) must not leave
+    some chunks SUCCESS over a target that already holds every row:
+    the resumed target holds exactly the source's rows."""
+    from transferdb_spark.modes.full import full_migrate_table
+    from transferdb_spark.state.store import SUCCESS, StateStore
+
+    real_flush = StateStore._flush
+    crashes = 0
+    for k in (2, 3, 4):
+        wd = str(tmp_path / f"crash{k}")
+        calls = 0
+
+        def flush(self):
+            nonlocal calls
+            calls += 1
+            if calls >= k:
+                raise OSError("crash during the state flush")
+            real_flush(self)
+
+        monkeypatch.setattr(StateStore, "_flush", flush)
+        try:
+            full_migrate_table(spark, lineitem, "lineitem", wd, n_chunks=4, key="l_orderkey")
+        except OSError:
+            crashes += 1
+        monkeypatch.setattr(StateStore, "_flush", real_flush)
+
+        target = full_migrate_table(spark, lineitem, "lineitem", wd, n_chunks=4, key="l_orderkey")
+        store = StateStore(wd, "full")
+        assert store.pending("lineitem") == [], k
+        assert {c.status for c in store._chunks.values()} == {SUCCESS}
+        landed = spark.read.parquet(target)
+        assert landed.count() == lineitem.count(), k
+        assert landed.exceptAll(lineitem).count() == 0, k
+    assert crashes >= 1  # the marking flush itself crashed at least once

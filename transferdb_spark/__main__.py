@@ -438,7 +438,7 @@ def main(argv: list[str] | None = None) -> int:
 
     elif args.mode == "all":
         from transferdb_spark.modes.full import full_migrate
-        from transferdb_spark.streaming.incr import apply_cdc_stream, stream_events
+        from transferdb_spark.streaming.incr import apply_cdc_stream, cdc_landed_rows, stream_events
 
         out["targets"] = full_migrate(spark, args.source_dir, args.workdir, tables=tables, n_chunks=args.chunks)
         # incremental phase: consume the events stream into the target
@@ -449,16 +449,18 @@ def main(argv: list[str] | None = None) -> int:
             load_table(spark, args.source_dir, "events").drop("props").coalesce(1).write.mode(
                 "overwrite"
             ).parquet(src_dir)
+        ckpt = os.path.join(args.workdir, "checkpoints", "incr")
+        landed_before = cdc_landed_rows(ckpt)
         q = apply_cdc_stream(
             stream_events(spark, src_dir),
             os.path.join(args.workdir, "target", "events_incr"),
-            os.path.join(args.workdir, "checkpoints", "incr"),
+            ckpt,
             key=EVENTS_CDC_KEY,
         )
         q.awaitTermination(300)
-        out["incr_rows"] = spark.read.parquet(
-            os.path.join(args.workdir, "target", "events_incr")
-        ).count()
+        # rows this run's batches landed, from the gate the batches
+        # wrote — not a scan of the whole change-log history
+        out["incr_rows"] = cdc_landed_rows(ckpt) - landed_before
         # live branch: a redo feed dir + --jdbc-url streams the text
         # path straight into the target database (transactional apply
         # with a persisted SCN checkpoint)

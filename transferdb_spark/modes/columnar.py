@@ -44,7 +44,7 @@ def orc_export(
     path = os.path.join(outdir, f"{schema_name}.{table}")
     out = normalize_projection(df) if normalize else df
     try:
-        key = elect_split_key(df)
+        key, _ = elect_split_key(df)
         out = out.repartitionByRange(n_chunks, key)
     except ValueError:
         pass  # no numeric key: keep scan partitioning

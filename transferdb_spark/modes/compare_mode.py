@@ -55,11 +55,15 @@ def compare_tables(
 ) -> CompareReport:
     """Compare src vs tgt; emit fix-SQL for divergent rows."""
     report = CompareReport(table=table, total_chunks=n_chunks)
-    key = key or elect_split_key(src)
-
-    # one grid for both sides — the reference applies one chunk plan's
-    # WHERE ranges to both databases (chunk.go:108-399)
-    bounds = shared_chunk_bounds(src, tgt, key)
+    # one grid for both sides, from the source key range — the
+    # reference applies one chunk plan's WHERE ranges to both databases
+    # (chunk.go:108-399). The election returns that range from its own
+    # aggregate; a caller-given key or an empty source needs the scan.
+    bounds = None
+    if key is None:
+        key, bounds = elect_split_key(src)
+    if bounds is None:
+        bounds = shared_chunk_bounds(src, tgt, key)
     summary = compare_chunks(src, tgt, key, n_chunks, bounds=bounds)
     mism = summary.filter("NOT is_match").select("chunk_id").collect()
     report.mismatched_chunks = sorted(r["chunk_id"] for r in mism)

@@ -5,10 +5,12 @@ SELECT-normalize-INSERT through three nested worker pools
 (/root/reference/module/migrate/sql/oracle/o2m/full.go:66-385).
 
 Spark-first shape: ONE declarative job per table —
-read → normalize select → repartitionByRange(split key) → write.
-Partitions are the chunks; Spark's scheduler is the worker pool; the
-chunk plan is persisted only for resume bookkeeping. Failed-chunk
-retry re-runs with the chunk predicate pushed into the parquet scan.
+read → normalize select → write, narrow, with no exchange. Chunk
+identity is the persisted predicate plan (StateStore), not the file
+layout: a fresh run lands the whole table in one write and marks every
+chunk in one state flush, and resume or failed-chunk retry re-runs a
+chunk with its predicate pushed into the parquet scan. Spark's
+scheduler is the worker pool, with one write task per scan split.
 """
 
 from __future__ import annotations
@@ -72,6 +74,7 @@ def full_migrate_table(
     source_charset: str | None = None,
     target_charset: str | None = None,
     layout_cols: list[str] | None = None,
+    bounds: tuple[int, int] | None = None,
 ) -> str:
     """Migrate one table to the parquet target; returns target path.
 
@@ -88,11 +91,15 @@ def full_migrate_table(
     key quantiles — use on skewed keys, where fixed-width ranges put
     most of the table in one straggler chunk.
     layout_cols Z-orders the written files on those columns
-    (plans/layout.py) instead of range-partitioning on the split key —
-    pick the 2-3 dominant FILTER columns of downstream queries so
-    min/max file skipping serves all of them. Same job shape (one
-    range exchange); chunk bookkeeping and resume are unchanged
-    (resume appends per-chunk predicates without re-clustering).
+    (plans/layout.py) — pick the 2-3 dominant FILTER columns of
+    downstream queries so min/max file skipping serves all of them. It
+    adds a column-range scan and one range exchange that the default
+    narrow write does not pay; chunk bookkeeping and resume are
+    unchanged (resume appends per-chunk predicates without
+    re-clustering).
+    bounds is the split key's (min, max) when the caller already has
+    it: elect_split_key returns it with the key, so a table is planned
+    from one aggregate.
     Schema evolution across a resume is safe: the chunk plan hangs off
     the split key only, so a source that gained columns between runs
     resumes cleanly — evolved chunks land with the wider schema and the
@@ -103,9 +110,10 @@ def full_migrate_table(
     store = store or StateStore(workdir, "full")
     if user_range:
         df = df.filter(user_range)
-    key = key or elect_split_key(df)
+    if key is None:
+        key, bounds = elect_split_key(df)
     planner = plan_chunks_quantile if chunk_strategy == "quantile" else plan_chunks
-    chunks = planner(df, key, n_chunks)
+    chunks = planner(df, key, n_chunks, bounds=bounds)
     states = store.init_table(table, chunks)
     pending = store.pending(table)
     target = os.path.join(workdir, "target", table)
@@ -127,9 +135,9 @@ def full_migrate_table(
         return w
 
     if len(pending) == len(states):
-        # fresh run: one range-partitioned write (repartitionByRange
-        # samples the input in jobs of its own, and its bounds are
-        # sampled quantiles, not the chunk grid)
+        # fresh run: the default write is one narrow scan → project →
+        # write job, with as many tasks as the scan has splits; only
+        # the requested layouts shuffle
         try:
             if layout_cols and partition_cols:
                 # cluster WITHIN each hive partition: shuffling on the
@@ -156,13 +164,11 @@ def full_migrate_table(
             elif partition_cols:
                 shaped = out.repartition(n_chunks, *partition_cols)
             else:
-                shaped = out.repartitionByRange(n_chunks, key)
+                shaped = out
             _writer(shaped).mode("overwrite").parquet(target)
-            for c in states:
-                store.mark(table, c.chunk_id, SUCCESS)
+            store.mark(table, [c.chunk_id for c in states], SUCCESS)
         except Exception as e:
-            for c in states:
-                store.mark(table, c.chunk_id, FAILED, str(e)[:500])
+            store.mark(table, [c.chunk_id for c in states], FAILED, str(e)[:500])
             raise
     else:
         # resume: re-run only failed/waiting chunks, predicate pushdown
@@ -214,11 +220,9 @@ def full_migrate_keyless(
         try:
             df = spark.read.parquet(src_path)
             _out(df).write.mode("overwrite").parquet(target)
-            for c in states:
-                store.mark(table, c.chunk_id, SUCCESS)
+            store.mark(table, [c.chunk_id for c in states], SUCCESS)
         except Exception as e:
-            for c in states:
-                store.mark(table, c.chunk_id, FAILED, str(e)[:500])
+            store.mark(table, [c.chunk_id for c in states], FAILED, str(e)[:500])
             raise
     else:
         for c in pending:
@@ -260,8 +264,10 @@ def full_migrate_table_jdbc(
     from pyspark.sql import functions as F
 
     store = store or StateStore(workdir, "full_jdbc")
-    key = key or elect_split_key(df)
-    chunks = plan_chunks(df, key, n_chunks)
+    bounds = None
+    if key is None:
+        key, bounds = elect_split_key(df)
+    chunks = plan_chunks(df, key, n_chunks, bounds=bounds)
     store.init_table(table, chunks)
     pending = store.pending(table)
     if not pending:
@@ -301,11 +307,9 @@ def full_migrate_table_jdbc(
     try:
         tsink.write(part, mode="append")
     except Exception as e:
-        for c in pending:
-            store.mark(table, c.chunk_id, FAILED, str(e)[:500])
+        store.mark(table, [c.chunk_id for c in pending], FAILED, str(e)[:500])
         raise
-    for c in pending:
-        store.mark(table, c.chunk_id, SUCCESS)
+    store.mark(table, [c.chunk_id for c in pending], SUCCESS)
     n = int(obs.get["n"])
     return {"written": n, "chunks": len(pending), "resumed": len(pending) < len(chunks)}
 
@@ -361,7 +365,7 @@ def full_migrate(
     store = StateStore(workdir, "full")
     for name, df in load_tables(spark, sf_dir, include=tables).items():
         try:
-            key = elect_split_key(df)
+            key, bounds = elect_split_key(df)
         except ValueError:
             key = None
         if key is None:
@@ -371,6 +375,6 @@ def full_migrate(
             )
             continue
         out[name] = full_migrate_table(
-            spark, df, name, workdir, n_chunks=n_chunks, key=key, store=store
+            spark, df, name, workdir, n_chunks=n_chunks, key=key, bounds=bounds, store=store
         )
     return out

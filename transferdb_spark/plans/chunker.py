@@ -111,7 +111,13 @@ def with_chunk_id(
     return df.withColumn("chunk_id", chunk_id_col(key, lo, width, n_chunks)), lo, width
 
 
-def plan_chunks_quantile(df: DataFrame, key: str, n_chunks: int, error: float = 0.001) -> list[Chunk]:
+def plan_chunks_quantile(
+    df: DataFrame,
+    key: str,
+    n_chunks: int,
+    error: float = 0.001,
+    bounds: tuple[int, int] | None = None,
+) -> list[Chunk]:
     """Equi-depth chunk plan from approximate key quantiles.
 
     Fixed-width ranges (plan_chunks) go pathological on skewed keys —
@@ -120,11 +126,15 @@ def plan_chunks_quantile(df: DataFrame, key: str, n_chunks: int, error: float = 
     the key distribution, at the cost of one approxQuantile pass
     (Greenwald-Khanna: single scan, deterministic for a given dataset
     and error). Boundary-guard semantics match plan_chunks: first/last
-    predicates are open-ended."""
-    row = df.select(F.min(key).alias("lo"), F.max(key).alias("hi")).first()
-    if row["lo"] is None:
-        return [Chunk(0, 0, 0, "1=1")]
-    lo, hi = int(row["lo"]), int(row["hi"])
+    predicates are open-ended. `bounds` is the key's (min, max) when
+    the caller already has it (elect_split_key returns it), saving the
+    min/max scan."""
+    if bounds is None:
+        row = df.select(F.min(key).alias("lo"), F.max(key).alias("hi")).first()
+        if row["lo"] is None:
+            return [Chunk(0, 0, 0, "1=1")]
+        bounds = int(row["lo"]), int(row["hi"])
+    lo, hi = bounds
     probs = [i / n_chunks for i in range(1, n_chunks)]
     cuts = [int(c) for c in df.stat.approxQuantile(key, probs, error)]
     # dedupe + clamp: heavy skew can repeat a cut value
@@ -143,14 +153,21 @@ def plan_chunks_quantile(df: DataFrame, key: str, n_chunks: int, error: float = 
     return chunks
 
 
-def elect_split_key(df: DataFrame, candidates: list[str] | None = None, approx: bool = True) -> str:
+def elect_split_key(
+    df: DataFrame, candidates: list[str] | None = None, approx: bool = True
+) -> tuple[str, tuple[int, int] | None]:
     """Split-key election by selectivity (compare task.go:194-343).
 
     The reference prefers single-column numeric PK/UK, then unique
     index, then the indexed column with the highest NUM_DISTINCT. With
     no catalog constraints on parquet, election = the numeric column
     with max (approx) distinct count; ties break on column order.
-    approx_count_distinct keeps this a cheap single pass at 100 TB.
+
+    Returns ``(key, (min, max))``: the same aggregate takes every
+    candidate's min and max, so the caller plans chunks from the
+    returned bounds (``plan_chunks(..., bounds=)``) without a second
+    scan. An empty table returns ``(key, None)``. One pass at any
+    scale — approx_count_distinct, min and max are all mergeable.
     """
     numeric = [
         f.name
@@ -161,8 +178,13 @@ def elect_split_key(df: DataFrame, candidates: list[str] | None = None, approx: 
     if not numeric:
         raise ValueError("no numeric split-key candidate (reference: task.go:213-214 hard error)")
     agg = F.approx_count_distinct if approx else F.count_distinct
-    row = df.select([agg(c).alias(c) for c in numeric]).first()
-    return max(numeric, key=lambda c: (row[c], -numeric.index(c)))
+    cols = []
+    for i, c in enumerate(numeric):
+        cols += [agg(c).alias(f"d{i}"), F.min(c).alias(f"lo{i}"), F.max(c).alias(f"hi{i}")]
+    row = df.select(cols).first()
+    i = max(range(len(numeric)), key=lambda i: (row[f"d{i}"], -i))
+    lo, hi = row[f"lo{i}"], row[f"hi{i}"]
+    return numeric[i], None if lo is None else (int(lo), int(hi))
 
 
 @dataclass(frozen=True)

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import json
 import os
+from collections.abc import Iterable
 from dataclasses import asdict, dataclass
 
 WAITING, RUNNING, SUCCESS, FAILED = "WAITING", "RUNNING", "SUCCESS", "FAILED"
@@ -96,37 +97,46 @@ class StateStore:
             key=lambda c: c.chunk_id,
         )
 
-    def mark(self, table: str, chunk_id: int, status: str, error: str = "") -> None:
-        cs = self._chunks[(table, chunk_id)]
-        cs.status, cs.error = status, error
+    def mark(self, table: str, chunk_ids: int | Iterable[int], status: str, error: str = "") -> None:
+        """Set the status of one chunk or many, then flush once.
+
+        A write that lands many chunks marks them in one call, so the
+        meta file holds all of them or none: a crash part-way through
+        can never leave some of one write's chunks SUCCESS and the rest
+        WAITING (resume would re-append those and duplicate rows)."""
+        ids = [chunk_ids] if isinstance(chunk_ids, int) else list(chunk_ids)
+        states = [self._chunks[(table, cid)] for cid in ids]
+        for cs in states:
+            cs.status, cs.error = status, error
         self._flush()
         if status == FAILED:
-            self._append_error(cs, error)
+            self._append_errors(table, states, error)
 
-    def _append_error(self, cs: ChunkState, error: str) -> None:
+    def _append_errors(self, table: str, states: list[ChunkState], error: str) -> None:
         """error_log_detail analogue: every failure OCCURRENCE is kept
         (the chunk row only holds the latest), so post-mortems can see
         flapping chunks and whether a retry hit the same error
         (/root/reference/database/meta/meta.go:100-117 — the reference
         persists chunk_error_detail + error_log_detail as separate,
-        append-only meta tables)."""
+        append-only meta tables). Attempts are numbered from one read
+        of the log."""
         import time
+        from collections import Counter
 
-        entry = {
-            "table": cs.table,
-            "chunk_id": cs.chunk_id,
-            "predicate": cs.predicate,
-            "error": error,
-            "ts": time.time(),
-            "attempt": sum(
-                1
-                for e in self.error_log(cs.table)
-                if e["chunk_id"] == cs.chunk_id
-            )
-            + 1,
-        }
+        attempts = Counter(e["chunk_id"] for e in self.error_log(table))
+        ts = time.time()
         with open(self.error_log_path, "a") as f:
-            f.write(json.dumps(entry) + "\n")
+            for cs in states:
+                attempts[cs.chunk_id] += 1
+                entry = {
+                    "table": table,
+                    "chunk_id": cs.chunk_id,
+                    "predicate": cs.predicate,
+                    "error": error,
+                    "ts": ts,
+                    "attempt": attempts[cs.chunk_id],
+                }
+                f.write(json.dumps(entry) + "\n")
 
     def error_log(self, table: str | None = None) -> list[dict]:
         """All failure occurrences (optionally for one table), oldest

@@ -20,6 +20,7 @@ event_type ≈ operation, ts = event time.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -77,6 +78,21 @@ def run_available(
     return w.foreachBatch(sink).start()
 
 
+def _load_gate(checkpoint_dir: str) -> dict:
+    path = os.path.join(checkpoint_dir, "scn_gate.json")
+    if os.path.exists(path):
+        with open(path) as fh:
+            return json.load(fh)
+    return {"max_scn": None, "batch_floors": {}}
+
+
+def cdc_landed_rows(checkpoint_dir: str) -> int:
+    """Rows apply_cdc_stream has landed through ``checkpoint_dir``, all
+    runs together, read from its SCN gate file — no scan of the target.
+    The difference across one run is what that run's batches landed."""
+    return _load_gate(checkpoint_dir).get("landed_rows", 0)
+
+
 def _latest_per_key(batch: DataFrame, key: str, scn_col: str) -> DataFrame:
     """Newest image per business key within one micro-batch — the
     UPDATE = DELETE+REPLACE collapse (ties break on ts)."""
@@ -123,43 +139,46 @@ def apply_cdc_stream(
        lands and wins — the parquet analogue of the reference's
        UPDATE = DELETE+REPLACE apply (o2m/apply.go:119-233) — instead
        of being anti-joined away.
+
+    The gate also keeps the running count of landed rows
+    (cdc_landed_rows), taken in the same observed write.
     """
-    import json
-
-    gate_path = os.path.join(checkpoint_dir, "scn_gate.json")
-
-    def _load_gate() -> dict:
-        if os.path.exists(gate_path):
-            with open(gate_path) as fh:
-                return json.load(fh)
-        return {"max_scn": None, "batch_floors": {}}
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        gate = _load_gate()
+        gate = _load_gate(checkpoint_dir)
         bkey = str(batch_id)
         if bkey in gate["batch_floors"]:
             floor = gate["batch_floors"][bkey]  # replayed batch: original gate
         else:
             floor = gate["max_scn"]
         gated = batch if floor is None else batch.filter(F.col(scn_col) > floor)
-        # the batch's max SCN is observed DURING the write: each key
-        # keeps its max-SCN row, so max over `latest` = max over `gated`
-        # and the batch is read once (an empty batch observes None)
+        # the batch's max SCN and row count are observed DURING the
+        # write: each key keeps its max-SCN row, so max over `latest` =
+        # max over `gated` and the batch is read once (an empty batch
+        # observes None)
         obs = Observation()
         latest = _latest_per_key(gated, key, scn_col).observe(
-            obs, F.max(scn_col).alias("max_scn")
+            obs, F.max(scn_col).alias("max_scn"), F.count(F.lit(1)).alias("rows")
         )
         latest.write.mode("overwrite").parquet(
             os.path.join(target_dir, f"batch_id={batch_id}")
         )
-        batch_max = obs.get["max_scn"]
+        batch_max, rows = obs.get["max_scn"], obs.get["rows"]
         new_max = gate["max_scn"]
         if batch_max is not None:
             new_max = batch_max if new_max is None else max(new_max, batch_max)
-        # keep only this batch's floor: earlier batches are committed
-        gate = {"max_scn": new_max, "batch_floors": {bkey: floor}}
+        # a replayed batch overwrote its own files: its rows replace
+        # the count it added before
+        landed = gate.get("landed_rows", 0) - gate.get("batch_rows", {}).get(bkey, 0) + rows
+        # keep only this batch's floor and rows: earlier batches are committed
+        gate = {
+            "max_scn": new_max,
+            "batch_floors": {bkey: floor},
+            "batch_rows": {bkey: rows},
+            "landed_rows": landed,
+        }
         os.makedirs(checkpoint_dir, exist_ok=True)
-        _write_json_atomic(gate_path, gate)
+        _write_json_atomic(os.path.join(checkpoint_dir, "scn_gate.json"), gate)
 
     return run_available(stream, checkpoint_dir, apply_batch)
 

@@ -255,6 +255,37 @@ def test_cli_retry_mode(tmp_path, spark, lineitem):
     assert out["error_log_entries"] == 1
 
 
+def test_cli_retry_heals_keyless_table(tmp_path, capsys, spark):
+    """--mode retry on a table with no numeric split key re-lands its
+    failed file group: the chunk predicate names files and is never
+    parsed as SQL, and the state heals."""
+    import os
+
+    from transferdb_spark.operators.diff import dataset_diff
+    from transferdb_spark.plans.chunker import plan_chunks_rowid
+    from transferdb_spark.state.store import FAILED, SUCCESS, StateStore
+
+    src_dir = str(tmp_path / "src")
+    path = os.path.join(src_dir, "region.parquet")
+    spark.range(0, 2000).selectExpr("concat('r-', id) AS r_name").repartition(4).write.parquet(path)
+    wd = str(tmp_path / "wd")
+    store = StateStore(wd, "full")
+    chunks = plan_chunks_rowid(path, 4)
+    store.init_table("region", chunks)
+    store.mark("region", [c.chunk_id for c in chunks], SUCCESS)
+    store.mark("region", 2, FAILED, "simulated")
+
+    argv = ["--mode", "retry", "--workdir", wd, "--source-dir", src_dir, "--tables", "region"]
+    out = run_cli(argv, capsys)
+    assert out["retried"]["region"] == {"retried": 1, "succeeded": 1, "failed": 0}
+    assert out["still_failed"] == [] and out["error_log_entries"] == 1
+    missing, extra = dataset_diff(
+        spark.read.parquet(*chunks[2].files), spark.read.parquet(os.path.join(wd, "target", "region"))
+    )
+    assert missing.count() == 0 and extra.count() == 0
+    assert run_cli(argv, capsys)["retried"] == {}
+
+
 def test_cli_optimize_mode(tmp_path, capsys, spark, lineitem):
     frag = str(tmp_path / "frag")
     lineitem.repartition(12).write.mode("overwrite").parquet(frag)

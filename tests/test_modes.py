@@ -1446,3 +1446,266 @@ def test_full_migrate_crash_mid_marks_resumes_exactly(spark, lineitem, tmp_path,
         assert landed.count() == lineitem.count(), k
         assert landed.exceptAll(lineitem).count() == 0, k
     assert crashes >= 1  # the marking flush itself crashed at least once
+
+
+class _Died(BaseException):
+    """A process death: no ``except Exception`` handler runs after it."""
+
+
+def _landed_once(spark, src, target):
+    from transferdb_spark.operators.diff import dataset_diff
+
+    missing, extra = dataset_diff(src, spark.read.parquet(target))
+    return missing.count() == 0 and extra.count() == 0
+
+
+def _half_landed(lineitem, wd):
+    """Chunks 0 and 2 of a 4-chunk plan landed (data and SUCCESS);
+    chunks 1 and 3 are still WAITING."""
+    from transferdb_spark.plans.chunker import plan_chunks
+    from transferdb_spark.state.store import SUCCESS, StateStore
+
+    store = StateStore(wd, "full")
+    chunks = plan_chunks(lineitem, "l_orderkey", 4)
+    store.init_table("lineitem", chunks)
+    for c in (chunks[0], chunks[2]):
+        lineitem.filter(c.predicate).write.mode("append").parquet(os.path.join(wd, "target", "lineitem"))
+    store.mark("lineitem", [0, 2], SUCCESS)
+
+
+def _torn_write(monkeypatch):
+    """The staged write dies before it commits, leaving a torn file."""
+    from pyspark.sql import DataFrameWriter
+
+    def parquet(self, path, *args, **kwargs):
+        os.makedirs(path, exist_ok=True)
+        with open(os.path.join(path, "part-00000-torn.snappy.parquet"), "wb") as fh:
+            fh.write(b"PAR1")
+        raise _Died()
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+
+
+def _death_before_mark(monkeypatch):
+    from transferdb_spark.state.store import SUCCESS, StateStore
+
+    real = StateStore.mark
+
+    def mark(self, table, chunk_ids, status, *args, **kwargs):
+        if status == SUCCESS:
+            raise _Died()
+        return real(self, table, chunk_ids, status, *args, **kwargs)
+
+    monkeypatch.setattr(StateStore, "mark", mark)
+
+
+def _death_mid_mark(monkeypatch):
+    """The commit flush dies with its temp file half written."""
+    import json
+
+    import transferdb_spark.state.store as store_mod
+
+    real = store_mod._write_json_atomic
+
+    def write(path, obj, indent=None):
+        if all(r["status"] == store_mod.SUCCESS for r in obj):
+            with open(path + ".tmp", "w") as fh:
+                fh.write(json.dumps(obj)[:40])
+            raise _Died()
+        real(path, obj, indent)
+
+    monkeypatch.setattr(store_mod, "_write_json_atomic", write)
+
+
+def _death_mid_move(monkeypatch):
+    """The move dies after one file (append) or before the rename
+    (replace)."""
+    real_replace, real_rename = os.replace, os.rename
+    moved = []
+
+    def replace(src, dst):
+        if ".landing-" in src:
+            if moved:
+                raise _Died()
+            moved.append(src)
+        real_replace(src, dst)
+
+    def rename(src, dst):
+        if ".landing-" in src:
+            raise _Died()
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "replace", replace)
+    monkeypatch.setattr(os, "rename", rename)
+
+
+@pytest.mark.parametrize("resume", [False, True], ids=["fresh", "resume"])
+@pytest.mark.parametrize(
+    "crash",
+    [_torn_write, _death_before_mark, _death_mid_mark, _death_mid_move],
+    ids=["before-commit", "before-mark", "mid-mark", "mid-move"],
+)
+def test_full_landing_survives_a_crash_at_every_step(spark, lineitem, tmp_path, monkeypatch, crash, resume):
+    """A death at each step of the landing — before the staged write
+    commits, after it but before the SUCCESS mark, with the mark's flush
+    half written, part-way through the move — and then a plain re-run:
+    the target holds every source row exactly once. The fresh case lands
+    over an older plan's target, so its move replaces data."""
+    from transferdb_spark.modes.full import full_migrate_table
+    from transferdb_spark.state.store import StateStore
+
+    wd = str(tmp_path)
+    if resume:
+        _half_landed(lineitem, wd)
+    else:
+        full_migrate_table(spark, lineitem, "lineitem", wd, n_chunks=2, key="l_orderkey")
+    with monkeypatch.context() as m:
+        crash(m)
+        with pytest.raises(_Died):
+            full_migrate_table(spark, lineitem, "lineitem", wd, n_chunks=4, key="l_orderkey")
+    target = full_migrate_table(spark, lineitem, "lineitem", wd, n_chunks=4, key="l_orderkey")
+    assert StateStore(wd, "full").pending("lineitem") == []
+    assert _landed_once(spark, lineitem, target)
+    assert [d for d in os.listdir(os.path.dirname(target)) if ".landing-" in d] == []
+
+
+def test_full_resume_death_between_write_and_mark_lands_once(spark, lineitem, tmp_path, monkeypatch):
+    """A resume whose chunks were written but never marked (the process
+    died in between) must not land them twice on the next run: appended
+    straight into the target, one chunk lands twice (7,508 rows for
+    6,000 at sf0.001)."""
+    from transferdb_spark.modes.full import full_migrate_table
+
+    wd = str(tmp_path)
+    _half_landed(lineitem, wd)
+    with monkeypatch.context() as m:
+        _death_before_mark(m)
+        with pytest.raises(_Died):
+            full_migrate_table(spark, lineitem, "lineitem", wd, n_chunks=4, key="l_orderkey")
+    target = full_migrate_table(spark, lineitem, "lineitem", wd, n_chunks=4, key="l_orderkey")
+    assert spark.read.parquet(target).count() == lineitem.count()
+    assert _landed_once(spark, lineitem, target)
+
+
+def test_full_transient_commit_failure_is_not_a_failed_chunk(spark, lineitem, tmp_path, monkeypatch):
+    """A transient failure of the SUCCESS flush after a committed write
+    leaves the chunks pending, not FAILED: retry_failed has nothing to
+    re-land, and the next run lands the table once (marking them FAILED
+    made retry_failed append a second copy: 12,000 rows for 6,000)."""
+    from transferdb_spark.modes.full import full_migrate_table, retry_failed
+    from transferdb_spark.state.store import SUCCESS, StateStore
+
+    wd = str(tmp_path)
+    real = StateStore._flush
+    flaked = []
+
+    def flush(self):
+        if not flaked and any(c.status == SUCCESS for c in self._chunks.values()):
+            flaked.append(1)
+            raise OSError("transient meta-store failure")
+        real(self)
+
+    with monkeypatch.context() as m:
+        m.setattr(StateStore, "_flush", flush)
+        with pytest.raises(OSError):
+            full_migrate_table(spark, lineitem, "lineitem", wd, n_chunks=4, key="l_orderkey")
+    stats = retry_failed(spark, lineitem, "lineitem", wd)
+    assert stats == {"retried": 0, "succeeded": 0, "failed": 0}
+    assert StateStore(wd, "full").error_log("lineitem") == []
+    target = full_migrate_table(spark, lineitem, "lineitem", wd, n_chunks=4, key="l_orderkey")
+    assert spark.read.parquet(target).count() == lineitem.count()
+    assert _landed_once(spark, lineitem, target)
+
+
+def test_retry_failed_lands_failed_chunks_in_one_job_and_quarantines_as_one(spark, lineitem, tmp_path, monkeypatch):
+    """retry_failed is one landing: a failed write marks every retried
+    chunk FAILED with one error-log entry each, and the next retry
+    lands them all."""
+    from pyspark.sql import DataFrameWriter
+
+    from transferdb_spark.modes.full import retry_failed
+    from transferdb_spark.plans.chunker import plan_chunks
+    from transferdb_spark.state.store import FAILED, SUCCESS, StateStore
+
+    wd = str(tmp_path)
+    store = StateStore(wd, "full")
+    chunks = plan_chunks(lineitem, "l_orderkey", 4)
+    store.init_table("lineitem", chunks)
+    for c in chunks:
+        if c.chunk_id not in (1, 3):
+            lineitem.filter(c.predicate).write.mode("append").parquet(os.path.join(wd, "target", "lineitem"))
+    store.mark("lineitem", [0, 2], SUCCESS)
+    store.mark("lineitem", [1, 3], FAILED, "connection reset")
+
+    def parquet(self, path, *args, **kwargs):
+        raise OSError("executor lost")
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", parquet)
+        stats = retry_failed(spark, lineitem, "lineitem", wd, store=store)
+    assert stats == {"retried": 2, "succeeded": 0, "failed": 2}
+    log = store.error_log("lineitem")
+    assert [(e["chunk_id"], e["attempt"]) for e in log[2:]] == [(1, 2), (3, 2)]
+    assert all("executor lost" in e["error"] for e in log[2:])
+
+    assert retry_failed(spark, lineitem, "lineitem", wd, store=store) == {
+        "retried": 2, "succeeded": 2, "failed": 0,
+    }
+    assert _landed_once(spark, lineitem, os.path.join(wd, "target", "lineitem"))
+
+
+def test_full_resume_of_three_chunks_is_one_write_job(spark, lineitem, tmp_path):
+    """Resuming k pending chunks runs ONE write job over the OR of their
+    predicates, not k. Tripwire on the job count, read through a job
+    group."""
+    from transferdb_spark.modes.full import full_migrate_table
+    from transferdb_spark.plans.chunker import elect_split_key, plan_chunks
+    from transferdb_spark.state.store import SUCCESS, StateStore
+
+    wd = str(tmp_path)
+    key, bounds = elect_split_key(lineitem)
+    chunks = plan_chunks(lineitem, key, 4, bounds=bounds)
+    store = StateStore(wd, "full")
+    store.init_table("lineitem", chunks)
+    lineitem.filter(chunks[0].predicate).write.parquet(os.path.join(wd, "target", "lineitem"))
+    store.mark("lineitem", 0, SUCCESS)
+
+    sc = spark.sparkContext
+    group = "tripwire-full-resume-one-job"
+    sc.setJobGroup(group, group)
+    try:
+        target = full_migrate_table(spark, lineitem, "lineitem", wd, n_chunks=4, key=key, bounds=bounds)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert _landed_once(spark, lineitem, target)
+
+
+def test_full_mode_writes_parquet_only_through_land():
+    """One landing: every DataFrame ``.write`` in modes/full.py sits in
+    _land, and nothing there appends to a target."""
+    import ast
+
+    path = os.path.join(os.path.dirname(__file__), "..", "transferdb_spark", "modes", "full.py")
+    with open(path) as fh:
+        tree = ast.parse(fh.read())
+    writers, appends = [], []
+    for node in tree.body:
+        nodes = list(ast.walk(node))
+        called = {id(n.func) for n in nodes if isinstance(n, ast.Call)}
+        owner = getattr(node, "name", "<module>")
+        for n in nodes:
+            # `df.write` is a property; `sink.write(df, ...)` is a JDBC call
+            if isinstance(n, ast.Attribute) and n.attr == "write" and id(n) not in called:
+                writers.append(owner)
+            if (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr == "mode"
+                and any(isinstance(a, ast.Constant) and a.value == "append" for a in n.args)
+            ):
+                appends.append(owner)
+    assert writers == ["_land"]
+    assert appends == []

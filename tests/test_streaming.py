@@ -324,6 +324,68 @@ def test_cdc_log_compaction(spark, tmp_path, source_dir, events):
     assert got["event_id"] == 9_000_000 and got["value"] == 42.0
 
 
+def test_cdc_compaction_settles_a_swap_cut_short(spark, tmp_path, source_dir, events, monkeypatch):
+    """A crash after the batch dirs are renamed aside but before the
+    snapshot is renamed in: the next compaction renames them back and
+    compacts. A crash after the snapshot is in: the next call deletes
+    the aside leftovers. The current state never changes."""
+    from transferdb_spark.streaming.incr import apply_cdc_stream, cdc_current_state, compact_cdc_log, stream_events
+
+    target, ckpt = str(tmp_path / "target_s"), str(tmp_path / "ckpt_s")
+    apply_cdc_stream(stream_events(spark, source_dir), target, ckpt, key="user_id").awaitTermination(120)
+    events.limit(20).withColumn("event_id", F.col("event_id") + 2_000_000).coalesce(1).write.mode(
+        "append"
+    ).parquet(source_dir)
+    apply_cdc_stream(stream_events(spark, source_dir), target, ckpt, key="user_id").awaitTermination(120)
+
+    def state():
+        return sorted(tuple(r) for r in cdc_current_state(spark, target, key="user_id").collect())
+
+    before = state()
+    n_dirs = len([d for d in os.listdir(target) if d.startswith("batch_id=")])
+    assert n_dirs >= 2
+
+    real_rename = os.rename
+
+    def rename(src, dst):
+        if src.endswith("_compact_tmp"):
+            raise OSError("crash mid-swap")
+        real_rename(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", rename)
+        with pytest.raises(OSError):
+            compact_cdc_log(spark, target, key="user_id")
+    assert not any(d.startswith("batch_id=") for d in os.listdir(target))
+
+    stats = compact_cdc_log(spark, target, key="user_id")
+    assert stats == {"live_rows": len(before), "dirs_removed": n_dirs}
+    assert state() == before
+
+    # a crash while the aside dirs are deleted leaves leftovers to drop
+    events.limit(5).withColumn("event_id", F.col("event_id") + 3_000_000).coalesce(1).write.mode(
+        "append"
+    ).parquet(source_dir)
+    apply_cdc_stream(stream_events(spark, source_dir), target, ckpt, key="user_id").awaitTermination(120)
+    before = state()
+    import shutil
+
+    real_rmtree = shutil.rmtree
+
+    def rmtree(path, *args, **kwargs):
+        if os.path.basename(path).startswith("_old_"):
+            raise OSError("crash mid-cleanup")
+        real_rmtree(path, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(shutil, "rmtree", rmtree)
+        with pytest.raises(OSError):
+            compact_cdc_log(spark, target, key="user_id")
+    assert compact_cdc_log(spark, target, key="user_id")["dirs_removed"] == 0
+    assert not any(d.startswith("_old_") for d in os.listdir(target))
+    assert state() == before
+
+
 def test_cdc_gate_survives_crash_mid_write(spark, tmp_path, source_dir, events, monkeypatch):
     """A crash while the SCN gate is being rewritten must leave the
     previous gate readable: the restarted stream replays the batch and

@@ -307,7 +307,7 @@ def main(argv: list[str] | None = None) -> int:
 
     elif args.mode == "retry":
         from transferdb_spark.modes.full import retry_failed
-        from transferdb_spark.sources.registry import load_tables
+        from transferdb_spark.sources.registry import load_tables, table_path
         from transferdb_spark.state.store import StateStore
 
         store = StateStore(args.workdir, "full")
@@ -315,7 +315,10 @@ def main(argv: list[str] | None = None) -> int:
         results = {}
         for name, df in load_tables(spark, args.source_dir, include=tables).items():
             if name in failed_tables:
-                results[name] = retry_failed(spark, df, name, args.workdir, store=store)
+                # a keyless table's chunks are file groups of its source path
+                keyless = store.failed(name)[0].predicate.startswith("files:")
+                src = table_path(args.source_dir, name) if keyless else df
+                results[name] = retry_failed(spark, src, name, args.workdir, store=store)
         out.update(
             retried=results,
             error_log_entries=len(store.error_log()),

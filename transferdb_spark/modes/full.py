@@ -2,26 +2,34 @@
 
 Reference pipeline: snapshot SCN → chunk split → per-chunk
 SELECT-normalize-INSERT through three nested worker pools
-(/root/reference/module/migrate/sql/oracle/o2m/full.go:66-385).
+(module/migrate/sql/oracle/o2m/full.go:66-385).
 
-Spark-first shape: ONE declarative job per table —
-read → normalize select → write, narrow, with no exchange. Chunk
-identity is the persisted predicate plan (StateStore), not the file
-layout: a fresh run lands the whole table in one write and marks every
-chunk in one state flush, and resume or failed-chunk retry re-runs a
-chunk with its predicate pushed into the parquet scan. Spark's
-scheduler is the worker pool, with one write task per scan split.
+Spark-first shape: chunk identity is the persisted predicate plan
+(StateStore), not the file layout, and every parquet landing — fresh
+run, resume, keyless table, failed-chunk retry — is one `_land`:
+settle any earlier landing, write the pending chunks in ONE job into a
+fresh `<target>.landing-<id>` dir (the whole source when every chunk is
+pending, else the OR of their predicates pushed into the scan, or their
+file groups), commit with ONE SUCCESS mark that names the dir, then
+move its files into the target (replacing the target's data when no
+chunk had landed before). The mark is the commit point: settling moves
+in a landing dir the state names and deletes any other, so a crash at
+any step lands every chunk exactly once. Spark's scheduler is the
+worker pool, with one write task per scan split.
 """
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
 from transferdb_spark.operators.normalize import normalize_projection
-from transferdb_spark.plans.chunker import elect_split_key, plan_chunks, plan_chunks_quantile
-from transferdb_spark.state.store import FAILED, SUCCESS, StateStore
+from transferdb_spark.plans.chunker import elect_split_key, plan_chunks, plan_chunks_quantile, plan_chunks_rowid
+from transferdb_spark.state.store import FAILED, SUCCESS, ChunkState, StateStore
 
 
 def charset_projection(df: DataFrame, source_charset: str, target_charset: str) -> DataFrame:
@@ -29,15 +37,12 @@ def charset_projection(df: DataFrame, source_charset: str, target_charset: str) 
 
     The reference converts every extracted value source-charset →
     UTF8MB4 → target-charset before the INSERT
-    (/root/reference/database/oracle/full.go:126-135,
-    /root/reference/common/strings.go:383-451). Spark strings are UTF-8
-    internally, so the conversion lands on the byte boundaries:
-    BINARY columns carrying source-charset bytes are decoded to proper
-    strings; when the target charset is itself non-UTF-8 (byte-oriented
-    landing, e.g. a GBK CSV drop), string columns are encoded to
-    target-charset bytes. A narrow projection — no shuffle, and the
-    CJK charsets route through Arrow-batched pandas UDFs
-    (functions/charset.py), never row-at-a-time Python."""
+    (database/oracle/full.go:126-135, common/strings.go:383-451).
+    Spark strings are UTF-8, so the conversion lands on the byte
+    boundaries: BINARY columns carrying source-charset bytes decode to
+    strings, and a non-UTF-8 target (e.g. a GBK CSV drop) encodes
+    string columns to its bytes. A narrow projection — CJK charsets go
+    through Arrow-batched pandas UDFs (functions/charset.py)."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import BinaryType, StringType
 
@@ -94,18 +99,15 @@ def full_migrate_table(
     (plans/layout.py) — pick the 2-3 dominant FILTER columns of
     downstream queries so min/max file skipping serves all of them. It
     adds a column-range scan and one range exchange that the default
-    narrow write does not pay; chunk bookkeeping and resume are
-    unchanged (resume appends per-chunk predicates without
-    re-clustering).
+    narrow write does not pay; a resume lands its pending chunks with
+    the same layout.
     bounds is the split key's (min, max) when the caller already has
-    it: elect_split_key returns it with the key, so a table is planned
-    from one aggregate.
-    Schema evolution across a resume is safe: the chunk plan hangs off
-    the split key only, so a source that gained columns between runs
-    resumes cleanly — evolved chunks land with the wider schema and the
-    target reads through sources.registry.load_evolved (mergeSchema,
-    NULL-for-missing on pre-evolution rows). A re-plan whose chunk
-    bounds moved is refused by StateStore.init_table instead.
+    it (elect_split_key returns both from one aggregate).
+    Schema evolution across a resume is safe: the plan hangs off the
+    split key only, so evolved chunks land with the wider schema and
+    the target reads through sources.registry.load_evolved (NULL for
+    pre-evolution rows). A re-plan whose bounds moved resets the table
+    in StateStore.init_table instead.
     """
     store = store or StateStore(workdir, "full")
     if user_range:
@@ -113,10 +115,8 @@ def full_migrate_table(
     if key is None:
         key, bounds = elect_split_key(df)
     planner = plan_chunks_quantile if chunk_strategy == "quantile" else plan_chunks
-    chunks = planner(df, key, n_chunks, bounds=bounds)
-    states = store.init_table(table, chunks)
+    states = store.init_table(table, planner(df, key, n_chunks, bounds=bounds))
     pending = store.pending(table)
-    target = os.path.join(workdir, "target", table)
 
     # charset decode first (binary-in-source-charset → UTF-8 strings),
     # then the canonical normalize projection sees real strings
@@ -126,59 +126,83 @@ def full_migrate_table(
     if normalize:
         out = normalize_projection(out)
 
-    def _writer(d):
-        w = d.write.option("maxRecordsPerFile", 5_000_000)
+    def frame() -> DataFrame:
+        # the default is one narrow scan → project → write job, with as
+        # many tasks as the scan has splits; only the layouts shuffle
+        d = _select(out, pending, len(states))
+        if layout_cols:
+            from transferdb_spark.plans.layout import zorder_layout
+
+            return zorder_layout(d, layout_cols, n_files=n_chunks, partition_cols=partition_cols)
+        return d.repartition(n_chunks, *partition_cols) if partition_cols else d
+
+    return _land(store, table, workdir, pending, frame, partition_cols)
+
+
+def _select(df: DataFrame, todo: list[ChunkState], n_chunks: int) -> DataFrame:
+    """The rows of the ``todo`` chunks: the whole frame when they are
+    every chunk, else the OR of their predicates."""
+    if len(todo) == n_chunks:
+        return df
+    return df.filter(" OR ".join(f"({c.predicate})" for c in todo))
+
+
+def _file_groups(spark: SparkSession, chunks: list, todo: list[ChunkState], normalize: bool) -> DataFrame:
+    """The rows of the ``todo`` keyless chunks: a read of their files."""
+    by_id = {c.chunk_id: c for c in chunks}
+    df = spark.read.parquet(*(f for c in todo for f in by_id[c.chunk_id].files))
+    return normalize_projection(df) if normalize else df
+
+
+def _settle(store: StateStore, table: str, target: str) -> None:
+    """Move in each landing dir that the state names and delete any
+    other, which never committed. Every step is a rename or a delete
+    that a later call resumes where a crash stopped it."""
+    states = store.chunks(table)
+    for staged in sorted(glob.glob(glob.escape(target) + ".landing-*")):
+        named = sum(c.staging == os.path.basename(staged) for c in states)
+        if not named:
+            shutil.rmtree(staged)
+            continue
+        if named == len(states) and os.path.exists(target):
+            shutil.rmtree(target)  # it covered every chunk: it replaces the target
+        if not os.path.exists(target):
+            os.rename(staged, target)
+            continue
+        for root, _, files in os.walk(staged):
+            dest = os.path.join(target, os.path.relpath(root, staged))
+            os.makedirs(dest, exist_ok=True)
+            for f in files:
+                os.replace(os.path.join(root, f), os.path.join(dest, f))
+        shutil.rmtree(staged)
+
+
+def _land(store: StateStore, table: str, workdir: str, todo: list, frame, partition_cols=None, quarantine=False):
+    """Land the ``todo`` chunks of ``table``: settle, write ``frame()``
+    into a fresh landing dir, mark SUCCESS naming it, settle again, and
+    return the target path. Only a failed write marks the chunks FAILED;
+    it re-raises, or returns None under ``quarantine``. A failed mark
+    or move raises, for the next call's settle to finish."""
+    target = os.path.join(workdir, "target", table)
+    _settle(store, table, target)
+    if not todo:
+        return target
+    ids = [c.chunk_id for c in todo]
+    staging = f"{table}.landing-{uuid.uuid4().hex}"
+    try:
+        w = frame().write.option("maxRecordsPerFile", 5_000_000)
         if partition_cols:
             # hive-style layout: downstream date/tenant filters become
             # partition pruning (directories skipped, never scanned)
             w = w.partitionBy(*partition_cols)
-        return w
-
-    if len(pending) == len(states):
-        # fresh run: the default write is one narrow scan → project →
-        # write job, with as many tasks as the scan has splits; only
-        # the requested layouts shuffle
-        try:
-            if layout_cols and partition_cols:
-                # cluster WITHIN each hive partition: shuffling on the
-                # partition columns then sorting (partition, z) keeps
-                # one writer task per partition slice — a global
-                # z-range shuffle followed by partitionBy would write
-                # (tasks × dirs) small files
-                from pyspark.sql import functions as F
-
-                from transferdb_spark.plans.layout import column_ranges, morton_expr
-
-                ranges = column_ranges(out, layout_cols)
-                z = F.expr(morton_expr(layout_cols, ranges, idiv="div"))
-                shaped = (
-                    out.withColumn("__z", z)
-                    .repartition(n_chunks, *partition_cols)
-                    .sortWithinPartitions(*partition_cols, "__z")
-                    .drop("__z")
-                )
-            elif layout_cols:
-                from transferdb_spark.plans.layout import zorder_layout
-
-                shaped = zorder_layout(out, layout_cols, n_files=n_chunks)
-            elif partition_cols:
-                shaped = out.repartition(n_chunks, *partition_cols)
-            else:
-                shaped = out
-            _writer(shaped).mode("overwrite").parquet(target)
-            store.mark(table, [c.chunk_id for c in states], SUCCESS)
-        except Exception as e:
-            store.mark(table, [c.chunk_id for c in states], FAILED, str(e)[:500])
+        w.parquet(os.path.join(workdir, "target", staging))
+    except Exception as e:
+        store.mark(table, ids, FAILED, str(e)[:500])
+        if not quarantine:
             raise
-    else:
-        # resume: re-run only failed/waiting chunks, predicate pushdown
-        for c in pending:
-            try:
-                _writer(out.filter(c.predicate)).mode("append").parquet(target)
-                store.mark(table, c.chunk_id, SUCCESS)
-            except Exception as e:
-                store.mark(table, c.chunk_id, FAILED, str(e)[:500])
-                raise
+        return None
+    store.mark(table, ids, SUCCESS, staging=staging)
+    _settle(store, table, target)
     return target
 
 
@@ -195,46 +219,18 @@ def full_migrate_keyless(
 
     The reference falls back to
     DBMS_PARALLEL_EXECUTE.CREATE_CHUNKS_BY_ROWID for heap tables
-    without a usable key (/root/reference/database/oracle/full.go:42-93):
-    chunks are physical extent ranges, planned from storage metadata.
-    Here the physical unit is the parquet part-file: plan_chunks_rowid
-    packs name-sorted files into size-balanced contiguous groups from a
-    driver-side listing (no data scan), and resume re-reads only the
-    failed groups. The chunk plan goes through the same StateStore, so
-    keyless tables get identical checkpoint/resume semantics to keyed
-    ones.
+    without a usable key (database/oracle/full.go:42-93): chunks are
+    physical extent ranges. Here the physical unit is the parquet
+    part-file: plan_chunks_rowid packs name-sorted files into
+    size-balanced contiguous groups from a driver-side listing (no
+    data scan), and a landing reads only its pending groups — the same
+    StateStore and landing as keyed tables.
     """
-    from transferdb_spark.plans.chunker import plan_chunks_rowid
-
     store = store or StateStore(workdir, "full")
     chunks = plan_chunks_rowid(src_path, n_chunks)
-    by_id = {c.chunk_id: c for c in chunks}
-    states = store.init_table(table, chunks)
+    store.init_table(table, chunks)
     pending = store.pending(table)
-    target = os.path.join(workdir, "target", table)
-
-    def _out(df):
-        return normalize_projection(df) if normalize else df
-
-    if len(pending) == len(states):
-        try:
-            df = spark.read.parquet(src_path)
-            _out(df).write.mode("overwrite").parquet(target)
-            store.mark(table, [c.chunk_id for c in states], SUCCESS)
-        except Exception as e:
-            store.mark(table, [c.chunk_id for c in states], FAILED, str(e)[:500])
-            raise
-    else:
-        for c in pending:
-            files = by_id[c.chunk_id].files
-            try:
-                if files:
-                    _out(spark.read.parquet(*files)).write.mode("append").parquet(target)
-                store.mark(table, c.chunk_id, SUCCESS)
-            except Exception as e:
-                store.mark(table, c.chunk_id, FAILED, str(e)[:500])
-                raise
-    return target
+    return _land(store, table, workdir, pending, lambda: _file_groups(spark, chunks, pending, normalize))
 
 
 def full_migrate_table_jdbc(
@@ -316,38 +312,39 @@ def full_migrate_table_jdbc(
 
 def retry_failed(
     spark: SparkSession,
-    df: DataFrame,
+    df: DataFrame | str,
     table: str,
     workdir: str,
     store: StateStore | None = None,
     normalize: bool = False,
 ) -> dict:
-    """Re-run ONLY the chunks currently in FAILED state.
+    """Re-run ONLY the chunks currently in FAILED state, as one landing.
 
     The reference's `--mode full` resume reruns failed chunks from the
     persisted meta rows and keeps their error history in
-    error_log_detail (/root/reference/database/meta/meta.go:100-117).
-    This is the narrow surface: WAITING chunks are left to the normal
-    resume path; each failed chunk re-runs independently (one bad chunk
-    doesn't block the others), and every new failure appends another
-    error_log occurrence. Keyless (file-group) tables retry through
-    full_migrate_keyless resume instead — their predicates name files,
-    not key ranges. Returns {"retried", "succeeded", "failed"}.
+    error_log_detail (database/meta/meta.go:100-117). WAITING chunks
+    are left to the normal resume. The failed chunks land together in
+    one job through `_land`; if that write fails, each is marked FAILED
+    again with one more error-log occurrence. ``df`` is the source
+    frame, or a keyless table's source path: its file groups are
+    re-planned with plan_chunks_rowid (a changed file set resets the
+    plan in init_table, leaving nothing to retry).
+    Returns {"retried", "succeeded", "failed"}.
     """
     store = store or StateStore(workdir, "full")
+    keyless = isinstance(df, str)
+    if keyless:
+        chunks = plan_chunks_rowid(df, len(store.chunks(table)))
+        store.init_table(table, chunks)
     failed = store.failed(table)
-    target = os.path.join(workdir, "target", table)
-    out = normalize_projection(df) if normalize else df
-    ok = bad = 0
-    for c in failed:
-        try:
-            out.filter(c.predicate).write.mode("append").parquet(target)
-            store.mark(table, c.chunk_id, SUCCESS)
-            ok += 1
-        except Exception as e:  # quarantine and move on to the next chunk
-            store.mark(table, c.chunk_id, FAILED, str(e)[:500])
-            bad += 1
-    return {"retried": len(failed), "succeeded": ok, "failed": bad}
+
+    def frame() -> DataFrame:
+        if keyless:
+            return _file_groups(spark, chunks, failed, normalize)
+        return _select(normalize_projection(df) if normalize else df, failed, len(store.chunks(table)))
+
+    ok = len(failed) if _land(store, table, workdir, failed, frame, quarantine=True) else 0
+    return {"retried": len(failed), "succeeded": ok, "failed": len(failed) - ok}
 
 
 def full_migrate(
@@ -366,10 +363,7 @@ def full_migrate(
     for name, df in load_tables(spark, sf_dir, include=tables).items():
         try:
             key, bounds = elect_split_key(df)
-        except ValueError:
-            key = None
-        if key is None:
-            # ROWID fallback: chunk by physical file groups
+        except ValueError:  # ROWID fallback: chunk by physical file groups
             out[name] = full_migrate_keyless(
                 spark, table_path(sf_dir, name), name, workdir, n_chunks=n_chunks, store=store
             )

@@ -175,6 +175,7 @@ def zorder_layout(
     cols: list[str],
     n_files: int | None = None,
     bits: int | None = None,
+    partition_cols: list[str] | None = None,
 ) -> DataFrame:
     """Re-cluster ``df`` on the Z-order curve over ``cols``.
 
@@ -182,6 +183,10 @@ def zorder_layout(
     (dropped from the output schema) — write it out and every file
     holds one contiguous z-range == one small hyper-rectangle of the
     key space. Exactly one wide exchange (RangePartitioning).
+    ``partition_cols`` clusters WITHIN each hive partition instead:
+    hash-partitioned on those columns and sorted by (partition, z), one
+    writer task keeps each partition slice — a global z-range exchange
+    followed by partitionBy would write (tasks × dirs) small files.
     """
     ranges = column_ranges(df, cols)
     z = F.expr(morton_expr(cols, ranges, bits=bits, idiv="div"))
@@ -189,11 +194,11 @@ def zorder_layout(
     n = n_files or int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
     )
-    return (
-        out.repartitionByRange(n, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-    )
+    if partition_cols:
+        out = out.repartition(n, *partition_cols).sortWithinPartitions(*partition_cols, "__z")
+    else:
+        out = out.repartitionByRange(n, "__z").sortWithinPartitions("__z")
+    return out.drop("__z")
 
 
 def workload_from_log(log_df: DataFrame) -> list[tuple[list[str], float]]:

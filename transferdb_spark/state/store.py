@@ -30,6 +30,7 @@ class ChunkState:
     predicate: str
     status: str = WAITING
     error: str = ""
+    staging: str = ""  # the landing dir a SUCCESS mark committed (modes/full.py)
 
 
 def _write_json_atomic(path: str, obj, indent: int | None = None) -> None:
@@ -63,52 +64,44 @@ class StateStore:
         (source data changed between runs) discards the stale state
         instead of silently resuming it.
         """
-        existing = sorted(
-            (c for (t, _), c in self._chunks.items() if t == table),
-            key=lambda c: c.chunk_id,
-        )
-        planned = sorted(chunks, key=lambda c: c.chunk_id)
-        if (
-            existing
-            and len(existing) == len(planned)
-            and all(
-                e.chunk_id == p.chunk_id
-                and e.lower == p.lower
-                and e.upper == p.upper
-                and e.predicate == p.predicate
-                for e, p in zip(existing, planned)
-            )
-        ):
+        existing = self.chunks(table)
+        ident = [(c.chunk_id, c.lower, c.upper, c.predicate) for c in existing]
+        if existing and ident == sorted((c.chunk_id, c.lower, c.upper, c.predicate) for c in chunks):
             return existing
-        for t, cid in list(self._chunks):
-            if t == table:
-                del self._chunks[(t, cid)]
-        out = []
-        for ch in chunks:
-            cs = ChunkState(table, ch.chunk_id, ch.lower, ch.upper, ch.predicate)
-            self._chunks[(table, ch.chunk_id)] = cs
-            out.append(cs)
+        for c in existing:
+            del self._chunks[(table, c.chunk_id)]
+        out = [ChunkState(table, ch.chunk_id, ch.lower, ch.upper, ch.predicate) for ch in chunks]
+        self._chunks.update({(table, cs.chunk_id): cs for cs in out})
         self._flush()
         return out
 
-    def pending(self, table: str) -> list[ChunkState]:
-        return sorted(
-            (c for (t, _), c in self._chunks.items() if t == table and c.status != SUCCESS),
-            key=lambda c: c.chunk_id,
-        )
+    def chunks(self, table: str) -> list[ChunkState]:
+        return sorted((c for (t, _), c in self._chunks.items() if t == table), key=lambda c: c.chunk_id)
 
-    def mark(self, table: str, chunk_ids: int | Iterable[int], status: str, error: str = "") -> None:
-        """Set the status of one chunk or many, then flush once.
+    def pending(self, table: str) -> list[ChunkState]:
+        return [c for c in self.chunks(table) if c.status != SUCCESS]
+
+    def mark(self, table: str, chunk_ids: int | Iterable[int], status: str, error: str = "", staging: str = "") -> None:
+        """Set the status (and landing dir) of one chunk or many, then
+        flush once.
 
         A write that lands many chunks marks them in one call, so the
         meta file holds all of them or none: a crash part-way through
         can never leave some of one write's chunks SUCCESS and the rest
-        WAITING (resume would re-append those and duplicate rows)."""
+        WAITING (resume would re-append those and duplicate rows). A
+        flush that raises restores the previous states, so memory never
+        runs ahead of the file."""
         ids = [chunk_ids] if isinstance(chunk_ids, int) else list(chunk_ids)
         states = [self._chunks[(table, cid)] for cid in ids]
+        before = [(cs.status, cs.error, cs.staging) for cs in states]
         for cs in states:
-            cs.status, cs.error = status, error
-        self._flush()
+            cs.status, cs.error, cs.staging = status, error, staging
+        try:
+            self._flush()
+        except BaseException:
+            for cs, old in zip(states, before):
+                cs.status, cs.error, cs.staging = old
+            raise
         if status == FAILED:
             self._append_errors(table, states, error)
 

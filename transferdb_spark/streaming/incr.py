@@ -220,16 +220,25 @@ def compact_cdc_log(
     Crash safety on a plain filesystem: the snapshot is first written
     to an underscore-prefixed dir (ignored by Spark's partition
     discovery), old dirs are renamed aside before the snapshot is
-    renamed in, and the aside dirs are removed last. A crash mid-swap
-    leaves `_old_*` dirs to restore from; production deployments on a
-    table format (Delta/Iceberg) get this swap as one atomic commit —
-    the reference's meta-DB transaction analogue
-    (/root/reference/database/meta/meta.go:100-117).
+    renamed in, and the aside dirs are removed last. Each call first
+    settles a swap cut short: `_old_*` dirs are renamed back while
+    `_compact_tmp` (the snapshot not yet in) exists, else deleted. A
+    table format (Delta/Iceberg) makes this swap one atomic commit —
+    the reference's meta-DB transaction (database/meta/meta.go:100-117).
+    The SCN gate's `landed_rows` is untouched: after a compaction it
+    still counts rows the stream landed, not rows the log holds.
 
-    Returns {"live_rows", "dirs_removed"}.
+    Returns {"live_rows", "dirs_removed"}, live_rows observed during
+    the snapshot write.
     """
     import shutil
 
+    tmp = os.path.join(target_dir, "_compact_tmp")
+    for d in sorted(d for d in os.listdir(target_dir) if d.startswith("_old_")):
+        if os.path.exists(tmp):
+            os.rename(os.path.join(target_dir, d), os.path.join(target_dir, d[len("_old_"):]))
+        else:
+            shutil.rmtree(os.path.join(target_dir, d))
     old_dirs = sorted(
         d for d in os.listdir(target_dir) if d.startswith("batch_id=")
     )
@@ -237,20 +246,16 @@ def compact_cdc_log(
         return {"live_rows": None, "dirs_removed": 0}
     max_bid = max(int(d.split("=", 1)[1]) for d in old_dirs)
 
+    obs = Observation()
     snap = cdc_current_state(spark, target_dir, key=key, scn_col=scn_col)
-    tmp = os.path.join(target_dir, "_compact_tmp")
-    snap.write.mode("overwrite").parquet(tmp)
-    live_rows = spark.read.parquet(tmp).count()
+    snap.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(tmp)
+    live_rows = obs.get["rows"]
 
-    aside = []
     for d in old_dirs:
-        src = os.path.join(target_dir, d)
-        dst = os.path.join(target_dir, f"_old_{d}")
-        os.rename(src, dst)
-        aside.append(dst)
+        os.rename(os.path.join(target_dir, d), os.path.join(target_dir, f"_old_{d}"))
     os.rename(tmp, os.path.join(target_dir, f"batch_id={max_bid}"))
-    for d in aside:
-        shutil.rmtree(d)
+    for d in old_dirs:
+        shutil.rmtree(os.path.join(target_dir, f"_old_{d}"))
     return {"live_rows": live_rows, "dirs_removed": len(old_dirs)}
 
 
